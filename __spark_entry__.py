@@ -12,6 +12,7 @@ tie-breakers so the selected rows are deterministic.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +36,77 @@ def _detach(spark: SparkSession, df: DataFrame) -> DataFrame:
     from vectordb_etl_spark.session import local_rows_df
 
     return local_rows_df(spark, df.collect(), df.schema)
+
+
+# Shuffle width of the registered stream queries. Their state is bounded per
+# key by contract (window × group counts, sketch registers, one session or
+# dedup key per entity), so a scan-sized width only adds state-store
+# instances and near-empty tasks to every micro-batch. A stream bakes the
+# width into its checkpoint when it starts.
+_STREAM_WIDTH = 4
+
+
+def _scratch(
+    spark: SparkSession,
+    body: Callable[[str], DataFrame],
+    stream_width: int | None = None,
+) -> DataFrame:
+    """Run ``body(tmp)`` with a fresh temp dir and return its result
+    detached (``_detach``); the rows are collected BEFORE the dir goes, so
+    index files, landing dirs and checkpoints live exactly as long as the
+    query. ``stream_width`` pins ``spark.sql.shuffle.partitions`` over the
+    whole scope, collection included, and ``finally`` restores the session
+    value. The memory-sink view of ``_drain_to_memory``, and the sink rows
+    it holds on the driver, are dropped on the way out. The query leaves no
+    conf, view or file behind, also when the body fails."""
+    import tempfile
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions") if stream_width else None
+    with tempfile.TemporaryDirectory() as tmp:
+        try:
+            if stream_width:
+                spark.conf.set("spark.sql.shuffle.partitions", str(stream_width))
+            return _detach(spark, body(tmp))
+        finally:
+            if prev is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+            spark.catalog.dropTempView(_sink_view(tmp))
+
+
+def _sink_view(tmp: str) -> str:
+    # temp dir names are [a-z0-9_]: a valid view name, unique per scope
+    return f"stream_{os.path.basename(tmp)}"
+
+
+def _drain_to_memory(stream: DataFrame, tmp: str, mode: str = "append") -> DataFrame:
+    """Run ``stream`` to completion into a memory sink checkpointed under
+    ``tmp`` and return the sink's table. The view is named after ``tmp``,
+    so the enclosing ``_scratch`` drops it."""
+    from vectordb_etl_spark.streaming.ingest import run_available_now
+
+    name = _sink_view(tmp)
+    run_available_now(
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+    )
+    return stream.sparkSession.table(name)
+
+
+def _land(
+    df: DataFrame, tmp: str, files: int | None = 1, per_trigger: int | None = None
+) -> DataFrame:
+    """Write ``df`` to ``tmp/landing`` as ``files`` parquet files (its own
+    layout when None) and return a file-source stream over that dir that
+    reads ``per_trigger`` files per micro-batch (all of them when None).
+    One file gives each micro-batch one scan task and, for the
+    order-sensitive stateful queries, one upstream order."""
+    (df if files is None else df.repartition(files)).write.parquet(f"{tmp}/landing")
+    reader = df.sparkSession.readStream.schema(df.schema)
+    if per_trigger:
+        reader = reader.option("maxFilesPerTrigger", per_trigger)
+    return reader.parquet(f"{tmp}/landing")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1993,20 +2065,19 @@ def _inverted_term_lookup(spark: SparkSession, sf: str) -> DataFrame:
     plan-assertably pruned, tests/test_inverted.py). The oracle states
     the semantics directly as a tokenized containment scan — index and
     scan must agree doc-for-doc."""
-    import tempfile
-
     from vectordb_etl_spark.store.inverted import InvertedIndex
 
     docs = _docs(spark, sf)
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = InvertedIndex(spark, f"{tmp}/inv").build(docs)
-        out = (
+        return (
             idx.lookup(docs, "window")
             .select("doc_id", "lang", "source")
             .orderBy("doc_id")
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -2035,18 +2106,15 @@ def _bm25_ranked_lookup(spark: SparkSession, sf: str) -> DataFrame:
     over the corpus with no index — must hash-match: the index is
     proven lossless AND the score arithmetic cross-engine exact in one
     check."""
-    import tempfile
-
     from vectordb_etl_spark.store.inverted import InvertedIndex
 
     docs = _docs(spark, sf)
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = InvertedIndex(spark, f"{tmp}/inv").build_ranked(docs)
-        out = idx.bm25_topk(_BM25_QUERY, 10).withColumnRenamed(
-            "id", "doc_id"
-        )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+        return idx.bm25_topk(_BM25_QUERY, 10).withColumnRenamed("id", "doc_id")
+
+    return _scratch(spark, body)
 
 
 def _bm25_ranked_lookup_sql() -> str:
@@ -3897,21 +3965,40 @@ _ANN_ORACLE = (
 )
 
 
+def _query_batch(emb: DataFrame) -> list[list[float]]:
+    """Embeddings of vec_id 0, 1, 2 in id order: the batched queries."""
+    return [
+        list(r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 3)
+        .orderBy("vec_id")
+        .select("embedding")
+        .collect()
+    ]
+
+
+def _graph_index(spark: SparkSession, emb: DataFrame, tmp: str):
+    """The 8-shard NSW index (label passed through) the graph queries probe."""
+    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
+
+    return GraphANNIndex(spark, f"{tmp}/graph").build(
+        emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
+    )
+
+
 def _ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """X1/Q1 approximate tier: IVF (KMeans layout + centroid probe),
     nlist=16 at test scale; nprobe=nlist ⇒ every partition probed ⇒ exact."""
-    import tempfile
-
     from vectordb_etl_spark.operators.ann import IVFIndex
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(emb, nlist=16, seed=42, max_iter=4)
-        out = idx.search(list(q), k=10, nprobe=16, tie_break=["vec_id"],
-                         output_cols=["vec_id", "label"])
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+        return idx.search(list(q), k=10, nprobe=16, tie_break=["vec_id"],
+                          output_cols=["vec_id", "label"])
+
+    return _scratch(spark, body)
 
 
 _register("ivf_topk", _ivf_topk, _ANN_ORACLE)
@@ -3924,20 +4011,19 @@ def _ivf_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
     (centroid_id IN probes) with PushedFilters (label = 2) on one scan, so
     a filtered index query reads only matching rows of probed partitions.
     Probe-all edge keeps it oracle-checkable."""
-    import tempfile
-
     from vectordb_etl_spark.operators.ann import IVFIndex
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(emb, nlist=16, seed=42, max_iter=4)
-        out = idx.search(
+        return idx.search(
             list(q), k=10, nprobe=16, predicate=F.col("label") == 2,
             tie_break=["vec_id"], output_cols=["vec_id", "label"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -3952,27 +4038,26 @@ _register(
 
 
 def _ivf_fanout_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Q2 THROUGH the IVF index tier (VERDICT r06 item 6): per-label
-    top-3 hit lists served from one partition-pruned probe scan
-    (operators/ann.py IVFIndex.search_per_group — the probe filter and
-    the per-group window rank stack on the same read; reference fan-out
-    shape milvus_store.py:301-325). nprobe=nlist probes every partition,
-    so the result provably equals the exact per-label top-3 — the same
-    oracle as fanout_topk_per_label. The per-collection-index variant is
+    """Q2 THROUGH the IVF index tier: per-label top-3 hit lists served
+    from one partition-pruned probe scan (operators/ann.py
+    IVFIndex.search_per_group — the probe filter and the per-group window
+    rank stack on the same read; reference fan-out shape
+    milvus_store.py:301-325). nprobe=nlist probes every partition, so the
+    result provably equals the exact per-label top-3 — the same oracle as
+    fanout_topk_per_label. The per-collection-index variant is
     CollectionStore.fanout_search_indexed (tests/test_store_search.py)."""
-    import tempfile
-
     from vectordb_etl_spark.operators.ann import IVFIndex
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(emb, nlist=16, seed=42, max_iter=4)
-        out = idx.search_per_group(
+        return idx.search_per_group(
             list(q), k=3, nprobe=16, group_col="label", tie_break=["vec_id"],
         ).select("vec_id", "label", "score")
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -3996,20 +4081,19 @@ def _ivf_sq8_topk(spark: SparkSession, sf: str) -> DataFrame:
     at probe time). nprobe=nlist probes every partition, so the result
     provably equals brute-force top-k over the quantize→dequantize round
     trip — the same arithmetic the sq8_topk oracle states."""
-    import tempfile
-
     from vectordb_etl_spark.operators.ann import IVFIndex
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf_sq8").build(
             emb, nlist=16, seed=42, max_iter=4, storage="sq8"
         )
-        out = idx.search(list(q), k=10, nprobe=16, tie_break=["vec_id"],
-                         output_cols=["vec_id", "label"])
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+        return idx.search(list(q), k=10, nprobe=16, tie_break=["vec_id"],
+                          output_cols=["vec_id", "label"])
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4041,8 +4125,6 @@ def _ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     quantized ranking, storage lifecycle (codes on disk, literal-codebook
     reconstruction above the pruned scan), and search path are all under
     the hash."""
-    import tempfile
-
     import numpy as np
 
     from vectordb_etl_spark.operators.ann import IVFIndex
@@ -4056,17 +4138,18 @@ def _ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     q = cent_rows[0]["embedding"]
     cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivfpq").build(
             emb, centroids=cents, assign_round_dp=6, storage="pq",
             pq_subs=8, pq_codes=16,
         )
-        out = idx.search(
+        return idx.search(
             list(q), k=10, nprobe=16, tie_break=["vec_id"],
             output_cols=["vec_id", "label"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4117,8 +4200,6 @@ def _ivf_pq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     oracle can restate the whole chain: assignment argmax → residual
     subtract → per-subspace L2 argmin encode → codeword concat → centroid
     add-back → cosine ranking."""
-    import tempfile
-
     import numpy as np
 
     from vectordb_etl_spark.operators.ann import IVFIndex
@@ -4132,17 +4213,18 @@ def _ivf_pq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     q = cent_rows[0]["embedding"]
     cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivfpqr").build(
             emb, centroids=cents, assign_round_dp=6, storage="pq_residual",
             pq_subs=8, pq_codes=16,
         )
-        out = idx.search(
+        return idx.search(
             list(q), k=10, nprobe=4, tie_break=["vec_id"],
             output_cols=["vec_id", "label"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4232,8 +4314,6 @@ def _ivf_topk_nprobe(spark: SparkSession, sf: str) -> DataFrame:
     lowest-centroid tie-break — semantics a DuckDB oracle states exactly.
     The trained-KMeans path stays covered by ivf_topk (probe-all edge) and
     the recall tests."""
-    import tempfile
-
     import numpy as np
 
     from vectordb_etl_spark.operators.ann import IVFIndex
@@ -4247,16 +4327,17 @@ def _ivf_topk_nprobe(spark: SparkSession, sf: str) -> DataFrame:
         [r["embedding"] for r in sorted(cent_rows, key=lambda r: r["vec_id"])],
         dtype=np.float64,
     )
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(
             emb, centroids=cents, assign_round_dp=6
         )
-        out = idx.search(
+        return idx.search(
             list(q), k=10, nprobe=4, probe_round_dp=6, tie_break=["vec_id"],
             output_cols=["vec_id", "label"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4291,26 +4372,19 @@ def _ivf_topk_batch(spark: SparkSession, sf: str) -> DataFrame:
     union (IVFIndex.search_many) — the serving shape that amortizes scan
     setup across queries. Probe-all edge ⇒ each query's result is its
     exact top-10, which the oracle states per query via a window."""
-    import tempfile
-
     from vectordb_etl_spark.operators.ann import IVFIndex
 
     emb = _table(spark, sf, "embeddings")
-    qs = [
-        list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 3)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    ]
-    with tempfile.TemporaryDirectory() as tmp:
+    qs = _query_batch(emb)
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(emb, nlist=16, seed=42, max_iter=4)
-        out = idx.search_many(
+        return idx.search_many(
             qs, k=10, nprobe=16, tie_break=["vec_id"],
             output_cols=["vec_id", "label"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4348,21 +4422,16 @@ def _graph_topk(spark: SparkSession, sf: str) -> DataFrame:
     """X2 analog: sharded NSW graph index (HNSW contract — reference
     modules/milvus_store.py:115-124). ef far above shard size ⇒ beam search
     visits every node of each connected shard graph ⇒ exact."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = idx.search(
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return idx.search(
             list(q), k=10, ef=1_000_000, output_cols=["id", "label"]
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame from tmp
-    return out
+
+    return _scratch(spark, body)
 
 
 _register("graph_topk", _graph_topk, _ANN_ORACLE)
@@ -4375,17 +4444,12 @@ def _graph_fanout_topk(spark: SparkSession, sf: str) -> DataFrame:
     labels are never starved), one label-keyed window rank merges. Full
     beam ⇒ every shard emits every row ⇒ provably the exact per-label
     top-3 — same oracle as fanout_topk_per_label."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = (
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return (
             idx.search_per_group(
                 list(q), k=3, ef=1_000_000, group_col="label",
                 output_cols=["id"],
@@ -4393,8 +4457,8 @@ def _graph_fanout_topk(spark: SparkSession, sf: str) -> DataFrame:
             .withColumnRenamed("id", "vec_id")
             .select("vec_id", "label", "score")
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4412,17 +4476,14 @@ _register(
 
 
 def _fanout_mixed_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Q2 through MIXED index state (VERDICT r07 item 4): embeddings are
-    split into two collections by label parity, one gets a per-collection
-    IVF index, the other stays UN-indexed and is served by the exact
-    brute-force fallback (CollectionStore.fanout_search_indexed
-    on_missing='exact' — Milvus's own behavior: milvus_store.py:301-325
-    iterates loaded collections uniformly, index or not). Probing every
-    cell (nprobe=nlist) makes the indexed path exact too, so the merged
-    global top-10 provably equals one exact scan with a collection tag —
-    the oracle below."""
-    import tempfile
-
+    """Q2 through MIXED index state: embeddings are split into two
+    collections by label parity, one gets a per-collection IVF index, the
+    other stays UN-indexed and is served by the exact brute-force fallback
+    (CollectionStore.fanout_search_indexed on_missing='exact' — Milvus's
+    own behavior: milvus_store.py:301-325 iterates loaded collections
+    uniformly, index or not). Probing every cell (nprobe=nlist) makes the
+    indexed path exact too, so the merged global top-10 provably equals
+    one exact scan with a collection tag — the oracle below."""
     from vectordb_etl_spark.config import StoreConfig
     from vectordb_etl_spark.store.collections import CollectionStore
 
@@ -4435,16 +4496,17 @@ def _fanout_mixed_topk(spark: SparkSession, sf: str) -> DataFrame:
             "folder_name"
         ),
     )
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         store = CollectionStore(spark, StoreConfig(warehouse_dir=f"{tmp}/w"))
         store.insert_documents(docs, embed=False)
         store.build_index("html_g0", kind="ivf", nlist=4, seed=42, max_iter=4)
-        out = store.fanout_search_indexed(
+        return store.fanout_search_indexed(
             list(q), k=10, nprobe=4, on_missing="exact",
             tie_break=["vec_id"], output_cols=["vec_id"],
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4465,13 +4527,12 @@ def _graph_topk_incremental(spark: SparkSession, sf: str) -> DataFrame:
     then probe-all search over the grown index. Full-beam edge over every
     segment ⇒ exact brute force over the WHOLE corpus, so the add path's
     correctness is under the hash, not just a unit test."""
-    import tempfile
-
     from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = GraphANNIndex(spark, f"{tmp}/graph_inc").build(
             emb.filter(F.col("vec_id") % 2 == 0),
             num_shards=4, m=16, ef_construction=64, passthrough=["label"],
@@ -4480,11 +4541,11 @@ def _graph_topk_incremental(spark: SparkSession, sf: str) -> DataFrame:
             emb.filter(F.col("vec_id") % 2 == 1),
             num_shards=4, m=16, ef_construction=64, passthrough=["label"],
         )
-        out = idx.search(
+        return idx.search(
             list(q), k=10, ef=1_000_000, output_cols=["id", "label"]
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register("graph_topk_incremental", _graph_topk_incremental, _ANN_ORACLE)
@@ -4498,14 +4559,16 @@ def _streaming_graph_ingest(spark: SparkSession, sf: str) -> DataFrame:
     micro-batch, then probe-all search the grown index. Full-beam over
     every segment ⇒ exact brute force over the whole corpus — the
     stream-maintained index is under the same hash as the batch one."""
-    import tempfile
-
     from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-    from vectordb_etl_spark.streaming.ingest import graph_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        graph_ingest_stream,
+        run_available_now,
+    )
 
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = GraphANNIndex(spark, f"{tmp}/graph_s").build(
             emb.filter(F.col("vec_id") % 2 == 0).select(
                 "vec_id", "embedding", "label"
@@ -4515,19 +4578,15 @@ def _streaming_graph_ingest(spark: SparkSession, sf: str) -> DataFrame:
         rest = emb.filter(F.col("vec_id") % 2 == 1).select(
             "vec_id", "embedding", "label"
         )
-        rest.repartition(1).write.parquet(f"{tmp}/landing")
-        stream = spark.readStream.schema(rest.schema).parquet(f"{tmp}/landing")
-        sq = graph_ingest_stream(
-            stream, idx, f"{tmp}/ckpt", num_shards=4, m=16,
+        run_available_now(graph_ingest_stream(
+            _land(rest, tmp), idx, f"{tmp}/ckpt", num_shards=4, m=16,
             ef_construction=64, passthrough=["label"],
-            trigger_available_now=True,
-        )
-        sq.awaitTermination()
-        out = idx.search(
+        ))
+        return idx.search(
             list(q), k=10, ef=1_000_000, output_cols=["id", "label"]
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register("streaming_graph_ingest", _streaming_graph_ingest, _ANN_ORACLE)
@@ -4539,22 +4598,17 @@ def _graph_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
     during traversal disconnects the graph), emit the ef-beam, filter the
     merged candidates, rank. Full-beam edge ⇒ exactly the filtered brute
     force, hash-checked."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = idx.search(
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return idx.search(
             list(q), k=10, ef=1_000_000, output_cols=["id", "label"],
             predicate=F.col("label") == 2,
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4579,22 +4633,17 @@ def _graph_topk_acorn(spark: SparkSession, sf: str) -> DataFrame:
     navigable, only matching nodes enter the result heap — ef no longer
     scales with 1/selectivity. Full-beam edge ⇒ exactly the filtered
     brute force, hash-checked."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = idx.search(
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return idx.search(
             list(q), k=10, ef=1_000_000, output_cols=["id", "label"],
             predicate=F.col("id") % 97 == 0, filter_mode="traversal",
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4615,28 +4664,17 @@ def _graph_acorn_batch(spark: SparkSession, sf: str) -> DataFrame:
     per shard; each shard answers every query over the same bool mask —
     the production filtered-serving shape. Full-beam edge ⇒ each query's
     exact filtered top-k, stated per query by the oracle window."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
-    qs = [
-        list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 3)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    ]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = idx.search_many(
+    qs = _query_batch(emb)
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return idx.search_many(
             qs, k=10, ef=1_000_000, output_cols=["id", "label"],
             predicate=F.col("id") % 97 == 0, filter_mode="traversal",
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4659,27 +4697,16 @@ def _graph_topk_batch(spark: SparkSession, sf: str) -> DataFrame:
     searched in ONE applyInPandas pass — each shard loads its graph once
     and answers every query. Full-beam edge ⇒ each query's result is its
     exact top-10, stated per query by the oracle window."""
-    import tempfile
-
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
-
     emb = _table(spark, sf, "embeddings")
-    qs = [
-        list(r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 3)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    ]
-    with tempfile.TemporaryDirectory() as tmp:
-        idx = GraphANNIndex(spark, f"{tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
-        )
-        out = idx.search_many(
+    qs = _query_batch(emb)
+
+    def body(tmp: str) -> DataFrame:
+        idx = _graph_index(spark, emb, tmp)
+        return idx.search_many(
             qs, k=10, ef=1_000_000, output_cols=["id", "label"]
         ).withColumnRenamed("id", "vec_id")
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -4971,59 +4998,34 @@ _register(
 
 # -- Structured Streaming, driver-checkable (§2.10) ---------------------------------
 #
-# The watermarked tumbling-window aggregate runs as an actual stream (file
-# source → availableNow trigger → memory sink). All input arrives in one
-# trigger, so nothing is late and the finalized result equals the batch
-# tumbling aggregate — which is exactly what the oracle checks. (The
-# stateful sessionizer is hash-checked too — see streaming_sessionize
-# below: per-user sentinels force the gap rule to close every real
-# session, making the applyInPandasWithState output equal batch
-# sessionization.)
-
-_STREAM_SEQ = iter(range(1, 1 << 20))
+# Each stream query lands its input in a scratch dir and drains it under the
+# availableNow trigger (``_scratch`` + ``_land`` + ``run_available_now``).
+# All input arrives before the first trigger, so nothing is late and each
+# finalized result equals its batch twin — which is what the oracles state.
+# (The stateful sessionizer is hash-checked too — see streaming_sessionize
+# below: per-user sentinels force the gap rule to close every real session,
+# making the applyInPandasWithState output equal batch sessionization.)
 
 
 def _streaming_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import windowed_event_counts
 
     # decimal sum → exact regardless of per-partition accumulation order
     ev = _events(spark, sf).withColumn("value", F.col("value").cast("decimal(18,6)"))
-    name = f"stream_wc_{next(_STREAM_SEQ)}"
-    # windowed-count sink state is bounded per (window, event_type) key at
-    # ANY input scale — same contract as the sketch sinks — so the default
-    # 32-wide stream shuffle is pure state-store/scheduling overhead (the
-    # r13 scaling block measured 8 cores 3.2x FASTER than 32 on this row).
-    # Pin the stream's width for its lifetime (baked into the checkpoint at
-    # creation) and restore the session default afterwards; a single-file
-    # landing dir gives each micro-batch one scan task instead of 32.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            ev.repartition(1).write.parquet(f"{tmp}/landing")
-            stream = spark.readStream.schema(ev.schema).parquet(f"{tmp}/landing")
-            counts = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-            q = (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name).select(
-                "window_start",
-                "event_type",
-                "n",
-                F.round(F.col("total_value").cast("double"), 6).alias("total_value"),
-            )
-            out = _detach(spark, out)  # bounded-slice local frame from sink
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        counts = windowed_event_counts(
+            _land(ev, tmp), window="1 hour", watermark="2 hours"
+        )
+        return _drain_to_memory(counts, tmp, "complete").select(
+            "window_start",
+            "event_type",
+            "n",
+            F.round(F.col("total_value").cast("double"), 6).alias("total_value"),
+        )
+
+    # sink state is bounded per (window, event_type) key
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5142,8 +5144,6 @@ def _streaming_enriched_counts(spark: SparkSession, sf: str) -> DataFrame:
     Same availableNow/memory-sink lifecycle as streaming_windowed_counts,
     so the finalized result equals the batch join+aggregate the oracle
     states."""
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import (
         enrich_stream,
         windowed_event_counts,
@@ -5153,38 +5153,21 @@ def _streaming_enriched_counts(spark: SparkSession, sf: str) -> DataFrame:
     dim = _table(spark, sf, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    name = f"stream_en_{next(_STREAM_SEQ)}"
-    # same bounded-per-(window, segment)-key sink-state contract as
-    # streaming_windowed_counts — pin the stream width, single-file landing
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            ev.repartition(1).write.parquet(f"{tmp}/landing")
-            stream = spark.readStream.schema(ev.schema).parquet(f"{tmp}/landing")
-            enriched = enrich_stream(stream, dim, "user_id")
-            counts = windowed_event_counts(
-                enriched, window="1 hour", watermark="2 hours", group_col="segment"
-            )
-            q = (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name).select(
-                "window_start",
-                "segment",
-                "n",
-                F.round(F.col("total_value").cast("double"), 6).alias("total_value"),
-            )
-            out = _detach(spark, out)  # bounded-slice local frame from sink
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        enriched = enrich_stream(_land(ev, tmp), dim, "user_id")
+        counts = windowed_event_counts(
+            enriched, window="1 hour", watermark="2 hours", group_col="segment"
+        )
+        return _drain_to_memory(counts, tmp, "complete").select(
+            "window_start",
+            "segment",
+            "n",
+            F.round(F.col("total_value").cast("double"), 6).alias("total_value"),
+        )
+
+    # sink state is bounded per (window, segment) key
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5203,59 +5186,40 @@ def _streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     event-time band in the join condition (bounded state), append output.
     All input arrives in one availableNow trigger, so every match emits and
     the result equals the batch interval join the oracle states."""
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import interval_join_streams
 
     ev = _events(spark, sf)
     landing = ev.filter(
         F.col("event_type").isin("purchase", "view")
     ).select("user_id", "event_id", "ts", "event_type")
-    name = f"stream_ij_{next(_STREAM_SEQ)}"
-    # stream-stream join keeps a state store per shuffle partition PER SIDE;
-    # at this data scale 32 partitions is pure state-store overhead — pin the
-    # stream's partitioning low (baked into the checkpoint at creation) and
-    # restore the session default afterwards
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            # ONE single-file landing dir read by both streams (the two
-            # sides are map-side filters of the same source): one write job,
-            # and each microbatch schedules one scan task per side instead
-            # of 32
-            landing.repartition(1).write.parquet(f"{tmp}/landing")
-            src = lambda: spark.readStream.schema(landing.schema).parquet(  # noqa: E731
-                f"{tmp}/landing"
-            )
-            ls = src().filter(F.col("event_type") == "purchase").select(
-                F.col("user_id"),
-                F.col("event_id").alias("p_event"),
-                F.col("ts").alias("p_ts"),
-            )
-            rs = src().filter(F.col("event_type") == "view").select(
+
+    def body(tmp: str) -> DataFrame:
+        # the two sides are map-side filters of ONE single-file landing
+        # dir: one write job, and each micro-batch schedules one scan task
+        # per side; the right side is a second file source over that dir
+        ls = _land(landing, tmp).filter(F.col("event_type") == "purchase").select(
+            F.col("user_id"),
+            F.col("event_id").alias("p_event"),
+            F.col("ts").alias("p_ts"),
+        )
+        rs = (
+            spark.readStream.schema(landing.schema)
+            .parquet(f"{tmp}/landing")
+            .filter(F.col("event_type") == "view")
+            .select(
                 F.col("user_id").alias("user_id2"),
                 F.col("event_id").alias("f_event"),
                 F.col("ts").alias("f_ts"),
             )
-            joined = interval_join_streams(
-                ls, rs, key="user_id", left_ts="p_ts", right_ts="f_ts",
-                max_delay="30 minutes",
-            ).select("user_id", "p_event", "f_event")
-            q = (
-                joined.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name)
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+        )
+        joined = interval_join_streams(
+            ls, rs, key="user_id", left_ts="p_ts", right_ts="f_ts",
+            max_delay="30 minutes",
+        ).select("user_id", "p_event", "f_event")
+        return _drain_to_memory(joined, tmp)
+
+    # a stream-stream join keeps a state store per shuffle partition PER SIDE
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5279,8 +5243,6 @@ def _streaming_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     sees events in timestamp order and the stream's output equals batch
     sessionization — which is exactly what the oracle states. The fold
     compares gaps in integer microseconds, same as epoch_us."""
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import sessionize_stream
 
     ev = _events(spark, sf).select("user_id", "ts")
@@ -5288,35 +5250,17 @@ def _streaming_sessionize(spark: SparkSession, sf: str) -> DataFrame:
         (F.max("ts") + F.expr("INTERVAL 2 HOURS")).alias("ts")
     )
     landing = ev.unionByName(sentinels.select("user_id", "ts"))
-    name = f"stream_sess_{next(_STREAM_SEQ)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            landing.repartition(1).write.parquet(f"{tmp}/landing")
-            stream = spark.readStream.schema(landing.schema).parquet(
-                f"{tmp}/landing"
-            )
-            # idle_timeout=False: a timer-driven stateful query keeps
-            # running empty micro-batches under availableNow until every
-            # processing-time timer fires — NoTimeout terminates as soon as
-            # the data is drained, and the sentinels already guarantee
-            # every REAL session closes inside the data batch.
-            sessions = sessionize_stream(stream, idle_timeout=False)
-            q = (
-                sessions.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name)
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        # idle_timeout=False: a timer-driven stateful query keeps running
+        # empty micro-batches under availableNow until every
+        # processing-time timer fires — NoTimeout terminates as soon as
+        # the data is drained, and the sentinels already guarantee every
+        # REAL session closes inside the data batch.
+        sessions = sessionize_stream(_land(landing, tmp), idle_timeout=False)
+        return _drain_to_memory(sessions, tmp)
+
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5349,8 +5293,6 @@ def _streaming_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
     text hash, which is what the oracle states. Event time is synthesized
     monotone in doc_id; with one batch the watermark never evicts, so the
     whole corpus dedups exactly-once-per-key."""
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import dedup_stream
 
     docs = _docs(spark, sf).select(
@@ -5359,30 +5301,15 @@ def _streaming_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
         (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
          + F.make_interval(secs=F.col("doc_id").cast("double"))).alias("ingest_ts"),
     )
-    name = f"stream_dedup_{next(_STREAM_SEQ)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            docs.repartition(1).sortWithinPartitions("doc_id").write.parquet(
-                f"{tmp}/landing"
-            )
-            stream = spark.readStream.schema(docs.schema).parquet(f"{tmp}/landing")
-            kept = dedup_stream(stream, watermark="10 minutes")
-            q = (
-                kept.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name).select("doc_id", "text_hash")
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        stream = _land(
+            docs.repartition(1).sortWithinPartitions("doc_id"), tmp, files=None
+        )
+        kept = dedup_stream(stream, watermark="10 minutes")
+        return _drain_to_memory(kept, tmp).select("doc_id", "text_hash")
+
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5407,41 +5334,27 @@ def _streaming_hll_ingest(spark: SparkSession, sf: str) -> DataFrame:
     batch HLL SQL. The 100 TB story: unique-users-per-type forever with
     state = 5×256 register rows, no user ids ever held in state, CDC
     re-delivery absorbed by idempotence."""
-    import tempfile
-
     from vectordb_etl_spark.functions.sketches import hll_estimate_expr
-    from vectordb_etl_spark.streaming.ingest import hll_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        hll_ingest_stream,
+        run_available_now,
+    )
 
     ev = _events(spark, sf).select("event_type", "user_id")
-    # sketch-sink state is ≤ groups×256 register rows BY CONTRACT at any
-    # scale, so the per-batch merge aggregations don't need the session's
-    # scan-sized shuffle width — pin it low for the stream (same pattern
-    # as streaming_interval_join) and restore afterwards
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            ev.repartition(4).write.parquet(f"{tmp}/landing")
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/landing")
-            )
-            q = hll_ingest_stream(
-                stream, f"{tmp}/registers", f"{tmp}/ckpt",
-                value_col="user_id", group_cols=["event_type"],
-                trigger_available_now=True,
-            )
-            q.awaitTermination()
-            regs = spark.read.parquet(f"{tmp}/registers")
-            out = regs.groupBy("event_type").agg(
-                F.count("*").cast("bigint").alias("n_buckets_used"),
-                hll_estimate_expr(8).alias("hll_est"),
-            )
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        run_available_now(hll_ingest_stream(
+            _land(ev, tmp, files=4, per_trigger=1), f"{tmp}/registers",
+            f"{tmp}/ckpt", value_col="user_id", group_cols=["event_type"],
+        ))
+        regs = spark.read.parquet(f"{tmp}/registers")
+        return regs.groupBy("event_type").agg(
+            F.count("*").cast("bigint").alias("n_buckets_used"),
+            hll_estimate_expr(8).alias("hll_est"),
+        )
+
+    # sketch state is ≤ groups×256 register rows by contract
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 def _streaming_hll_ingest_sql() -> str:
@@ -5468,37 +5381,26 @@ def _streaming_cm_ingest(spark: SparkSession, sf: str) -> DataFrame:
     Addition is commutative/associative, so the final counters are
     BIT-EQUAL to the batch sketch of all events regardless of
     micro-batch boundaries — the oracle is the plain batch CM SQL."""
-    import tempfile
-
-    from vectordb_etl_spark.streaming.ingest import cm_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        cm_ingest_stream,
+        run_available_now,
+    )
 
     ev = _events(spark, sf).select("user_id")
-    # pin the stream's shuffle width: CM state is ≤ d·w counter rows by
-    # contract at any scale (see _streaming_hll_ingest)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            ev.repartition(4).write.parquet(f"{tmp}/landing")
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/landing")
-            )
-            q = cm_ingest_stream(
-                stream, f"{tmp}/cm", f"{tmp}/ckpt",
-                value_col="user_id", d=4, w=256, trigger_available_now=True,
-            )
-            q.awaitTermination()
-            out = (
-                spark.read.parquet(f"{tmp}/cm")
-                .filter(F.col("row") >= 0)
-                .select("row", "pos", "cnt")
-            )
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        run_available_now(cm_ingest_stream(
+            _land(ev, tmp, files=4, per_trigger=1), f"{tmp}/cm",
+            f"{tmp}/ckpt", value_col="user_id", d=4, w=256,
+        ))
+        return (
+            spark.read.parquet(f"{tmp}/cm")
+            .filter(F.col("row") >= 0)
+            .select("row", "pos", "cnt")
+        )
+
+    # CM state is ≤ d·w counter rows by contract
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 def _streaming_cm_ingest_sql() -> str:
@@ -5526,34 +5428,22 @@ def _streaming_bloom_ingest(spark: SparkSession, sf: str) -> DataFrame:
     the batch build (bloom_build_sql), hashing the bitmap itself. The
     100 TB story: "ever seen this customer?" forever with state =
     ceil(m/63) word rows, feeding bloom_prune on future ingests."""
-    import tempfile
-
-    from vectordb_etl_spark.streaming.ingest import bloom_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        bloom_ingest_stream,
+        run_available_now,
+    )
 
     od = _table(spark, sf, "orders").select("o_custkey")
-    # pin the stream's shuffle width: bloom state is ceil(m/63) word rows
-    # by contract at any scale (see _streaming_hll_ingest)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            od.repartition(4).write.parquet(f"{tmp}/landing")
-            stream = (
-                spark.readStream.schema(od.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/landing")
-            )
-            q = bloom_ingest_stream(
-                stream, f"{tmp}/bloom", f"{tmp}/ckpt",
-                key_col="o_custkey", m_bits=8192, k=2,
-                trigger_available_now=True,
-            )
-            q.awaitTermination()
-            out = spark.read.parquet(f"{tmp}/bloom").select("word", "bits")
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        run_available_now(bloom_ingest_stream(
+            _land(od, tmp, files=4, per_trigger=1), f"{tmp}/bloom",
+            f"{tmp}/ckpt", key_col="o_custkey", m_bits=8192, k=2,
+        ))
+        return spark.read.parquet(f"{tmp}/bloom").select("word", "bits")
+
+    # bloom state is ceil(m/63) word rows by contract
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 def _streaming_bloom_ingest_sql() -> str:
@@ -5580,37 +5470,26 @@ def _streaming_bitmap_ingest(spark: SparkSession, sf: str) -> DataFrame:
     sum(bit_count) per type IS COUNT(DISTINCT) — which is exactly what
     the independent oracle states. Forever-running distinct counting
     with state = touched words per type, zero error, no user ids held."""
-    import tempfile
-
-    from vectordb_etl_spark.streaming.ingest import bitmap_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        bitmap_ingest_stream,
+        run_available_now,
+    )
 
     ev = _events(spark, sf).select("event_type", "user_id")
-    # pin the stream's shuffle width: bitmap state is touched WORDS per
-    # type by contract, not event rows (see _streaming_hll_ingest)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            ev.repartition(4).write.parquet(f"{tmp}/landing")
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{tmp}/landing")
-            )
-            q = bitmap_ingest_stream(
-                stream, f"{tmp}/regs", f"{tmp}/ckpt",
-                value_col="user_id", group_cols=["event_type"],
-                trigger_available_now=True,
-            )
-            q.awaitTermination()
-            regs = spark.read.parquet(f"{tmp}/regs")
-            out = regs.groupBy("event_type").agg(
-                F.sum(F.bit_count("bits")).cast("bigint").alias("n_distinct")
-            )
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        run_available_now(bitmap_ingest_stream(
+            _land(ev, tmp, files=4, per_trigger=1), f"{tmp}/regs",
+            f"{tmp}/ckpt", value_col="user_id", group_cols=["event_type"],
+        ))
+        return (
+            spark.read.parquet(f"{tmp}/regs")
+            .groupBy("event_type")
+            .agg(F.sum(F.bit_count("bits")).cast("bigint").alias("n_distinct"))
+        )
+
+    # bitmap state is touched WORDS per type by contract, not event rows
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _register(
@@ -5651,8 +5530,6 @@ def _streaming_lsh_dedup(spark: SparkSession, sf: str) -> DataFrame:
     dedup). Same determinism harness as streaming_exact_dedup: one sorted
     landing file -> one availableNow micro-batch, watermark never evicts,
     so the result is exactly the batch semi-join the oracle states."""
-    import tempfile
-
     from vectordb_etl_spark.streaming.ingest import lsh_screen_stream
 
     docs = _docs(spark, sf).select(
@@ -5664,35 +5541,19 @@ def _streaming_lsh_dedup(spark: SparkSession, sf: str) -> DataFrame:
     corpus_bands = D.lsh_band_table(
         docs.filter(F.col("doc_id") >= 250).select("doc_id", "text")
     )
-    name = f"stream_lsh_{next(_STREAM_SEQ)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory() as tmp:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            new_docs = docs.filter(F.col("doc_id") < 250)
-            new_docs.repartition(1).sortWithinPartitions("doc_id").write.parquet(
-                f"{tmp}/landing"
-            )
-            corpus_bands.write.parquet(f"{tmp}/corpus_bands")
-            static_bands = spark.read.parquet(f"{tmp}/corpus_bands")
-            stream = spark.readStream.schema(new_docs.schema).parquet(
-                f"{tmp}/landing"
-            )
-            flagged = lsh_screen_stream(stream, static_bands)
-            q = (
-                flagged.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name).select("doc_id")
-            out = _detach(spark, out)  # bounded-slice local frame
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+
+    def body(tmp: str) -> DataFrame:
+        new_docs = docs.filter(F.col("doc_id") < 250)
+        stream = _land(
+            new_docs.repartition(1).sortWithinPartitions("doc_id"), tmp,
+            files=None,
+        )
+        corpus_bands.write.parquet(f"{tmp}/corpus_bands")
+        static_bands = spark.read.parquet(f"{tmp}/corpus_bands")
+        flagged = lsh_screen_stream(stream, static_bands)
+        return _drain_to_memory(flagged, tmp).select("doc_id")
+
+    return _scratch(spark, body, stream_width=_STREAM_WIDTH)
 
 
 _STREAM_LSH_ORACLE = (
@@ -5718,12 +5579,13 @@ def _streaming_ivf_ingest(spark: SparkSession, sf: str) -> DataFrame:
     final per-cell occupancy (centroid_id, n) — which the oracle restates
     as the 6-dp-rounded cosine argmax assignment of ALL vectors, because
     build-time and add-time assignment share one rule."""
-    import tempfile
-
     import numpy as np
 
     from vectordb_etl_spark.operators.ann import IVFIndex
-    from vectordb_etl_spark.streaming.ingest import ivf_ingest_stream
+    from vectordb_etl_spark.streaming.ingest import (
+        ivf_ingest_stream,
+        run_available_now,
+    )
 
     emb = _table(spark, sf, "embeddings").select("vec_id", "embedding")
     cent_rows = (
@@ -5733,26 +5595,23 @@ def _streaming_ivf_ingest(spark: SparkSession, sf: str) -> DataFrame:
         [r["embedding"] for r in sorted(cent_rows, key=lambda r: r["vec_id"])],
         dtype=np.float64,
     )
-    with tempfile.TemporaryDirectory() as tmp:
+
+    def body(tmp: str) -> DataFrame:
         idx = IVFIndex(spark, f"{tmp}/ivf").build(
             emb.filter(F.col("vec_id") < 100),
             centroids=cents, assign_round_dp=6,
         )
         rest = emb.filter(F.col("vec_id") >= 100)
-        rest.repartition(1).write.parquet(f"{tmp}/landing")
-        stream = spark.readStream.schema(rest.schema).parquet(f"{tmp}/landing")
-        q = ivf_ingest_stream(
-            stream, idx, f"{tmp}/ckpt", assign_round_dp=6,
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
-        out = (
+        run_available_now(ivf_ingest_stream(
+            _land(rest, tmp), idx, f"{tmp}/ckpt", assign_round_dp=6,
+        ))
+        return (
             spark.read.parquet(f"{tmp}/ivf/data")
             .groupBy("centroid_id")
             .agg(F.count("*").alias("n"))
         )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -7840,28 +7699,10 @@ _register(
 )
 
 
-def _dynamic_meta_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    """enable_dynamic_field parity END-TO-END (reference
-    modules/milvus_store.py:62-66; VERDICT r10 item 1): documents arrive
-    with loader-specific extra columns the fixed schema doesn't declare
-    (`rating`, `origin` — plus `lang`/`n_chars` themselves, which are not
-    store schema fields), fold into the `meta: map<string,string>` column
-    at insert (store.insert_documents(dynamic_meta=True) →
-    fold_dynamic_meta), round-trip through the partitioned parquet write,
-    and come back through a Milvus-style filter STRING that names the
-    dynamic fields DIRECTLY (`rating == "3" and n_chars > 300` — bare
-    identifiers resolve into the meta map with numeric cast-back,
-    functions/filter_expr.py). Output reads the dynamic values back out
-    of the map. Scale shape: the fold is pure map expressions (no UDF, no
-    shuffle); the write is the store's one partitioned job; the read-back
-    filter is a map access over the pruned scan."""
-    import tempfile
-
-    from vectordb_etl_spark.config import StoreConfig
-    from vectordb_etl_spark.functions.filter_expr import parse_filter
-    from vectordb_etl_spark.store.collections import CollectionStore
-
-    docs = _docs(spark, sf).select(
+def _dynamic_meta_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """Documents carrying columns the store schema does not declare
+    (``lang``, ``n_chars``, ``rating``, ``origin``) — the dynamic-field feed."""
+    return _docs(spark, sf).select(
         "doc_id",
         "text",
         "lang",
@@ -7869,21 +7710,49 @@ def _dynamic_meta_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("n_chars") % 5).cast("string").alias("rating"),
         F.upper(F.col("lang")).alias("origin"),
     )
-    with tempfile.TemporaryDirectory() as tmp:
+
+
+def _dynamic_meta_readback(store) -> DataFrame:
+    """Read the dynamic fields back through a filter string that names them
+    directly, as a Milvus ``expr`` would."""
+    from vectordb_etl_spark.functions.filter_expr import parse_filter
+
+    back = store.read()
+    pred = parse_filter('rating == "3" and n_chars > 300', columns=back.columns)
+    return back.filter(pred).select(
+        "doc_id",
+        F.col("meta")["rating"].alias("rating"),
+        F.col("meta")["origin"].alias("origin"),
+        F.col("meta")["n_chars"].cast("long").alias("n_chars"),
+    )
+
+
+def _dynamic_meta_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
+    """enable_dynamic_field parity END-TO-END (reference
+    modules/milvus_store.py:62-66): documents arrive with loader-specific
+    extra columns the fixed schema doesn't declare (`rating`, `origin` —
+    plus `lang`/`n_chars` themselves, which are not store schema fields),
+    fold into the `meta: map<string,string>` column at insert
+    (store.insert_documents(dynamic_meta=True) → fold_dynamic_meta),
+    round-trip through the partitioned parquet write, and come back
+    through a Milvus-style filter STRING that names the dynamic fields
+    DIRECTLY (`rating == "3" and n_chars > 300` — bare identifiers
+    resolve into the meta map with numeric cast-back,
+    functions/filter_expr.py). Output reads the dynamic values back out
+    of the map. Scale shape: the fold is pure map expressions (no UDF, no
+    shuffle); the write is the store's one partitioned job; the read-back
+    filter is a map access over the pruned scan."""
+    from vectordb_etl_spark.config import StoreConfig
+    from vectordb_etl_spark.store.collections import CollectionStore
+
+    docs = _dynamic_meta_docs(spark, sf)
+
+    def body(tmp: str) -> DataFrame:
         store = CollectionStore(spark, StoreConfig(warehouse_dir=f"{tmp}/w"))
         store.insert_documents(docs, embed=False, dynamic_meta=True)
-        back = store.read()
-        pred = parse_filter(
-            'rating == "3" and n_chars > 300', columns=back.columns
-        )
-        out = back.filter(pred).select(
-            "doc_id",
-            F.col("meta")["rating"].alias("rating"),
-            F.col("meta")["origin"].alias("origin"),
-            F.col("meta")["n_chars"].cast("long").alias("n_chars"),
-        )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+        return _dynamic_meta_readback(store)
+
+    return _scratch(spark, body)
 
 
 _register(
@@ -7905,16 +7774,8 @@ def _dynamic_meta_key_stats(spark: SparkSession, sf: str) -> DataFrame:
     key cardinality (not corpus size) bounds the result."""
     from vectordb_etl_spark.store.collections import fold_dynamic_meta
 
-    docs = _docs(spark, sf).select(
-        "doc_id",
-        "text",
-        "lang",
-        "n_chars",
-        (F.col("n_chars") % 5).cast("string").alias("rating"),
-        F.upper(F.col("lang")).alias("origin"),
-    )
     return (
-        fold_dynamic_meta(docs)
+        fold_dynamic_meta(_dynamic_meta_docs(spark, sf))
         .select(F.explode("meta").alias("key", "value"))
         .groupBy("key")
         .agg(
@@ -7941,50 +7802,32 @@ _register(
 def _streaming_dynamic_meta(spark: SparkSession, sf: str) -> DataFrame:
     """enable_dynamic_field through the STREAMING insert path (reference
     milvus_store.py:62-66 — the dynamic field applies to EVERY insert
-    path; VERDICT r11 item 2): the same documents-with-extra-columns feed
-    as dynamic_meta_roundtrip lands as files, flows through
+    path): the same documents-with-extra-columns feed as
+    dynamic_meta_roundtrip lands as files, flows through
     write_collection_stream(dynamic_meta=True) — foreachBatch reusing the
     batch sink, so the fold IS fold_dynamic_meta — and reads back through
     the same dynamic-field filter string. The oracle is the batch
     roundtrip's SQL verbatim: stream-landed ≡ batch-inserted, hash-equal.
     Scale shape: per-micro-batch cost is the batch sink's (map-only fold +
     one partitioned write); no extra state, no extra shuffle."""
-    import tempfile
-
     from vectordb_etl_spark.config import StoreConfig
-    from vectordb_etl_spark.functions.filter_expr import parse_filter
     from vectordb_etl_spark.store.collections import CollectionStore
-    from vectordb_etl_spark.streaming.ingest import write_collection_stream
-
-    docs = _docs(spark, sf).select(
-        "doc_id",
-        "text",
-        "lang",
-        "n_chars",
-        (F.col("n_chars") % 5).cast("string").alias("rating"),
-        F.upper(F.col("lang")).alias("origin"),
+    from vectordb_etl_spark.streaming.ingest import (
+        run_available_now,
+        write_collection_stream,
     )
-    with tempfile.TemporaryDirectory() as tmp:
-        docs.write.parquet(f"{tmp}/landing")
+
+    docs = _dynamic_meta_docs(spark, sf)
+
+    def body(tmp: str) -> DataFrame:
+        stream = _land(docs, tmp, files=None)
         store = CollectionStore(spark, StoreConfig(warehouse_dir=f"{tmp}/w"))
-        stream = spark.readStream.schema(docs.schema).parquet(f"{tmp}/landing")
-        q = write_collection_stream(
-            stream, store, f"{tmp}/ckpt",
-            trigger_available_now=True, dynamic_meta=True,
-        )
-        q.awaitTermination()
-        back = store.read()
-        pred = parse_filter(
-            'rating == "3" and n_chars > 300', columns=back.columns
-        )
-        out = back.filter(pred).select(
-            "doc_id",
-            F.col("meta")["rating"].alias("rating"),
-            F.col("meta")["origin"].alias("origin"),
-            F.col("meta")["n_chars"].cast("long").alias("n_chars"),
-        )
-        out = _detach(spark, out)  # bounded-slice local frame
-    return out
+        run_available_now(write_collection_stream(
+            stream, store, f"{tmp}/ckpt", dynamic_meta=True,
+        ))
+        return _dynamic_meta_readback(store)
+
+    return _scratch(spark, body)
 
 
 _register(

@@ -63,6 +63,31 @@ def test_no_collect_outside_sanctioned_files():
     assert not offenders, f"driver-side materialization found: {offenders}"
 
 
+def test_entry_conf_writes_and_temp_dirs_stay_scoped():
+    """In the driver-contract file, session conf is written only by the
+    ``_scratch`` wrapper (which restores what it pins) and by the two
+    reader settings in ``_norm_ts``/``_events``; and every query gets its
+    temp dir from ``_scratch``, the one place ``tempfile`` is imported."""
+    import ast
+
+    src = (PKG.parent / "__spark_entry__.py").read_text()
+    owner = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+
+    def owners(pattern):
+        return [
+            owner.get(src[: m.start()].count("\n") + 1, "<module>")
+            for m in re.finditer(pattern, src, re.M)
+        ]
+
+    conf_writers = set(owners(r"\bconf\.(set|unset)\("))
+    assert conf_writers <= {"_scratch", "_norm_ts", "_events"}, conf_writers
+    assert owners(r"^[ \t]*(import tempfile|from tempfile import)") == ["_scratch"]
+
+
 def test_rotation_covers_every_registered_query_exactly_once():
     """The static _PRIORITY fallback must still cover the registry: if the
     live rotation ever falls back to it, a query missing from the list

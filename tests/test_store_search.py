@@ -222,6 +222,47 @@ def test_stats_manifest_lost_race_rebases_delta(
     assert store._latest_stats_counts() == {"html_f1": 18}
 
 
+def test_stats_invalid_marker_retries_after_lost_race(
+    spark, docs_tiny, tmp_path, monkeypatch
+):
+    """When every delta commit loses its race, the invalid marker is the
+    fallback — and it can lose a race too. It must retry on a re-listed
+    version, so readers end on the scan path, never on stale counts."""
+    from vectordb_etl_spark.store.snapshots import try_commit_manifest
+
+    store = CollectionStore(
+        spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
+    )
+    docs = docs_tiny.select(
+        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
+        F.lit("english").alias("language"),
+    ).limit(10)
+    store.insert_documents(docs, embedding_config=EMB)
+    assert store._latest_stats_counts() == {"html_f1": 10}
+
+    real = CollectionStore._try_commit_stats
+    markers = {"n": 0}
+
+    def racy(self, fs, version, manifest):
+        if manifest["valid"] is False:
+            markers["n"] += 1
+            if markers["n"] > 1:  # the marker's own first attempt loses too
+                return real(self, fs, version, manifest)
+        # a concurrent writer commits a stale-but-valid manifest first
+        stale = {"version": version, "valid": True,
+                 "collections": {"html_f1": 10}}
+        assert try_commit_manifest(
+            fs, self._jpath, self._stats_dir, version, stale
+        )
+        return real(self, fs, version, manifest)
+
+    monkeypatch.setattr(CollectionStore, "_try_commit_stats", racy)
+    store.insert_documents(docs.limit(3), embedding_config=EMB)  # delta +3
+    monkeypatch.undo()
+    assert markers["n"] == 2  # first marker lost, retry committed
+    assert store._latest_stats_counts() is None
+
+
 def test_partition_pruning_on_named_collection(store):
     name = store.list_collections()[0]
     plan = store.read(name)._jdf.queryExecution().executedPlan().toString()

@@ -14,6 +14,7 @@ from vectordb_etl_spark.store.collections import CollectionStore
 from vectordb_etl_spark.streaming import (
     dedup_stream,
     read_document_stream,
+    run_available_now,
     sessionize_stream,
     transform_stream,
     windowed_event_counts,
@@ -46,10 +47,7 @@ def test_stream_pipeline_end_to_end(spark, landing, tmp_path_factory):
     assert docs.isStreaming
     chunks = transform_stream(docs, embedding_config=EmbeddingConfig(dimension=16))
     deduped = dedup_stream(chunks)
-    q = write_collection_stream(
-        deduped, store, str(work / "ckpt"), trigger_available_now=True
-    )
-    q.awaitTermination(120)
+    run_available_now(write_collection_stream(deduped, store, str(work / "ckpt")))
     out = store.read()
     assert set(r["collection"] for r in out.select("collection").distinct().collect()) == {
         "html_hr", "html_eng",
@@ -59,15 +57,14 @@ def test_stream_pipeline_end_to_end(spark, landing, tmp_path_factory):
     assert out.filter(F.col("doc_id") == "d1").count() > 0
     assert len(out.select("embedding").first()[0]) == 16
     # restart with no new files: checkpoint prevents reprocessing
-    q2 = write_collection_stream(
+    run_available_now(write_collection_stream(
         read_document_stream(spark, landing, DOC_SCHEMA).transform(
             lambda df: dedup_stream(
                 transform_stream(df, embedding_config=EmbeddingConfig(dimension=16))
             )
         ),
-        store, str(work / "ckpt"), trigger_available_now=True,
-    )
-    q2.awaitTermination(120)
+        store, str(work / "ckpt"),
+    ))
     assert store.read().count() == out.count()
 
 
@@ -88,14 +85,11 @@ def test_windowed_event_counts_matches_batch(spark, tmp_path_factory):
         spark, str(d), "event_id long, event_type string, value double, ts timestamp"
     )
     agg = windowed_event_counts(stream)
-    q = (
+    run_available_now(
         agg.writeStream.format("memory")
         .queryName("win_counts")
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     got = {
         (str(r["window_start"]), r["event_type"]): (r["n"], r["total_value"])
         for r in spark.sql("SELECT * FROM win_counts").collect()
@@ -128,16 +122,20 @@ def test_sessionize_stream_closes_on_gap(spark, tmp_path_factory):
         .start()
     )
     # idle_timeout=True keeps the availableNow query alive running empty
-    # micro-batches until the 30-min PROCESSING-time timer fires, so a
-    # plain awaitTermination(120) burned its full 120 s and left the
-    # query running. The closed session is emitted by the first data
-    # micro-batch — poll for it, then stop the query.
+    # micro-batches until the 30-min PROCESSING-time timer fires, so
+    # waiting for termination would burn the whole deadline. The closed
+    # session is emitted by the first data micro-batch — poll for it
+    # (a failed query raises its own error at once), then stop the query.
     deadline = time.time() + 120
-    while time.time() < deadline:
-        if spark.sql("SELECT count(*) FROM sessions").collect()[0][0] >= 1:
-            break
-        time.sleep(0.5)
-    q.stop()
+    try:
+        while time.time() < deadline:
+            if q.exception() is not None:
+                raise q.exception()
+            if spark.sql("SELECT count(*) FROM sessions").collect()[0][0] >= 1:
+                break
+            time.sleep(0.5)
+    finally:
+        q.stop()
     rows = spark.sql("SELECT * FROM sessions").collect()
     assert len(rows) == 1
     s = rows[0]
@@ -177,16 +175,13 @@ def test_interval_join_streams_matches_and_bounds(spark, tmp_path_factory):
     ).parquet(str(d / "r"))
     joined = interval_join_streams(ls, rs, max_delay="30 minutes")
     assert joined.isStreaming
-    q = (
+    run_available_now(
         joined.select("user_id", "p_event", "f_event")
         .writeStream.format("memory")
         .queryName("ij_out")
         .outputMode("append")
         .option("checkpointLocation", str(d / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     got = {tuple(r) for r in spark.sql("SELECT * FROM ij_out").collect()}
     assert got == {(1, 100, 200), (2, 101, 203)}
 
@@ -241,9 +236,9 @@ def test_stream_dynamic_meta_folds_like_batch(spark, tmp_path_factory):
         stream = spark.readStream.schema(df.schema).parquet(
             str(work / "landing")
         )
-        q = sink(stream, store, str(work / f"ckpt_{wh}"),
-                 trigger_available_now=True, dynamic_meta=True)
-        q.awaitTermination(120)
+        run_available_now(
+            sink(stream, store, str(work / f"ckpt_{wh}"), dynamic_meta=True)
+        )
         back = store.read()
         assert "rating" not in back.columns, wh
         got = {r["chunk_id"]: r["meta"] for r in back.collect()}
@@ -276,11 +271,9 @@ def test_upsert_collection_stream_idempotent_rekey(spark, tmp_path_factory):
         stream = spark.readStream.schema(emb_schema).parquet(
             str(work / "landing")
         )
-        q = upsert_collection_stream(
-            stream, store, str(work / "ckpt"), trigger_available_now=True,
-            version_col="v",
-        )
-        q.awaitTermination(120)
+        run_available_now(upsert_collection_stream(
+            stream, store, str(work / "ckpt"), version_col="v",
+        ))
 
     run_once()
     assert store.read().count() == 2
@@ -320,16 +313,13 @@ def test_dedup_stream_first_wins_is_min_id_with_single_file_landing(
         str(tmp / "landing")
     )
     stream = spark.readStream.schema(docs.schema).parquet(str(tmp / "landing"))
-    q = (
+    run_available_now(
         dedup_stream(stream, watermark="10 minutes")
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("t_sdedup")
         .option("checkpointLocation", str(tmp / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     kept = sorted(r["doc_id"] for r in spark.table("t_sdedup").collect())
     assert kept == [1, 3]
 
@@ -364,16 +354,13 @@ def test_lsh_screen_stream_flags_near_dups_once(spark, tmp_path_factory):
         str(tmp / "landing")
     )
     stream = spark.readStream.schema(docs.schema).parquet(str(tmp / "landing"))
-    q = (
+    run_available_now(
         lsh_screen_stream(stream, corpus_bands)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("t_slsh")
         .option("checkpointLocation", str(tmp / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     flagged = [r["doc_id"] for r in spark.table("t_slsh").collect()]
     assert flagged == [1]  # exactly once, despite 4 colliding bands
 
@@ -397,10 +384,7 @@ def test_ivf_ingest_stream_appends_via_add(spark, embeddings_tiny, tmp_path_fact
 
     rest.repartition(1).write.parquet(str(tmp / "landing"))
     stream = spark.readStream.schema(rest.schema).parquet(str(tmp / "landing"))
-    q = ivf_ingest_stream(
-        stream, idx, str(tmp / "ckpt"), trigger_available_now=True
-    )
-    q.awaitTermination()
+    run_available_now(ivf_ingest_stream(stream, idx, str(tmp / "ckpt")))
 
     assert (idx.centroids == cents_before).all()
     data = spark.read.parquet(f"{tmp}/ivf/data")
@@ -435,11 +419,10 @@ def test_graph_ingest_stream_appends_segments(spark, embeddings_tiny, tmp_path_f
     files_before = set(glob.glob(f"{tmp}/g/shard=*/part-*.parquet"))
     rest.repartition(1).write.parquet(str(tmp / "landing"))
     stream = spark.readStream.schema(rest.schema).parquet(str(tmp / "landing"))
-    q = graph_ingest_stream(
+    run_available_now(graph_ingest_stream(
         stream, idx, str(tmp / "ckpt"), num_shards=2, m=8,
-        ef_construction=32, trigger_available_now=True,
-    )
-    q.awaitTermination()
+        ef_construction=32,
+    ))
     assert files_before <= set(glob.glob(f"{tmp}/g/shard=*/part-*.parquet"))
     assert spark.read.parquet(str(tmp / "g")).count() == embeddings_tiny.count()
 
@@ -471,12 +454,10 @@ def test_hll_ingest_stream_equals_batch_and_absorbs_redelivery(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q = hll_ingest_stream(
+    run_available_now(hll_ingest_stream(
         stream, regs_path, str(tmp_path / "ckpt"),
         value_col="user_id", group_cols=["event_type"],
-        trigger_available_now=True,
-    )
-    q.awaitTermination()
+    ))
     streamed = sorted(map(tuple, spark.read.parquet(regs_path).collect()))
     batch = sorted(
         map(tuple, hll_registers(ev, "user_id", ["event_type"]).collect())
@@ -489,12 +470,10 @@ def test_hll_ingest_stream_equals_batch_and_absorbs_redelivery(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q2 = hll_ingest_stream(
+    run_available_now(hll_ingest_stream(
         stream2, regs_path, str(tmp_path / "ckpt2"),
         value_col="user_id", group_cols=["event_type"],
-        trigger_available_now=True,
-    )
-    q2.awaitTermination()
+    ))
     assert sorted(map(tuple, spark.read.parquet(regs_path).collect())) == batch
 
 
@@ -518,11 +497,10 @@ def test_cm_ingest_stream_exactly_once_under_redelivery(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q = cm_ingest_stream(
+    run_available_now(cm_ingest_stream(
         stream, sk_path, str(tmp_path / "ckpt"),
-        value_col="user_id", d=3, w=128, trigger_available_now=True,
-    )
-    q.awaitTermination()
+        value_col="user_id", d=3, w=128,
+    ))
     stored = spark.read.parquet(sk_path)
     counters = sorted(
         map(tuple, stored.filter(F.col("row") >= 0).collect())
@@ -543,11 +521,10 @@ def test_cm_ingest_stream_exactly_once_under_redelivery(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q2 = cm_ingest_stream(
+    run_available_now(cm_ingest_stream(
         stream2, sk_path, str(tmp_path / "ckpt2"),
-        value_col="user_id", d=3, w=128, trigger_available_now=True,
-    )
-    q2.awaitTermination()
+        value_col="user_id", d=3, w=128,
+    ))
     after = sorted(
         map(
             tuple,
@@ -575,11 +552,10 @@ def test_kmv_ingest_stream_equals_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = kmv_ingest_stream(
+        run_available_now(kmv_ingest_stream(
             stream, regs_path, str(tmp_path / ckpt),
-            value_col="user_id", k=64, trigger_available_now=True,
-        )
-        q.awaitTermination()
+            value_col="user_id", k=64,
+        ))
 
     run("ckpt")
     batch = sorted(
@@ -615,12 +591,10 @@ def test_sketch_sink_recovers_from_crashed_swap(spark, tmp_path):
 
     def run(landing, ckpt):
         stream = spark.readStream.schema(ev.schema).parquet(landing)
-        q = hll_ingest_stream(
+        run_available_now(hll_ingest_stream(
             stream, regs, str(tmp_path / ckpt),
             value_col="user_id", group_cols=["event_type"],
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
+        ))
 
     run(landing1, "c1")
     # simulate the crash window: registers renamed aside, staging lost
@@ -656,12 +630,10 @@ def test_bloom_ingest_stream_equals_batch_and_absorbs_redelivery(spark, tmp_path
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = bloom_ingest_stream(
+        run_available_now(bloom_ingest_stream(
             stream, bloom_path, str(tmp_path / ckpt),
             key_col="o_custkey", m_bits=2048, k=2,
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
+        ))
 
     _run("ckpt")
     batch = sorted(map(tuple, bloom_build(od, "o_custkey", 2048, 2).collect()))
@@ -690,12 +662,10 @@ def test_bitmap_ingest_stream_exact_and_replay_safe(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = bitmap_ingest_stream(
+        run_available_now(bitmap_ingest_stream(
             stream, regs_path, str(tmp_path / ckpt),
             value_col="user_id", group_cols=["event_type"],
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
+        ))
 
     def _counts():
         return {
@@ -747,11 +717,9 @@ def test_cm_sink_crash_replay_at_10x_state(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
         )
-        q = cm_ingest_stream(
+        run_available_now(cm_ingest_stream(
             stream, sketch, ckpt, value_col="user_id", d=d, w=w,
-            trigger_available_now=True,
-        )
-        q.awaitTermination()
+        ))
 
     _run()
     # crash window: sketch renamed aside, staging lost, AND the stream
@@ -771,3 +739,91 @@ def test_cm_sink_crash_replay_at_10x_state(spark, tmp_path):
     # state is scalar-bounded: d·w counters max + exactly one meta row
     assert final.count() <= d * w + 1
     assert final.filter(F.col("row") == -1).count() == 1
+
+
+def test_scratch_stream_failure_raises_at_once_and_restores_state(spark):
+    """A sink that raises inside the scratch + stream scope surfaces as
+    the query's own StreamingQueryException right away, and the scope
+    still restores the shuffle width, removes its temp dir and leaves no
+    active query."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    import __spark_entry__ as em
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("sink exploded")
+
+    seen = {}
+
+    def body(tmp):
+        seen["tmp"] = tmp
+        run_available_now(
+            em._land(spark.range(10), tmp)
+            .writeStream.option("checkpointLocation", f"{tmp}/ckpt")
+            .foreachBatch(boom)
+        )
+        return spark.range(1)
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")  # != stream width
+    try:
+        t0 = time.time()
+        with pytest.raises(StreamingQueryException, match="sink exploded"):
+            em._scratch(spark, body, stream_width=em._STREAM_WIDTH)
+        assert time.time() - t0 < 60
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert not os.path.exists(seen["tmp"])
+    assert spark.streams.active == []
+
+
+def test_stream_queries_leave_session_state_unchanged(spark, tmp_path):
+    """Registered stream queries restore the shuffle width and drop their
+    memory-sink views; and the 4-file, one-file-per-trigger landing the
+    Count-Min query relies on really commits four non-empty micro-batches
+    (the premise of cm_ingest_stream's batch-id watermark)."""
+    import __spark_entry__ as em
+    from tests.conftest import SF_TINY
+    from vectordb_etl_spark.streaming.ingest import cm_ingest_stream
+
+    queries = em.queries()
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")  # != stream width
+    try:
+        for name in (
+            "streaming_windowed_counts",
+            "streaming_interval_join",
+            "streaming_cm_ingest",
+            "streaming_ivf_ingest",
+        ):
+            assert queries[name](spark, SF_TINY).count() > 0, name
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "7", name
+            views = [
+                t.name for t in spark.catalog.listTables()
+                if t.name.startswith("stream_")
+            ]
+            assert views == [], (name, views)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert spark.streams.active == []
+
+    ev = spark.read.parquet(f"{SF_TINY}/events.parquet").select("user_id")
+    ev.repartition(4).write.parquet(str(tmp_path / "landing"))
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "landing"))
+    )
+    progress = run_available_now(cm_ingest_stream(
+        stream, str(tmp_path / "cm"), str(tmp_path / "ckpt"),
+        value_col="user_id",
+    ))
+    # numInputRows counts source rows per scan execution, and the sink
+    # runs several jobs per batch — so only its sign is meaningful here
+    batches = [p["batchId"] for p in progress if p["numInputRows"] > 0]
+    assert batches == [0, 1, 2, 3]
+    meta = spark.read.parquet(str(tmp_path / "cm")).filter(F.col("row") == -1)
+    assert [r["cnt"] for r in meta.collect()] == [3]  # last committed id

@@ -579,14 +579,14 @@ class IVFIndex:
         )
         # non-finite codewords (degenerate training data) render as
         # nanD/infD, which F.expr cannot parse — route them to the UDF
-        # path, which handles any float64 (ADVICE r13)
-        finite = all(
+        # path, which handles any float64. The size test comes first, so
+        # the scan only runs while the literal path is still possible.
+        if n_doubles > self.PQ_LITERAL_MAX_DOUBLES or not all(
             np.isfinite(v)
             for subs in by_sub.values()
             for cw in subs.values()
             for v in cw
-        )
-        if n_doubles > self.PQ_LITERAL_MAX_DOUBLES or not finite:
+        ):
             cb_arr = np.array(
                 [
                     [by_sub[s][c] for c in sorted(by_sub[s])]

@@ -830,9 +830,9 @@ class CollectionStore:
         fail the write that produced the rows."""
         try:
             fs = self._fs(self._root)
-            # bounded retries (ADVICE r12): if rename persistently fails
-            # for a NON-race reason (object-store/permission quirk), give
-            # up rather than spin — the scan path self-heals later anyway
+            # bounded retries: if rename persistently fails for a NON-race
+            # reason (object-store/permission quirk), give up rather than
+            # spin — the scan path self-heals later anyway
             for _attempt in range(5):
                 vs = self._stats_versions(fs)
                 prev = None
@@ -867,12 +867,17 @@ class CollectionStore:
             # retries exhausted with the delta NOT applied: a still-valid
             # latest manifest would serve stale counts forever — the
             # out-of-band check only compares the collection SET, which a
-            # same-collection append never changes (ADVICE r13). Mark the
-            # manifest invalid (best-effort) so readers fall back to the
-            # self-healing scan path instead of undercounting.
-            vs = self._stats_versions(fs)
-            version = (vs[-1] + 1) if vs else 0
-            self._try_commit_stats(fs, version, {"version": version, "valid": False})
+            # same-collection append never changes. Mark the manifest
+            # invalid so readers fall back to the self-healing scan path
+            # instead of undercounting; the marker can lose a version race
+            # too, so it gets the same bounded, re-listing retry.
+            for _attempt in range(5):
+                vs = self._stats_versions(fs)
+                version = (vs[-1] + 1) if vs else 0
+                if self._try_commit_stats(
+                    fs, version, {"version": version, "valid": False}
+                ):
+                    return
         except Exception:  # noqa: BLE001 — telemetry only, never fail a write
             pass
 

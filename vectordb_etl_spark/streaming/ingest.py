@@ -12,6 +12,14 @@ Stateful pieces differ by design:
   per-key timeout, the streaming twin of the batch lag/running-sum version in
   ``__spark_entry__._sessionize``).
 
+Runner contract: every sink builder here (``*_collection_stream``,
+``*_ingest_stream``) returns its configured, NOT yet started
+``DataStreamWriter``. A continuous deployment picks its own trigger and
+calls ``.start()``; a bounded run (backfill, test, oracle query) passes the
+writer to :func:`run_available_now`, which drains what is available, raises
+a failed query's exception at once, leaves no active query behind and
+returns the per-micro-batch progress records.
+
 Scale notes: file-source streaming scales by listing increments
 (``maxFilesPerTrigger`` backpressure); foreachBatch writes reuse the batch
 collection sink so the parquet layout (partitioned by ``collection``) is
@@ -26,6 +34,7 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -39,6 +48,31 @@ from pyspark.sql.types import (
 from vectordb_etl_spark.config import ChunkerConfig, EmbeddingConfig
 from vectordb_etl_spark.functions import cleaning, language
 from vectordb_etl_spark.operators import chunker
+
+
+def run_available_now(writer: DataStreamWriter) -> list[dict]:
+    """Run ``writer`` under the ``availableNow`` trigger until everything
+    available at start has been processed, and return the query's
+    ``recentProgress`` (one record per micro-batch: ``batchId``,
+    ``numInputRows``, ``durationMs``, state-operator metrics).
+
+    A failed query raises its ``StreamingQueryException`` from the wait as
+    soon as it dies, never after a timeout. The query is stopped on every
+    exit path, so ``spark.streams.active`` holds nothing of it afterwards."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return q.recentProgress
+
+
+def _foreach_batch(stream: DataFrame, checkpoint_dir: str, sink) -> DataStreamWriter:
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(sink)
+    )
 
 
 def read_document_stream(
@@ -103,9 +137,8 @@ def write_collection_stream(
     store,
     checkpoint_dir: str,
     split_by_folder: bool = True,
-    trigger_available_now: bool = False,
     dynamic_meta: bool = False,
-):
+) -> DataStreamWriter:
     """S8 as a streaming sink: foreachBatch reuses the batch collection sink,
     so layout/truncation/naming rules are shared with the batch path.
     ``dynamic_meta=True`` folds non-schema columns into the ``meta`` map
@@ -127,14 +160,7 @@ def write_collection_stream(
             # per-micro-batch lineage execution
         )
 
-    writer = (
-        chunks.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(chunks, checkpoint_dir, _sink)
 
 
 def upsert_collection_stream(
@@ -143,10 +169,9 @@ def upsert_collection_stream(
     checkpoint_dir: str,
     key_col: str = "chunk_id",
     split_by_folder: bool = True,
-    trigger_available_now: bool = False,
     version_col: str | None = None,
     dynamic_meta: bool = False,
-):
+) -> DataStreamWriter:
     """Streaming UPSERT sink: foreachBatch routes each micro-batch through
     the store's copy-on-write merge, so a re-ingested document REPLACES its
     previous chunks instead of duplicating them — the exactly-once-per-key
@@ -192,14 +217,7 @@ def upsert_collection_stream(
             # every insert path, CDC upserts included
         )
 
-    writer = (
-        chunks.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(chunks, checkpoint_dir, _sink)
 
 
 def enrich_stream(
@@ -446,8 +464,7 @@ def ivf_ingest_stream(
     emb_col: str = "embedding",
     assign_round_dp: int | None = None,
     pq_id_col: str = "vec_id",
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous ANN-index maintenance: each micro-batch of vectors is
     assigned against the index's EXISTING centroid geometry and appended
     into the partition layout via ``IVFIndex.add`` — a foreachBatch sink
@@ -472,14 +489,7 @@ def ivf_ingest_stream(
             pq_id_col=pq_id_col,
         )
 
-    writer = (
-        stream_vectors.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_vectors, checkpoint_dir, _sink)
 
 
 def graph_ingest_stream(
@@ -492,8 +502,7 @@ def graph_ingest_stream(
     m: int = 16,
     ef_construction: int = 200,
     passthrough: list[str] | None = None,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous GRAPH-index maintenance — the HNSW-tier twin of
     :func:`ivf_ingest_stream`, and the place the segment model earns its
     keep: each micro-batch becomes NEW self-contained NSW segments via
@@ -516,26 +525,41 @@ def graph_ingest_stream(
             passthrough=passthrough,
         )
 
-    writer = (
-        stream_vectors.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
+    return _foreach_batch(stream_vectors, checkpoint_dir, _sink)
+
+
+def _swap_publish(spark: SparkSession, path: str, merge) -> None:
+    """Publish ``merge(old)`` as the sketch table at ``path``, where ``old``
+    is the persisted table (None when there is none yet); ``merge``
+    returning None leaves the table untouched. The write goes to a staging
+    dir and is swapped in by rename, so readers see the complete old or the
+    complete new table.
+
+    A sink that died between rename-aside and rename-in left the ONLY copy
+    of the sketch at ``<path>.old``; it is restored before reading, or the
+    batch would silently treat the table as fresh and the aside cleanup
+    would destroy the history (same recovery rule as the collection store's
+    _restore_if_crashed)."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    fs = jvm_path(path).getFileSystem(
+        spark._jsc.hadoopConfiguration()  # noqa: SLF001
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _restore_sketch_if_crashed(fs, jvm_path, path: str) -> None:
-    """A sink that died between rename-aside and rename-in left the ONLY
-    copy of the sketch at <path>.old — restore it before reading, or the
-    next batch would silently treat the table as fresh and the aside
-    cleanup would destroy the history (same recovery rule as the
-    collection store's _restore_if_crashed)."""
-    aside = jvm_path(f"{path}.old")
     dest = jvm_path(path)
+    aside = jvm_path(f"{path}.old")
     if fs.exists(aside) and not fs.exists(dest):
         fs.rename(aside, dest)
+    exists = fs.exists(dest)
+    out = merge(spark.read.parquet(path) if exists else None)
+    if out is None:
+        return
+    staging = f"{path}.staging"
+    out.write.mode("overwrite").parquet(staging)
+    if fs.exists(aside):
+        fs.delete(aside, True)
+    if exists:
+        fs.rename(dest, aside)
+    fs.rename(jvm_path(staging), dest)
+    fs.delete(aside, True)
 
 
 def hll_ingest_stream(
@@ -545,8 +569,7 @@ def hll_ingest_stream(
     value_col: str,
     group_cols: list[str] | None = None,
     p: int = 8,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous distinct-count maintenance: each micro-batch's HLL
     registers (functions/sketches.py) max-merge into a persisted register
     table — the streaming shape of "unique users per type, forever"
@@ -567,36 +590,16 @@ def hll_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         new_regs = hll_registers(batch_df, value_col, group_cols, p)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = jvm_path(registers_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        _swap_publish(
+            batch_df.sparkSession,
+            registers_path,
+            lambda old: new_regs
+            if old is None
+            else hll_merge(new_regs.unionByName(old), group_cols),
         )
-        _restore_sketch_if_crashed(fs, jvm_path, registers_path)
-        if fs.exists(jvm_path(registers_path)):
-            old = spark.read.parquet(registers_path)
-            merged = hll_merge(new_regs.unionByName(old), group_cols)
-        else:
-            merged = new_regs
-        staging = f"{registers_path}.staging"
-        aside = f"{registers_path}.old"
-        merged.write.mode("overwrite").parquet(staging)
-        if fs.exists(jvm_path(aside)):
-            fs.delete(jvm_path(aside), True)
-        if fs.exists(jvm_path(registers_path)):
-            fs.rename(jvm_path(registers_path), jvm_path(aside))
-        fs.rename(jvm_path(staging), jvm_path(registers_path))
-        fs.delete(jvm_path(aside), True)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
 
 def cm_ingest_stream(
@@ -606,8 +609,7 @@ def cm_ingest_stream(
     value_col: str,
     d: int = 4,
     w: int = 256,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous frequency-sketch maintenance — the Count-Min twin of
     :func:`hll_ingest_stream`, and the reason the two exist side by
     side: HLL register max-merge is IDEMPOTENT (re-delivered batches are
@@ -623,64 +625,38 @@ def cm_ingest_stream(
     State is ≤ d·w counter rows + one meta row; per-batch cost ∝ batch.
     The final counters equal the batch sketch of all rows (addition is
     commutative/associative — micro-batch boundaries don't matter)."""
-    from pyspark.sql import functions as F
-
     from vectordb_etl_spark.functions.sketches import cm_merge, cm_sketch
+    from vectordb_etl_spark.session import local_rows_df
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # nothing to merge; replay of an empty batch is free
-        spark = batch_df.sparkSession
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = jvm_path(sketch_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        )
-        _restore_sketch_if_crashed(fs, jvm_path, sketch_path)
-        exists = fs.exists(jvm_path(sketch_path))
-        if exists:
-            old = spark.read.parquet(sketch_path)
+    def _merge(batch_df: DataFrame, batch_id: int, old: DataFrame | None):
+        merged = cm_sketch(batch_df, value_col, d=d, w=w)
+        if old is not None:
             committed = (
                 old.filter(F.col("row") == -1)
                 .agg(F.max("cnt"))
                 .collect()[0][0]
             )
             if committed is not None and batch_id <= committed:
-                return  # replayed batch — already merged
-            old_counters = old.filter(F.col("row") >= 0)
-        else:
-            old_counters = None
-        new_regs = cm_sketch(batch_df, value_col, d=d, w=w)
-        merged = (
-            cm_merge(old_counters, new_regs)
-            if old_counters is not None
-            else new_regs
-        )
-        from vectordb_etl_spark.session import local_rows_df
-
+                return None  # replayed batch — already merged
+            merged = cm_merge(old.filter(F.col("row") >= 0), merged)
         # one slice, one task: createDataFrame would spread the single
         # meta row over defaultParallelism empty pickled slices per batch
         meta = local_rows_df(
-            spark, [(-1, 0, batch_id)], "row int, pos int, cnt long"
+            batch_df.sparkSession, [(-1, 0, batch_id)],
+            "row int, pos int, cnt long",
         )
-        out = merged.unionByName(meta)
-        staging = f"{sketch_path}.staging"
-        aside = f"{sketch_path}.old"
-        out.write.mode("overwrite").parquet(staging)
-        if fs.exists(jvm_path(aside)):
-            fs.delete(jvm_path(aside), True)
-        if exists:
-            fs.rename(jvm_path(sketch_path), jvm_path(aside))
-        fs.rename(jvm_path(staging), jvm_path(sketch_path))
-        fs.delete(jvm_path(aside), True)
+        return merged.unionByName(meta)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return  # nothing to merge; replay of an empty batch is free
+        _swap_publish(
+            batch_df.sparkSession,
+            sketch_path,
+            lambda old: _merge(batch_df, batch_id, old),
+        )
+
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
 
 def kmv_ingest_stream(
@@ -689,8 +665,7 @@ def kmv_ingest_stream(
     checkpoint_dir: str,
     value_col: str,
     k: int = 256,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous KMV maintenance — the third streaming sketch: merge =
     k-smallest of (persisted ∪ batch registers), which like HLL max-merge
     is commutative/associative/idempotent (taking the k smallest twice
@@ -703,36 +678,14 @@ def kmv_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         new_regs = kmv_registers(batch_df, value_col, k=k)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = jvm_path(registers_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        _swap_publish(
+            batch_df.sparkSession,
+            registers_path,
+            lambda old: new_regs if old is None else kmv_merge(old, new_regs, k=k),
         )
-        _restore_sketch_if_crashed(fs, jvm_path, registers_path)
-        if fs.exists(jvm_path(registers_path)):
-            old = spark.read.parquet(registers_path)
-            merged = kmv_merge(old, new_regs, k=k)
-        else:
-            merged = new_regs
-        staging = f"{registers_path}.staging"
-        aside = f"{registers_path}.old"
-        merged.write.mode("overwrite").parquet(staging)
-        if fs.exists(jvm_path(aside)):
-            fs.delete(jvm_path(aside), True)
-        if fs.exists(jvm_path(registers_path)):
-            fs.rename(jvm_path(registers_path), jvm_path(aside))
-        fs.rename(jvm_path(staging), jvm_path(registers_path))
-        fs.delete(jvm_path(aside), True)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
 
 def bloom_ingest_stream(
@@ -742,8 +695,7 @@ def bloom_ingest_stream(
     key_col: str,
     m_bits: int = 4096,
     k: int = 2,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Continuous membership-filter maintenance — the Bloom sibling of
     :func:`hll_ingest_stream`: each micro-batch's (word, bits) bitmap
     (operators/bloom.py:bloom_build) bit_or-merges into a persisted word
@@ -763,35 +715,14 @@ def bloom_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         new_words = bloom_build(batch_df, key_col, m_bits, k)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = jvm_path(bloom_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        _swap_publish(
+            batch_df.sparkSession,
+            bloom_path,
+            lambda old: new_words if old is None else bloom_merge(new_words, old),
         )
-        _restore_sketch_if_crashed(fs, jvm_path, bloom_path)
-        if fs.exists(jvm_path(bloom_path)):
-            merged = bloom_merge(new_words, spark.read.parquet(bloom_path))
-        else:
-            merged = new_words
-        staging = f"{bloom_path}.staging"
-        aside = f"{bloom_path}.old"
-        merged.write.mode("overwrite").parquet(staging)
-        if fs.exists(jvm_path(aside)):
-            fs.delete(jvm_path(aside), True)
-        if fs.exists(jvm_path(bloom_path)):
-            fs.rename(jvm_path(bloom_path), jvm_path(aside))
-        fs.rename(jvm_path(staging), jvm_path(bloom_path))
-        fs.delete(jvm_path(aside), True)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
 
 def bitmap_ingest_stream(
@@ -800,8 +731,7 @@ def bitmap_ingest_stream(
     checkpoint_dir: str,
     value_col: str,
     group_cols: list[str] | None = None,
-    trigger_available_now: bool = False,
-):
+) -> DataStreamWriter:
     """Stream-maintained EXACT distinct counting — the zero-error member
     of the sketch-sink family (HLL approximates, this one is exact for
     bounded non-negative integer domains): each micro-batch's word
@@ -823,33 +753,13 @@ def bitmap_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
         new_regs = bitmap_registers(batch_df, value_col, group_cols)
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        fs = jvm_path(registers_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
+        _swap_publish(
+            batch_df.sparkSession,
+            registers_path,
+            lambda old: new_regs
+            if old is None
+            else bitmap_merge(new_regs.unionByName(old), group_cols),
         )
-        _restore_sketch_if_crashed(fs, jvm_path, registers_path)
-        if fs.exists(jvm_path(registers_path)):
-            old = spark.read.parquet(registers_path)
-            merged = bitmap_merge(new_regs.unionByName(old), group_cols)
-        else:
-            merged = new_regs
-        staging = f"{registers_path}.staging"
-        aside = f"{registers_path}.old"
-        merged.write.mode("overwrite").parquet(staging)
-        if fs.exists(jvm_path(aside)):
-            fs.delete(jvm_path(aside), True)
-        if fs.exists(jvm_path(registers_path)):
-            fs.rename(jvm_path(registers_path), jvm_path(aside))
-        fs.rename(jvm_path(staging), jvm_path(registers_path))
-        fs.delete(jvm_path(aside), True)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_sink)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
