@@ -12,8 +12,10 @@ tie-breakers so the selected rows are deterministic.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -171,11 +173,9 @@ def entry(spark: SparkSession) -> DataFrame:
     from vectordb_etl_spark.embeddings import query_vector
     from vectordb_etl_spark.operators.topk import topk_search
 
-    from vectordb_etl_spark.session import ensure_min_partitions
-
     sf_dir = "/root/testdata/sf0.001"
     emb_cfg = EmbeddingConfig(dimension=64)
-    docs = ensure_min_partitions(_docs(spark, sf_dir)).select(
+    docs = _docs(spark, sf_dir).select(
         "doc_id",
         "source",
         cleaning.clean_text_col("text").alias("text"),
@@ -792,7 +792,7 @@ from vectordb_etl_spark.operators import ann as A  # noqa: E402
 from vectordb_etl_spark.operators import dedup as D  # noqa: E402
 
 # signature emitted as a comma-joined STRING: the driver canonicalizes with
-# pandas sort/factorize, which cannot hash an array<long> column (r01 err)
+# pandas sort/factorize, which cannot hash an array<long> column
 _register(
     "minhash_signatures",
     lambda spark, sf: _docs(spark, sf).select(
@@ -918,8 +918,8 @@ def _corpus_drift(spark: SparkSession, sf: str) -> DataFrame:
     arithmetic (see sliding_window_agg): shares are ``(1e6 * n) DIV tot``
     bigints, so the report is bit-identical across engines — no raw
     DOUBLE column survives to the output (round(x, 6) of a double is not
-    ulp-stable across engines/agg orders; this burned the r04 driver
-    check). Two map-side-combined aggregates + a full outer join on the
+    ulp-stable across engines/agg orders, so the driver's value hash
+    would diverge). Two map-side-combined aggregates + a full outer join on the
     tiny language key — nothing scales with corpus width."""
     docs = _docs(spark, sf).select(
         "doc_id", "lang", F.length("text").alias("__len")
@@ -989,8 +989,7 @@ _register(
     # every integer output is CAST AS BIGINT: sum(BIGINT) is HUGEINT in
     # DuckDB, and HUGEINT reaches pandas as float64 — the driver hashes
     # pandas frames, so an uncast "407" (Spark int64) vs "407.0" (oracle
-    # float64) hash-reds even though the values are equal (this was the
-    # r04/r05 driver-red root cause for this query).
+    # float64) hash-reds even though the values are equal.
     "SELECT lang, "
     "CAST((1000000 * coalesce(n_old, 0)) // t_old AS BIGINT) "
     "AS share_old_ppm, "
@@ -1115,7 +1114,7 @@ _register(
     # dims are 0-based to match posexplode
     # CAST AS BIGINT on the sums: sum(BIGINT) is HUGEINT in DuckDB and
     # becomes float64 in the driver's pandas frame, hash-redding against
-    # Spark's int64 even when values are identical (r05 driver-red cause).
+    # Spark's int64 even when values are identical.
     "SELECT label, dim, "
     "count(*) FILTER (WHERE old) AS n_old, "
     "count(*) FILTER (WHERE NOT old) AS n_new, "
@@ -1987,7 +1986,7 @@ def _events_daily_anomalies(spark: SparkSession, sf: str) -> DataFrame:
 
     # date_trunc (midnight timestamp), not to_date: DATE reaches pandas
     # as object-dtype datetime.date from Spark but datetime64 from DuckDB
-    # — the r05 driver hash-red dtype-split class (BASELINE.md §8).
+    # — a dtype split the driver's value hash sees (BASELINE.md §8).
     # Timestamps land kind-'M' on both conversion paths.
     daily = (
         _events(spark, sf)
@@ -2171,7 +2170,7 @@ def _hll_multigrain_users(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     # ISO-string day: Spark DATE reaches pandas object-dtype while DuckDB
-    # DATE arrives datetime64 (the r05 driver dtype-split class), and the
+    # DATE arrives datetime64 (a dtype split the driver hash sees), and the
     # 9999-12-31 total-row sentinel rules out the timestamp normalization
     return (
         daily.unionByName(total)
@@ -2667,8 +2666,8 @@ def _scd2_order_status(spark: SparkSession, sf: str) -> DataFrame:
         time_col="d", tie_col="o_orderkey",
     )
     # ISO strings, not DATE: Spark DATE reaches pandas as object-dtype
-    # datetime.date vs DuckDB's datetime64 (the r05 driver dtype-split
-    # class), and the 9999-12-31 open-interval sentinel overflows
+    # datetime.date vs DuckDB's datetime64 (a dtype split the driver hash
+    # sees), and the 9999-12-31 open-interval sentinel overflows
     # nanosecond timestamps, so the timestamp normalization used by the
     # daily-rollup queries is not available here.
     return out.withColumn(
@@ -3025,9 +3024,10 @@ _register(
 # SQL-unrolls-all-N produce the same survivors whenever d <= N, and when
 # the guard trips both sides ran exactly N rounds — hash-equal either way.
 # Cap sized at 4x the measured peel depth (2 rounds at sf0.001/0.01/0.1 —
-# the co-purchase graph has one thin onion layer around the 60-core); the
-# r07 cap of 24 made the unrolled oracle the most expensive check_oracle
-# row (25.5 s at sf0.1, VERDICT r07 item 3) for margin nobody uses.
+# the co-purchase graph has one thin onion layer around the 60-core). A
+# larger cap buys only margin, and the oracle unrolls every capped round:
+# a cap of 24 made it the most expensive check_oracle row (25.5 s at
+# sf0.1).
 _KCORE_CONVERGED_MAX_ROUNDS = 8
 
 
@@ -3036,7 +3036,7 @@ def _kcore_converged(spark: SparkSession, sf: str) -> DataFrame:
     with rounds=None): peel until a round removes nothing, bounded by a
     shared cap. What a user means by "the 60-core" — no round count in
     the contract (reference analogue: the fixed-round kcore_copurchase
-    is the bounded variant; this closes VERDICT r06 item 2). The
+    is the bounded variant). The
     convergence probe is a count() on the already-materialized per-round
     edge table, so the only extra cost over fixed rounds is one cached
     count per round."""
@@ -3065,14 +3065,14 @@ _register(
 )
 
 
-# Measured convergence depth (graph_analytics.convergence_stats, r09):
+# Measured convergence depth (graph_analytics.convergence_stats):
 # 13 iterations at sf0.001 (sparsest nation graph), 1 at sf0.01/sf0.1
 # (the trade graph is complete there, so uniform rank is an immediate
-# fixpoint). Cap = observed max + 50% margin; the r08 cap of 40 paid a
-# 40-round oracle unroll for margin nobody used (same trick as
-# _KCORE_CONVERGED_MAX_ROUNDS 24->8, VERDICT r08 item 4). Cap-trip is
-# loud now: graph_analytics warns RuntimeWarning instead of silently
-# returning a truncated-but-oracle-matching result.
+# fixpoint). Cap = observed max + 50% margin: the oracle unrolls every
+# capped round, so a wider cap pays for margin nobody uses (same sizing
+# as _KCORE_CONVERGED_MAX_ROUNDS). A cap trip is loud: graph_analytics
+# warns RuntimeWarning instead of silently returning a
+# truncated-but-oracle-matching result.
 _PAGERANK_CONVERGED_MAX_ITERS = 20
 
 
@@ -3128,7 +3128,7 @@ _register(
 )
 
 
-# NOT tightenable (measured r09, VERDICT r08 item 4): sf0.001 converges
+# NOT tightenable (measured): sf0.001 converges
 # at round 5, but at sf0.01/sf0.1 synchronous LPA enters a period-2 limit
 # cycle (labels at round 40 == round 42 != round 41) and NEVER converges;
 # at sf0.01 the labels are still transient at round 12 (hash(10 rounds)
@@ -3852,11 +3852,9 @@ def _chunk_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     first-wins dedup). The recursive splitter IS SQL-expressible after
     all: its _go recursion strictly advances the separator cascade (depth
     ≤ 10, unrolled CTE stages) and its two order-dependent folds walk as
-    recursive CTEs — chunker.chunk_text_sql. Hash-checked since r05
-    (previously the suite's one rows-only verdict)."""
-    from vectordb_etl_spark.session import ensure_min_partitions
-
-    docs = ensure_min_partitions(_docs(spark, sf)).select(
+    recursive CTEs — chunker.chunk_text_sql, so the oracle is
+    hash-checked."""
+    docs = _docs(spark, sf).select(
         "doc_id", "source", cleaning.clean_text_col("text").alias("text")
     )
     chunks = chunker.chunk_documents(docs, ChunkerConfig())
@@ -3892,7 +3890,7 @@ _register("chunk_pipeline", _chunk_pipeline, _CHUNK_PIPELINE_SQL)
 
 
 def _chunk_metadata(spark: SparkSession, sf: str) -> DataFrame:
-    """C5/C6 metadata layer with a hash-checked oracle (VERDICT r03 item 4):
+    """C5/C6 metadata layer with a hash-checked oracle:
     feed the REAL attach_chunk_metadata + remove_duplicate_chunks operators
     a PRE-CHUNKED fixture — fixed-width 200-char substring slices, which
     unlike the C1-C4 recursive splitter ARE SQL-expressible — so the
@@ -6196,8 +6194,8 @@ def _hwp_cfb_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     Every third document also carries a \\x05HwpSummaryInformation
     property-set stream (MS-OLEPS, doc_id-arithmetic values) — the
     extractor must parse title/author/subject/keywords out of it
-    (reference hwp_loader.py:112-113,146-147 via OLE SummaryInformation;
-    VERDICT r10 item 2) and return NULLs, not garbage, when absent."""
+    (reference hwp_loader.py:112-113,146-147 via OLE SummaryInformation)
+    and return NULLs, not garbage, when absent."""
     from pyspark.sql.types import BinaryType
 
     from vectordb_etl_spark.sources.cfb_fixtures import make_hwp
@@ -6242,7 +6240,7 @@ def _hwp_cfb_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         F.col("p.author").alias("author"),
         F.col("p.subject").alias("subject"),
         F.col("p.keywords").alias("keywords"),
-        # serving-tier audit column (r12): in a stock environment neither
+        # serving-tier audit column: in a stock environment neither
         # env-gated tier (hwp5txt binary, pyhwpx package) resolves, so the
         # pure-CFB tier serves every row — which the oracle pins. An env
         # with HWP5TXT_BIN set would legitimately report 'hwp5txt' here.
@@ -7491,9 +7489,9 @@ def _json_props_stats(spark: SparkSession, sf: str) -> DataFrame:
         F.max("k").alias("max_k"),
     )
     # avg as micro-unit bigint — integer arithmetic only, so the hash is
-    # bit-stable across engines (round(avg(),6) of a DOUBLE is not; that
-    # burned the r04 driver check). The pmod trick makes Spark's
-    # truncating DIV match DuckDB's flooring // even for negative sums:
+    # bit-stable across engines (round(avg(),6) of a DOUBLE is not). The
+    # pmod trick makes Spark's truncating DIV match DuckDB's flooring //
+    # even for negative sums:
     # (a - pmod(a, b)) is exactly divisible by b and pmod is always >= 0,
     # so the quotient IS floor(a / b).
     avg_micro = F.expr(
@@ -7523,7 +7521,7 @@ _register(
     "FROM events GROUP BY event_type) "
     # sum_k / avg_k_micro are CAST AS BIGINT: DuckDB sum(BIGINT) is
     # HUGEINT → float64 in the driver's pandas frame → hash-red vs
-    # Spark's int64 (r04/r05 driver-red cause for this query).
+    # Spark's int64.
     "SELECT event_type, n_events, n_with_k, "
     "CAST(sum_k AS BIGINT) AS sum_k, "
     "CAST(CASE WHEN n_with_k = 0 THEN NULL "
@@ -7554,8 +7552,7 @@ def _retention_cohorts(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").alias("n_users"))
         # midnight-UTC timestamp, not DATE: Spark DATE reaches pandas as
         # object-dtype datetime.date while DuckDB DATE arrives datetime64 —
-        # the exact dtype-split class behind the r05 driver hash-reds
-        # (BASELINE.md §8). TIMESTAMP lands kind-'M' on BOTH conversion
+        # a dtype split the driver's value hash sees (BASELINE.md §8). TIMESTAMP lands kind-'M' on BOTH conversion
         # paths, making the driver_sim repr-strict with no exception.
         .withColumn("cohort_day", F.col("cohort_day").cast("timestamp"))
         .select("cohort_day", "day_offset", "n_users")
@@ -7841,271 +7838,80 @@ _register(
 )
 
 
-# The driver verifies the FIRST 50 registered queries only. Since r09 the
-# live order comes from _dynamic_rotation (recomputed from the committed
-# CORRECTNESS_r*.json files on every queries() call — reds first, then
-# never-driver-checked, then oldest last-driver-check), so the driver's
-# 50-query cap always lands on the freshly-stalest tier with NO per-round
-# regen step. This list is the static fallback snapshot for the case the
-# live computation is unavailable (last regenerated r09 via
-# `python tools/plan_rotation.py --python`).
-_PRIORITY = [
-    "streaming_dynamic_meta",
-    "conversion_funnel",
-    "corpus_health",
-    "customer_order_distribution",
-    "dedup_rate_report",
-    "detect_language",
-    "doc_fingerprint",
-    "domain_cap_sample",
-    "dsir_log_weights",
-    "embedding_norms",
-    "embedding_topk_pairs",
-    "events_gap_interpolate",
-    "exact_dedup",
-    "fanout_mixed_topk",
-    "fuzzy_prefix_pairs",
-    "graph_topk_batch",
-    "graph_topk_filtered",
-    "ivf_sq8_topk",
-    "ivf_topk",
-    "ivf_topk_filtered",
-    "language_distribution",
-    "length_outlier_screen",
-    "lsh_incremental_candidates",
-    "market_share",
-    "multimodal_decoded_features",
-    "ngram_jaccard_pairs",
-    "pii_redaction",
-    "quality_report",
-    "regional_supplier_volume",
-    "retention_cohorts",
-    "returned_item_customers",
-    "salted_distinct_users_by_type",
-    "salted_join_enrichment",
-    "simhash_near_dups",
-    "stratified_sample",
-    "streaming_exact_dedup",
-    "streaming_sessionize",
-    "strip_common_lines",
-    "substring_dup_incremental",
-    "substring_dup_stats",
-    "suppliers_kept_waiting",
-    "tfidf_top_terms",
-    "top_revenue_suppliers",
-    "weighted_sample",
-    "audio_ahash_dups",
-    "bfs_part_reach",
-    "bipartite_pagerank",
-    "bitmap_distinct_users",
-    "bloom_semi_revenue",
-    "bm25_ranked_lookup",
-    "bpe_first_merges",
-    "cm_token_freq",
-    "column_profile_orders",
-    "corpus_drift",
-    "corpus_drift_chi2",
-    "events_distinct_users",
-    "events_hourly",
-    "events_moving_avg",
-    "events_sessionize",
-    "fanout_topk_per_label",
-    "forecast_revenue_change",
-    "graph_topk_incremental",
-    "integrity_report",
-    "ivf_pq_residual_topk",
-    "ivf_pq_topk",
-    "min_cost_supplier_per_part",
-    "minhash_lsh_candidates",
-    "minhash_signatures",
-    "multimodal_resample_roundtrip",
-    "multimodal_resize_roundtrip",
-    "ngram_novelty",
-    "order_priority_window",
-    "pq_topk",
-    "pricing_summary",
-    "product_type_profit",
-    "quality_classifier_scores",
-    "regional_revenue",
-    "sample_review",
-    "semantic_dedup",
-    "simhash_fingerprints",
-    "size_histogram",
-    "streaming_graph_ingest",
-    "streaming_ivf_ingest",
-    "streaming_lsh_dedup",
-    "supplier_part_counts",
-    "text_quality",
-    "token_counts",
-    "token_estimate",
-    "top_customers",
-    "top_sources",
-    "varchar_truncate",
-    "vector_topk",
-    "vector_topk_filtered",
-    "vocab_top_terms",
-    "asof_join_events_orders",
-    "bigram_logprob",
-    "bilateral_shipping_volume",
-    "boilerplate_fraction",
-    "brand_revenue",
-    "communities_converged",
-    "critical_parts_share",
-    "cumulative_unique_users",
-    "customers_without_big_orders",
-    "dedup_aware_split",
-    "dedup_components",
-    "dominant_part_suppliers",
-    "embedding_drift",
-    "events_daily_anomalies",
-    "events_daily_trend",
-    "ewma_daily_events",
-    "frequent_part_pairs",
-    "graph_acorn_batch",
-    "graph_topk_acorn",
-    "heavy_hitter_terms",
-    "hll_distinct_orders",
-    "hll_multigrain_users",
-    "idle_rich_customers",
-    "image_ahash_dups",
-    "image_near_dup_pairs",
-    "incremental_agg_merge",
-    "inverted_term_lookup",
-    "join_size_estimate",
-    "json_props_stats",
-    "kcore_copurchase",
-    "kmv_corpus_overlap",
-    "kmv_returned_only_parts",
-    "open_orders_daily",
-    "order_status_diff",
-    "part_affinity_ppr",
-    "part_communities",
-    "part_copurchase_triangles",
-    "prefix_jaccard_pairs",
-    "price_depth_histogram",
-    "price_quantity_corr",
-    "sample_quantiles_prices",
-    "scd2_order_status",
-    "session_attribution",
-    "session_window_stats",
-    "skew_report_events",
-    "streaming_bitmap_ingest",
-    "streaming_bloom_ingest",
-    "streaming_cm_ingest",
-    "streaming_hll_ingest",
-    "zorder_locality",
-    "chunk_id",
-    "chunk_metadata",
-    "chunk_pipeline",
-    "chunk_stats",
-    "clean_hwp_text",
-    "clean_text",
-    "contamination_check",
-    "disjunctive_predicate_revenue",
-    "dynamic_meta_key_stats",
-    "dynamic_meta_roundtrip",
-    "event_type_pivot",
-    "events_cube",
-    "events_gap_fill",
-    "events_multi_grain_rollup",
-    "filter_expr_search",
-    "gopher_pass_rate",
-    "gopher_quality_signals",
-    "graph_fanout_topk",
-    "graph_topk",
-    "html_parse_roundtrip",
-    "hwp_cfb_roundtrip",
-    "hwpx_extract_roundtrip",
-    "hybrid_rrf_search",
-    "ivf_fanout_topk",
-    "ivf_topk_batch",
-    "ivf_topk_nprobe",
-    "kcore_converged",
-    "large_order_customers",
-    "lsh_topk",
-    "multimodal_audio_meta",
-    "multimodal_image_meta",
-    "order_value_percentiles",
-    "pagerank_converged",
-    "priority_shipments",
-    "promo_revenue_ratio",
-    "purchasers_without_errors",
-    "range_join_purchase_followups",
-    "returned_orders",
-    "sequence_packing",
-    "shipping_priority",
-    "small_quantity_revenue",
-    "sq8_topk",
-    "streaming_enriched_counts",
-    "streaming_interval_join",
-    "streaming_windowed_counts",
-    "supplier_balance_by_region",
-    "token_budget_mix",
-    "top_terms_per_language",
-    "user_event_windows",
-    "video_frame_fanout",
-]
+# The driver verifies the FIRST 50 entries of queries()/oracle_sql(), so
+# the registry is served in rotation order: the stalest tier, recomputed
+# from the committed CORRECTNESS_r*.json scoreboards, leads.
+def rotation_order(
+    names: list[str], rounds_dir: Path | None = None
+) -> tuple[list[str], dict[str, int], dict[str, int]]:
+    """Driver-check rotation for the given registered-query names.
 
-# Retired: the old two-list head/tail scheme. plan_rotation.py now emits the
-# complete order, so _DEMOTE stays empty and _ordered reduces to the head.
-_DEMOTE: list[str] = []
+    Returns (order, last_checked_round, red_round). The order is:
+
+        1. driver-RED rows, newest red first (must re-check green after
+           their fix)
+        2. never-driver-checked rows (new queries), alphabetical
+        3. everything else, oldest last check first, then by name
+
+    With a head-50 driver window this re-checks every query within
+    ceil(N/50) scoreboards. ``rounds_dir`` overrides where the
+    CORRECTNESS_r*.json files are read from (default: the repo root).
+    """
+    last: dict[str, int] = {n: 0 for n in names}
+    red: dict[str, int] = {}
+    repo = rounds_dir or Path(__file__).resolve().parent
+    # Numeric round sort: lexicographic glob order would put
+    # CORRECTNESS_r100 before CORRECTNESS_r99 and let an older green clear
+    # a newer red.
+    rounds = sorted(
+        repo.glob("CORRECTNESS_r*.json"),
+        key=lambda p: int(p.stem.split("_r")[1]),
+    )
+    for path in rounds:
+        rnd = int(path.stem.split("_r")[1])
+        data = json.loads(path.read_text())
+        for q, v in data.items():
+            if q not in last:
+                continue  # renamed/retired query
+            ok = (
+                v.get("rows_match")
+                and v.get("schema_match")
+                and v.get("hash_match")
+            )
+            # A verdict only updates state if it is at least as recent as
+            # the newest one seen for this query (guards duplicate files).
+            if rnd < last[q]:
+                continue
+            last[q] = rnd
+            if ok:
+                red.pop(q, None)
+            else:
+                red[q] = rnd
+    reds = sorted(red, key=lambda n: (-red[n], n))
+    never = sorted(n for n in names if last[n] == 0 and n not in red)
+    rest = sorted(
+        (n for n in names if last[n] > 0 and n not in red),
+        key=lambda n: (last[n], n),
+    )
+    return reds + never + rest, last, red
 
 
-def _dynamic_rotation(names: tuple[str, ...]) -> list[str] | None:
-    """Compute the driver-check order LIVE from the committed
-    CORRECTNESS_r*.json scoreboards (r09; supersedes the per-round manual
-    regen of ``_PRIORITY`` that was forgotten three rounds running): the
-    moment a new scoreboard lands in the tree, the next ``queries()``
-    call leads with the freshly-stalest tier — reds, then never-checked,
-    then oldest last-driver-green. Deterministic given the committed
-    files, and identical across the queries()/oracle_sql() pair.
-    Returns None (caller falls back to the static snapshot) if the tool
-    is unimportable or its output doesn't cover the registry exactly.
-
-    The order is computed ONCE per process per registry (first call
-    wins) so a queries()/oracle_sql() pair in one driver run is always
-    served the identical order even if a scoreboard file lands between
-    the two calls; plan_rotation is loaded by file path (importlib) so
-    tools/ never enters sys.path and its generically-named modules
-    can't shadow other imports."""
-    from pathlib import Path as _Path
-
-    try:
-        cached = _ROTATION_CACHE.get(names)
-        if cached is not None:
-            return list(cached)
-        repo = _Path(__file__).resolve().parent
-        import importlib.util as _ilu
-
-        spec = _ilu.spec_from_file_location(
-            "_vdbetl_plan_rotation", repo / "tools" / "plan_rotation.py"
-        )
-        mod = _ilu.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        order, _, _ = mod.rotation_order(list(names))
-        if sorted(order) == sorted(names):
-            _ROTATION_CACHE[names] = tuple(order)
-            return order
-    except Exception:
-        pass
-    return None
-
-
-# (names tuple) -> order. First computation in a process wins so the
-# queries()/oracle_sql() pair always agrees on the driver's head-50.
+# (names tuple) -> order. The first computation in a process wins, so a
+# queries()/oracle_sql() pair agrees on the driver's head-50 even if a
+# scoreboard lands between the two calls.
 _ROTATION_CACHE: dict[tuple[str, ...], tuple[str, ...]] = {}
 
 
 def _ordered(mapping: dict) -> dict:
-    dyn = _dynamic_rotation(tuple(mapping))
-    if dyn is not None:
-        return {k: mapping[k] for k in dyn}
-    # static snapshot fallback (kept current as of the last manual regen;
-    # only reached if the live computation is unavailable)
-    head = {k: mapping[k] for k in _PRIORITY if k in mapping}
-    tail = {k: mapping[k] for k in _DEMOTE if k in mapping and k not in head}
-    mid = {k: v for k, v in mapping.items() if k not in head and k not in tail}
-    return {**head, **mid, **tail}
+    names = tuple(mapping)
+    order = _ROTATION_CACHE.get(names)
+    if order is None:
+        try:
+            order = tuple(rotation_order(list(names))[0])
+        except (OSError, ValueError, KeyError):
+            order = names  # unreadable scoreboards: plain registry order
+        order = _ROTATION_CACHE.setdefault(names, order)
+    return {k: mapping[k] for k in order}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

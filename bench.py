@@ -1545,38 +1545,31 @@ def noise_comparison(current: dict, prev_rec, sf=None) -> dict:
 
 
 def rotation_age(names) -> dict:
-    """Driver-check staleness telemetry (VERDICT r10 item 8): with ~190
-    registered queries and a head-50 driver window, a query's verified
-    age can reach ~4 rounds. `oldest` = the earliest round any currently
-    registered query was last driver-checked; `never` = queries the
-    driver has not checked yet (new this round — the live rotation puts
-    them first)."""
-    try:
-        import importlib.util as _ilu
+    """Driver-check staleness telemetry: with ~190 registered queries and
+    a head-50 driver window, a query's verified age can reach ~4 rounds.
+    `oldest` = the earliest round any currently registered query was last
+    driver-checked; `never` = queries the driver has not checked yet (new
+    this round — the live rotation puts them first)."""
+    import __spark_entry__ as entrymod
 
-        repo = Path(__file__).resolve().parent
-        spec = _ilu.spec_from_file_location(
-            "_bench_plan_rotation", repo / "tools" / "plan_rotation.py"
-        )
-        mod = _ilu.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        _, last, _ = mod.rotation_order(list(names))
-        checked = [v for v in last.values() if v > 0]
-        n = len(last)
-        return {
-            "oldest": min(checked) if checked else 0,
-            "never": sum(1 for v in last.values() if v == 0),
-            # pigeonhole bound: stalest-first ordering + a head-50 driver
-            # window means every query is re-checked within ceil(N/50)
-            # rounds — the structural worst-case age (r12: 194 -> 4).
-            # Shrinking it below 4 needs a wider driver window, not a
-            # different pick rule; the rotation is already optimal per
-            # round (tests/test_lint.py pins the stalest-tier ordering)
-            "cycle": -(-n // 50) if n else 0,
-        }
-    except Exception:
-        # telemetry must not fail bench
+    try:
+        _, last, _ = entrymod.rotation_order(list(names))
+    except (OSError, ValueError, KeyError):
+        # unreadable scoreboards: telemetry must not fail bench
         return {"oldest": -1, "never": -1, "cycle": -1}
+    checked = [v for v in last.values() if v > 0]
+    n = len(last)
+    return {
+        "oldest": min(checked) if checked else 0,
+        "never": sum(1 for v in last.values() if v == 0),
+        # pigeonhole bound: stalest-first ordering + a head-50 driver
+        # window means every query is re-checked within ceil(N/50)
+        # rounds — the structural worst-case age (194 queries -> 4).
+        # Shrinking it needs a wider driver window, not a different pick
+        # rule; the rotation is already optimal per round
+        # (tests/test_lint.py pins the stalest-tier ordering)
+        "cycle": -(-n // 50) if n else 0,
+    }
 
 
 def compact_record(full: dict) -> str:

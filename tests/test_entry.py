@@ -57,29 +57,26 @@ def test_chunk_pipeline_golden_corpus_hash(spark):
 
 def test_unrotated_queries_stay_inside_driver_cap():
     """The driver oracle-checks only the FIRST 50 registered queries. Any
-    newly registered query (absent from the committed CORRECTNESS files
-    AND the static fallback list) must sit inside that cap, or it ships
-    without ever being driver-verified. The live rotation puts
-    never-checked queries in tier 2 (right after reds), so this holds by
-    construction unless >50 queries land red/new at once — in which case
-    it breaks loudly instead of silently."""
-    import __spark_entry__ as entrymod
-
+    query the committed CORRECTNESS files have never checked (last round
+    0 in rotation_order) must sit inside that cap, or it ships without
+    ever being driver-verified. The live rotation puts never-checked
+    queries in tier 2 (right after reds), so this holds by construction
+    unless >50 queries land red/new at once — in which case it breaks
+    loudly instead of silently."""
     q = list(entrymod.queries())
-    mid = [
-        n for n in q
-        if n not in entrymod._PRIORITY and n not in entrymod._DEMOTE
-    ]
-    outside = [n for n in mid if q.index(n) >= 50]
+    _, last, _ = entrymod.rotation_order(q)
+    outside = [n for n in q if last[n] == 0 and q.index(n) >= 50]
     assert not outside, (
         f"never-driver-checked queries outside the 50-query cap: {outside}"
     )
 
 
-def test_priority_covers_every_registered_query():
-    """A new queries() entry that misses _PRIORITY would silently skip
-    driver rotation scheduling — keep the two sets identical."""
-    import __spark_entry__ as em
+def test_unreadable_scoreboards_fall_back_to_registry_order(monkeypatch):
+    def unreadable(names, rounds_dir=None):
+        raise OSError("scoreboards unreadable")
 
-    assert sorted(em._PRIORITY) == sorted(em.queries())
-    assert len(em._PRIORITY) == len(set(em._PRIORITY)), "duplicate names"
+    monkeypatch.setattr(entrymod, "rotation_order", unreadable)
+    # a fresh cache (restored after the test) so the order is recomputed
+    monkeypatch.setattr(entrymod, "_ROTATION_CACHE", {})
+    assert list(entrymod.queries()) == list(entrymod._QUERIES)
+    assert list(entrymod.oracle_sql()) == list(entrymod._ORACLES)

@@ -362,12 +362,11 @@ def test_label_propagation_converged_is_stable(spark):
 
 
 def test_pagerank_converged_equals_deep_fixed_run(spark):
-    """iterations=None reaches the exact integer fixpoint; a fixed run
-    past the reached depth reproduces it bit-for-bit."""
-    from vectordb_etl_spark.operators.graph_analytics import pagerank
-
+    """A capped iterations=None run warns that the cap tripped; a fixed
+    run of the rounds it used reproduces it bit-for-bit."""
     from vectordb_etl_spark.operators.graph_analytics import (
         convergence_stats,
+        pagerank,
     )
 
     pairs = [(0, i) for i in range(1, 6)] + [(6, 7)]
@@ -380,9 +379,12 @@ def test_pagerank_converged_equals_deep_fixed_run(spark):
     # exactly the rounds the converged/capped run used reproduces it
     # bit-for-bit — at a 12-round cap instead of 80 rounds total (this
     # was a 25 s test of pure per-round scheduling overhead).
-    conv = sorted(
-        map(tuple, pagerank(e, iterations=None, max_iterations=12).collect())
-    )
+    with pytest.warns(RuntimeWarning, match="cap"):
+        conv = sorted(
+            map(tuple, pagerank(e, iterations=None, max_iterations=12).collect())
+        )
+    # convergence_stats is module-global and the next pagerank call
+    # overwrites it: read the capped run's depth before anything else runs
     deep_iters = convergence_stats["pagerank"]
     deep = sorted(map(tuple, pagerank(e, iterations=deep_iters).collect()))
     assert conv == deep
@@ -390,11 +392,8 @@ def test_pagerank_converged_equals_deep_fixed_run(spark):
 
 def test_personalized_pagerank_converged_equals_deep_fixed_run(spark):
     from vectordb_etl_spark.operators.graph_analytics import (
-        personalized_pagerank,
-    )
-
-    from vectordb_etl_spark.operators.graph_analytics import (
         convergence_stats,
+        personalized_pagerank,
     )
 
     chain = [(0, 1), (1, 2), (2, 3), (3, 4)]
@@ -405,14 +404,17 @@ def test_personalized_pagerank_converged_equals_deep_fixed_run(spark):
     # the rounds the converged/capped run used must reproduce it
     # bit-for-bit, whether that was a true fixpoint or the cap (this was
     # the suite's 4th-slowest test at 103 s for 80 rounds of scheduling)
-    conv = sorted(
-        map(
-            tuple,
-            personalized_pagerank(
-                e, seeds, iterations=None, max_iterations=12
-            ).collect(),
+    with pytest.warns(RuntimeWarning, match="cap"):
+        conv = sorted(
+            map(
+                tuple,
+                personalized_pagerank(
+                    e, seeds, iterations=None, max_iterations=12
+                ).collect(),
+            )
         )
-    )
+    # convergence_stats is module-global and the next call overwrites it:
+    # read the capped run's depth before anything else runs
     deep_iters = convergence_stats["personalized_pagerank"]
     deep = sorted(
         map(

@@ -88,49 +88,38 @@ def test_entry_conf_writes_and_temp_dirs_stay_scoped():
     assert owners(r"^[ \t]*(import tempfile|from tempfile import)") == ["_scratch"]
 
 
-def test_rotation_covers_every_registered_query_exactly_once():
-    """The static _PRIORITY fallback must still cover the registry: if the
-    live rotation ever falls back to it, a query missing from the list
-    silently sorts into the unordered middle and can dodge the head-50
-    window for rounds (the r06/r07 staleness defect); a duplicate would
-    double-spend the window."""
-    import __spark_entry__ as em
-
-    names = list(em.queries())
-    assert len(em._PRIORITY) == len(set(em._PRIORITY)), "duplicate in _PRIORITY"
-    missing = set(names) - set(em._PRIORITY)
-    stale = set(em._PRIORITY) - set(names)
-    assert not missing, f"registered but not in rotation: {sorted(missing)}"
-    assert not stale, f"in rotation but not registered: {sorted(stale)}"
+def test_rotation_has_one_home():
+    """The driver-check order lives in ``__spark_entry__.rotation_order``
+    and is imported from there: no file-path module loading and no
+    ``tools`` directory on ``sys.path`` in the entry, bench or tests.
+    (The bracketed ``[n]`` keeps this pattern from matching itself.)"""
+    pattern = re.compile(
+        r"spec_from_file_locatio[n]|sys\.path\.\w+\([^)]*\btools\b"
+    )
+    root = PKG.parent
+    files = [root / "__spark_entry__.py", root / "bench.py"]
+    files += sorted((root / "tests").rglob("*.py"))
+    offenders = []
+    for path in files:
+        src = path.read_text()
+        for m in pattern.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"{path.relative_to(root)}:{line}")
+    assert not offenders, f"rotation loaded outside the entry: {offenders}"
 
 
 def test_rotation_head50_is_the_stalest_tier():
     """The driver only gates the FIRST 50 queries() entries, so an
     ordering whose head re-checks already-fresh queries lets the stale
-    tail age unbounded (the defect recurred r06-r08 while the order was a
-    manually-regenerated list). Since r09 queries()/oracle_sql() compute
-    the order LIVE from the committed CORRECTNESS_r*.json files
-    (__spark_entry__._dynamic_rotation); this lint asserts (a) the live
-    path is actually active — not silently falling back to the static
-    snapshot — and (b) the driver-visible head-50 equals the canonical
-    stalest tier (reds, then never-checked, then oldest
-    last-driver-green) recomputed here independently."""
-    import sys
-
+    tail age unbounded. queries()/oracle_sql() compute the order LIVE
+    from the committed CORRECTNESS_r*.json files; this lint asserts the
+    driver-visible head-50 equals the canonical stalest tier (reds, then
+    never-checked, then oldest last-driver-green), which also fails if
+    queries() has silently fallen back to registry order."""
     import __spark_entry__ as em
+    from __spark_entry__ import rotation_order
 
     names = list(em.queries())
-    assert em._dynamic_rotation(tuple(names)) is not None, (
-        "live rotation unavailable — queries() is serving the static "
-        "fallback snapshot, which goes stale the moment a new "
-        "CORRECTNESS_r*.json lands"
-    )
-
-    tools = str(Path(__file__).resolve().parent.parent / "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    from plan_rotation import rotation_order
-
     order, last, red = rotation_order(names)
     cap = min(50, len(order))
     want = set(order[:cap])
@@ -237,14 +226,9 @@ def test_rotation_auto_advances_when_next_scoreboard_lands(tmp_path):
     synthetic next-round file that marks the current head-50 green."""
     import json
     import shutil
-    import sys
 
     import __spark_entry__ as em
-
-    tools = str(Path(__file__).resolve().parent.parent / "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    from plan_rotation import rotation_order
+    from __spark_entry__ import rotation_order
 
     repo = Path(__file__).resolve().parent.parent
     existing = sorted(repo.glob("CORRECTNESS_r*.json"))
@@ -294,12 +278,8 @@ def test_rotation_order_invariants_on_random_histories(tmp_path):
     clears it."""
     import json
     import random
-    import sys
 
-    tools = str(Path(__file__).resolve().parent.parent / "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    from plan_rotation import rotation_order
+    from __spark_entry__ import rotation_order
 
     rng = random.Random(7)
     names = [f"q{i:03d}" for i in range(60)]
@@ -351,10 +331,7 @@ def test_rotation_cycle_bound_every_query_checked_within_ceil(tmp_path):
     import json
     import sys
 
-    tools = str(Path(__file__).resolve().parent.parent / "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    from plan_rotation import rotation_order
+    from __spark_entry__ import rotation_order
 
     names = [f"q{i:03d}" for i in range(194)]
     cycle = -(-len(names) // 50)  # 4

@@ -1,105 +1,45 @@
-"""Compute the recommended _PRIORITY rotation for the next round.
+"""Print the driver-check rotation as a tagged table.
 
-Reads every CORRECTNESS_r*.json scoreboard, derives each registered
-query's most recent driver check and verdict, and prints the rotation
-order the next round's `__spark_entry__._PRIORITY` should lead with:
+The order is ``__spark_entry__.rotation_order`` over the registered
+queries, which is the order ``queries()``/``oracle_sql()`` serve:
 
     1. driver-RED rows (must re-check green after their fix)
     2. never-driver-checked rows (new queries)
     3. everything else, oldest-last-check first (alphabetical per tier)
 
-Usage:  python tools/plan_rotation.py            # print the list
-        python tools/plan_rotation.py --python   # as a pasteable literal
+Each row is tagged RED, NEW or the round of its last driver check; a
+marker shows where the driver's 50-query cap falls.
+
+Usage:  python tools/plan_rotation.py
 """
 
 from __future__ import annotations
 
-import json
 import sys
 from pathlib import Path
 
 
-def rotation_order(
-    names: list[str], rounds_dir: Path | None = None
-) -> tuple[list[str], dict[str, int], dict[str, int]]:
-    """Canonical rotation for the given registered-query names.
-
-    Returns (order, last_checked_round, red_round). Used by the CLI
-    below, by __spark_entry__._dynamic_rotation (the LIVE queries()
-    ordering the driver sees), and by tests/test_lint.py's staleness
-    lint — one function so all three agree by construction.
-    ``rounds_dir`` overrides where CORRECTNESS_r*.json files are read
-    from (tests inject synthetic scoreboards; default = repo root).
-    """
-    last: dict[str, int] = {n: 0 for n in names}
-    red: dict[str, int] = {}
-    repo = rounds_dir or Path(__file__).resolve().parent.parent
-    # Numeric round sort: lexicographic glob order would put r100 before
-    # r99 and let an older green clear a newer red.
-    rounds = sorted(
-        repo.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int(p.stem.split("_r")[1]),
-    )
-    for path in rounds:
-        rnd = int(path.stem.split("_r")[1])
-        data = json.loads(path.read_text())
-        for q, v in data.items():
-            if q not in last:
-                continue  # renamed/retired query
-            ok = (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match")
-            )
-            # A verdict only updates state if it is at least as recent as
-            # the newest one seen for this query (guards duplicate files).
-            if rnd < last[q]:
-                continue
-            last[q] = rnd
-            if ok:
-                red.pop(q, None)
-            else:
-                red[q] = rnd
-    reds = sorted(red, key=lambda n: (-red[n], n))
-    never = sorted(n for n in names if last[n] == 0 and n not in red)
-    rest = sorted(
-        (n for n in names if last[n] > 0 and n not in red),
-        key=lambda n: (last[n], n),
-    )
-    return reds + never + rest, last, red
-
-
 def main() -> int:
-    # CLI-only: the library entry point (rotation_order) never touches
-    # sys.path; only the script needs the repo root importable.
     repo = str(Path(__file__).resolve().parent.parent)
     if repo not in sys.path:
         sys.path.insert(0, repo)
     import __spark_entry__ as em
 
-    names = list(em.queries())
-    order, last, red = rotation_order(names)
-    reds = [n for n in order if n in red]
-    never = [n for n in order if last[n] == 0 and n not in red]
-    rest = [n for n in order if last[n] > 0 and n not in red]
-    if "--python" in sys.argv:
-        print("_PRIORITY = [")
-        for n in order:
-            print(f'    "{n}",')
-        print("]")
-    else:
-        try:
-            print(f"# {len(reds)} red, {len(never)} never-checked, "
-                  f"{len(rest)} by last-check age; driver cap is 50")
-            for i, n in enumerate(order):
-                tag = (
-                    "RED" if n in red
-                    else ("NEW" if last[n] == 0 else f"r{last[n]:02d}")
-                )
-                marker = " | <- cap boundary" if i == 50 else ""
-                print(f"{i + 1:3d}. [{tag}] {n}{marker}")
-        except BrokenPipeError:  # head/tail closed the pipe — fine
-            pass
+    order, last, red = em.rotation_order(list(em.queries()))
+    n_never = sum(1 for n in order if last[n] == 0 and n not in red)
+    try:
+        print(f"# {len(red)} red, {n_never} never-checked, "
+              f"{len(order) - len(red) - n_never} by last-check age; "
+              "driver cap is 50")
+        for i, n in enumerate(order):
+            tag = (
+                "RED" if n in red
+                else ("NEW" if last[n] == 0 else f"r{last[n]:02d}")
+            )
+            marker = " | <- cap boundary" if i == 50 else ""
+            print(f"{i + 1:3d}. [{tag}] {n}{marker}")
+    except BrokenPipeError:  # head/tail closed the pipe — fine
+        pass
     return 0
 
 

@@ -119,11 +119,11 @@ def hll_estimate_expr(p: int = 8) -> Column:
     The accumulator is scaled by 2^(W+1), not 2^W, so the saturated
     rank rho = W+1 (all rank bits zero, ~2^-52/value) shifts by 0
     instead of the illegal -1 — this IS the canonical textbook
-    2^-rho sum with no clamp (ADVICE r07; the previous greatest(...,0)
-    clamp mapped rho=W+1 to the rho=W contribution, a tiny downward-
-    variance bias). For every non-saturated register the new S_scaled
-    is exactly 2x the old one — a power-of-two scale that cancels in
-    the divide — so estimates only move in the saturated case.
+    2^-rho sum with no clamp (a greatest(...,0) clamp would map rho=W+1
+    to the rho=W contribution, a tiny downward-variance bias). For every
+    non-saturated register S_scaled is exactly 2x the 2^W-scaled sum —
+    a power-of-two scale that cancels in the divide — so the two scalings
+    differ only in the saturated case.
     Then the one float step, authored operation-for-operation the same
     in :func:`hll_estimate_sql_exprs`: S = S_scaled / 2^(W+1) (double;
     the bigint→double cast and the power-of-two divide are

@@ -354,7 +354,7 @@ class IVFIndex:
         # the batched path injects working columns into the joined frame; a
         # data schema that already uses one of these names would silently
         # resolve joins/ranks against the data column and corrupt results —
-        # fail loud instead (ADVICE r03)
+        # fail loud instead
         clash = {"query_id", "qvec", "rn", "score"} & set(data.columns)
         if clash:
             raise ValueError(

@@ -495,7 +495,7 @@ def prefix_filter_jaccard_pairs(
             + 1,
         )
     )
-    # NOTE (r14, measured): the candidate SELF-join consumes the prefix
+    # NOTE (measured): the candidate SELF-join consumes the prefix
     # table on both sides and the plan shows the rank-window subplan
     # twice. Materializing `pref` with a localCheckpoint to deduplicate
     # that pass was A/B-tested (6 alternated rounds at the bench SF) and
@@ -1031,9 +1031,9 @@ def connected_components(
     labels = _truncate(
         nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
     )
-    # Join-free convergence probe on a REMEMBERED signature (r14; the
-    # r13 variant scanned BOTH label tables per superstep via a
-    # union-tagged aggregate — twice the scan work the probe needs):
+    # Join-free convergence probe on a REMEMBERED signature (a
+    # union-tagged aggregate over BOTH label tables per superstep would
+    # do twice the scan work the probe needs):
     # comp is monotone non-increasing per id (least() against the old
     # value) over a fixed id set. For NUMERIC ids Σcomp unchanged ⟺ no
     # label changed — exact on its own. For string ids (md5 doc ids in

@@ -41,7 +41,7 @@ _ONE = 1_000_000
 # Diagnostic only (not part of any result): rounds each run-to-convergence
 # call actually used, keyed by operator name. Callers sizing a shared
 # Spark/oracle unroll cap read this to set cap = observed + margin instead
-# of paying the oracle for margin nobody uses (VERDICT r08 item 4).
+# of paying the oracle for margin nobody uses.
 convergence_stats: dict[str, int] = {}
 
 
@@ -54,7 +54,7 @@ def _cap_tripped(op: str, cap: int, detail: str = "") -> None:
 
     Loud on purpose: a cap-coupled oracle unrolls the same truncated
     rounds, so the correctness gate stays green while the result is
-    silently a bounded-iteration answer labeled 'converged' (ADVICE r08).
+    silently a bounded-iteration answer labeled 'converged'.
     """
     convergence_stats[op] = cap
     warnings.warn(
@@ -72,13 +72,12 @@ def _cap_tripped(op: str, cap: int, detail: str = "") -> None:
 def _probe_says_equal(new_df: DataFrame, old_df: DataFrame, cols) -> bool:
     """Exact convergence probe: multiset equality via ``exceptAll``.
 
-    r13 replaced this with a union-tagged checksum fast-path
-    (count + sum(xxhash64) per side, exceptAll only confirming a match);
-    r14 interleaved same-session A/B at the bench SF measured the
-    checksum variant consistently SLOWER — pagerank_converged 1.76 vs
-    1.29 s min (fixpoint at round 1, so the checksum+confirm double-pays
-    the final round) and communities_converged no better than exceptAll
-    on any of 5 alternated rounds — so the r12 shape is restored. Both
+    A union-tagged checksum fast-path (count + sum(xxhash64) per side,
+    exceptAll only confirming a match) measured consistently SLOWER in an
+    interleaved same-session A/B at the bench SF — pagerank_converged
+    1.76 vs 1.29 s min (fixpoint at round 1, so the checksum+confirm
+    double-pays the final round) and communities_converged no better
+    than exceptAll on any of 5 alternated rounds. Both
     inputs are checkpointed, so this is two cached scans + one shuffle
     pair; at cluster scale the shuffle carries only the (small) rank or
     label tables, never the edge list."""
@@ -180,7 +179,7 @@ def pagerank(
         # `ranks` is referenced ONCE per round, so plan depth grows
         # linearly — fixed-iteration runs keep the round chain in one
         # job and truncate only every 8th round (same policy as
-        # personalized_pagerank, r10); convergence mode must
+        # personalized_pagerank); convergence mode must
         # materialize every round for the exceptAll probe
         if iterations is None or (_i + 1) % 8 == 0:
             new_ranks = truncate(new_ranks)
@@ -307,7 +306,7 @@ def triangle_count(
     # SHUFFLE_HASH on both wedge-set joins: the static planner sees
     # unknown post-checkpoint sizes and picks SortMergeJoin; with
     # runtime sizes AQE flips both to ShuffledHashJoin whenever
-    # preferSortMergeJoin=false (r14 interleaved A/B, 6 alternated
+    # preferSortMergeJoin=false (interleaved A/B, 6 alternated
     # rounds at the bench SF with the conf active only at ACTION time:
     # 4.3-4.9 s vs 5.6-6.3 s default — a ~20-25% win on every round).
     # The hint bakes that choice into the returned plan so it holds
@@ -324,8 +323,8 @@ def triangle_count(
     # (unique — canon is distinct and orientation is 1:1) closing-edge
     # set flags each wedge, so n_wedges and n_triangles come from a
     # single count/sum aggregate instead of two separate wedge
-    # materializations (the pre-r13 shape computed the wedge join twice:
-    # once for its count, once under the triangle join — guide §1.2
+    # materializations (two would compute the wedge join twice: once
+    # for its count, once under the triangle join — guide §1.2
     # 'don't compute things you throw away'). n_nodes/n_edges likewise
     # derive from the already-checkpointed `oriented` (a permutation of
     # canon with both endpoints present) instead of re-running the
@@ -436,8 +435,8 @@ def bfs_hops(
         # identity — skipping it saves the distinct's hash-aggregation
         # (guide §2.4). The REBALANCE stays either way: every hop
         # re-scans this checkpoint, and without a compacting shuffle it
-        # inherits the preamble's raw layout (measured in r14 on the LPA
-        # twin: ~2.4x task count from 20 near-empty partitions).
+        # inherits the preamble's raw layout (measured on the LPA twin:
+        # ~2.4x task count from 20 near-empty partitions).
         e = e.filter(F.col("src") != F.col("dst")).distinct()
     else:
         e = e.hint("rebalance")
@@ -666,12 +665,12 @@ def label_propagation(
     unioned with its own swap) — the least/greatest+distinct+union would
     reproduce the input exactly, so skipping it saves the distinct's
     hash-aggregation (guide §2.4). The table is still REBALANCE-shuffled
-    once before its checkpoint: every round re-scans it, and the r12→r13
-    regression this flag caused came from inheriting the preamble's raw
-    near-empty partition layout, not from the flag's semantics.
+    once before its checkpoint: every round re-scans it, and without a
+    compacting shuffle it would inherit the preamble's raw near-empty
+    partition layout.
 
     The per-round argmax is a row_number window over the vote counts
-    (r13's min(struct(-count, label)) aggregate computed the identical
+    (a min(struct(-count, label)) aggregate computes the identical
     winner with map-side partials, but struct min/max aggregation runs
     outside whole-stage codegen and measured ~4x the task-time — see the
     loop comment). Fixed-round runs chain rounds in one declarative plan
@@ -687,9 +686,9 @@ def label_propagation(
         # REBALANCE before the checkpoint: skipping the canonicalize/
         # mirror preamble also skips the AQE-coalesced shuffle that used
         # to COMPACT the edge table, and every one of the loop's rounds
-        # re-scans this checkpoint (r14 measured the raw preamble layout
-        # at 20 near-empty partitions → ~2.4x the loop's task count; the
-        # r12-shape run that paid the distinct was ~25% faster overall).
+        # re-scans this checkpoint (the raw preamble layout measured 20
+        # near-empty partitions → ~2.4x the loop's task count; paying the
+        # distinct instead was ~25% faster overall).
         # A rebalance shuffle moves the same bytes the distinct did but
         # skips its hash-aggregation, and AQE sizes the output partitions
         # at any scale — no local-mode constants.
@@ -724,13 +723,12 @@ def label_propagation(
             .groupBy(F.col("dst").alias("n2"), "label")
             .agg(F.count("*").alias("c"))
         )
-        # argmax by (c desc, label asc) as a row_number window. r13 used
-        # a min(struct(-c, label)) aggregate instead (bit-identical
-        # winner, map-side partials); r14 event-log A/B measured the
-        # struct-min loop at ~2.4x the tasks and ~4x the task-time of
-        # this window form (struct min/max aggregation runs outside
-        # whole-stage codegen), with identical exchange counts — the
-        # window form is restored on those numbers.
+        # argmax by (c desc, label asc) as a row_number window. A
+        # min(struct(-c, label)) aggregate gives the bit-identical winner
+        # with map-side partials, but an event-log A/B measured that loop
+        # at ~2.4x the tasks and ~4x the task-time of this window form
+        # (struct min/max aggregation runs outside whole-stage codegen),
+        # with identical exchange counts.
         w = Window.partitionBy("n2").orderBy(F.desc("c"), F.asc("label"))
         new_labels = (
             votes.withColumn("r", F.row_number().over(w))
@@ -819,7 +817,7 @@ def personalized_pagerank(
     ``max_iterations`` — same exact-integer-fixpoint contract and
     oracle equivalence as :func:`pagerank`.
 
-    ACTIVE-SET iteration (r10): mass only ever lives on seeds and nodes
+    ACTIVE-SET iteration: mass only ever lives on seeds and nodes
     the walk has reached, so each round joins/checkpoints ONLY the
     ``rank_micro > 0`` frame (zero-rank rows contribute zero to every
     incoming sum and receive zero teleport — dropping them is

@@ -136,7 +136,6 @@ def beam_search(
         # entry was clamped (caller passed an out-of-range node): the
         # caller's score belongs to a node we are NOT starting from, so
         # recompute rather than attribute it to the clamped start
-        # (ADVICE r08)
         s0 = float(mat[start] @ query)
         if stats is not None:
             stats["evals"] += 1
@@ -201,8 +200,8 @@ def hnsw_levels(ids: np.ndarray, m: int = 16) -> np.ndarray:
     out = np.zeros(len(ids), dtype=np.int32)
     for idx, vid in enumerate(ids):
         # integral ids hash via int() so numpy int64 and Python int agree
-        # bit-for-bit with the r05 oracles; STRING ids (the store's
-        # md5 chunk_id) hash as-is instead of crashing (r09) — for an
+        # bit-for-bit with the committed oracles; STRING ids (the
+        # store's md5 chunk_id) hash as-is — for an
         # all-digits string the two forms coincide, so the mapping stays
         # unambiguous per column type
         try:
@@ -229,10 +228,10 @@ def _greedy_descend(
     """ef=1 greedy walk at one level: hop to the best-scoring neighbor
     until no neighbor improves. Returns the local optimum node.
 
-    ``cache`` memoizes node→score for the whole descent (ADVICE r07):
-    every improving hop used to re-score all neighbors of the new current
-    node, so shared neighbors — and, across levels, the landing node
-    itself — were dotted repeatedly, inflating the very eval count the
+    ``cache`` memoizes node→score for the whole descent: without it every
+    improving hop re-scores all neighbors of the new current node, so
+    shared neighbors — and, across levels, the landing node
+    itself — are dotted repeatedly, inflating the very eval count the
     hierarchy exists to reduce. With the cache each unique node costs
     (and counts) exactly one dot product per query."""
     if cache is None:
@@ -335,7 +334,7 @@ def hnsw_search(
     cur = min(entry, n - 1)
     # one score cache across every level of the descent; the landing
     # node's cached score seeds the level-0 beam so no node is dotted
-    # twice on the way down (ADVICE r07)
+    # twice on the way down
     cache: dict[int, float] = {}
     for lev in range(len(adjs) - 1, 0, -1):
         cur = _greedy_descend(mat, adjs[lev], query, cur, n, stats, cache)
@@ -411,8 +410,8 @@ def _index_schema(tagged: DataFrame, passthrough: list[str]) -> str:
         f"`{c}` {tagged.schema[c].dataType.simpleString()}" for c in passthrough
     )
     # id keeps the caller's type: vec_id-style bigints stay `long`
-    # (bit-identical to the r05 layouts), the store's md5 chunk_id is a
-    # string (r09 — the facade's graph tier indexes chunk_id by default)
+    # (bit-identical to the committed layouts), the store's md5 chunk_id
+    # is a string (the facade's graph tier indexes chunk_id by default)
     id_t = tagged.schema["id"].dataType.simpleString()
     return (
         f"shard int, id {id_t}, "
@@ -499,7 +498,7 @@ class GraphANNIndex:
         n/num_shards). Pass explicit ``num_shards`` to skip the count job
         or to pin the layout for an external oracle.
 
-        ``max_level`` caps the hierarchy per corpus (VERDICT r07 item 5):
+        ``max_level`` caps the hierarchy per corpus:
         ``max_level=0`` builds flat NSW — on replica-clustered corpora the
         upper levels cost ~9% extra distance evals at recall parity
         (BENCH_r07 graph_design_point), so the flat mode is the right
@@ -871,8 +870,7 @@ class GraphANNIndex:
         ``batch_size`` keep any single closure at serving size (2048×dim
         doubles ≈ 1–16 MB), so arbitrarily large query sets work — they
         become a union of per-batch shard scans in the same plan instead
-        of one unbounded closure (closes the documented ~thousands cap,
-        VERDICT r07 item 7). Returns (query_id, *output_cols, score), k
+        of one unbounded closure. Returns (query_id, *output_cols, score), k
         rows per query, query_id indexing the ORIGINAL list."""
         if batch_size < 1:
             raise ValueError(f"batch_size must be >= 1; got {batch_size}")
@@ -894,7 +892,7 @@ class GraphANNIndex:
         out_schema = f"query_id int, {pass_fields}, {score_name} double"
         if arr.shape[0] == 0:
             # the batch loop below would never run, leaving `local = None`
-            # and an opaque AttributeError downstream (ADVICE r08); match
+            # and an opaque AttributeError downstream; match
             # the IVF tier's batched path: empty in -> empty DataFrame
             # with the declared result schema
             return self.spark.createDataFrame([], out_schema)

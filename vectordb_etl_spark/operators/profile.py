@@ -119,12 +119,12 @@ def equi_depth_histogram(
     The pre-aggregation exists because exact ``percentile`` is an object
     aggregate whose FINAL merge is one task inserting every (value,
     count) pair into a hash map: fed raw rows, each single-threaded
-    partial buffers its whole input split (r14 event-log profile: a
+    partial buffers its whole input split (event-log profile: a
     2.0-2.5 s final-merge task dominated the query). Grouping to
     distinct values first runs the dedup as a codegen hash aggregate at
     full parallelism, and ``percentile(col, probs, freq)`` builds the
     IDENTICAL counts map — boundaries verified bit-equal — from strictly
-    fewer rows (r14 interleaved A/B: 5/6 alternated rounds faster,
+    fewer rows (interleaved A/B: 5/6 alternated rounds faster,
     min 2.67 s vs 3.32 s)."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2; got {buckets}")

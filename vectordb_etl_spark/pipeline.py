@@ -196,8 +196,7 @@ class PipelineRunner:
         """Existence probe through the Hadoop FileSystem API — same stance
         as store/collections.py, so checkpoint_dir may be any supported URI
         (s3a://, hdfs://, file:). A local ``pathlib`` probe would silently
-        return False on remote URIs and bypass the freshness logic
-        (ADVICE r03)."""
+        return False on remote URIs and bypass the freshness logic."""
         p = self._jpath(path)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs.exists(p)

@@ -93,7 +93,7 @@ def plan_fingerprint(df: DataFrame) -> dict:
     and ``python_eval`` (rows leaving the JVM). Wall-clock is noisy on a
     shared host; these counts are deterministic, so a registered query
     GAINING an exchange or a python hop is a regression even when the
-    benchmark happens to run fast (VERDICT r03 item 7)."""
+    benchmark happens to run fast."""
     names = [
         _NODE_PREFIX.sub("", ln) for ln in executed_plan(df).splitlines()
     ]

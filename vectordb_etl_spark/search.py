@@ -60,10 +60,9 @@ def search_with_scores(
     alongside a filter is ANDed into it — the caller asked for both, and
     silently discarding one is worse than either precedence.
 
-    ``index_kind`` (VERDICT r08 item 6 — the reference's search path
-    always goes through the index, milvus_store.py:254-299):
-    ``None`` (default) serves by exact partition-pruned scan, exactly the
-    pre-r09 behavior; ``'ivf'``/``'graph'`` route through the store's
+    ``index_kind`` (the reference's search path always goes through the
+    index, milvus_store.py:254-299): ``None`` (default) serves by exact
+    partition-pruned scan; ``'ivf'``/``'graph'`` route through the store's
     per-collection indexes via ``fanout_search_indexed(
     on_missing='exact')``, so un-indexed collections are still served
     (brute-force, Milvus-style) rather than erroring. The indexed path

@@ -186,7 +186,7 @@ class CollectionStore:
     def _warn_pre_rule_partitions(self, targets) -> None:
         """The naming rule (lowercase/sanitize, 'root'->default — reference
         modules/config.py:37-43) changed where some folders land relative
-        to warehouses written before r11. If a partition exists whose name
+        to warehouses written before the rule. If a partition exists whose name
         is a PRE-rule spelling of a target (sanitizes to it but differs
         literally, or the old literal '<prefix>_root'), new rows would
         silently split across the two spellings and upsert's key-dedup
@@ -387,8 +387,7 @@ class CollectionStore:
             # spark.sql.sources.partitionOverwriteMode=dynamic, untouched
             # collections survive on disk but would vanish from this
             # manifest — mark it invalid instead so stats fall back to the
-            # (self-healing) scan path rather than serving wrong numbers
-            # (ADVICE r12).
+            # (self-healing) scan path rather than serving wrong numbers.
             dyn = (
                 self.spark.conf.get(
                     "spark.sql.sources.partitionOverwriteMode", "static"
@@ -754,7 +753,7 @@ class CollectionStore:
             ipath = self._index_path(n, "graph")
             if self._fs(ipath).exists(self._jpath(ipath)):
                 # one existing-but-empty (or partially deleted) index dir
-                # must not abort the whole warehouse sweep (ADVICE r12)
+                # must not abort the whole warehouse sweep
                 try:
                     out[n] = self.open_index(n, kind="graph").rebalance_hint(
                         ratio=ratio

@@ -231,8 +231,8 @@ class SnapshotStore:
         directory younger than the grace window may belong to an
         in-flight commit — deleting it would corrupt that commit. The
         directory's age is the MAX of the ``c-<time_ns>-*`` name-encoded
-        writer clock and the filesystem's own modification time
-        (ADVICE r07): the name alone trusts the remote writer's clock,
+        writer clock and the filesystem's own modification time: the
+        name alone trusts the remote writer's clock,
         so with multi-machine writers a skew larger than ``grace_s``
         could delete an in-flight commit the local filesystem just saw
         being written. Pass ``grace_s=0`` only when no writer can be
