@@ -1630,3 +1630,85 @@ def test_graph_search_per_group_acorn_full_beam_exact(
     ).collect()
     key = lambda rows: sorted((r["label"], r["id"], r["score"]) for r in rows)
     assert key(got) == key(want)
+
+
+def _bits(values) -> list[bytes]:
+    import struct
+
+    return [struct.pack(">d", v) for v in values]
+
+
+def test_vector_lit_round_trips_doubles_bit_for_bit(spark):
+    """The query literal copies IEEE bits exactly: signed zero, a
+    subnormal, both infinities, NaN and 1024 random doubles."""
+    import numpy as np
+
+    from vectordb_etl_spark.functions.vector import vector_lit
+
+    edge = [-0.0, 5e-324, float("inf"), float("-inf"), float("nan")]
+    rand = [float(x) for x in np.random.RandomState(3).standard_normal(1024) * 1e3]
+    for vec in (edge, rand):
+        got = spark.range(1).select(vector_lit(vec).alias("v")).head()["v"]
+        assert _bits(got) == _bits(vec)
+    floats = spark.range(1).select(vector_lit([0.5, -2.0], elem="float").alias("v"))
+    assert floats.dtypes == [("v", "array<float>")]
+
+
+def test_vector_lit_is_one_literal_node(spark):
+    """A 1024-d query is ONE Catalyst Literal, not a CreateArray with a
+    child per element."""
+    from vectordb_etl_spark.functions.vector import vector_lit
+
+    col = vector_lit([0.25] * 1024)
+    assert col._jc.node().getClass().getSimpleName() == "Literal"
+    analyzed = spark.range(1).select(col.alias("q"))._jdf.queryExecution().analyzed()
+    expr = analyzed.projectList().head().child()
+    assert expr.getClass().getSimpleName() == "Literal"
+    assert expr.dataType().simpleString() == "array<double>"
+
+
+def test_vector_lit_from_thread_without_active_session(spark):
+    """Serving threads have no active session (it is thread-local); the
+    literal must still build there."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from vectordb_etl_spark.functions.vector import vector_lit
+
+    seen = {}
+
+    def _worker():
+        seen["session"] = SparkSession.getActiveSession()
+        try:
+            seen["col"] = vector_lit([1.0, 2.0, 3.0])
+        except Exception as e:  # noqa: BLE001 — surfaced by the assert below
+            seen["error"] = e
+
+    t = threading.Thread(target=_worker)
+    t.start()
+    t.join()
+    assert seen["session"] is None
+    assert "error" not in seen, seen.get("error")
+    assert spark.range(1).select(seen["col"].alias("v")).head()["v"] == [1.0, 2.0, 3.0]
+
+
+def test_ivf_probe_of_only_empty_cells_returns_no_rows(spark, tmp_path):
+    """A probe set whose cells were never written (no vector is nearest
+    to that centroid) gives 0 rows from every search path, not an error —
+    also from a reopened handle, whose schema comes from another cell."""
+    rows = [(i, [1.0, 0.1 * i, 0.5]) for i in range(12)]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    cents = [[1.0, 0.0, 0.5], [1.0, 1.0, 0.5], [-1.0, -1.0, -1.0]]
+    path = str(tmp_path / "ivf_empty")
+    idx = IVFIndex(spark, path).build(df, centroids=cents)
+    assert idx._cell_ids("*") == [0, 1]
+    far = [-1.0, -1.0, -1.0]
+    assert idx.probe_ids(far, nprobe=1) == [2]
+    for h in (idx, IVFIndex(spark, path)):
+        assert h.search(far, k=3, nprobe=1).count() == 0
+        assert h.search_per_group(
+            far, k=3, nprobe=1, group_col="vec_id"
+        ).count() == 0
+        assert h.search_many([far], k=3, nprobe=1).count() == 0
+        assert h.search(far, k=3, nprobe=3).count() == 3

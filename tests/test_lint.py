@@ -88,6 +88,24 @@ def test_entry_conf_writes_and_temp_dirs_stay_scoped():
     assert owners(r"^[ \t]*(import tempfile|from tempfile import)") == ["_scratch"]
 
 
+def test_vector_literals_go_through_vector_lit():
+    """A vector literal costs one py4j call per element through
+    ``F.lit(<list>)`` and becomes a CreateArray with a child per element;
+    ``functions/vector.py:vector_lit`` builds one Literal in a constant
+    number of calls. It stays the one home for vector literals."""
+    pattern = re.compile(r"F\.lit\((\[|list\(|query|vec)")
+    home = PKG / "functions" / "vector.py"
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        if path == home:
+            continue
+        src = path.read_text()
+        for m in pattern.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"{path.relative_to(PKG.parent)}:{line}")
+    assert not offenders, f"vector literal outside vector_lit: {offenders}"
+
+
 def test_rotation_has_one_home():
     """The driver-check order lives in ``__spark_entry__.rotation_order``
     and is imported from there: no file-path module loading and no

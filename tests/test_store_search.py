@@ -1159,3 +1159,178 @@ def test_insert_count_rows_false_skips_count(spark, tmp_path):
     out = store.insert_documents(df, embedding_config=EMB, count_rows=False)
     assert out == {}
     assert store.read("html_f1").count() == 1
+
+
+def _ivf_store(spark, root, n_rows, n_folders, **config):
+    store = CollectionStore(spark, StoreConfig(warehouse_dir=str(root), **config))
+    df = spark.createDataFrame(
+        [
+            (i, "s", f"f{i % n_folders}",
+             f"document number {i} about {i % 7} and {i * 13 % 11}", "english", 0)
+            for i in range(n_rows)
+        ],
+        ["doc_id", "source", "folder_name", "text", "language", "chunk_index"],
+    )
+    store.insert_documents(df, embedding_config=EMB)
+    return store
+
+
+def _exact(store, q, collection=None, k=3):
+    return [
+        (r["doc_id"], r["score"])
+        for r in topk_search(
+            store.read(collection), q, k=k, tie_break=["doc_id"],
+            output_cols=["doc_id"],
+        ).collect()
+    ]
+
+
+def _probe_all(store, q, collection, nprobe, k=3):
+    return [
+        (r["doc_id"], r["score"])
+        for r in store.fanout_search_indexed(
+            q, k=k, nprobe=nprobe, collections=[collection],
+            tie_break=["doc_id"], output_cols=["doc_id"],
+        ).collect()
+    ]
+
+
+def test_store_index_handle_sees_appends_from_any_writer_and_compaction(
+    spark, tmp_path
+):
+    """The store keeps the handle build_index made, and that handle lists
+    the cells on every search: rows appended by its own add(), by a
+    second handle on the same path, and the layout after compact() are
+    all served without reopening."""
+    from vectordb_etl_spark.operators.ann import IVFIndex
+
+    store = _ivf_store(spark, tmp_path / "w", 40, 1)
+    name = store.list_collections()[0]
+    h = store.build_index(name, kind="ivf", nlist=4, max_iter=3)
+    assert store.open_index(name, kind="ivf") is h
+    base = store.read(name)
+    q = list(base.filter(F.col("doc_id") == 0).select("embedding").head()[0])
+
+    def _copies(offset):
+        # the query's own vector under new ids: each batch must surface
+        return base.filter(F.col("doc_id") == 0).withColumn(
+            "doc_id", F.col("doc_id") - offset
+        )
+
+    h.add(_copies(1))
+    assert [d for d, _ in _probe_all(store, q, name, 4)][:2] == [-1, 0]
+    IVFIndex(spark, store._index_path(name, "ivf")).add(_copies(2))
+    assert [d for d, _ in _probe_all(store, q, name, 4)] == [-2, -1, 0]
+    h.compact()
+    assert [d for d, _ in _probe_all(store, q, name, 4)] == [-2, -1, 0]
+    assert store.open_index(name, kind="ivf") is h
+    assert h.search(q, k=100, nprobe=4).count() == 42
+
+
+def test_store_serves_rebuild_made_through_another_handle(spark, tmp_path):
+    """A rebuild with a different nlist through a separate handle
+    replaces the centroids' commit marker; the store reopens instead of
+    probing with its stale 4-centroid handle."""
+    from vectordb_etl_spark.operators.ann import IVFIndex
+
+    store = _ivf_store(spark, tmp_path / "w", 40, 1)
+    name = store.list_collections()[0]
+    q = list(store.read(name).filter(F.col("doc_id") == 3).select("embedding").head()[0])
+    stale = store.build_index(name, kind="ivf", nlist=4, max_iter=3)
+    assert _probe_all(store, q, name, 4) == _exact(store, q, name)
+    IVFIndex(spark, store._index_path(name, "ivf")).build(
+        store.read(name), nlist=2, max_iter=3
+    )
+    fresh = store.open_index(name, kind="ivf")
+    assert fresh is not stale and fresh.centroids.shape[0] == 2
+    assert _probe_all(store, q, name, 2) == _exact(store, q, name)
+    # dropping the collection forgets its handles
+    store.drop_collection(name)
+    assert not any(key[0].endswith(f"/{name}/ivf") for key in store._indexes)
+
+
+def test_fanout_search_indexed_defaults_to_store_config(spark, tmp_path):
+    """With no nprobe argument the store's StoreConfig.nprobe applies: a
+    store configured with nprobe == nlist probes every cell, so a bare
+    call returns the exact top-k."""
+    store = _ivf_store(spark, tmp_path / "w", 60, 1, nlist=24, nprobe=24)
+    name = store.list_collections()[0]
+    store.build_index(name, kind="ivf", max_iter=3)
+    assert len(store.open_index(name, kind="ivf")._cell_ids("*")) > 16
+    for doc in (0, 5, 11):
+        q = list(store.read().filter(F.col("doc_id") == doc).select("embedding").head()[0])
+        got = store.fanout_search_indexed(
+            q, k=5, tie_break=["doc_id"], output_cols=["doc_id"]
+        ).collect()
+        assert [(r["doc_id"], r["score"]) for r in got] == _exact(store, q, k=5)
+
+
+def test_warm_ivf_fanout_runs_at_most_two_jobs(spark, tmp_path):
+    """A warm 4-collection IVF fan-out lists only the probed cells on the
+    driver: no partition-listing job over the >32 cells of each index
+    (Spark lists more than 32 paths with a distributed job) and no schema
+    job, so the whole search is at most 2 Spark jobs."""
+    store = _ivf_store(spark, tmp_path / "w", 4 * 48, 4, nlist=40)
+    names = store.list_collections()
+    assert len(names) == 4
+    for n in names:
+        idx = store.build_index(n, kind="ivf", max_iter=3)
+        assert len(idx._cell_ids("*")) > 32
+    q = list(store.read().select("embedding").head()[0])
+    store.fanout_search_indexed(q, k=3, nprobe=4).collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-ivf-fanout", "job-count pin")
+    try:
+        hits = store.fanout_search_indexed(q, k=3, nprobe=4).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(hits) == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("warm-ivf-fanout")
+    assert 1 <= len(jobs) <= 2, jobs
+
+
+def test_open_index_shares_one_handle_across_concurrent_callers(
+    spark, tmp_path, monkeypatch
+):
+    """Serving threads that open the same index at once get one handle:
+    the memo's check-then-open does not race into duplicate opens, even
+    when opening a handle is slow."""
+    import sys
+    import threading
+    import time
+
+    from vectordb_etl_spark.operators.ann import IVFIndex
+
+    store = _ivf_store(spark, tmp_path / "w", 40, 1)
+    name = store.list_collections()[0]
+    store.build_index(name, kind="ivf", nlist=4, max_iter=3)
+    cold = CollectionStore(spark, store.config)  # same warehouse, no handles yet
+    init = IVFIndex.__init__
+
+    def _slow_init(self, *a, **kw):
+        time.sleep(0.05)
+        init(self, *a, **kw)
+
+    monkeypatch.setattr(IVFIndex, "__init__", _slow_init)
+    got = []
+    start = threading.Barrier(8)
+
+    def _open():
+        start.wait(timeout=60)
+        for _ in range(20):
+            got.append(cold.open_index(name, kind="ivf"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=_open) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 160
+    assert len({id(h) for h in got}) == 1

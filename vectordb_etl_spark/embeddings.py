@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
 from vectordb_etl_spark.config import EmbeddingConfig
+from vectordb_etl_spark.functions.vector import vector_lit
 
 
 class HashEmbedder:
@@ -134,4 +135,4 @@ def query_vector(text: str, config: EmbeddingConfig | None = None) -> list[float
 
 
 def query_vector_col(text: str, config: EmbeddingConfig | None = None) -> Column:
-    return F.lit(query_vector(text, config)).cast("array<float>")
+    return vector_lit(query_vector(text, config), elem="float")

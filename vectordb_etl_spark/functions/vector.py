@@ -12,6 +12,9 @@ Metric-aware scoring fixes the reference's desc-only assumption
 
 from __future__ import annotations
 
+import struct
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -63,13 +66,44 @@ def l2_normalize_col(a: Column | str) -> Column:
     return F.transform(arr, lambda x: x / n)
 
 
+def vector_lit(vec, elem: str = "double") -> Column:
+    """A vector as ONE Catalyst ``Literal`` of ``array<double>`` (cast to
+    ``array<elem>`` when ``elem`` is not ``"double"``).
+
+    ``F.lit(list)`` costs one py4j call per element and yields a
+    ``CreateArray`` with one child per element that the analyzer walks
+    again on every plan; at embedding dimensions that dominates a
+    search's planning time. Here the
+    values cross py4j as one big-endian byte string, are copied into a
+    JVM ``double[]`` through a ``DoubleBuffer`` view and become one
+    literal: a constant number of py4j calls at any dimension. The IEEE
+    bits are copied exactly (``-0.0``, subnormals, NaN and ±inf included,
+    which a parsed SQL string cannot express), so scores are unchanged.
+
+    The JVM comes from the active SparkContext, not the active session:
+    the session is thread-local and is unset in serving threads that did
+    not create it."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("vector_lit needs a running SparkContext")
+    jvm = sc._jvm
+    n = len(vec)
+    arr = sc._gateway.new_array(jvm.double, n)
+    if n:
+        jvm.java.nio.ByteBuffer.wrap(
+            struct.pack(f">{n}d", *vec)
+        ).asDoubleBuffer().get(arr)
+    col = Column(jvm.org.apache.spark.sql.functions.lit(arr))
+    return col if elem == "double" else col.cast(f"array<{elem}>")
+
+
 def score_col(emb: Column | str, query: list[float], metric: str = "COSINE") -> Column:
     """Similarity of a stored vector against a literal query vector.
 
-    The query vector is a plan literal (broadcast with the plan — no shuffle,
-    no join); `metric` ∈ {COSINE, IP, L2}.
+    The query vector is one plan literal (:func:`vector_lit` — broadcast
+    with the plan, no shuffle, no join); `metric` ∈ {COSINE, IP, L2}.
     """
-    q = F.lit(query).cast("array<double>")
+    q = vector_lit(query)
     m = metric.upper()
     if m == "COSINE":
         return cosine_col(emb, q)

@@ -26,11 +26,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from vectordb_etl_spark.functions.vector import metric_ascending
+from vectordb_etl_spark.functions.vector import metric_ascending, vector_lit
 from vectordb_etl_spark.operators.topk import topk_search
-from vectordb_etl_spark.session import local_rows_df
+from vectordb_etl_spark.session import local_rows_df, partitioned_read_schema
 
 
 def assign_centroids_udf(
@@ -147,13 +147,20 @@ class IVFIndex:
 
     Everything — data AND the centroid artifact — is parquet written
     through Spark, so the index works on any warehouse URI (s3a/hdfs/
-    file) with no local-filesystem side channel."""
+    file) with no local-filesystem side channel.
+
+    A handle memoizes only what build() fixes: the centroids and the data
+    schema (a reopened handle reads each once, on first use). The cell
+    listing is NOT memoized — every probe lists ``data/`` once, so rows
+    that add() or compact() wrote, through any handle or process, are
+    visible on the next search."""
 
     def __init__(self, spark: SparkSession, path: str, metric: str = "COSINE"):
         self.spark = spark
         self.path = str(path)
         self.metric = metric
         self._centroids: np.ndarray | None = None
+        self._schema: StructType | None = None
 
     def build(
         self,
@@ -302,6 +309,7 @@ class IVFIndex:
         assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
             "centroid_id"
         ).parquet(f"{self.path}/data")
+        self._schema = partitioned_read_schema(assigned.schema, "centroid_id")
         rows = [
             (int(i), [float(x) for x in cents[i]]) for i in range(cents.shape[0])
         ]
@@ -350,7 +358,7 @@ class IVFIndex:
 
         from vectordb_etl_spark.functions.vector import cosine_col, dot_col
 
-        data = self._read_data()
+        data = self._read_data(sorted({cid for _, cid in pairs}))
         # the batched path injects working columns into the joined frame; a
         # data schema that already uses one of these names would silently
         # resolve joins/ranks against the data column and corrupt results —
@@ -414,10 +422,10 @@ class IVFIndex:
                 F.col(emb_col)
             ),
         )
-        # match the existing storage tier (schema sniff = one footer read):
-        # a quantized index must encode appended batches the same way build
+        # match the existing storage tier (the handle's schema): a
+        # quantized index must encode appended batches the same way build
         # did (pq uses the PERSISTED codebook — codes stay comparable)
-        existing_cols = self.spark.read.parquet(f"{self.path}/data").columns
+        existing_cols = self.schema.fieldNames()
         if "__sq8" in existing_cols:
             from vectordb_etl_spark.functions.vector import sq8_quantize_col
 
@@ -459,6 +467,37 @@ class IVFIndex:
             "centroid_id"
         ).parquet(f"{self.path}/data")
         return self
+
+    @property
+    def schema(self) -> StructType:
+        """The layout's read schema: stored columns, then ``centroid_id``.
+        Fixed by build(); a reopened handle reads it once, from one cell's
+        footer."""
+        if self._schema is None:
+            cells = self._cell_ids("*")
+            if not cells:
+                raise ValueError(f"IVF index at {self.path} has no data cells")
+            cell = self.spark.read.parquet(self._cell_path(cells[0])).schema
+            self._schema = StructType(
+                cell.fields + [StructField("centroid_id", IntegerType(), True)]
+            )
+        return self._schema
+
+    def _cell_path(self, cid: int) -> str:
+        return f"{self.path}/data/centroid_id={cid}"
+
+    def _cell_ids(self, ids: str) -> list[int]:
+        """The ids of the cells that exist now among the glob ``ids``
+        (``"*"``, or ``"{3,17}"``): one driver-side listing of ``data/``
+        (no Spark job), filtered JVM-side by dir name, so the py4j cost
+        follows the matches, not nlist."""
+        fs_pkg = self.spark._jvm.org.apache.hadoop.fs
+        data = fs_pkg.Path(f"{self.path}/data")
+        fs = data.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        hits = fs.listStatus(data, fs_pkg.GlobFilter(f"centroid_id={ids}"))
+        return sorted(
+            int(p.getName().split("=", 1)[1]) for p in fs_pkg.FileUtil.stat2Paths(hits)
+        )
 
     @property
     def centroids(self) -> np.ndarray:
@@ -525,7 +564,7 @@ class IVFIndex:
         checked_delete(fs, tmp)
         checked_delete(fs, aside)
         (
-            self.spark.read.parquet(f"{self.path}/data")
+            self._scan()
             .repartition("centroid_id")
             .write.mode("overwrite")
             .partitionBy("centroid_id")
@@ -601,8 +640,9 @@ class IVFIndex:
         # multi-second driver gaps per search), while expr() ships one
         # string and parses in the JVM. repr() is the shortest round-trip
         # form, and the D-suffixed literal parses back to the identical
-        # double bits, so scores are unchanged (same trick as
-        # pq_topk_adc's query literal).
+        # double bits, so scores are unchanged. (Flat vectors use
+        # functions/vector.py:vector_lit; this nested codebook keeps the
+        # parsed form.)
         cb_lit = F.expr(
             "array({})".format(",".join(
                 "array({})".format(",".join(
@@ -623,8 +663,30 @@ class IVFIndex:
             )
         )
 
-    def _read_data(self) -> DataFrame:
-        """The indexed table with the vector column restored: flat storage
+    def _scan(self, probes: list[int] | None = None) -> DataFrame:
+        """The stored layout, read with the handle's schema (no inference
+        job). With ``probes``, only the probed cells that exist are listed
+        and read, under ``basePath`` so ``centroid_id`` stays a partition
+        column, and the ``centroid_id IN (probes)`` filter on top keeps the
+        pruning visible as a PartitionFilter. No existing probed cell
+        gives an empty frame."""
+        reader = self.spark.read.schema(self.schema)
+        if probes is None:
+            return reader.parquet(f"{self.path}/data")
+        ids = ",".join(str(c) for c in sorted(set(probes)))
+        cells = self._cell_ids("{%s}" % ids) if probes else []
+        df = (
+            reader.option("basePath", f"{self.path}/data").parquet(
+                *[self._cell_path(c) for c in cells]
+            )
+            if cells
+            else self.spark.createDataFrame([], self.schema)
+        )
+        return df.filter(F.col("centroid_id").isin(list(probes)))
+
+    def _read_data(self, probes: list[int] | None = None) -> DataFrame:
+        """The indexed table (only the ``probes`` cells, when given — see
+        :meth:`_scan`) with the vector column restored: flat storage
         reads as written; SQ8 storage dequantizes the int8 codes into
         ``embedding``; PQ storage reconstructs it as codeword lookups
         against the codebook (literal expression at test dims, Arrow
@@ -632,7 +694,7 @@ class IVFIndex:
         storage adds the assigned centroid back on top of the residual
         reconstruction (centroids join BROADCAST on the partition key, so
         pruning still reaches the scan)."""
-        df = self.spark.read.parquet(f"{self.path}/data")
+        df = self._scan(probes)
         if "__sq8" in df.columns:
             from vectordb_etl_spark.functions.vector import sq8_dequantize_col
 
@@ -665,12 +727,18 @@ class IVFIndex:
         probe_round_dp: int | None = None,
         **topk_kwargs,
     ) -> DataFrame:
-        """Probe top-nprobe clusters, exact top-k inside them. The
-        ``centroid_id IN (...)`` filter is a partition filter — only
-        ~nprobe/nlist of the data is read (verify via explain:
-        PartitionFilters)."""
+        """Probe top-nprobe clusters, exact top-k inside them.
+
+        Only the probed cells are listed and read: one driver-side listing
+        of ``data/`` picks the probed ``centroid_id=`` dirs that exist, and
+        rows appended since the last search are seen. With the handle's
+        schema and nprobe ≤ 32 (Spark's parallel-listing threshold) the
+        search runs no schema or listing job. The ``centroid_id IN (...)``
+        filter on top stays a partition filter (verify via explain:
+        PartitionFilters). A probe set with no existing cell returns an
+        empty frame."""
         probes = self.probe_ids(query, nprobe, round_dp=probe_round_dp)
-        df = self._read_data().filter(F.col("centroid_id").isin(probes))
+        df = self._read_data(probes)
         return topk_search(
             df, query, k=k, metric=self.metric, predicate=predicate, **topk_kwargs
         )
@@ -701,7 +769,7 @@ class IVFIndex:
         from vectordb_etl_spark.operators.topk import search_per_group_topk
 
         probes = self.probe_ids(query, nprobe, round_dp=probe_round_dp)
-        df = self._read_data().filter(F.col("centroid_id").isin(probes))
+        df = self._read_data(probes)
         if predicate is not None:
             df = df.filter(predicate)
         return search_per_group_topk(
@@ -725,7 +793,7 @@ def lsh_bucket_col(
     arr = c.cast("array<double>")
     bits = []
     for i in range(num_planes):
-        plane = F.lit([float(x) for x in planes[i]]).cast("array<double>")
+        plane = vector_lit(planes[i])
         dot = F.aggregate(
             F.zip_with(arr, plane, lambda x, y: x * y),
             F.lit(0.0),
@@ -1018,11 +1086,7 @@ def pq_topk_adc(
         F.aggregate(
             F.zip_with(
                 F.col("cw"),
-                F.expr(
-                    "slice(array({}), sub * {} + 1, {})".format(
-                        ", ".join(f"{x!r}D" for x in q), sub_w, sub_w
-                    )
-                ),
+                F.slice(vector_lit(q), F.col("sub") * sub_w + 1, sub_w),
                 lambda a, b: a * b,
             ),
             F.lit(0.0),

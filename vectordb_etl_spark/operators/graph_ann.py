@@ -51,6 +51,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from vectordb_etl_spark.session import partitioned_read_schema
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -467,13 +470,28 @@ class GraphANNIndex:
     level ``j+1`` (empty past ``node_level``); all values are LOCAL row
     positions within the shard (stable because search reloads the shard
     in one group). The search entry point (max level, lowest pos) is
-    derived at load, never stored."""
+    derived at load, never stored.
+
+    A handle memoizes the layout schema: build() fixes it and the
+    segments add() appends share it, so reads pass it to the scan and run
+    no schema-inference job. A reopened handle infers it, and checks the
+    HNSW format, once."""
 
     def __init__(self, spark: SparkSession, path: str, metric: str = "COSINE"):
         if metric.upper() != "COSINE":
             raise ValueError("graph ANN tier implements the COSINE contract")
         self.spark = spark
         self.path = path
+        self._schema: StructType | None = None
+
+    def _read(self) -> DataFrame:
+        """The shard layout, read with the handle's schema."""
+        if self._schema is None:
+            idx = self.spark.read.parquet(self.path)
+            _require_hnsw_format(idx, self.path)
+            self._schema = idx.schema
+            return idx
+        return self.spark.read.schema(self._schema).parquet(self.path)
 
     def build(
         self,
@@ -518,9 +536,9 @@ class GraphANNIndex:
         )
         out_schema = _index_schema(tagged, passthrough)
         _build = _make_shard_builder(passthrough, m, ef_construction, max_level)
-        tagged.groupBy("shard").applyInPandas(_build, out_schema).write.mode(
-            "overwrite"
-        ).partitionBy("shard").parquet(self.path)
+        shards = tagged.groupBy("shard").applyInPandas(_build, out_schema)
+        shards.write.mode("overwrite").partitionBy("shard").parquet(self.path)
+        self._schema = partitioned_read_schema(shards.schema, "shard")
         return self
 
     def add(
@@ -549,8 +567,7 @@ class GraphANNIndex:
         The batch must carry the same passthrough columns the index was
         built with (schema is checked against the existing layout)."""
         passthrough = passthrough or []
-        existing = self.spark.read.parquet(self.path)
-        _require_hnsw_format(existing, self.path)
+        existing = self._read()
         expected = [
             c for c in existing.columns if c not in _INDEX_META_COLS
         ]
@@ -621,9 +638,7 @@ class GraphANNIndex:
         jpath = self.spark._jvm.org.apache.hadoop.fs.Path(staged)
         fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         checked_delete(fs, jpath)
-        after = (
-            self.spark.read.parquet(self.path).select("shard").distinct().count()
-        )
+        after = self._read().select("shard").distinct().count()
         return before, after
 
     # threshold for rebalance_hint: below ~4x the tail shard costs only a
@@ -642,8 +657,7 @@ class GraphANNIndex:
         (column-pruned; no vector or adjacency bytes move)."""
         return {
             r["shard"]: r["count"]
-            for r in self.spark.read.parquet(self.path)
-            .groupBy("shard").count().collect()
+            for r in self._read().groupBy("shard").count().collect()
         }
 
     def rebalance_hint(self, ratio: float | None = None) -> dict:
@@ -715,8 +729,7 @@ class GraphANNIndex:
         q = np.asarray(query, dtype=np.float64)
         q = q / max(float(np.linalg.norm(q)), 1e-12)
         out_cols = output_cols or ["id"]
-        idx = self.spark.read.parquet(self.path)
-        _require_hnsw_format(idx, self.path)
+        idx = self._read()
         pass_fields = ", ".join(
             f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in out_cols
         )
@@ -795,8 +808,7 @@ class GraphANNIndex:
         q = q / max(float(np.linalg.norm(q)), 1e-12)
         out_cols = output_cols or ["id"]
         emit_cols = list(dict.fromkeys([group_col, *out_cols]))
-        idx = self.spark.read.parquet(self.path)
-        _require_hnsw_format(idx, self.path)
+        idx = self._read()
         during = predicate is not None and filter_mode == "traversal"
         if during:
             idx = idx.withColumn("__allowed", predicate.cast("boolean"))
@@ -880,8 +892,7 @@ class GraphANNIndex:
             )
         arr = np.asarray(queries, dtype=np.float64)
         out_cols = output_cols or ["id"]
-        idx = self.spark.read.parquet(self.path)
-        _require_hnsw_format(idx, self.path)
+        idx = self._read()
         during = predicate is not None and filter_mode == "traversal"
         if during:
             idx = idx.withColumn("__allowed", predicate.cast("boolean"))

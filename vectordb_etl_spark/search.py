@@ -94,14 +94,16 @@ def search_with_scores(
         raise ValueError(
             f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
         )
-    # one schema resolution for the whole call (footer listing is not
-    # free at large file counts — used by the filter parse, the graph
-    # output_cols probe, and the IVF projection below).
-    # ``merge_schema=True`` unions footers: needed on warehouses mixing
-    # pre-`meta` and dynamic-meta batches, where the default single-footer
-    # schema can hide the `meta` column from the filter resolver and the
-    # output projection (see CollectionStore.read).
-    data_cols = store.read(None, merge_schema=merge_schema).columns
+    # ONE store read for the whole call (each read is a listing plus a
+    # schema job): its columns feed the filter parse, the graph
+    # output_cols probe and the IVF projection, and the exact path scans
+    # it. ``merge_schema=True`` unions footers: needed on warehouses
+    # mixing pre-`meta` and dynamic-meta batches, where the default
+    # single-footer schema can hide the `meta` column from the filter
+    # resolver, the output projection and a dynamic-field predicate (see
+    # CollectionStore.read).
+    base = store.read(None, merge_schema=merge_schema)
+    data_cols = base.columns
     # a blank filter string parses to None and must behave like "no filter
     # given" (auto-detect still applies), not like "filter everything off".
     # Filter strings resolve against the store schema so bare identifiers
@@ -172,14 +174,12 @@ def search_with_scores(
             on_missing="exact", merge_schema=merge_schema, **kwargs,
         ).collect()
     else:
-        # merge_schema must reach the exact path too: on a mixed
-        # pre-meta/dynamic-meta warehouse a dynamic-field filter would
-        # otherwise hit an AnalysisException (or nondeterministically miss
-        # the meta column, footer-dependent) even though the schema probe
-        # above saw it
-        df = store.read(
-            None if search_all_collections else collection_name,
-            merge_schema=merge_schema,
+        # the same plan as store.read(collection_name): a named collection
+        # is a partition filter over the one read
+        df = (
+            base
+            if search_all_collections or collection_name is None
+            else base.filter(F.col("collection") == collection_name)
         )
         rows = topk_search(
             df,
@@ -187,7 +187,7 @@ def search_with_scores(
             k=k,
             metric=metric,
             predicate=predicate,
-            tie_break=["chunk_id"] if "chunk_id" in df.columns else None,
+            tie_break=["chunk_id"] if "chunk_id" in data_cols else None,
         ).collect()
     hits = []
     for r in rows:

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructField, StructType
 
 
 def get_spark(
@@ -57,6 +58,20 @@ def local_rows_df(spark, rows, schema, slices: int = 1):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n), schema
     )
+
+
+def partitioned_read_schema(frame_schema: StructType, key: str) -> StructType:
+    """The schema a scan of ``frame.write.partitionBy(key)`` output reads
+    back, derived from the written frame with no read: the data columns,
+    all nullable (file sources force it), then the partition key. Passing
+    it to ``spark.read.schema`` skips the footer-inference job that a
+    schemaless read pays on every plan."""
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in frame_schema.fields
+        if f.name != key
+    ]
+    return StructType(fields + [StructField(key, frame_schema[key].dataType, True)])
 
 
 def ensure_min_partitions(df, min_partitions: int | None = None):

@@ -21,8 +21,10 @@ to absolute local paths, preserving the local behavior.
 from __future__ import annotations
 
 import os
+import threading
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -136,6 +138,11 @@ class CollectionStore:
     def __init__(self, spark: SparkSession, config: StoreConfig | None = None):
         self.spark = spark
         self.config = config or StoreConfig()
+        # open index handles: (index path, kind) -> (commit stamp, handle);
+        # the lock makes open_index's check-then-open atomic, so serving
+        # threads share one handle per index version
+        self._indexes: dict[tuple[str, str], tuple[int | None, object]] = {}
+        self._indexes_lock = threading.Lock()
 
     @property
     def _root(self) -> str:
@@ -245,6 +252,8 @@ class CollectionStore:
         ]
         for t in targets:
             checked_delete(fs, self._jpath(t))
+        for kind in ("ivf", "graph"):
+            self._indexes.pop((self._index_path(name, kind), kind), None)
         self._update_stats(
             lambda prev, n=name: (
                 {k: v for k, v in prev.items() if k != n}
@@ -301,6 +310,7 @@ class CollectionStore:
         p = self._jpath(self._root)
         if fs.exists(p):
             fs.delete(p, True)
+        self._indexes = {}
         return n
 
     # -- S8: sink -------------------------------------------------------------
@@ -565,9 +575,8 @@ class CollectionStore:
             from vectordb_etl_spark.operators.ann import IVFIndex
 
             params.setdefault("nlist", self.config.nlist)
-            return IVFIndex(self.spark, path, metric=self.config.metric_type).build(
-                df, **params
-            )
+            idx = IVFIndex(self.spark, path, metric=self.config.metric_type)
+            return self._remember(path, kind, idx.build(df, **params))
         if kind == "graph":
             from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
 
@@ -583,22 +592,21 @@ class CollectionStore:
             # pass the store metric so a non-COSINE store fails here with
             # the tier's clear contract error, not with silently-wrong
             # cosine scores ranked under the store's metric
-            return GraphANNIndex(
-                self.spark, path, metric=self.config.metric_type
-            ).build(
+            idx = GraphANNIndex(self.spark, path, metric=self.config.metric_type)
+            return self._remember(path, kind, idx.build(
                 df, id_col=params.pop("id_col", "chunk_id"),
                 passthrough=passthrough, **params,
-            )
+            ))
         raise ValueError(f"unknown index kind {kind!r}")
 
     def fanout_search_indexed(
         self,
         query: list[float],
         k: int = 3,
-        nprobe: int = 16,
+        nprobe: int | None = None,
         collections: list[str] | None = None,
         kind: str = "ivf",
-        ef: int = 100,
+        ef: int | None = None,
         on_missing: str = "raise",
         fallback_id_col: str = "chunk_id",
         merge_schema: bool = False,
@@ -628,10 +636,20 @@ class CollectionStore:
         (``output_cols`` ascending). Per-collection indexes beat one
         shared-layout index (IVFIndex.search_per_group) when collections
         are hot/cold skewed: each gets its own centroid budget and the
-        probe cost is per-collection, not corpus-wide."""
+        probe cost is per-collection, not corpus-wide.
+
+        ``nprobe``/``ef`` default to the store's ``StoreConfig.nprobe``/
+        ``ef_search``. Index handles come from :meth:`open_index`, so a
+        warm search reopens nothing: an IVF probe lists ``data/`` once
+        and reads only the probed cells, a graph probe reads with the
+        memoized schema, and neither runs a listing or schema job."""
         from vectordb_etl_spark.functions.vector import metric_ascending
         from vectordb_etl_spark.operators.topk import topk_search
 
+        if nprobe is None:
+            nprobe = self.config.nprobe
+        if ef is None:
+            ef = self.config.ef_search
         if on_missing not in ("raise", "exact"):
             raise ValueError(f"on_missing must be 'raise'|'exact'; got {on_missing!r}")
         names = collections if collections is not None else self.list_collections()
@@ -719,22 +737,46 @@ class CollectionStore:
         return out.orderBy(*order).limit(k)
 
     def open_index(self, collection: str | None = None, kind: str = "ivf"):
-        """Reopen a previously built index (artifact is self-describing)."""
+        """The handle of a previously built index (artifact is
+        self-describing), opened once per store and reused while the
+        index's commit marker is unchanged — a rebuild through any other
+        handle or process replaces the marker, and the next call reopens."""
         if kind == "ivf":
-            from vectordb_etl_spark.operators.ann import IVFIndex
+            from vectordb_etl_spark.operators.ann import IVFIndex as cls
+        elif kind == "graph":
+            from vectordb_etl_spark.operators.graph_ann import GraphANNIndex as cls
+        else:
+            raise ValueError(f"unknown index kind {kind!r}")
+        path = self._index_path(collection, kind)
+        stamp = self._index_stamp(path, kind)
+        with self._indexes_lock:
+            hit = self._indexes.get((path, kind))
+            if hit is not None and stamp is not None and hit[0] == stamp:
+                return hit[1]
+            idx = cls(self.spark, path, metric=self.config.metric_type)
+            self._indexes[(path, kind)] = (stamp, idx)
+        return idx
 
-            return IVFIndex(
-                self.spark, self._index_path(collection, kind),
-                metric=self.config.metric_type,
-            )
-        if kind == "graph":
-            from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
+    def _index_stamp(self, path: str, kind: str) -> int | None:
+        """Modification time of the index's commit marker: the centroids'
+        ``_SUCCESS`` for IVF (add/compact leave it alone, so appended
+        rows keep the handle), the layout's ``_SUCCESS`` for graph — the
+        same probe as pipeline._ckpt_mtime, falling back to the artifact
+        directory. None when neither exists."""
+        artifact = f"{path}/centroids" if kind == "ivf" else path
+        fs = self._fs(artifact)
+        for p in (f"{artifact}/_SUCCESS", artifact):
+            try:
+                return fs.getFileStatus(self._jpath(p)).getModificationTime()
+            except Py4JJavaError:  # FileNotFoundException
+                continue
+        return None
 
-            return GraphANNIndex(
-                self.spark, self._index_path(collection, kind),
-                metric=self.config.metric_type,
-            )
-        raise ValueError(f"unknown index kind {kind!r}")
+    def _remember(self, path: str, kind: str, idx):
+        """Keep a handle this store just built, so its centroids and
+        schema are warm for the next search."""
+        self._indexes[(path, kind)] = (self._index_stamp(path, kind), idx)
+        return idx
 
     def index_rebalance_hints(
         self, collections: list[str] | None = None, ratio: float | None = None
