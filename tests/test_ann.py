@@ -241,6 +241,34 @@ def test_ivf_compact_collapses_add_batches(spark, embeddings_tiny, tmp_path, que
     assert on_disk.count() == embeddings_tiny.count() + 10
 
 
+def test_ivf_compact_restores_data_left_aside_by_a_crash(
+    spark, embeddings_tiny, tmp_path, query_vec
+):
+    """A compaction that died between its two renames left ``data/`` at
+    ``.old-data``; the next compact() restores it before reading, keeps
+    every row, and searches return what they did before the crash."""
+    import os
+    import shutil
+
+    path = str(tmp_path / "ivf_crash")
+    IVFIndex(spark, path).build(embeddings_tiny, nlist=4, seed=42, max_iter=4)
+
+    def _search(idx):
+        return [
+            (r["vec_id"], r["score"])
+            for r in idx.search(query_vec, k=10, nprobe=4, tie_break=["vec_id"],
+                                output_cols=["vec_id"]).collect()
+        ]
+
+    pre = _search(IVFIndex(spark, path))
+    shutil.move(f"{path}/data", f"{path}/.old-data")  # crash state
+    idx = IVFIndex(spark, path)
+    idx.compact()
+    assert spark.read.parquet(f"{path}/data").count() == embeddings_tiny.count()
+    assert _search(idx) == pre
+    assert sorted(os.listdir(path)) == ["centroids", "data"]
+
+
 def test_ivf_search_many_rejects_reserved_column_names(spark, tmp_path):
     # data carrying an internal working-column name would silently corrupt
     # the batched join/rank — must fail loud instead (ADVICE r03)
@@ -835,6 +863,46 @@ def test_graph_compact_merges_segments_results_stable(spark, embeddings_tiny, tm
     post = [(r["id"], r["score"]) for r in idx.search(q, k=10, ef=10_000).collect()]
     assert post == pre
     assert spark.read.parquet(path).count() == embeddings_tiny.count()
+
+
+def test_graph_failed_compact_leaves_live_index_serving(
+    spark, embeddings_tiny, tmp_path, monkeypatch
+):
+    """compact() rebuilds into a staging layout: when a shard build fails,
+    compact() raises and the live layout keeps its rows and answers. A
+    later successful compact() leaves no work dir beside the index."""
+    import os
+
+    from vectordb_etl_spark.operators import graph_ann
+
+    path = str(tmp_path / "graph")
+    idx = graph_ann.GraphANNIndex(spark, path).build(
+        embeddings_tiny, num_shards=3, m=8, ef_construction=32
+    )
+    q = list(embeddings_tiny.filter(F.col("vec_id") == 7).head()["embedding"])
+
+    def _search():
+        return [(r["id"], r["score"]) for r in idx.search(q, k=10, ef=10_000).collect()]
+
+    pre = _search()
+
+    def _failing_builder(*_args, **_kwargs):
+        def _build(pdf):
+            raise RuntimeError("shard build failed")
+
+        return _build
+
+    monkeypatch.setattr(graph_ann, "_make_shard_builder", _failing_builder)
+    with pytest.raises(Exception, match="shard build failed"):
+        idx.compact(num_shards=2, m=8, ef_construction=32)
+    assert spark.read.parquet(path).count() == embeddings_tiny.count()
+    assert _search() == pre
+
+    monkeypatch.undo()
+    assert idx.compact(num_shards=2, m=8, ef_construction=32) == (3, 2)
+    assert _search() == pre
+    # no staging (.staging-graph) or aside (.old-graph) dir is left
+    assert os.listdir(tmp_path) == ["graph"]
 
 
 def test_graph_rebalance_hint_flags_skew_and_compact_clears_it(

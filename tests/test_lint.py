@@ -106,6 +106,45 @@ def test_vector_literals_go_through_vector_lit():
     assert not offenders, f"vector literal outside vector_lit: {offenders}"
 
 
+def test_directory_swaps_go_through_replace_dir():
+    """Every store and index rewrite swaps its directory through
+    ``store/collections.py:replace_dir``: in the package, ``.rename(`` is
+    called only by ``checked_rename`` and by the manifest commit
+    ``snapshots.try_commit_manifest``, and the per-site work-dir names
+    that predate it are gone. (The bracketed characters keep these
+    patterns from matching themselves.)"""
+    import ast
+
+    allowed = {
+        ("collections.py", "checked_rename"),
+        ("snapshots.py", "try_commit_manifest"),
+    }
+    stale = [
+        r"\.upsert-collection=", r"\.precompac[t]-collection=",
+        r"\.compact-collection=", r"\.compact-data", r"__compact_stagin[g]",
+        r'\.staging"', r'\.old"',
+    ]
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        src = path.read_text()
+        owner = {}
+        # breadth-first, so an inner function overwrites its outer one
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef):
+                for ln in range(node.lineno, node.end_lineno + 1):
+                    owner[ln] = node.name
+        where = path.relative_to(PKG.parent)
+        for m in re.finditer(r"\.rename\(", src):
+            line = src[: m.start()].count("\n") + 1
+            if (path.name, owner.get(line)) not in allowed:
+                offenders.append(f"{where}:{line} rename")
+        for pattern in stale:
+            for m in re.finditer(pattern, src):
+                line = src[: m.start()].count("\n") + 1
+                offenders.append(f"{where}:{line} {m.group()}")
+    assert not offenders, f"directory swap outside replace_dir: {offenders}"
+
+
 def test_rotation_has_one_home():
     """The driver-check order lives in ``__spark_entry__.rotation_order``
     and is imported from there: no file-path module loading and no

@@ -665,11 +665,16 @@ def test_search_blank_filter_string_falls_back_to_autodetect(spark, tmp_path):
     assert hits and all(h.metadata["language"] == "english" for h in hits)
 
 
-def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
+@pytest.mark.parametrize("recover", ["upsert_documents", "compact_collection"])
+def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path, recover):
     # simulate a crash between rename-aside and rename-in: the partition
     # dir is ABSENT and the only copy of the old rows lives in the aside.
-    # A retried upsert must restore the aside first — not treat the
-    # collection as new and then delete the backup (silent total loss).
+    # Upsert and compaction swap through one replace_dir and share its
+    # aside, so whichever operation touches the collection next must
+    # restore the aside first — not treat the collection as new and then
+    # delete the backup (silent total loss).
+    from vectordb_etl_spark.store.layout import compact_collection
+
     store = CollectionStore(spark, StoreConfig(warehouse_dir=str(tmp_path / "w")))
     cols = ["doc_id", "source", "folder_name", "text", "language",
             "chunk_index", "chunk_id"]
@@ -685,12 +690,18 @@ def test_upsert_recovers_from_crash_mid_swap(spark, tmp_path):
     fs = store._fs(part)
     assert fs.rename(store._jpath(part), store._jpath(aside))  # crash state
 
+    if recover == "compact_collection":
+        compact_collection(store, "html_f1", target_partitions=1)
+        assert store.read("html_f1").count() == 5
+        assert not fs.exists(store._jpath(aside))
     delta = spark.createDataFrame(
-        [(1, "s", "f1", "NEW text 1", "english", 0, "c1")], cols
+        [(1, "s", "f1", "NEW text 1", "english", 0, "c1"),
+         (9, "s", "f1", "brand new", "english", 0, "c9")], cols
     )
     counts = store.upsert_documents(delta, embedding_config=EMB)
-    assert counts == {"html_f1": 5}  # 4 surviving old + 1 replaced
+    assert counts == {"html_f1": 6}  # 4 surviving old + 1 replaced + 1 new
     f1 = {r["chunk_id"]: r["text"] for r in store.read("html_f1").collect()}
+    assert set(f1) == {"c0", "c1", "c2", "c3", "c4", "c9"}
     assert f1["c1"] == "NEW text 1"
     assert f1["c0"] == "old text 0"  # old rows restored from the aside
     assert not fs.exists(store._jpath(aside))
@@ -709,7 +720,7 @@ def test_vacuum_removes_orphans_but_preserves_sole_backups(spark, tmp_path):
 
     # orphan staging dir (crash before swap) + stale aside NEXT TO a live
     # destination: both garbage
-    fs.mkdirs(store._jpath(f"{store._data_dir}/.upsert-collection=html_f1"))
+    fs.mkdirs(store._jpath(f"{store._data_dir}/.staging-collection=html_f1"))
     fs.mkdirs(store._jpath(f"{store._data_dir}/.old-collection=html_f1"))
     # an aside whose destination is ABSENT: the sole backup — must survive
     fs.mkdirs(store._jpath(f"{store._data_dir}/.old-collection=html_gone"))
@@ -720,40 +731,13 @@ def test_vacuum_removes_orphans_but_preserves_sole_backups(spark, tmp_path):
     assert store.vacuum() == []
     removed = sorted(store.vacuum(grace_s=0))
     assert removed == [
-        ".old-collection=html_f1", ".upsert-collection=html_f1",
+        ".old-collection=html_f1", ".staging-collection=html_f1",
     ]
     assert fs.exists(
         store._jpath(f"{store._data_dir}/.old-collection=html_gone")
     )
     # live data untouched
     assert store.read("html_f1").count() == 3
-
-
-def test_upsert_recovers_from_crashed_compaction_aside(spark, tmp_path):
-    # CROSS-mechanism recovery: a compaction crash leaves a .precompact-
-    # aside; a later UPSERT must restore it (not recreate the collection
-    # with delta-only rows and let vacuum destroy the backup)
-    store = CollectionStore(spark, StoreConfig(warehouse_dir=str(tmp_path / "w")))
-    cols = ["doc_id", "source", "folder_name", "text", "language",
-            "chunk_index", "chunk_id"]
-    base = spark.createDataFrame(
-        [(i, "s", "f1", f"old text {i}", "english", 0, f"c{i}")
-         for i in range(4)],
-        cols,
-    )
-    store.insert_documents(base, embedding_config=EMB)
-    part = f"{store._data_dir}/collection=html_f1"
-    aside = f"{store._data_dir}/.precompact-collection=html_f1"
-    fs = store._fs(part)
-    assert fs.rename(store._jpath(part), store._jpath(aside))  # crash state
-
-    delta = spark.createDataFrame(
-        [(9, "s", "f1", "brand new", "english", 0, "c9")], cols
-    )
-    counts = store.upsert_documents(delta, embedding_config=EMB)
-    assert counts == {"html_f1": 5}  # 4 restored + 1 new
-    f1 = {r["chunk_id"] for r in store.read("html_f1").collect()}
-    assert f1 == {"c0", "c1", "c2", "c3", "c9"}
 
 
 def test_drop_collection_removes_asides(spark, tmp_path):

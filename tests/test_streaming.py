@@ -572,8 +572,8 @@ def test_kmv_ingest_stream_equals_batch(spark, tmp_path):
 
 def test_sketch_sink_recovers_from_crashed_swap(spark, tmp_path):
     """A sink that died between rename-aside and rename-in leaves the
-    only sketch copy at <path>.old; the next batch must restore it, not
-    silently start fresh."""
+    only sketch copy at <parent>/.old-<leaf>; the next batch must restore
+    it, not silently start fresh."""
     from tests.conftest import SF_TINY
     from vectordb_etl_spark.functions.sketches import hll_registers
     from vectordb_etl_spark.streaming.ingest import hll_ingest_stream
@@ -600,7 +600,7 @@ def test_sketch_sink_recovers_from_crashed_swap(spark, tmp_path):
     # simulate the crash window: registers renamed aside, staging lost
     import shutil
 
-    shutil.move(regs, f"{regs}.old")
+    shutil.move(regs, str(tmp_path / ".old-regs"))
     run(landing2, "c2")
     # result must equal the sketch of BOTH halves — half1's registers
     # were recovered from the aside before merging
@@ -724,7 +724,7 @@ def test_cm_sink_crash_replay_at_10x_state(spark, tmp_path):
     _run()
     # crash window: sketch renamed aside, staging lost, AND the stream
     # will replay from the same checkpoint (at-least-once delivery)
-    shutil.move(sketch, f"{sketch}.old")
+    shutil.move(sketch, str(tmp_path / ".old-cm"))
     ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(landing)

@@ -535,45 +535,31 @@ class IVFIndex:
         Daily ``add()`` batches append one file per centroid per batch —
         after N ingests a probe reads N files per probed partition and scan
         setup starts to dominate. Compaction is one shuffle on the layout
-        key into a staging dir, then an atomic rename swap (same
-        checked-rename discipline as store compaction; the previous layout
-        is kept aside until the swap succeeds, so a crash leaves either the
-        old or the new layout, never a mix). Quantized (sq8) layouts
-        compact as-is — codes are never decoded. Returns
-        (files_before, files_after)."""
-        from vectordb_etl_spark.store.collections import (
-            checked_delete,
-            checked_rename,
-        )
+        key, swapped in over ``data/`` by
+        :func:`~vectordb_etl_spark.store.collections.replace_dir` (which
+        also restores a ``data/`` left aside by a crashed compaction).
+        Quantized (sq8) layouts compact as-is — codes are never decoded.
+        Returns (files_before, files_after)."""
+        from vectordb_etl_spark.store.collections import replace_dir
 
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
-        data = jvm_path(f"{self.path}/data")
-        fs = data.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        data = f"{self.path}/data"
+        jdata = self.spark._jvm.org.apache.hadoop.fs.Path(data)
+        fs = jdata.getFileSystem(self.spark._jsc.hadoopConfiguration())
 
-        def _count_files(p) -> int:
-            it = fs.listFiles(p, True)
+        def _count_files() -> int:
+            it = fs.listFiles(jdata, True)
             n = 0
             while it.hasNext():
                 it.next()
                 n += 1
             return n
 
-        before = _count_files(data)
-        tmp = jvm_path(f"{self.path}/.compact-data")
-        aside = jvm_path(f"{self.path}/.old-data")
-        checked_delete(fs, tmp)
-        checked_delete(fs, aside)
-        (
-            self._scan()
-            .repartition("centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(f"{self.path}/.compact-data")
-        )
-        checked_rename(fs, data, aside)
-        checked_rename(fs, tmp, data)
-        checked_delete(fs, aside)
-        return before, _count_files(data)
+        with replace_dir(self.spark, data) as (staging, _exists):
+            before = _count_files()
+            self._scan().repartition("centroid_id").write.mode(
+                "overwrite"
+            ).partitionBy("centroid_id").parquet(staging)
+        return before, _count_files()
 
     # above this many doubles (K·d), the codebook stops being a plan
     # literal: at production dims (d=1024, K=256 — BGE-M3 through FAISS's

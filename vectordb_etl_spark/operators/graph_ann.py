@@ -604,40 +604,35 @@ class GraphANNIndex:
     ) -> tuple[int, int]:
         """Seal/merge the accumulated ``add()`` segments back into a fresh
         uniform layout (the Milvus segment-compaction analog): read every
-        shard's vectors, re-shard by the id hash, rebuild per-shard NSW
-        graphs, and swap the layout in one overwrite. Returns
+        shard's vectors, re-shard by the id hash and rebuild per-shard NSW
+        graphs into a staging layout, swapped in by
+        :func:`~vectordb_etl_spark.store.collections.replace_dir` — a
+        failed rebuild leaves the live layout serving. Returns
         ``(shards_before, shards_after)``. Run when small segments
         accumulate — per-segment beam searches stay correct regardless,
         but many tiny segments waste task overhead and beam quality."""
-        # no format guard here: compact() reads only id/passthrough/
-        # embedding, so it doubles as the MIGRATION path for an index
-        # persisted in the pre-hierarchy flat-NSW layout
-        existing = self.spark.read.parquet(self.path)
-        passthrough = [
-            c for c in existing.columns if c not in _INDEX_META_COLS
-        ]
-        before = existing.select("shard").distinct().count()
-        vectors = existing.select(
-            F.col("id").alias("vec_id"), *passthrough, "embedding"
-        )
-        # materialize before the overwrite clobbers the source files
-        staged = f"{self.path}__compact_staging"
-        vectors.write.mode("overwrite").parquet(staged)
-        self.build(
-            self.spark.read.parquet(staged),
-            id_col="vec_id",
-            num_shards=num_shards,
-            m=m,
-            ef_construction=ef_construction,
-            passthrough=passthrough,
-            target_rows_per_shard=target_rows_per_shard,
-            max_level=max_level,
-        )
-        from vectordb_etl_spark.store.collections import checked_delete
+        from vectordb_etl_spark.store.collections import replace_dir
 
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(staged)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        checked_delete(fs, jpath)
+        with replace_dir(self.spark, self.path) as (staging, _exists):
+            # no format guard here: compact() reads only id/passthrough/
+            # embedding, so it doubles as the MIGRATION path for an index
+            # persisted in the pre-hierarchy flat-NSW layout
+            existing = self.spark.read.parquet(self.path)
+            passthrough = [
+                c for c in existing.columns if c not in _INDEX_META_COLS
+            ]
+            before = existing.select("shard").distinct().count()
+            rebuilt = GraphANNIndex(self.spark, staging).build(
+                existing,
+                id_col="id",
+                num_shards=num_shards,
+                m=m,
+                ef_construction=ef_construction,
+                passthrough=passthrough,
+                target_rows_per_shard=target_rows_per_shard,
+                max_level=max_level,
+            )
+        self._schema = rebuilt._schema
         after = self._read().select("shard").distinct().count()
         return before, after
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -134,6 +135,51 @@ def checked_delete(fs, path, recursive: bool = True) -> None:
         raise IOError(f"delete failed: {path}")
 
 
+# work-dir naming rule of replace_dir: the siblings of <parent>/<leaf> are
+# <parent>/.staging-<leaf> (new contents) and <parent>/.old-<leaf> (aside)
+_STAGING, _ASIDE = ".staging-", ".old-"
+
+
+@contextmanager
+def replace_dir(spark: SparkSession, dest: str):
+    """Replace the directory ``dest`` so that it is never absent.
+
+    ``with replace_dir(spark, dest) as (staging, exists):`` yields the
+    staging path and whether ``dest`` exists; the body writes the
+    new contents to ``staging`` (it may read ``dest`` while doing so).
+    On exit the swap is rename-aside → rename-in → delete-aside, each
+    step checked. A body that writes nothing declines: ``dest`` stays as
+    it was. A body that raises publishes nothing either; its staging dir
+    is cleared by the next replace_dir on ``dest``.
+
+    Crash restore: a swap that died between its two renames left the
+    only copy in the aside. It is renamed back before the body runs, so
+    the body never mistakes ``dest`` for new and the aside cleanup never
+    deletes the sole copy. An aside next to a live ``dest`` is garbage.
+
+    On HDFS-like filesystems each rename is atomic, so a reader sees a
+    complete old or complete new listing; on object stores (s3a) rename
+    is a non-atomic copy+delete and a concurrent reader can observe a
+    partial swap — use a table format (Iceberg/Delta) there."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    target = jpath(dest)
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    parent, leaf = target.getParent(), target.getName()
+    staging = jpath(parent, _STAGING + leaf)
+    aside = jpath(parent, _ASIDE + leaf)
+    if fs.exists(aside) and not fs.exists(target):
+        checked_rename(fs, aside, target)
+    checked_delete(fs, staging)
+    yield staging.toString(), fs.exists(target)
+    if not fs.exists(staging):
+        return
+    checked_delete(fs, aside)
+    if fs.exists(target):
+        checked_rename(fs, target, aside)
+    checked_rename(fs, staging, target)
+    checked_delete(fs, aside)
+
+
 class CollectionStore:
     def __init__(self, spark: SparkSession, config: StoreConfig | None = None):
         self.spark = spark
@@ -183,13 +229,6 @@ class CollectionStore:
         """Reference: milvus_store.py:68-70."""
         return name in self.list_collections()
 
-    # work-directory naming shared by upsert/compaction swaps; order matters
-    # for recovery (restore the freshest-semantics aside first)
-    _ASIDE_PREFIXES = (".old-collection=", ".precompact-collection=")
-    _WORK_PREFIXES = _ASIDE_PREFIXES + (
-        ".upsert-collection=", ".compact-collection=",
-    )
-
     def _warn_pre_rule_partitions(self, targets) -> None:
         """The naming rule (lowercase/sanitize, 'root'->default — reference
         modules/config.py:37-43) changed where some folders land relative
@@ -227,19 +266,6 @@ class CollectionStore:
                     stacklevel=3,
                 )
 
-    def _restore_if_crashed(self, fs, name: str) -> None:
-        """Cross-mechanism crash recovery: if ANY aside (upsert's .old- or
-        compaction's .precompact-) holds the only copy of a collection
-        whose destination is absent, restore it — regardless of which
-        operation crashed and which is retrying. Without this, an upsert
-        after a crashed compaction would recreate the destination with
-        delta-only rows and vacuum() would then delete the sole backup."""
-        part = self._jpath(f"{self._data_dir}/collection={name}")
-        for prefix in self._ASIDE_PREFIXES:
-            aside = self._jpath(f"{self._data_dir}/{prefix}{name}")
-            if fs.exists(aside) and not fs.exists(part):
-                checked_rename(fs, aside, part)
-
     def drop_collection(self, name: str) -> None:
         """Reference: milvus_store.py:408-414. Partition-directory drop
         (recursive delete via the warehouse's own filesystem). Also removes
@@ -247,11 +273,10 @@ class CollectionStore:
         otherwise be 'restored' by the next upsert's crash recovery,
         resurrecting explicitly-dropped data."""
         fs = self._fs(self._data_dir)
-        targets = [f"{self._data_dir}/collection={name}"] + [
-            f"{self._data_dir}/{prefix}{name}" for prefix in self._WORK_PREFIXES
-        ]
-        for t in targets:
-            checked_delete(fs, self._jpath(t))
+        for prefix in ("", _STAGING, _ASIDE):
+            checked_delete(
+                fs, self._jpath(f"{self._data_dir}/{prefix}collection={name}")
+            )
         for kind in ("ivf", "graph"):
             self._indexes.pop((self._index_path(name, kind), kind), None)
         self._update_stats(
@@ -263,13 +288,13 @@ class CollectionStore:
         )
 
     def vacuum(self, grace_s: float = 900.0) -> list[str]:
-        """Delete orphaned work directories (.upsert-/.old-/.compact-/
-        .precompact-) left by upserts or compactions that crashed before
+        """Delete the work directories (:func:`replace_dir`'s staging and
+        aside dirs) left by upserts or compactions that crashed before
         cleanup. Safe because readers never see dot-prefixed children and
         every crash state that still NEEDS an aside (destination absent) is
-        repaired by the recovery step at the start of the next
-        upsert/compaction — anything remaining alongside a live destination
-        is garbage by construction. Returns the deleted paths.
+        restored by the next replace_dir on that collection — anything
+        remaining alongside a live destination is garbage by construction.
+        Returns the deleted paths.
 
         ``grace_s``: work dirs modified within the last ``grace_s`` seconds
         are SKIPPED — a concurrent upsert/compaction that just wrote its
@@ -285,7 +310,7 @@ class CollectionStore:
         now_ms = time.time() * 1000.0
         for st in fs.listStatus(root):
             name = st.getPath().getName()
-            if not name.startswith(self._WORK_PREFIXES):
+            if not name.startswith((_STAGING, _ASIDE)):
                 continue
             if now_ms - st.getModificationTime() < grace_s * 1000.0:
                 continue  # possibly in flight — leave for the next vacuum
@@ -293,10 +318,11 @@ class CollectionStore:
             # its live destination exists (else it is the sole surviving
             # copy, left for recovery to restore); staging dirs are always
             # re-creatable
-            if name.startswith(self._ASIDE_PREFIXES):
-                live = "collection=" + name.split("=", 1)[1]
-                if not fs.exists(self._jpath(f"{self._data_dir}/{live}")):
-                    continue
+            live = name.removeprefix(_ASIDE)
+            if live != name and not fs.exists(
+                self._jpath(f"{self._data_dir}/{live}")
+            ):
+                continue
             checked_delete(fs, st.getPath())
             removed.append(name)
         return removed
@@ -308,8 +334,7 @@ class CollectionStore:
         n = len(self.list_collections())
         fs = self._fs(self._root)
         p = self._jpath(self._root)
-        if fs.exists(p):
-            fs.delete(p, True)
+        checked_delete(fs, p)
         self._indexes = {}
         return n
 
@@ -430,14 +455,9 @@ class CollectionStore:
         """Incremental merge: new rows replace existing rows with the same
         ``key_col`` within their collection; unrelated collections are
         untouched. Parquet has no MERGE, so the affected collections are
-        rewritten as (existing ANTI-JOIN new) ∪ new into a staging
-        directory and swapped in rename-aside → rename-in → delete-aside,
-        so the destination is never absent. On HDFS-like filesystems each
-        rename is atomic, so a reader sees a complete old or complete new
-        listing; on object stores (s3a) "rename" is a non-atomic
-        copy+delete, so a concurrent reader can still observe a partial
-        swap — use a table format (Iceberg/Delta) there for true snapshot
-        isolation. Cost scales with the AFFECTED
+        rewritten as (existing ANTI-JOIN new) ∪ new and swapped in by
+        :func:`replace_dir` (crash restore and reader guarantees are
+        documented there). Cost scales with the AFFECTED
         collections only (partition pruning on the read), not the
         warehouse; at 100 TB keep collections sized so a rewrite is an
         acceptable unit of work (this is the classic copy-on-write merge,
@@ -470,34 +490,19 @@ class CollectionStore:
         ]
         self._warn_pre_rule_partitions(affected)
         counts: dict[str, int] = {}
-        fs = self._fs(self._data_dir)
         for name in affected:
             part_dir = f"{self._data_dir}/collection={name}"
-            aside = f"{self._data_dir}/.old-collection={name}"
-            # crash recovery BEFORE anything else: a previous upsert OR
-            # compaction that died mid-swap left the only copy of the old
-            # rows in an aside — restore it, or the merge below would treat
-            # the collection as new and the aside cleanup would permanently
-            # destroy the backup
-            self._restore_if_crashed(fs, name)
             new_part = incoming.filter(F.col("collection") == name).drop(
                 "collection"
             )
-            if fs.exists(self._jpath(part_dir)):
-                old = self.spark.read.parquet(part_dir)
-                keep = old.join(
-                    new_part.select(key_col), key_col, "left_anti"
-                )
-                merged = keep.unionByName(new_part, allowMissingColumns=True)
-            else:
+            with replace_dir(self.spark, part_dir) as (staging, exists):
                 merged = new_part
-            staging = f"{self._data_dir}/.upsert-collection={name}"
-            merged.write.mode("overwrite").parquet(staging)
-            checked_delete(fs, self._jpath(aside))
-            if fs.exists(self._jpath(part_dir)):
-                checked_rename(fs, self._jpath(part_dir), self._jpath(aside))
-            checked_rename(fs, self._jpath(staging), self._jpath(part_dir))
-            checked_delete(fs, self._jpath(aside))
+                if exists:
+                    keep = self.spark.read.parquet(part_dir).join(
+                        new_part.select(key_col), key_col, "left_anti"
+                    )
+                    merged = keep.unionByName(new_part, allowMissingColumns=True)
+                merged.write.mode("overwrite").parquet(staging)
             counts[name] = self.spark.read.parquet(part_dir).count()
         # upsert counts are post-merge TOTALS for the affected collections —
         # overlay them; unaffected collections keep their manifest numbers

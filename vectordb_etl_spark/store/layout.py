@@ -16,17 +16,16 @@ metastore.
 (S8 under foreachBatch) accumulates many small files per collection
 partition; scan cost then scales with file COUNT, not bytes. Compaction
 rewrites one collection's directory at a target partition count and swaps
-it in with a filesystem rename — same Hadoop FileSystem plumbing as the
-store DDL, so it works on any warehouse scheme. The swap is
-rename-then-delete: readers either see the old file set or the new one,
-never a mix.
+it in through :func:`~vectordb_etl_spark.store.collections.replace_dir`,
+the store's one directory swap (naming, crash restore and reader
+guarantees are documented there).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vectordb_etl_spark.store.collections import CollectionStore
+from vectordb_etl_spark.store.collections import CollectionStore, replace_dir
 
 
 def write_bucketed(
@@ -58,51 +57,25 @@ def compact_collection(
     target_partitions: int,
 ) -> tuple[int, int]:
     """Rewrite one collection's partition directory with
-    ``target_partitions`` output files. Returns (files_before,
-    files_after). Swap discipline: the new file set is written to a
-    sibling directory, the old directory renamed aside, the new renamed
-    in, then the aside deleted — the destination path is never absent.
-    On HDFS-like filesystems each rename is atomic so a reader mid-swap
-    sees a complete old or complete new listing; on object stores (s3a)
-    rename is a non-atomic copy+delete and a concurrent reader can still
-    observe a partial swap — use a table format (Iceberg/Delta) there."""
+    ``target_partitions`` output files, swapped in by
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`. Returns
+    (files_before, files_after)."""
     spark: SparkSession = store.spark
     part_dir = f"{store._data_dir}/collection={collection}"
-    tmp_dir = f"{store._data_dir}/.compact-collection={collection}"
     fs = store._fs(part_dir)
 
-    def _n_files(uri: str) -> int:
-        p = store._jpath(uri)
-        if not fs.exists(p):
-            return 0
+    def _n_files() -> int:
         return sum(
             1
-            for st in fs.listStatus(p)
+            for st in fs.listStatus(store._jpath(part_dir))
             if not st.getPath().getName().startswith(("_", "."))
         )
 
-    from vectordb_etl_spark.store.collections import (
-        checked_delete,
-        checked_rename,
-    )
-
-    aside = f"{store._data_dir}/.precompact-collection={collection}"
-    # crash recovery FIRST (cross-mechanism: covers a crashed upsert's
-    # .old- aside too): a swap that died between rename-aside and rename-in
-    # left the only data copy in an aside — restore it before reading (the
-    # read below would otherwise fail, and a blind aside-delete would
-    # destroy the sole backup)
-    store._restore_if_crashed(fs, collection)
-
-    before = _n_files(part_dir)
-    df = spark.read.parquet(part_dir)
-    df.repartition(target_partitions).write.mode("overwrite").parquet(tmp_dir)
-    checked_delete(fs, store._jpath(aside))
-    checked_rename(fs, store._jpath(part_dir), store._jpath(aside))
-    checked_rename(fs, store._jpath(tmp_dir), store._jpath(part_dir))
-    checked_delete(fs, store._jpath(aside))
-    after = _n_files(part_dir)
-    return before, after
+    with replace_dir(spark, part_dir) as (staging, _exists):
+        df = spark.read.parquet(part_dir)
+        before = _n_files()
+        df.repartition(target_partitions).write.mode("overwrite").parquet(staging)
+    return before, _n_files()
 
 
 def write_clustered(

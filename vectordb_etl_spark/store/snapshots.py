@@ -2,10 +2,11 @@
 
 Beyond-reference tier: the reference writes straight into Milvus with no
 history (modules/vector_store.py — insert/drop only). The store's
-copy-on-write upsert and compaction already note that object stores need
-"a table format for true snapshot isolation"; this module IS that table
-format, reduced to its load-bearing core (the Delta/Iceberg mechanism,
-~150 lines, no new dependencies):
+copy-on-write upsert and compaction swap whole directories through
+``store/collections.py:replace_dir``, whose readers are safe only where
+rename is atomic; this module is the table format that lifts that limit,
+reduced to its load-bearing core (the Delta/Iceberg mechanism, ~150
+lines, no new dependencies):
 
 * Data files are immutable parquet parts under ``<root>/files/``; a
   commit NEVER rewrites or deletes a data file.

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 from vectordb_etl_spark.config import ChunkerConfig, EmbeddingConfig
 from vectordb_etl_spark.functions import cleaning, language
 from vectordb_etl_spark.operators import chunker
+from vectordb_etl_spark.store.collections import replace_dir
 
 
 def run_available_now(writer: DataStreamWriter) -> list[dict]:
@@ -528,40 +529,6 @@ def graph_ingest_stream(
     return _foreach_batch(stream_vectors, checkpoint_dir, _sink)
 
 
-def _swap_publish(spark: SparkSession, path: str, merge) -> None:
-    """Publish ``merge(old)`` as the sketch table at ``path``, where ``old``
-    is the persisted table (None when there is none yet); ``merge``
-    returning None leaves the table untouched. The write goes to a staging
-    dir and is swapped in by rename, so readers see the complete old or the
-    complete new table.
-
-    A sink that died between rename-aside and rename-in left the ONLY copy
-    of the sketch at ``<path>.old``; it is restored before reading, or the
-    batch would silently treat the table as fresh and the aside cleanup
-    would destroy the history (same recovery rule as the collection store's
-    _restore_if_crashed)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = jvm_path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    )
-    dest = jvm_path(path)
-    aside = jvm_path(f"{path}.old")
-    if fs.exists(aside) and not fs.exists(dest):
-        fs.rename(aside, dest)
-    exists = fs.exists(dest)
-    out = merge(spark.read.parquet(path) if exists else None)
-    if out is None:
-        return
-    staging = f"{path}.staging"
-    out.write.mode("overwrite").parquet(staging)
-    if fs.exists(aside):
-        fs.delete(aside, True)
-    if exists:
-        fs.rename(dest, aside)
-    fs.rename(jvm_path(staging), dest)
-    fs.delete(aside, True)
-
-
 def hll_ingest_stream(
     stream_df: DataFrame,
     registers_path: str,
@@ -580,9 +547,10 @@ def hll_ingest_stream(
     CDC re-deliveries are absorbed for free (max of a max).
 
     State is the register table itself: ≤ groups × 2^p rows, read-merged-
-    rewritten per batch through a staging dir + rename swap (readers see
-    complete old or complete new). Per-batch cost ∝ batch + register
-    table; nothing grows with stream lifetime."""
+    rewritten per batch through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir` (readers see
+    complete old or complete new; a crashed swap is restored). Per-batch
+    cost ∝ batch + register table; nothing grows with stream lifetime."""
     from vectordb_etl_spark.functions.sketches import hll_merge, hll_registers
 
     group_cols = group_cols or []
@@ -590,14 +558,13 @@ def hll_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        new_regs = hll_registers(batch_df, value_col, group_cols, p)
-        _swap_publish(
-            batch_df.sparkSession,
-            registers_path,
-            lambda old: new_regs
-            if old is None
-            else hll_merge(new_regs.unionByName(old), group_cols),
-        )
+        spark = batch_df.sparkSession
+        regs = hll_registers(batch_df, value_col, group_cols, p)
+        with replace_dir(spark, registers_path) as (staging, exists):
+            if exists:
+                old = spark.read.parquet(registers_path)
+                regs = hll_merge(regs.unionByName(old), group_cols)
+            regs.write.mode("overwrite").parquet(staging)
 
     return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
@@ -624,7 +591,10 @@ def cm_ingest_stream(
 
     State is ≤ d·w counter rows + one meta row; per-batch cost ∝ batch.
     The final counters equal the batch sketch of all rows (addition is
-    commutative/associative — micro-batch boundaries don't matter)."""
+    commutative/associative — micro-batch boundaries don't matter).
+    Published through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`; a skipped
+    batch writes nothing, so the sketch is left as it was."""
     from vectordb_etl_spark.functions.sketches import cm_merge, cm_sketch
     from vectordb_etl_spark.session import local_rows_df
 
@@ -650,11 +620,12 @@ def cm_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return  # nothing to merge; replay of an empty batch is free
-        _swap_publish(
-            batch_df.sparkSession,
-            sketch_path,
-            lambda old: _merge(batch_df, batch_id, old),
-        )
+        spark = batch_df.sparkSession
+        with replace_dir(spark, sketch_path) as (staging, exists):
+            old = spark.read.parquet(sketch_path) if exists else None
+            out = _merge(batch_df, batch_id, old)
+            if out is not None:
+                out.write.mode("overwrite").parquet(staging)
 
     return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
@@ -672,18 +643,20 @@ def kmv_ingest_stream(
     changes nothing), so replays are free and the final register set is
     BIT-EQUAL to the batch sketch of all rows. Keeping live KMV registers
     per corpus side is what lets the overlap/contamination dashboards
-    (kmv_jaccard) run continuously without rescanning either side."""
+    (kmv_jaccard) run continuously without rescanning either side.
+    Published through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`."""
     from vectordb_etl_spark.functions.sketches import kmv_merge, kmv_registers
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        new_regs = kmv_registers(batch_df, value_col, k=k)
-        _swap_publish(
-            batch_df.sparkSession,
-            registers_path,
-            lambda old: new_regs if old is None else kmv_merge(old, new_regs, k=k),
-        )
+        spark = batch_df.sparkSession
+        regs = kmv_registers(batch_df, value_col, k=k)
+        with replace_dir(spark, registers_path) as (staging, exists):
+            if exists:
+                regs = kmv_merge(spark.read.parquet(registers_path), regs, k=k)
+            regs.write.mode("overwrite").parquet(staging)
 
     return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
@@ -708,19 +681,20 @@ def bloom_ingest_stream(
     The 100 TB story: "have we ever seen this key" forever with state
     = ceil(m/63) word rows — the filter that lets an ingest pipeline
     pre-prune joins against the full history (bloom_prune) without ever
-    scanning it. Same staging + rename-swap publish and crash-recovery
-    rule as the other sketch sinks."""
+    scanning it. Published through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`, like the
+    other sketch sinks."""
     from vectordb_etl_spark.operators.bloom import bloom_build, bloom_merge
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        new_words = bloom_build(batch_df, key_col, m_bits, k)
-        _swap_publish(
-            batch_df.sparkSession,
-            bloom_path,
-            lambda old: new_words if old is None else bloom_merge(new_words, old),
-        )
+        spark = batch_df.sparkSession
+        words = bloom_build(batch_df, key_col, m_bits, k)
+        with replace_dir(spark, bloom_path) as (staging, exists):
+            if exists:
+                words = bloom_merge(words, spark.read.parquet(bloom_path))
+            words.write.mode("overwrite").parquet(staging)
 
     return _foreach_batch(stream_df, checkpoint_dir, _sink)
 
@@ -741,8 +715,9 @@ def bitmap_ingest_stream(
     Count-Min one), and the final table is BIT-EQUAL to the batch build
     over all rows — `sum(bit_count(bits))` per group IS
     COUNT(DISTINCT), forever, with state = touched words per group.
-    Same staging + rename-swap publish and crash recovery as the other
-    sketch sinks."""
+    Published through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`, like the
+    other sketch sinks."""
     from vectordb_etl_spark.functions.sketches import (
         bitmap_merge,
         bitmap_registers,
@@ -753,13 +728,12 @@ def bitmap_ingest_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        new_regs = bitmap_registers(batch_df, value_col, group_cols)
-        _swap_publish(
-            batch_df.sparkSession,
-            registers_path,
-            lambda old: new_regs
-            if old is None
-            else bitmap_merge(new_regs.unionByName(old), group_cols),
-        )
+        spark = batch_df.sparkSession
+        regs = bitmap_registers(batch_df, value_col, group_cols)
+        with replace_dir(spark, registers_path) as (staging, exists):
+            if exists:
+                old = spark.read.parquet(registers_path)
+                regs = bitmap_merge(regs.unionByName(old), group_cols)
+            regs.write.mode("overwrite").parquet(staging)
 
     return _foreach_batch(stream_df, checkpoint_dir, _sink)
