@@ -1780,3 +1780,62 @@ def test_ivf_probe_of_only_empty_cells_returns_no_rows(spark, tmp_path):
         ).count() == 0
         assert h.search_many([far], k=3, nprobe=1).count() == 0
         assert h.search(far, k=3, nprobe=3).count() == 3
+
+
+def test_cosine_score_col_keeps_the_three_fold_bits(spark):
+    """COSINE ``score_col`` folds the query norm on the driver and the
+    stored norm without a ``zip_with``; every score keeps the raw bits of
+    the per-row ``dot(e, q) / (sqrt(dot(e, e)) * sqrt(dot(q, q)))``:
+    signed zeros, subnormals, non-normalized vectors at extreme scales,
+    float-typed storage, and stored vectors whose norm is zero (a zero
+    vector, and subnormals whose squares underflow)."""
+    import numpy as np
+    from pyspark.errors import PySparkException
+
+    from vectordb_etl_spark.functions.vector import score_col, vector_lit
+
+    def dot3(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    rng = np.random.RandomState(11)
+    dim = 48
+    signed = rng.standard_normal(dim)
+    signed[::3] = -0.0
+    stored = [rng.standard_normal(dim) * s for s in (1.0, 1e-3, 37.5, 1e150)]
+    stored += [signed, np.r_[5e-324, -0.0, rng.rand(dim - 2)]]
+    zero_norm = [np.zeros(dim), np.full(dim, 5e-324)]
+    queries = [
+        rng.standard_normal(dim) * 3.0,
+        signed,
+        np.r_[-0.0, 5e-324, rng.standard_normal(dim - 2) * 1e-160],
+    ]
+
+    def frame(vecs):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "i int, e array<double>",
+        )
+
+    df = frame(stored)
+    degenerate = [frame([v]) for v in zero_norm]
+    for emb in (F.col("e"), F.col("e").cast("array<float>")):
+        e = emb.cast("array<double>")
+        for q in queries:
+            ql = vector_lit(q)
+            old = dot3(e, ql) / (F.sqrt(dot3(e, e)) * F.sqrt(dot3(ql, ql)))
+            rows = df.select(
+                score_col(emb, list(q)).alias("new"), old.alias("old")
+            ).collect()
+            assert _bits([r["new"] for r in rows]) == _bits([r["old"] for r in rows])
+            # a zero divisor: both forms raise under ANSI, or both are NULL
+            for one in degenerate:
+                outcomes = []
+                for col in (score_col(emb, list(q)), old):
+                    try:
+                        outcomes.append(one.select(col.alias("s")).head()["s"])
+                    except PySparkException as exc:
+                        outcomes.append(type(exc).__name__)
+                assert outcomes[0] == outcomes[1], outcomes

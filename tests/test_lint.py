@@ -106,6 +106,42 @@ def test_vector_literals_go_through_vector_lit():
     assert not offenders, f"vector literal outside vector_lit: {offenders}"
 
 
+def test_query_norms_are_folded_on_the_driver():
+    """A query's norm is folded once on the driver
+    (``functions/vector.py:vector_norm``), never recomputed per row:
+    inside the package, outside ``functions/vector.py``, every
+    ``cosine_col`` call passes the query's norm as ``b_norm``, and no
+    ``norm_col`` call takes a literal."""
+    import ast
+
+    home = PKG / "functions" / "vector.py"
+
+    def _name(call):
+        f = call.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        if path == home:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = _name(node)
+            literal = any(
+                isinstance(n, ast.Call)
+                and _name(n) in ("vector_lit", "lit", "array", "expr")
+                for a in node.args
+                for n in ast.walk(a)
+            )
+            per_row = name == "cosine_col" and len(node.args) < 3 and not any(
+                kw.arg == "b_norm" for kw in node.keywords
+            )
+            if per_row or (name == "norm_col" and literal):
+                offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+    assert not offenders, f"query norm recomputed per row: {offenders}"
+
+
 def test_directory_swaps_go_through_replace_dir():
     """Every store and index rewrite swaps its directory through
     ``store/collections.py:replace_dir``: in the package, ``.rename(`` is

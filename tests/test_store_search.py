@@ -1274,6 +1274,31 @@ def test_warm_ivf_fanout_runs_at_most_two_jobs(spark, tmp_path):
     assert 1 <= len(jobs) <= 2, jobs
 
 
+def test_warm_graph_fanout_runs_at_most_three_jobs(spark, tmp_path):
+    """A warm 4-collection graph fan-out is one plan: one grouped beam
+    over the union of the collections' shard layouts and one merge, so
+    the whole search is at most 3 Spark jobs (one per collection and
+    shard stage before)."""
+    store = _ivf_store(spark, tmp_path / "w", 4 * 30, 4)
+    names = store.list_collections()
+    assert len(names) == 4
+    for n in names:
+        store.build_index(n, kind="graph", id_col="doc_id", num_shards=2,
+                          m=4, ef_construction=20)
+    q = list(store.read().select("embedding").head()[0])
+    store.fanout_search_indexed(q, k=3, kind="graph", ef=10).collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-graph-fanout", "job-count pin")
+    try:
+        hits = store.fanout_search_indexed(q, k=3, kind="graph", ef=10).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(hits) == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("warm-graph-fanout")
+    assert 1 <= len(jobs) <= 3, jobs
+
+
 def test_open_index_shares_one_handle_across_concurrent_callers(
     spark, tmp_path, monkeypatch
 ):
@@ -1318,3 +1343,155 @@ def test_open_index_shares_one_handle_across_concurrent_callers(
     assert not any(t.is_alive() for t in threads)
     assert len(got) == 160
     assert len({id(h) for h in got}) == 1
+
+
+def _tie_store(spark, root):
+    """Four collections with a dynamic ``meta`` field; doc 500 is stored
+    three times, with the same text (so the same vector) in html_f0,
+    html_f1 and html_f2, to tie on score and doc_id across collections."""
+    rows = [
+        (i, "s", f"f{i % 4}", f"document number {i} about {i % 7} and {i * 13 % 11}",
+         "english", 0, f"t{i % 3}")
+        for i in range(120)
+    ] + [
+        (500, "s", f, "the twin document about 3 and 5", "english", 0, "twin")
+        for f in ("f0", "f1", "f2")
+    ]
+    store = CollectionStore(spark, StoreConfig(warehouse_dir=str(root)))
+    store.insert_documents(
+        spark.createDataFrame(
+            rows,
+            ["doc_id", "source", "folder_name", "text", "language",
+             "chunk_index", "tag"],
+        ),
+        embedding_config=EMB, dynamic_meta=True,
+    )
+    return store
+
+
+def _per_collection_merge(store, q, k, kind, names, indexed, tie_break,
+                          output_cols, predicate=None, filter_mode="post",
+                          nprobe=2, ef=6):
+    """The fan-out as a loop: each collection searched on its own (its
+    index, or an exact top-k over its scan), tagged, unioned and merged —
+    the plan the fused fan-out replaces."""
+    parts = []
+    for n in names:
+        scan = store.read(n).drop("collection")
+        if kind == "ivf" and n in indexed:
+            hits = store.open_index(n, kind="ivf").search(
+                q, k=k, nprobe=nprobe, tie_break=tie_break,
+                output_cols=output_cols, predicate=predicate,
+            )
+        elif kind == "graph" and n in indexed:
+            hits = store.open_index(n, kind="graph").search(
+                q, k=k, ef=ef, output_cols=output_cols, predicate=predicate,
+                filter_mode=filter_mode,
+            )
+        else:
+            if kind == "graph":
+                scan = scan.withColumnRenamed("doc_id", "id")
+            hits = topk_search(
+                scan, q, k=k, predicate=predicate,
+                tie_break=tie_break if kind == "ivf" else [
+                    c for c in output_cols if c != "meta"
+                ],
+                output_cols=output_cols,
+            )
+        parts.append(hits.withColumn("collection", F.lit(n)))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.orderBy(
+        F.desc("score"), *[F.asc(c) for c in tie_break], F.asc("collection")
+    ).limit(k)
+
+
+def _rows(df, cols):
+    return [tuple(r[c] for c in cols) for r in df.collect()]
+
+
+def test_fused_fanout_equals_per_collection_merge(spark, tmp_path):
+    """The one-plan fan-out returns what the per-collection loop returns,
+    row for row and score for score, for IVF (probing 2 of 4 cells) and
+    graph (a 6-wide beam), with two collections indexed and two served
+    exact, with and without a predicate, with a score tie across
+    collections that only ``collection`` decides (between an exact and
+    an indexed branch, against the union's order), and with ``meta`` in
+    only one of the two graph layouts."""
+    store = _tie_store(spark, tmp_path / "w")
+    names = store.list_collections()
+    assert names == ["html_f0", "html_f1", "html_f2", "html_f3"]
+    indexed = ["html_f1", "html_f2"]
+    for n in indexed:
+        store.build_index(n, kind="ivf", nlist=4, max_iter=3)
+    store.build_index("html_f1", kind="graph", id_col="doc_id", num_shards=2,
+                      m=4, ef_construction=20)
+    store.build_index("html_f2", kind="graph", id_col="doc_id", num_shards=2,
+                      m=4, ef_construction=20,
+                      passthrough=["text", "language", "collection"])
+    assert "meta" in store.open_index("html_f1", kind="graph")._read().columns
+    assert "meta" not in store.open_index("html_f2", kind="graph")._read().columns
+    twin = store.read().filter(F.col("doc_id") == 500)
+    q = list(twin.select("embedding").head()[0])
+    near = list(store.read().filter(F.col("doc_id") == 8).select("embedding").head()[0])
+
+    ivf_cols = ["doc_id", "text", "meta"]
+    for query in (q, near):
+        for pred in (None, F.col("doc_id") % 3 != 0):
+            want = _per_collection_merge(
+                store, query, 5, "ivf", names, indexed, ["doc_id"], ivf_cols,
+                pred,
+            )
+            got = store.fanout_search_indexed(
+                query, k=5, nprobe=2, on_missing="exact", tie_break=["doc_id"],
+                output_cols=ivf_cols, predicate=pred,
+            )
+            assert got.columns == [*ivf_cols, "score", "collection"]
+            cols = ["doc_id", "score", "collection"]
+            assert _rows(got, cols) == _rows(want, cols)
+    top = _rows(store.fanout_search_indexed(
+        q, k=3, nprobe=2, on_missing="exact", tie_break=["doc_id"],
+        output_cols=["doc_id"],
+    ), ["doc_id", "score", "collection"])
+    assert top == [(500, 1.0, f"html_f{i}") for i in range(3)]
+
+    graph_cols = ["id", "text"]
+    by = ["score", "collection", "id"]
+    for query in (q, near):
+        for pred, mode in (
+            (None, "post"),
+            (F.col("id") % 3 != 0, "post"),
+            (F.col("id") % 3 != 0, "traversal"),
+        ):
+            want = _per_collection_merge(
+                store, query, 5, "graph", names, indexed, [], graph_cols,
+                pred, mode,
+            )
+            got = store.fanout_search_indexed(
+                query, k=5, kind="graph", ef=6, on_missing="exact",
+                fallback_id_col="doc_id", output_cols=graph_cols,
+                predicate=pred, filter_mode=mode,
+            )
+            assert got.columns == [*graph_cols, "score", "collection"]
+            # the loop orders ties on (score, collection) arbitrarily;
+            # the fused merge breaks them by the output columns
+            assert _rows(got, by) == sorted(
+                _rows(want, by), key=lambda r: (-r[0], r[1], r[2])
+            )
+    gtop = _rows(store.fanout_search_indexed(
+        q, k=3, kind="graph", ef=6, on_missing="exact",
+        fallback_id_col="doc_id", output_cols=["id"],
+    ), ["id", "score", "collection"])
+    assert gtop == [(500, 1.0, f"html_f{i}") for i in range(3)]
+    # meta is read from the layout that has it and is NULL for the one
+    # that does not; the exact branch reads it from the store
+    meta = {
+        r["collection"]: r["meta"]
+        for r in store.fanout_search_indexed(
+            near, k=40, kind="graph", ef=40, on_missing="exact",
+            fallback_id_col="doc_id", output_cols=["id", "meta"],
+        ).collect()
+    }
+    assert meta["html_f2"] is None
+    assert meta["html_f1"]["tag"] and meta["html_f0"]["tag"]

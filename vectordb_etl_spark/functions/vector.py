@@ -12,6 +12,7 @@ Metric-aware scoring fixes the reference's desc-only assumption
 
 from __future__ import annotations
 
+import math
 import struct
 
 from pyspark import SparkContext
@@ -37,13 +38,41 @@ def dot_col(a: Column | str, b: Column | str) -> Column:
 
 
 def norm_col(a: Column | str) -> Column:
-    return F.sqrt(dot_col(a, a))
+    """L2 norm — `sqrt(aggregate(a, 0.0, acc + x*x))`: the same left fold
+    of rounded squares as `dot_col(a, a)`, without the `zip_with`."""
+    return F.sqrt(
+        F.aggregate(_as_double_array(a), F.lit(0.0), lambda acc, x: acc + x * x)
+    )
 
 
-def cosine_col(a: Column | str, b: Column | str) -> Column:
+def vector_norm(vec) -> float:
+    """The L2 norm of a driver-side vector, bit-identical to
+    :func:`norm_col` over the same values: the same left fold in IEEE
+    doubles (no FMA, no pairwise sum), then a correctly rounded sqrt."""
+    acc = 0.0
+    for x in vec:
+        x = float(x)
+        acc = acc + x * x
+    return math.sqrt(acc)
+
+
+def cosine_col(
+    a: Column | str, b: Column | str, b_norm: Column | float | None = None
+) -> Column:
     """COSINE similarity. For L2-normalized inputs this equals dot product
-    (reference relies on that: embeddings.py:36, config.py:23)."""
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
+    (reference relies on that: embeddings.py:36, config.py:23).
+
+    ``b_norm`` is ``b``'s norm when the caller already has it — a driver
+    float from :func:`vector_norm` for a query literal, or a column of
+    per-query norms — so a query's norm is never recomputed per row. The
+    stored side ``a`` is cast once and costs one `zip_with` (the dot) and
+    two `aggregate`s; the score's bits equal the three-fold formula's."""
+    arr = _as_double_array(a)
+    if b_norm is None:
+        b_norm = norm_col(b)
+    elif not isinstance(b_norm, Column):
+        b_norm = F.lit(float(b_norm))
+    return dot_col(arr, b) / (norm_col(arr) * b_norm)
 
 
 def l2_distance_col(a: Column | str, b: Column | str) -> Column:
@@ -56,13 +85,7 @@ def l2_distance_col(a: Column | str, b: Column | str) -> Column:
 def l2_normalize_col(a: Column | str) -> Column:
     """E3 — mirror of normalize_embeddings=True (embeddings.py:36,46)."""
     arr = _as_double_array(a)
-    n = F.sqrt(
-        F.aggregate(
-            F.zip_with(arr, arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    n = norm_col(arr)
     return F.transform(arr, lambda x: x / n)
 
 
@@ -102,11 +125,15 @@ def score_col(emb: Column | str, query: list[float], metric: str = "COSINE") -> 
 
     The query vector is one plan literal (:func:`vector_lit` — broadcast
     with the plan, no shuffle, no join); `metric` ∈ {COSINE, IP, L2}.
+    COSINE takes the query norm from the driver (:func:`vector_norm`),
+    so each row pays only its own norm and the dot product: 1 `zip_with`
+    and 2 `aggregate`s, with scores bit-identical to
+    ``dot(e, q) / (norm(e) * norm(q))`` evaluated per row.
     """
     q = vector_lit(query)
     m = metric.upper()
     if m == "COSINE":
-        return cosine_col(emb, q)
+        return cosine_col(emb, q, vector_norm(query))
     if m == "IP":
         return dot_col(emb, q)
     if m == "L2":

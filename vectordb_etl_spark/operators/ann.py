@@ -349,26 +349,36 @@ class IVFIndex:
         probes_df = local_rows_df(
             self.spark, pairs, "query_id int, centroid_id int"
         )
-        qdf = local_rows_df(
-            self.spark,
-            [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-            "query_id int, qvec array<double>",
-        )
         from pyspark.sql.window import Window
 
-        from vectordb_etl_spark.functions.vector import cosine_col, dot_col
+        from vectordb_etl_spark.functions.vector import (
+            cosine_col,
+            dot_col,
+            vector_norm,
+        )
 
+        # each query's norm rides in the broadcast table, folded on the
+        # driver exactly as score_col folds a single query's, so batched
+        # and single-query scores share one kernel and stay bit-identical
+        qdf = local_rows_df(
+            self.spark,
+            [
+                (i, [float(x) for x in q], vector_norm(q))
+                for i, q in enumerate(queries)
+            ],
+            "query_id int, qvec array<double>, qnorm double",
+        )
         data = self._read_data(sorted({cid for _, cid in pairs}))
         # the batched path injects working columns into the joined frame; a
         # data schema that already uses one of these names would silently
         # resolve joins/ranks against the data column and corrupt results —
         # fail loud instead
-        clash = {"query_id", "qvec", "rn", "score"} & set(data.columns)
+        clash = {"query_id", "qvec", "qnorm", "rn", "score"} & set(data.columns)
         if clash:
             raise ValueError(
                 f"indexed data uses reserved column name(s) {sorted(clash)}; "
                 "rename them before building the IVF index (search_many "
-                "injects query_id/qvec/rn/score internally)"
+                "injects query_id/qvec/qnorm/rn/score internally)"
             )
         cand = data.join(F.broadcast(probes_df), "centroid_id").join(
             F.broadcast(qdf), "query_id"
@@ -379,7 +389,7 @@ class IVFIndex:
         # the shared metric_ascending so the two paths cannot drift
         up = self.metric.upper()
         if up == "COSINE":
-            score = cosine_col(emb_col, F.col("qvec"))
+            score = cosine_col(emb_col, F.col("qvec"), F.col("qnorm"))
         elif up == "IP":
             score = dot_col(emb_col, F.col("qvec"))
         else:  # L2

@@ -46,6 +46,7 @@ from __future__ import annotations
 import hashlib
 import heapq
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -462,6 +463,88 @@ def _make_shard_builder(
     return _build
 
 
+def _unit_query(query: list[float]) -> np.ndarray:
+    """One query as a 1-row matrix of its unit vector."""
+    q = np.asarray(query, dtype=np.float64)
+    return (q / max(float(np.linalg.norm(q)), 1e-12))[None, :]
+
+
+def _beam_hits(
+    idx: DataFrame,
+    qmat: np.ndarray,
+    k: int,
+    ef: int,
+    out_cols: list[str],
+    score_name: str,
+    round_dp: int,
+    predicate,
+    filter_mode: str,
+    emit_all: bool = False,
+    lead_cols: list[str] | None = None,
+    keys: tuple[str, ...] = ("shard",),
+    qid_offset: int | None = None,
+) -> tuple[DataFrame, list]:
+    """Every shard's beam hits for each row of ``qmat`` over the layout
+    ``idx``, through the one applyInPandas body all graph searches share
+    (one group per ``keys`` value). A shard loads its graph once for all
+    queries and emits ``lead_cols``, ``out_cols`` and the score of its
+    top-k hits — its full ef-beam under a post-filter or with
+    ``emit_all`` — gathered with one positional ``take`` per query; the
+    post-filter then prunes them. Returns the hits and the orderable
+    ``out_cols`` tie-break for the caller's merge."""
+    if filter_mode not in ("post", "traversal"):
+        raise ValueError(
+            f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
+        )
+    during = predicate is not None and filter_mode == "traversal"
+    post = predicate is not None and not during
+    if during:
+        # JVM-evaluated predicate lands in each shard's pandas frame as
+        # one bool per node — the UDF never re-implements it
+        idx = idx.withColumn("__allowed", predicate.cast("boolean"))
+    lead = lead_cols or []
+    emit_cols = list(dict.fromkeys([*lead, *out_cols]))
+    fields = ", ".join(
+        f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in emit_cols
+    )
+    out_schema = (
+        "query_id int, " if qid_offset is not None else ""
+    ) + f"{fields}, {score_name} double"
+    emit = None if emit_all else (max(ef, k) if post else k)
+
+    def _search(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("pos").reset_index(drop=True)
+        mat = np.stack(pdf["embedding"].to_numpy())
+        levels = pdf["node_level"].to_numpy()
+        adjs = _unpack_adjs(levels, pdf["neighbors"], pdf["upper"])
+        entry = _hnsw_entry_pos(levels)
+        mask = (
+            pdf["__allowed"].fillna(False).to_numpy(dtype=bool)
+            if during else None
+        )
+        cols = pdf[emit_cols]
+        frames = []
+        for qi, q in enumerate(qmat):
+            hits = hnsw_search(
+                mat, adjs, entry, q, ef=max(ef, k), allowed=mask
+            )[:emit]
+            out = cols.take([node for _, node in hits]).reset_index(drop=True)
+            out[score_name] = [round(s, round_dp) for s, _ in hits]
+            if qid_offset is not None:
+                out.insert(0, "query_id", qid_offset + qi)
+            frames.append(out)
+        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+    read = dict.fromkeys([
+        *keys, *emit_cols, "pos", "embedding", "node_level", "neighbors",
+        "upper", *(["__allowed"] if during else []),
+    ])
+    local = idx.select(*read).groupBy(*keys).applyInPandas(_search, out_schema)
+    if post:
+        local = local.filter(predicate)
+    return local, _orderable_tiebreak(idx.schema, out_cols)
+
+
 class GraphANNIndex:
     """Sharded HIERARCHICAL NSW (HNSW) index as partitioned parquet:
     ``<path>/shard=<i>/...`` rows ``(id, <passthrough...>, pos, embedding,
@@ -717,53 +800,12 @@ class GraphANNIndex:
         Either way, at the full-beam edge (ef ≥ shard size) the result is
         EXACTLY the filtered brute force, which is what the oracle
         checks."""
-        if filter_mode not in ("post", "traversal"):
-            raise ValueError(
-                f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
-            )
-        q = np.asarray(query, dtype=np.float64)
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
         out_cols = output_cols or ["id"]
-        idx = self._read()
-        pass_fields = ", ".join(
-            f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in out_cols
+        local, ties = _beam_hits(
+            self._read(), _unit_query(query), k, ef, out_cols, score_name,
+            round_dp, predicate, filter_mode,
         )
-        out_schema = f"{pass_fields}, {score_name} double"
-        k_, ef_ = k, ef
-        during = predicate is not None and filter_mode == "traversal"
-        if during:
-            # JVM-evaluated predicate lands in each shard's pandas frame
-            # as one bool per node — the UDF never re-implements it
-            idx = idx.withColumn("__allowed", predicate.cast("boolean"))
-        emit = max(ef, k) if predicate is not None and not during else k
-
-        def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("pos").reset_index(drop=True)
-            mat = np.stack(pdf["embedding"].to_numpy())
-            levels = pdf["node_level"].to_numpy()
-            adjs = _unpack_adjs(levels, pdf["neighbors"], pdf["upper"])
-            mask = (
-                pdf["__allowed"].fillna(False).to_numpy(dtype=bool)
-                if during else None
-            )
-            hits = hnsw_search(
-                mat, adjs, _hnsw_entry_pos(levels), q, ef=max(ef_, k_),
-                allowed=mask,
-            )[:emit]
-            rows = [pdf.iloc[node] for _, node in hits]
-            return pd.DataFrame(
-                {
-                    **{c: [r[c] for r in rows] for c in out_cols},
-                    score_name: [round(s, round_dp) for s, _ in hits],
-                }
-            )
-
-        local = idx.groupBy("shard").applyInPandas(_search, out_schema)
-        if predicate is not None and not during:
-            local = local.filter(predicate)
-        return local.orderBy(
-            F.desc(score_name), *_orderable_tiebreak(idx.schema, out_cols)
-        ).limit(k)
+        return local.orderBy(F.desc(score_name), *ties).limit(k)
 
     def search_per_group(
         self,
@@ -795,50 +837,13 @@ class GraphANNIndex:
         reference any stored index column)."""
         from pyspark.sql.window import Window
 
-        if filter_mode not in ("post", "traversal"):
-            raise ValueError(
-                f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
-            )
-        q = np.asarray(query, dtype=np.float64)
-        q = q / max(float(np.linalg.norm(q)), 1e-12)
         out_cols = output_cols or ["id"]
-        emit_cols = list(dict.fromkeys([group_col, *out_cols]))
-        idx = self._read()
-        during = predicate is not None and filter_mode == "traversal"
-        if during:
-            idx = idx.withColumn("__allowed", predicate.cast("boolean"))
-        pass_fields = ", ".join(
-            f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in emit_cols
+        local, ties = _beam_hits(
+            self._read(), _unit_query(query), k, ef, out_cols, score_name,
+            round_dp, predicate, filter_mode, emit_all=True,
+            lead_cols=[group_col],
         )
-        out_schema = f"{pass_fields}, {score_name} double"
-        k_, ef_ = k, ef
-
-        def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("pos").reset_index(drop=True)
-            mat = np.stack(pdf["embedding"].to_numpy())
-            levels = pdf["node_level"].to_numpy()
-            adjs = _unpack_adjs(levels, pdf["neighbors"], pdf["upper"])
-            mask = (
-                pdf["__allowed"].fillna(False).to_numpy(dtype=bool)
-                if during else None
-            )
-            hits = hnsw_search(
-                mat, adjs, _hnsw_entry_pos(levels), q, ef=max(ef_, k_),
-                allowed=mask,
-            )
-            rows = [pdf.iloc[node] for _, node in hits]
-            return pd.DataFrame(
-                {
-                    **{c: [r[c] for r in rows] for c in emit_cols},
-                    score_name: [round(s, round_dp) for s, _ in hits],
-                }
-            )
-
-        local = idx.groupBy("shard").applyInPandas(_search, out_schema)
-        if predicate is not None and not during:
-            local = local.filter(predicate)
-        order = [F.desc(score_name)] + _orderable_tiebreak(idx.schema, out_cols)
-        w = Window.partitionBy(group_col).orderBy(*order)
+        w = Window.partitionBy(group_col).orderBy(F.desc(score_name), *ties)
         return (
             local.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
@@ -863,94 +868,36 @@ class GraphANNIndex:
         that dominate per-query jobs), then one rank-over-window takes
         each query's global top-k from the shards×N×k candidate rows.
 
-        ``predicate``/``filter_mode`` follow :meth:`search`'s contract —
-        one predicate shared by every query of the batch (the production
-        filtered-serving shape). ``'post'`` makes each shard emit its
-        full ef-beam per query and filters the merged candidates (size
-        ``ef`` to selectivity); ``'traversal'`` evaluates the predicate
-        JVM-side into a per-node bool once per shard and filters DURING
-        each beam (ACORN-style — ``ef`` stays k-sized at any
-        selectivity, and the predicate may reference any stored index
-        column). Full-beam edge ⇒ per-query exact filtered top-k.
-
-        Each batch's query matrix ships in its UDF closure; batches of
-        ``batch_size`` keep any single closure at serving size (2048×dim
-        doubles ≈ 1–16 MB), so arbitrarily large query sets work — they
-        become a union of per-batch shard scans in the same plan instead
-        of one unbounded closure. Returns (query_id, *output_cols, score), k
-        rows per query, query_id indexing the ORIGINAL list."""
-        if batch_size < 1:
-            raise ValueError(f"batch_size must be >= 1; got {batch_size}")
-        if filter_mode not in ("post", "traversal"):
-            raise ValueError(
-                f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
-            )
-        arr = np.asarray(queries, dtype=np.float64)
-        out_cols = output_cols or ["id"]
-        idx = self._read()
-        during = predicate is not None and filter_mode == "traversal"
-        if during:
-            idx = idx.withColumn("__allowed", predicate.cast("boolean"))
-        emit = max(ef, k) if predicate is not None and not during else k
-        pass_fields = ", ".join(
-            f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in out_cols
-        )
-        out_schema = f"query_id int, {pass_fields}, {score_name} double"
-        if arr.shape[0] == 0:
-            # the batch loop below would never run, leaving `local = None`
-            # and an opaque AttributeError downstream; match
-            # the IVF tier's batched path: empty in -> empty DataFrame
-            # with the declared result schema
-            return self.spark.createDataFrame([], out_schema)
-        qmat_all = _normalize_rows(arr)
-        k_, ef_ = k, ef
-
-        def _make_search(qmat: np.ndarray, offset: int):
-            def _search(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("pos").reset_index(drop=True)
-                mat = np.stack(pdf["embedding"].to_numpy())
-                levels = pdf["node_level"].to_numpy()
-                adjs = _unpack_adjs(levels, pdf["neighbors"], pdf["upper"])
-                entry = _hnsw_entry_pos(levels)
-                # one predicate evaluation covers every query of the batch
-                mask = (
-                    pdf["__allowed"].fillna(False).to_numpy(dtype=bool)
-                    if during else None
-                )
-                frames = []
-                for qi in range(qmat.shape[0]):
-                    hits = hnsw_search(
-                        mat, adjs, entry, qmat[qi], ef=max(ef_, k_),
-                        allowed=mask,
-                    )[:emit]
-                    rows = [pdf.iloc[node] for _, node in hits]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": [offset + qi] * len(hits),
-                                **{c: [r[c] for r in rows] for c in out_cols},
-                                score_name: [
-                                    round(s, round_dp) for s, _ in hits
-                                ],
-                            }
-                        )
-                    )
-                return pd.concat(frames, ignore_index=True)
-
-            return _search
-
+        ``predicate``/``filter_mode`` follow :meth:`search`'s contract,
+        one predicate shared by every query of the batch; a traversal
+        predicate is evaluated once per shard. Full-beam edge ⇒ per-query
+        exact filtered top-k. Batches of ``batch_size`` queries (each
+        matrix ships in its UDF closure, ≈ 1–16 MB at 2048×dim) become a
+        union of per-batch shard scans in the same plan. Returns
+        (query_id, *output_cols, score), k rows per query, query_id
+        indexing the ORIGINAL list."""
         from pyspark.sql.window import Window
 
-        local = None
-        for off in range(0, qmat_all.shape[0], batch_size):
-            part = idx.groupBy("shard").applyInPandas(
-                _make_search(qmat_all[off : off + batch_size], off), out_schema
+        if batch_size < 1:
+            raise ValueError(f"batch_size must be >= 1; got {batch_size}")
+        out_cols = output_cols or ["id"]
+        arr = np.asarray(queries, dtype=np.float64)
+        qmat = _normalize_rows(arr) if len(arr) else arr.reshape(0, 0)
+        idx = self._read()
+        # an empty query list plans one batch under a zero limit (never
+        # run), so the result keeps the declared (query_id, *output_cols,
+        # score) schema
+        parts = [
+            _beam_hits(
+                idx, qmat[off : off + batch_size], k, ef, out_cols,
+                score_name, round_dp, predicate, filter_mode, qid_offset=off,
             )
-            local = part if local is None else local.unionByName(part)
-        if predicate is not None and not during:
-            # post strategy: the predicate may only reference output_cols
-            local = local.filter(predicate)
-        order = [F.desc(score_name)] + _orderable_tiebreak(idx.schema, out_cols)
+            for off in range(0, max(len(qmat), 1), batch_size)
+        ]
+        local = reduce(DataFrame.unionByName, [p for p, _ in parts])
+        if not len(qmat):
+            local = local.limit(0)
+        order = [F.desc(score_name)] + parts[0][1]
         w = Window.partitionBy("query_id").orderBy(*order)
         return (
             local.withColumn("__rn", F.row_number().over(w))
@@ -958,3 +905,66 @@ class GraphANNIndex:
             .drop("__rn")
             .orderBy("query_id", *order)
         )
+
+
+def fanout_search(
+    indexes: dict[str, GraphANNIndex],
+    query: list[float],
+    k: int = 3,
+    ef: int = 100,
+    exact: DataFrame | None = None,
+    tie_break: list[str] | None = None,
+    output_cols: list[str] | None = None,
+    score_name: str = "score",
+    round_dp: int = 6,
+    predicate=None,
+    filter_mode: str = "post",
+) -> DataFrame:
+    """Graph search over several collections' indexes (``indexes``: name
+    → handle) as ONE plan: the layouts are unioned (a passthrough column
+    one lacks reads as null) and tagged with ``collection``, one
+    ``groupBy("collection", "shard").applyInPandas`` beams every shard,
+    and one merge orders by score, ``tie_break``, ``collection``, then
+    the orderable ``output_cols``. ``exact`` rows (un-indexed
+    collections: ``id``, ``collection``, ``embedding``) are one more
+    union branch, filtered exactly and scored with the same
+    COSINE/rounding. ``predicate``/``filter_mode`` follow
+    :meth:`GraphANNIndex.search`. Returns (*output_cols, score,
+    collection)."""
+    from vectordb_etl_spark.functions.vector import score_col
+
+    out_cols = output_cols or ["id"]
+    branches = []
+    if indexes:
+        layouts = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [
+                h._read().withColumn("collection", F.lit(n))
+                for n, h in indexes.items()
+            ],
+        )
+        local, _ = _beam_hits(
+            layouts, _unit_query(query), k, ef, out_cols, score_name,
+            round_dp, predicate, filter_mode, lead_cols=["collection"],
+            keys=("collection", "shard"),
+        )
+        branches.append(local)
+    if exact is not None:
+        if predicate is not None:
+            exact = exact.filter(predicate)
+        branches.append(exact.select(
+            *dict.fromkeys([*out_cols, "collection"]),
+            F.round(score_col("embedding", query, "COSINE"), round_dp).alias(
+                score_name
+            ),
+        ))
+    merged = reduce(DataFrame.unionByName, branches)
+    order = [
+        F.desc(score_name),
+        *[F.asc(c) for c in tie_break or []],
+        F.asc("collection"),
+        *_orderable_tiebreak(merged.schema, out_cols),
+    ]
+    return merged.orderBy(*order).limit(k).select(
+        *dict.fromkeys([*out_cols, score_name, "collection"])
+    )

@@ -24,6 +24,7 @@ import os
 import threading
 import time
 from contextlib import contextmanager
+from functools import reduce
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -617,143 +618,134 @@ class CollectionStore:
         merge_schema: bool = False,
         **search_kwargs,
     ) -> DataFrame:
-        """Q2 through PER-COLLECTION indexes (the exact Milvus fan-out
-        shape, milvus_store.py:301-325: loop collections, search each
-        index, concat + global sort): each named collection's previously
-        built index is probed independently — IVF partitions prune per
-        collection, graph shards beam per collection — results are
-        tagged with the collection name, unioned, and one global
-        TakeOrderedAndProject merges the ≤ |collections|·k candidate
-        rows.
+        """Q2 through PER-COLLECTION indexes (the Milvus fan-out,
+        milvus_store.py:301-325: search each collection's index, merge one
+        global top-k), planned as ONE query over all named collections.
+        IVF: each index ranks its own centroids; the probed-cell scans
+        are unioned and tagged with ``collection``, scored by one
+        expression and cut by one ``orderBy(score, *tie_break,
+        collection).limit(k)`` — per-collection top-k lists merged equal
+        the global top-k of the union, so no per-collection limit is
+        planned. Graph: one beam over the union of the shard layouts
+        (:func:`~vectordb_etl_spark.operators.graph_ann.fanout_search`).
 
-        ``on_missing`` governs collections without a built index:
-        ``'raise'`` (default — an unexpected full scan hiding a 100×
-        cost cliff should be an explicit user decision) or ``'exact'``,
-        which serves the un-indexed collections by exact brute-force
-        ``topk_search`` over their partition-pruned scans and unions
-        them with the indexed probes — Milvus's own behavior, which
-        searches every loaded collection regardless of index state
-        (milvus_store.py:301-325 iterates collections uniformly). The
-        exact tier scores with the same metric/rounding as the index
-        tiers, so the merged order is consistent; for ``kind='graph'``
-        the scan's ``fallback_id_col`` is surfaced as ``id`` (the graph
-        index's id column) and ties follow the graph tier's rule
-        (``output_cols`` ascending). Per-collection indexes beat one
-        shared-layout index (IVFIndex.search_per_group) when collections
-        are hot/cold skewed: each gets its own centroid budget and the
-        probe cost is per-collection, not corpus-wide.
+        ``on_missing`` governs collections without an index: ``'raise'``
+        (default — a hidden full scan should be an explicit decision) or
+        ``'exact'``, which serves them by brute force over one
+        partition-pruned store scan in the same union, as Milvus searches
+        every loaded collection regardless of index state. That branch
+        scores with the index tiers' metric and rounding; for
+        ``kind='graph'`` it surfaces ``fallback_id_col`` as ``id``.
 
-        ``nprobe``/``ef`` default to the store's ``StoreConfig.nprobe``/
-        ``ef_search``. Index handles come from :meth:`open_index`, so a
-        warm search reopens nothing: an IVF probe lists ``data/`` once
-        and reads only the probed cells, a graph probe reads with the
-        memoized schema, and neither runs a listing or schema job."""
-        from vectordb_etl_spark.functions.vector import metric_ascending
+        ``nprobe``/``ef`` default to ``StoreConfig.nprobe``/``ef_search``.
+        Whether a collection has an index is one status call on its
+        commit marker, and handles come from the store's memo
+        (:meth:`open_index`), so a warm search runs no listing or schema
+        job: an IVF probe lists ``data/`` once per index and reads only
+        the probed cells."""
         from vectordb_etl_spark.operators.topk import topk_search
 
-        if nprobe is None:
-            nprobe = self.config.nprobe
-        if ef is None:
-            ef = self.config.ef_search
+        if kind not in ("ivf", "graph"):
+            raise ValueError(f"unknown index kind {kind!r}")
         if on_missing not in ("raise", "exact"):
             raise ValueError(f"on_missing must be 'raise'|'exact'; got {on_missing!r}")
+        if kind == "graph" and self.config.metric_type.upper() != "COSINE":
+            # the graph tier's contract, for the exact branch too
+            raise ValueError(
+                "graph index tier is COSINE-only; store metric "
+                f"is {self.config.metric_type!r}"
+            )
         names = collections if collections is not None else self.list_collections()
         if not names:
             raise ValueError("fanout_search_indexed: no collections to search")
-        # tie_break drives BOTH the per-collection order and the global
-        # merge for IVF; GraphANNIndex.search has no tie_break parameter
-        # (it ties on output_cols ascending internally), so for the graph
-        # kind it is consumed here and applied only at the merge
-        tie_break = search_kwargs.pop("tie_break", None) or []
-        parts = []
+        indexed, missing = {}, []
         for n in names:
-            ipath = self._index_path(n, kind)
-            if not self._fs(ipath).exists(self._jpath(ipath)):
-                if on_missing == "raise":
-                    raise ValueError(
-                        f"collection {n!r} has no {kind} index — build_index "
-                        "first (or pass on_missing='exact' to serve it by "
-                        "brute-force scan, Milvus-style)"
-                    )
-                # merge_schema threads through to the exact fallback: on a
-                # mixed pre-meta/dynamic-meta warehouse the single-footer
-                # default could hide the `meta` column from a dynamic-field
-                # predicate while the indexed tiers (which store their own
-                # schema) resolve it fine
-                scan = self.read(n, merge_schema=merge_schema).drop("collection")
-                # graph-only beam knob: the exact fallback applies the
-                # predicate exactly regardless of strategy
-                fb_kwargs = {
-                    k_: v for k_, v in search_kwargs.items()
-                    if k_ != "filter_mode"
-                }
-                if kind == "graph":
-                    # graph tier contract: COSINE-only (open_index raises
-                    # for other metrics before any indexed probe merges)
-                    if self.config.metric_type.upper() != "COSINE":
-                        raise ValueError(
-                            "graph index tier is COSINE-only; store metric "
-                            f"is {self.config.metric_type!r}"
-                        )
-                    scan = scan.withColumnRenamed(fallback_id_col, "id")
-                    # same non-orderable exclusion as the indexed path's
-                    # merge (graph_ann._orderable_tiebreak): output_cols
-                    # may carry the dynamic `meta` map, and an orderBy on
-                    # a MapType is an AnalysisException
-                    from pyspark.sql.types import MapType
-
-                    fb_ties = [
-                        c
-                        for c in (fb_kwargs.get("output_cols") or ["id"])
-                        if c not in scan.columns
-                        or not isinstance(scan.schema[c].dataType, MapType)
-                    ]
-                else:
-                    fb_ties = tie_break
-                hits = topk_search(
-                    scan, query, k=k, metric=self.config.metric_type,
-                    tie_break=fb_ties, **fb_kwargs,
+            path = self._index_path(n, kind)
+            stamp = self._index_stamp(path, kind)
+            if stamp is not None:
+                indexed[n] = self._handle(path, kind, stamp)
+            elif on_missing == "raise":
+                raise ValueError(
+                    f"collection {n!r} has no {kind} index — build_index "
+                    "first (or pass on_missing='exact' to serve it by "
+                    "brute-force scan, Milvus-style)"
                 )
             else:
-                idx = self.open_index(n, kind=kind)
-                if kind == "ivf":
-                    hits = idx.search(
-                        query, k=k, nprobe=nprobe, tie_break=tie_break,
-                        **search_kwargs,
-                    )
-                else:
-                    hits = idx.search(query, k=k, ef=ef, **search_kwargs)
-            parts.append(hits.withColumn("collection", F.lit(n)))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        score = search_kwargs.get("score_name", "score")
-        # metric-aware direction (L2 is a distance — ascending), matching
-        # topk_search/fanout_search; then the caller's within-collection
-        # tie rule before the collection tag, so the global order matches
-        # a single exact top-k over the union on score ties. The graph
-        # tier is COSINE-only (open_index raises for any other store
-        # metric before reaching this merge), so its scores always rank
-        # descending.
-        asc = kind == "ivf" and metric_ascending(self.config.metric_type)
-        order = [F.asc(score) if asc else F.desc(score)]
-        order += [F.asc(c) for c in tie_break]
-        order.append(F.asc("collection"))
-        return out.orderBy(*order).limit(k)
+                missing.append(n)
+        # merge_schema reaches the exact branch: on a mixed pre-meta/
+        # dynamic-meta warehouse the single-footer default could hide the
+        # `meta` column from a dynamic-field predicate, while the indexed
+        # tiers (which store their own schema) resolve it fine
+        exact = (
+            self.read(None, merge_schema=merge_schema).filter(
+                F.col("collection").isin(missing)
+            )
+            if missing
+            else None
+        )
+        tie_break = search_kwargs.pop("tie_break", None) or []
+        if kind == "graph":
+            from vectordb_etl_spark.operators.graph_ann import fanout_search
+
+            if exact is not None:
+                exact = exact.withColumnRenamed(fallback_id_col, "id")
+            return fanout_search(
+                indexed, query, k=k,
+                ef=self.config.ef_search if ef is None else ef,
+                exact=exact, tie_break=tie_break, **search_kwargs,
+            )
+        if nprobe is None:
+            nprobe = self.config.nprobe
+        # graph-only beam knob: the IVF and exact branches apply the
+        # predicate exactly regardless of strategy
+        search_kwargs.pop("filter_mode", None)
+        predicate = search_kwargs.pop("predicate", None)
+        output_cols = search_kwargs.pop("output_cols", None)
+        probe_dp = search_kwargs.pop("probe_round_dp", None)
+        branches = [
+            idx._read_data(
+                idx.probe_ids(query, nprobe, round_dp=probe_dp)
+            ).withColumn("collection", F.lit(n))
+            for n, idx in indexed.items()
+        ] + ([exact] if exact is not None else [])
+        if predicate is not None:
+            branches = [b.filter(predicate) for b in branches]
+        if output_cols is not None:
+            keep = dict.fromkeys([
+                *output_cols, search_kwargs.get("emb_col", "embedding"),
+                *tie_break, "collection",
+            ])
+            branches = [b.select(*keep) for b in branches]
+        out = topk_search(
+            reduce(DataFrame.unionByName, branches), query, k=k,
+            metric=self.config.metric_type,
+            tie_break=[*tie_break, "collection"], **search_kwargs,
+        )
+        if output_cols is None:
+            return out
+        return out.select(*dict.fromkeys([
+            *output_cols, search_kwargs.get("score_name", "score"),
+            "collection",
+        ]))
 
     def open_index(self, collection: str | None = None, kind: str = "ivf"):
         """The handle of a previously built index (artifact is
         self-describing), opened once per store and reused while the
         index's commit marker is unchanged — a rebuild through any other
         handle or process replaces the marker, and the next call reopens."""
+        path = self._index_path(collection, kind)
+        return self._handle(path, kind, self._index_stamp(path, kind))
+
+    def _handle(self, path: str, kind: str, stamp: int | None):
+        """The memoized handle of the index at ``path`` if it was opened
+        at commit marker ``stamp``, else a newly opened one (remembered
+        under ``stamp``; a None stamp never matches)."""
         if kind == "ivf":
             from vectordb_etl_spark.operators.ann import IVFIndex as cls
         elif kind == "graph":
             from vectordb_etl_spark.operators.graph_ann import GraphANNIndex as cls
         else:
             raise ValueError(f"unknown index kind {kind!r}")
-        path = self._index_path(collection, kind)
-        stamp = self._index_stamp(path, kind)
         with self._indexes_lock:
             hit = self._indexes.get((path, kind))
             if hit is not None and stamp is not None and hit[0] == stamp:
