@@ -145,15 +145,15 @@ def test_query_norms_are_folded_on_the_driver():
 def test_directory_swaps_go_through_replace_dir():
     """Every store and index rewrite swaps its directory through
     ``store/collections.py:replace_dir``: in the package, ``.rename(`` is
-    called only by ``checked_rename`` and by the manifest commit
-    ``snapshots.try_commit_manifest``, and the per-site work-dir names
+    called only by ``checked_rename`` and by the snapshot-log commit
+    ``SnapshotStore._try_commit``, and the per-site work-dir names
     that predate it are gone. (The bracketed characters keep these
     patterns from matching themselves.)"""
     import ast
 
     allowed = {
         ("collections.py", "checked_rename"),
-        ("snapshots.py", "try_commit_manifest"),
+        ("snapshots.py", "_try_commit"),
     }
     stale = [
         r"\.upsert-collection=", r"\.precompac[t]-collection=",

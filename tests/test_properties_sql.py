@@ -12,8 +12,7 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
-import pytest
-from hypothesis import given, settings
+from hypothesis import given, reject, settings
 from hypothesis import strategies as st
 
 from vectordb_etl_spark.operators.graph_analytics import pagerank_sql
@@ -173,7 +172,7 @@ def test_hll_registers_sql_matches_python_reference(values):
             hll_registers_sql(f"SELECT * FROM (VALUES {vals}) t(v)", "v", p=p)
         ).fetchall()
     except duckdb.Error:
-        pytest.skip("value set not expressible as a VALUES literal")
+        reject()  # value set not expressible as a VALUES literal
     ref: dict[int, int] = {}
     for v in values:
         h = _h60(v)

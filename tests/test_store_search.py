@@ -2,13 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import query_vector, with_embeddings
 from vectordb_etl_spark.functions.language import detect_language_content_col
-from vectordb_etl_spark.operators.topk import fanout_search, topk_search
+from vectordb_etl_spark.operators.topk import topk_search
 from vectordb_etl_spark.search import create_rag_prompt, search_with_scores
 from vectordb_etl_spark.store.collections import CollectionStore
 
@@ -45,13 +47,24 @@ def test_collection_stats(store):
     assert sum(stats.values()) == 40
 
 
-def test_collection_stats_served_from_manifest_zero_jobs(
-    spark, docs_tiny, tmp_path, monkeypatch
-):
-    """A11 at 100 TB: counts come from the _stats manifest maintained by
-    the sinks (the parquet twin of Milvus num_entities' segment metadata,
-    milvus_store.py:387-406) — the manifest path launches ZERO Spark scan
-    jobs and tracks insert deltas, upsert totals and drops exactly."""
+def _counted(store) -> dict[str, int]:
+    """What collection_stats must equal: a direct count of the data."""
+    rows = store.read().groupBy("collection").count().collect()
+    return {r["collection"]: r["count"] for r in rows}
+
+
+def _f1_docs(docs_tiny, n):
+    return docs_tiny.select(
+        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
+        F.lit("english").alias("language"),
+    ).limit(n)
+
+
+def test_collection_stats_counts_every_mutation(spark, docs_tiny, tmp_path):
+    """A11 (milvus_store.py:374-406): after an insert, an append, the
+    streaming sink's uncounted append (count_rows=False), an upsert and
+    a drop, collection_stats equals a direct count of the data; a named
+    collection is counted alone and an unknown one is absent."""
     store = CollectionStore(
         spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
     )
@@ -60,207 +73,88 @@ def test_collection_stats_served_from_manifest_zero_jobs(
         F.lit("english").alias("language"),
     ).limit(20)
     store.insert_documents(docs, embedding_config=EMB)
-    expected = store.collection_stats(use_manifest=False)  # scan truth
-    assert sum(expected.values()) == 20
-
-    def _no_jobs(*a, **k):
-        raise AssertionError("manifest path must not launch a scan")
-
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
-    assert store.collection_stats() == expected
-    one = next(iter(expected))
-    assert store.collection_stats(one) == {one: expected[one]}
+    stats = store.collection_stats()
+    assert sum(stats.values()) == 20
+    assert stats == _counted(store)
+    one = next(iter(stats))
+    assert store.collection_stats(one) == {one: stats[one]}
     assert store.collection_stats("nope") == {}
-    monkeypatch.undo()
 
-    # append delta folds in without a scan
     more = docs.limit(5)
     store.insert_documents(more, embedding_config=EMB)
-    after = store.collection_stats(use_manifest=False)
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
-    assert store.collection_stats() == after
-    assert sum(after.values()) == 25
-    monkeypatch.undo()
+    stats = store.collection_stats()
+    assert sum(stats.values()) == 25
+    assert stats == _counted(store)
 
-    # upsert overlays post-merge totals (5 rows re-keyed, no growth)
+    out = store.insert_documents(
+        more.limit(3), embedding_config=EMB, count_rows=False
+    )
+    assert out == {}
+    stats = store.collection_stats()
+    assert sum(stats.values()) == 28
+    assert stats == _counted(store)
+
     store.upsert_documents(more, key_col="doc_id", embedding_config=EMB)
-    merged = store.collection_stats(use_manifest=False)
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
-    assert store.collection_stats() == merged
-    monkeypatch.undo()
+    assert store.collection_stats() == _counted(store)
 
-    # drop removes the key from the manifest
     store.drop_collection(one)
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
     stats = store.collection_stats()
     assert one not in stats
-    monkeypatch.undo()
-    assert stats == store.collection_stats(use_manifest=False)
+    assert stats == _counted(store)
 
 
-def test_collection_stats_manifest_staleness_guards(
-    spark, docs_tiny, tmp_path, monkeypatch
-):
-    """The manifest must refuse to serve when it can be wrong: the
-    streaming fast path (count_rows=False) invalidates it, an
-    out-of-band partition directory fails the set cross-check — both
-    fall back to the scan, which self-heals the manifest."""
+def test_collection_stats_of_empty_store_is_empty(spark, docs_tiny, tmp_path):
+    """A store that never had data, and one whose every collection was
+    dropped, report no counts (the reference returns none there) —
+    not a read error on the missing data directory."""
     store = CollectionStore(
         spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
     )
-    docs = docs_tiny.select(
-        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
-        F.lit("english").alias("language"),
-    ).limit(10)
-    store.insert_documents(docs, embedding_config=EMB)
-    assert store._latest_stats_counts() == {"html_f1": 10}
-
-    # streaming fast path: unknown delta -> manifest marked invalid
-    store.insert_documents(
-        docs.limit(3), embedding_config=EMB, count_rows=False
-    )
-    assert store._latest_stats_counts() is None
-    assert store.collection_stats() == {"html_f1": 13}  # scan fallback
-    assert store._latest_stats_counts() == {"html_f1": 13}  # self-healed
-
-    def _no_jobs(*a, **k):
-        raise AssertionError("manifest path must not launch a scan")
-
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
-    assert store.collection_stats() == {"html_f1": 13}
-    monkeypatch.undo()
-
-    # out-of-band write: a partition dir the manifest has never seen
-    docs.limit(2).withColumn("collection", F.lit("html_rogue")).write.mode(
-        "append"
-    ).partitionBy("collection").parquet(store._data_dir)
-    stats = store.collection_stats()  # set mismatch -> scan + re-seed
-    assert stats == {"html_f1": 13, "html_rogue": 2}
-    monkeypatch.setattr(CollectionStore, "read", _no_jobs)
-    assert store.collection_stats() == stats
-    monkeypatch.undo()
-
-    # retention: heavy mutation traffic never accumulates unbounded
-    # manifest files (pruned to the keep window at each commit)
-    from vectordb_etl_spark.store.collections import _STATS_KEEP_VERSIONS
-
-    for _ in range(_STATS_KEEP_VERSIONS + 5):
-        store._update_stats(lambda prev: dict(prev) if prev else {"x": 1})
-    fs = store._fs(store._root)
-    assert len(store._stats_versions(fs)) <= _STATS_KEEP_VERSIONS
-    assert store._latest_stats_counts() is not None  # latest survives
+    assert store.collection_stats() == {}
+    assert store.collection_stats("html_f1") == {}
+    store.insert_documents(_f1_docs(docs_tiny, 4), embedding_config=EMB)
+    for name in store.list_collections():
+        store.drop_collection(name)
+    assert store.collection_stats() == {}
 
 
-def test_collection_stats_survives_corrupt_manifest(
+def test_collection_stats_counts_writes_made_outside_the_store(
     spark, docs_tiny, tmp_path
 ):
-    """A half-visible or hand-damaged latest manifest (object-store
-    'rename' is a non-atomic copy) must degrade to the scan — never
-    raise — and the scan's self-heal must commit a NEW version past the
-    bad file (commits are rename-if-absent, so the bad file itself can
-    never be rewritten in place)."""
+    """Rows appended straight into the data directory — into an existing
+    collection or as a new partition — are counted like the store's own."""
     store = CollectionStore(
         spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
     )
-    docs = docs_tiny.select(
-        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
-        F.lit("english").alias("language"),
-    ).limit(10)
+    docs = _f1_docs(docs_tiny, 10)
     store.insert_documents(docs, embedding_config=EMB)
-    fs = store._fs(store._root)
-    v0 = store._stats_versions(fs)[-1]
-    with open(f"{store._root}/_stats/{v0}.json", "w") as f:
-        f.write('{"version": 0, "valid": true, "collections": {trunc')
-    assert store._latest_stats_counts() is None  # degrade, don't raise
-    assert store.collection_stats() == {"html_f1": 10}  # scan fallback
-    vs = store._stats_versions(fs)
-    assert vs[-1] > v0  # self-heal superseded the corrupt version
-    assert store._latest_stats_counts() == {"html_f1": 10}
-    # a mutation on top of the healed manifest folds normally again
-    store.insert_documents(docs.limit(2), embedding_config=EMB)
-    assert store._latest_stats_counts() == {"html_f1": 12}
+    assert store.collection_stats() == {"html_f1": 10}
+
+    def append(name):
+        docs.limit(2).withColumn("collection", F.lit(name)).write.mode(
+            "append"
+        ).partitionBy("collection").parquet(store._data_dir)
+
+    append("html_f1")
+    assert store.collection_stats() == {"html_f1": 12}
+    append("html_rogue")
+    assert store.collection_stats() == {"html_f1": 12, "html_rogue": 2}
+    assert store.collection_stats("html_f1") == {"html_f1": 12}
 
 
-def test_stats_manifest_lost_race_rebases_delta(
-    spark, docs_tiny, tmp_path, monkeypatch
-):
-    """The optimistic-commit claim in _update_stats: a writer that loses
-    the rename race must re-apply its DELTA onto whatever won — not
-    overwrite the winner and not drop its own rows. Simulated by landing
-    a competing manifest at the same version number between the loser's
-    log read and its commit."""
-    from vectordb_etl_spark.store.snapshots import try_commit_manifest
-
+def test_writes_leave_no_stats_manifest(spark, docs_tiny, tmp_path):
+    """Insert, upsert and drop keep no count manifest beside the data:
+    the warehouse root holds no ``_stats`` entry afterwards."""
     store = CollectionStore(
         spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
     )
-    docs = docs_tiny.select(
-        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
-        F.lit("english").alias("language"),
-    ).limit(10)
+    docs = _f1_docs(docs_tiny, 6)
     store.insert_documents(docs, embedding_config=EMB)
-    assert store._latest_stats_counts() == {"html_f1": 10}
-
-    real = CollectionStore._try_commit_stats
-    calls = {"n": 0}
-
-    def racy(self, fs, version, manifest):
-        calls["n"] += 1
-        if calls["n"] == 1:  # a concurrent writer wins this version
-            won = {"version": version, "valid": True,
-                   "collections": {"html_f1": 15}}
-            assert try_commit_manifest(
-                fs, self._jpath, self._stats_dir, version, won
-            )
-        return real(self, fs, version, manifest)
-
-    monkeypatch.setattr(CollectionStore, "_try_commit_stats", racy)
-    store.insert_documents(docs.limit(3), embedding_config=EMB)  # delta +3
-    monkeypatch.undo()
-    assert calls["n"] == 2  # first commit lost, retry won
-    # +3 rebased onto the winner's 15 — not onto the loser's stale 10
-    assert store._latest_stats_counts() == {"html_f1": 18}
-
-
-def test_stats_invalid_marker_retries_after_lost_race(
-    spark, docs_tiny, tmp_path, monkeypatch
-):
-    """When every delta commit loses its race, the invalid marker is the
-    fallback — and it can lose a race too. It must retry on a re-listed
-    version, so readers end on the scan path, never on stale counts."""
-    from vectordb_etl_spark.store.snapshots import try_commit_manifest
-
-    store = CollectionStore(
-        spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
+    store.upsert_documents(
+        docs.limit(2), key_col="doc_id", embedding_config=EMB
     )
-    docs = docs_tiny.select(
-        "doc_id", "source", F.lit("f1").alias("folder_name"), "text",
-        F.lit("english").alias("language"),
-    ).limit(10)
-    store.insert_documents(docs, embedding_config=EMB)
-    assert store._latest_stats_counts() == {"html_f1": 10}
-
-    real = CollectionStore._try_commit_stats
-    markers = {"n": 0}
-
-    def racy(self, fs, version, manifest):
-        if manifest["valid"] is False:
-            markers["n"] += 1
-            if markers["n"] > 1:  # the marker's own first attempt loses too
-                return real(self, fs, version, manifest)
-        # a concurrent writer commits a stale-but-valid manifest first
-        stale = {"version": version, "valid": True,
-                 "collections": {"html_f1": 10}}
-        assert try_commit_manifest(
-            fs, self._jpath, self._stats_dir, version, stale
-        )
-        return real(self, fs, version, manifest)
-
-    monkeypatch.setattr(CollectionStore, "_try_commit_stats", racy)
-    store.insert_documents(docs.limit(3), embedding_config=EMB)  # delta +3
-    monkeypatch.undo()
-    assert markers["n"] == 2  # first marker lost, retry committed
-    assert store._latest_stats_counts() is None
+    store.drop_collection("html_f1")
+    assert "_stats" not in os.listdir(store._root)
 
 
 def test_partition_pruning_on_named_collection(store):
@@ -281,7 +175,7 @@ def test_topk_search_exact(store):
 
 def test_fanout_matches_union_of_collections(store):
     q = query_vector("another query", EMB)
-    global_hits = fanout_search(store.read(), q, k=3, tie_break=["doc_id"]).collect()
+    global_hits = topk_search(store.read(), q, k=3, tie_break=["doc_id"]).collect()
     per_col = []
     for c in store.list_collections():
         per_col.extend(

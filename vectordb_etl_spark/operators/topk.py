@@ -9,6 +9,9 @@ take the global top-k. The Catalyst plan is the one you want at 100 TB:
           of k·num_partitions rows — no global sort, no shuffle)
 
 The query vector is a plan literal (broadcast with the task binaries). The
+Q2 fan-out (reference modules/milvus_store.py:301-325) is ``topk_search``
+over the store scan without a collection filter: one job, the query
+embedded once, the ``collection`` column kept as the hit's tag. The
 approximate tier (IVF partition pruning) is in operators/ann.py.
 
 Determinism: ties on score are broken by ``tie_break`` columns so the same
@@ -55,29 +58,6 @@ def topk_search(
     if output_cols is not None:
         out = out.select(*output_cols, score_name)
     return out
-
-
-def fanout_search(
-    df: DataFrame,
-    query: list[float],
-    k: int = 3,
-    metric: str = "COSINE",
-    predicate: Column | None = None,
-    collection_col: str = "collection",
-    **kwargs,
-) -> DataFrame:
-    """Q2 — multi-collection fan-out + global merge
-    (reference: modules/milvus_store.py:301-325).
-
-    The reference loops collections, re-embeds the query per collection and
-    concat-sorts in the driver. With one collection-partitioned table the
-    fan-out is simply the same scan WITHOUT the collection filter: one job,
-    one TakeOrderedAndProject, query embedded once. The result keeps the
-    ``collection`` tag column (milvus_store.py:319-320). Sort direction is
-    metric-aware (fixes the desc-only assumption at milvus_store.py:324)."""
-    return topk_search(
-        df, query, k=k, metric=metric, predicate=predicate, **kwargs
-    )
 
 
 def search_per_group_topk(

@@ -251,12 +251,6 @@ def search_quality_probes(store, k: int = 3, queries: tuple[str, ...] = PROBE_QU
 
 
 # --------------------------------------------------------------------------
-# A11 — collection row counts (milvus_store.py:374-406) live on
-# CollectionStore.collection_stats; re-exported here for the report.
-# --------------------------------------------------------------------------
-
-
-# --------------------------------------------------------------------------
 # A12 — validation report (quality_monitor.py:207-243 + main.py:209-212)
 # --------------------------------------------------------------------------
 

@@ -33,11 +33,6 @@ from pyspark.sql import functions as F
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import with_embeddings
 from vectordb_etl_spark.functions.text import truncate_cols
-from vectordb_etl_spark.store.snapshots import (
-    manifest_versions,
-    read_manifest,
-    try_commit_manifest,
-)
 
 
 # The declared document/chunk schema — the analog of the reference's fixed
@@ -113,11 +108,6 @@ def collection_name_col(prefix: str, folder_col):
         folder_col.isNull() | (folder_col == "root") | (folder_col == ""),
         F.lit(f"{prefix}_documents"),
     ).otherwise(F.concat_ws("_", F.lit(prefix), clean))
-
-
-# stats-manifest retention: versions beyond this many are pruned at commit
-# (no time-travel value in count telemetry; the window is reader slack)
-_STATS_KEEP_VERSIONS = 20
 
 
 def checked_rename(fs, src, dst) -> None:
@@ -280,13 +270,6 @@ class CollectionStore:
             )
         for kind in ("ivf", "graph"):
             self._indexes.pop((self._index_path(name, kind), kind), None)
-        self._update_stats(
-            lambda prev, n=name: (
-                {k: v for k, v in prev.items() if k != n}
-                if prev is not None
-                else None
-            )
-        )
 
     def vacuum(self, grace_s: float = 900.0) -> list[str]:
         """Delete the work directories (:func:`replace_dir`'s staging and
@@ -341,6 +324,36 @@ class CollectionStore:
 
     # -- S8: sink -------------------------------------------------------------
 
+    def _tag_batch(
+        self,
+        chunks: DataFrame,
+        split_by_folder: bool,
+        folder_col: str,
+        dynamic_meta: bool,
+    ) -> DataFrame:
+        """The batch prelude of both sinks: the ``collection`` column by
+        the reference naming rule incl. lowercase/sanitize and the
+        'root'-folder default (modules/config.py:37-43), the optional
+        dynamic-meta fold, and P7 varchar truncation at the sink
+        (milvus_store.py:207-215)."""
+        cfg = self.config
+        if split_by_folder and folder_col in chunks.columns:
+            collection = collection_name_col(
+                cfg.collection_prefix, F.col(folder_col)
+            )
+        else:
+            collection = F.lit(f"{cfg.collection_prefix}_documents")
+        df = chunks.withColumn("collection", collection)
+        if dynamic_meta:
+            df = fold_dynamic_meta(df)
+        for name, col in truncate_cols(
+            cfg.text_max_len, cfg.source_max_len, cfg.filename_max_len,
+            cfg.language_max_len,
+        ).items():
+            if name in df.columns:
+                df = df.withColumn(name, col)
+        return df
+
     def insert_documents(
         self,
         chunks: DataFrame,
@@ -363,6 +376,9 @@ class CollectionStore:
         computed from the incoming batch BEFORE the embedding stage: one
         UDF-free aggregation over the batch, never a post-write scan of
         the whole warehouse (which is O(total data) per insert at 100 TB).
+        ``count_rows=False`` skips that job and returns ``{}``. The write
+        keeps no count of its own: collection totals are
+        :meth:`collection_stats`, counted from the data.
 
         ``dynamic_meta=True`` is the reference's ``enable_dynamic_field``
         (milvus_store.py:62-66): columns outside DOCUMENT_FIXED_COLS fold
@@ -371,25 +387,7 @@ class CollectionStore:
         stable parquet schema. Default off — this store also accepts any
         typed column as-is (a superset of Milvus's fixed schema), and
         callers relying on that keep their exact layout."""
-        cfg = self.config
-        if split_by_folder and folder_col in chunks.columns:
-            # reference naming rule incl. lowercase/sanitize and the
-            # 'root'-folder default (modules/config.py:37-43)
-            collection = collection_name_col(
-                cfg.collection_prefix, F.col(folder_col)
-            )
-        else:
-            collection = F.lit(f"{cfg.collection_prefix}_documents")
-        df = chunks.withColumn("collection", collection)
-        if dynamic_meta:
-            df = fold_dynamic_meta(df)
-        # P7 varchar truncation at the sink (milvus_store.py:207-215)
-        for name, col in truncate_cols(
-            cfg.text_max_len, cfg.source_max_len, cfg.filename_max_len,
-            cfg.language_max_len,
-        ).items():
-            if name in df.columns:
-                df = df.withColumn(name, col)
+        df = self._tag_batch(chunks, split_by_folder, folder_col, dynamic_meta)
         # the pre-write count re-executes the batch's lineage once (cheap
         # for parquet-backed batches, real for UDF-heavy ones) — callers
         # that discard the counts (e.g. the streaming sink, which writes
@@ -408,39 +406,7 @@ class CollectionStore:
             self._warn_pre_rule_partitions(counts)
         if embed and "embedding" not in df.columns:
             df = with_embeddings(df, config=embedding_config)
-        # seed decision BEFORE the write: a first insert into an empty
-        # warehouse can seed the stats manifest even with no prior manifest
-        fresh = not self._fs(self._data_dir).exists(self._jpath(self._data_dir))
         df.write.mode(mode).partitionBy("collection").parquet(self._data_dir)
-        if not count_rows:
-            # unknown delta (streaming fast path skips the count job):
-            # mark the manifest stale rather than serving drifting numbers
-            self._update_stats(lambda _prev: None)
-        elif mode != "append":
-            # overwrite = totals ASSUMES static partitionOverwriteMode
-            # (the session default here): the whole table is replaced, so
-            # the batch counts ARE the totals. Under
-            # spark.sql.sources.partitionOverwriteMode=dynamic, untouched
-            # collections survive on disk but would vanish from this
-            # manifest — mark it invalid instead so stats fall back to the
-            # (self-healing) scan path rather than serving wrong numbers.
-            dyn = (
-                self.spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                ).lower()
-                == "dynamic"
-            )
-            self._update_stats(
-                lambda _prev, c=counts, d=dyn: (None if d else c)
-            )
-        else:
-            self._update_stats(
-                lambda prev, c=counts, f=fresh: (
-                    {**prev, **{k: prev.get(k, 0) + v for k, v in c.items()}}
-                    if prev is not None
-                    else (c if f else None)
-                )
-            )
         return counts
 
     def upsert_documents(
@@ -464,24 +430,9 @@ class CollectionStore:
         acceptable unit of work (this is the classic copy-on-write merge,
         the same trade Hive-style COW tables make).
         Returns per-affected-collection row counts."""
-        cfg = self.config
-        if split_by_folder and folder_col in chunks.columns:
-            # reference naming rule incl. lowercase/sanitize and the
-            # 'root'-folder default (modules/config.py:37-43)
-            collection = collection_name_col(
-                cfg.collection_prefix, F.col(folder_col)
-            )
-        else:
-            collection = F.lit(f"{cfg.collection_prefix}_documents")
-        incoming = chunks.withColumn("collection", collection)
-        if dynamic_meta:
-            incoming = fold_dynamic_meta(incoming)
-        for name, col in truncate_cols(
-            cfg.text_max_len, cfg.source_max_len, cfg.filename_max_len,
-            cfg.language_max_len,
-        ).items():
-            if name in incoming.columns:
-                incoming = incoming.withColumn(name, col)
+        incoming = self._tag_batch(
+            chunks, split_by_folder, folder_col, dynamic_meta
+        )
         if embed and "embedding" not in incoming.columns:
             incoming = with_embeddings(incoming, config=embedding_config)
 
@@ -505,11 +456,6 @@ class CollectionStore:
                     merged = keep.unionByName(new_part, allowMissingColumns=True)
                 merged.write.mode("overwrite").parquet(staging)
             counts[name] = self.spark.read.parquet(part_dir).count()
-        # upsert counts are post-merge TOTALS for the affected collections —
-        # overlay them; unaffected collections keep their manifest numbers
-        self._update_stats(
-            lambda prev, c=counts: {**prev, **c} if prev is not None else None
-        )
         return counts
 
     # -- scans ---------------------------------------------------------------
@@ -801,156 +747,20 @@ class CollectionStore:
                     out[n] = {"error": str(e)}
         return out
 
-    # -- A11 stats manifest ----------------------------------------------------
-    #
-    # Milvus serves num_entities from segment METADATA, not a scan
-    # (milvus_store.py:387-406 calls collection.num_entities). The parquet
-    # twin of that is a tiny versioned count manifest under
-    # ``<warehouse>/_stats/``, maintained transactionally by this store's
-    # own mutating API (insert/upsert/drop) with the same rename-if-absent
-    # optimistic commit as store/snapshots.py — so collection_stats is a
-    # driver-side JSON read, ZERO Spark jobs, instead of a per-call scan
-    # job over the partition column (which at 100 TB file counts is a real
-    # listing+footer pass every time someone asks "how many rows").
-    # Out-of-band writes (direct parquet into the data dir) are detected
-    # by cross-checking the manifest's collection SET against the
-    # partition listing; in-place row changes outside this API are not
-    # detectable and such writers must call refresh via
-    # collection_stats(use_manifest=False) (which self-heals the
-    # manifest from its scan).
+    # -- A11: counts ---------------------------------------------------------
 
-    @property
-    def _stats_dir(self) -> str:
-        return f"{self._root}/_stats"
-
-    def _stats_versions(self, fs) -> list[int]:
-        return manifest_versions(fs, self._jpath, self._stats_dir)
-
-    def _read_stats(self, fs, version: int) -> dict:
-        return read_manifest(
-            self.spark, fs, self._jpath, self._stats_dir, version
-        )
-
-    def _try_commit_stats(self, fs, version: int, manifest: dict) -> bool:
-        if not try_commit_manifest(
-            fs, self._jpath, self._stats_dir, version, manifest
-        ):
-            return False
-        # prune: unlike the snapshot log, old stats manifests carry no
-        # time-travel value — without pruning an insert-heavy warehouse
-        # accumulates one tiny file per mutation forever. Keep a window
-        # (readers open the latest; 20 commits of slack covers any
-        # reader that listed versions just before this commit)
-        for v in self._stats_versions(fs)[:-_STATS_KEEP_VERSIONS]:
-            fs.delete(self._jpath(f"{self._stats_dir}/{v}.json"), False)
-        return True
-
-    def _latest_stats_counts(self) -> dict[str, int] | None:
-        """Counts from the newest manifest, or None when absent/invalid."""
-        fs = self._fs(self._root)
-        vs = self._stats_versions(fs)
-        if not vs:
-            return None
-        try:
-            m = self._read_stats(fs, vs[-1])
-            return dict(m["collections"]) if m.get("valid", True) else None
-        except Exception:  # noqa: BLE001 — a half-copied manifest (s3a
-            # rename is a non-atomic copy) or hand-damaged JSON must
-            # degrade to the scan path, never fail the stats call; the
-            # scan's self-heal then commits a NEW version past the bad one
-            return None
-
-    def _update_stats(self, fn) -> None:
-        """Optimistic commit loop: ``fn(prev_counts | None) -> counts |
-        None`` rebased on the latest manifest each retry (a lost rename
-        race re-applies the delta onto whatever won). ``None`` out marks
-        the manifest invalid; best-effort — a stats failure must never
-        fail the write that produced the rows."""
-        try:
-            fs = self._fs(self._root)
-            # bounded retries: if rename persistently fails for a NON-race
-            # reason (object-store/permission quirk), give up rather than
-            # spin — the scan path self-heals later anyway
-            for _attempt in range(5):
-                vs = self._stats_versions(fs)
-                prev = None
-                if vs:
-                    try:
-                        m = self._read_stats(fs, vs[-1])
-                        prev = (
-                            dict(m["collections"])
-                            if m.get("valid", True)
-                            else None
-                        )
-                    except Exception:  # noqa: BLE001 — corrupt latest:
-                        # rebase on nothing but STILL commit vs[-1]+1, so
-                        # the bad file is superseded (it can never be
-                        # rewritten in place — commits are rename-if-absent)
-                        prev = None
-                new = fn(prev)
-                if new is None and prev is None:
-                    return  # already invalid/absent — no marker churn
-                version = (vs[-1] + 1) if vs else 0
-                manifest = (
-                    {"version": version, "valid": False}
-                    if new is None
-                    else {
-                        "version": version,
-                        "valid": True,
-                        "collections": {k: int(v) for k, v in new.items()},
-                    }
-                )
-                if self._try_commit_stats(fs, version, manifest):
-                    return
-            # retries exhausted with the delta NOT applied: a still-valid
-            # latest manifest would serve stale counts forever — the
-            # out-of-band check only compares the collection SET, which a
-            # same-collection append never changes. Mark the manifest
-            # invalid so readers fall back to the self-healing scan path
-            # instead of undercounting; the marker can lose a version race
-            # too, so it gets the same bounded, re-listing retry.
-            for _attempt in range(5):
-                vs = self._stats_versions(fs)
-                version = (vs[-1] + 1) if vs else 0
-                if self._try_commit_stats(
-                    fs, version, {"version": version, "valid": False}
-                ):
-                    return
-        except Exception:  # noqa: BLE001 — telemetry only, never fail a write
-            pass
-
-    def collection_stats(
-        self, collection: str | None = None, use_manifest: bool = True
-    ) -> dict[str, int]:
-        """Row counts per collection (milvus_store.py:374-406 — Milvus
-        reads collection.num_entities, segment metadata, not a scan).
-        Served from the ``_stats`` manifest when it is valid AND its
-        collection set matches the partition listing (one FS listing, zero
-        Spark jobs); otherwise one partition-column aggregation scan,
-        whose result self-heals the manifest for the next call. Pass
-        ``use_manifest=False`` to force the scan (and re-seed the
-        manifest) after out-of-band writes."""
-        if use_manifest:
-            counts = self._latest_stats_counts()
-            if counts is not None and set(counts) == set(
-                self.list_collections()
-            ):
-                if collection is not None:
-                    return (
-                        {collection: counts[collection]}
-                        if collection in counts
-                        else {}
-                    )
-                return counts
-        if collection is not None:
-            # partition-pruned scan; a single-collection ask must never
-            # pay a warehouse-wide pass, so no full re-seed here
-            rows = self.read(collection).groupBy("collection").count().collect()
-            return {r["collection"]: r["count"] for r in rows}
-        rows = self.read(None).groupBy("collection").count().collect()
-        counts = {r["collection"]: r["count"] for r in rows}
-        self._update_stats(lambda _prev: counts)  # self-heal for next call
-        return counts
+    def collection_stats(self, collection: str | None = None) -> dict[str, int]:
+        """Row counts per collection (reference milvus_store.py:374-406),
+        counted from the data itself: one partition-pruned
+        ``groupBy("collection").count()`` job, so the numbers are exact
+        whatever wrote the rows. A store with no collections, or a named
+        collection that does not exist, returns ``{}`` after one listing
+        and no job."""
+        names = self.list_collections()
+        if not names or (collection is not None and collection not in names):
+            return {}
+        rows = self.read(collection).groupBy("collection").count().collect()
+        return {r["collection"]: r["count"] for r in rows}
 
     def dynamic_field_stats(
         self, collection: str | None = None, meta_col: str = "meta"

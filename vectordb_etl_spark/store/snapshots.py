@@ -41,70 +41,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# -- manifest-log primitives (shared with CollectionStore's stats manifest) --
-#
-# One versioned-JSON-manifest mechanism, two users: the snapshot log below
-# and store/collections.py's ``_stats`` count manifest. Module-level so a
-# hardening fix (e.g. partial-file tolerance) lands in both. ``jpath`` is
-# the caller's str -> hadoop.fs.Path constructor. Corruption policy is the
-# CALLER's: read_manifest raises on damaged JSON — the snapshot log lets
-# that propagate (it is the source of truth for data files; silence would
-# hide loss), while the stats manifest catches it and degrades to a scan
-# (it is a derived cache the scan can always rebuild).
-
-
-def manifest_versions(fs, jpath, log_dir: str) -> list[int]:
-    """Committed manifest versions under ``log_dir``, ascending."""
-    d = jpath(log_dir)
-    if not fs.exists(d):
-        return []
-    out = []
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if name.endswith(".json") and not name.startswith("."):
-            try:
-                out.append(int(name[: -len(".json")]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def read_manifest(spark, fs, jpath, log_dir: str, version: int) -> dict:
-    """Parse ``<log_dir>/<version>.json``. Read JVM-side (commons-io ships
-    with Spark): py4j does not copy mutations back into a Python bytearray
-    buffer."""
-    stream = fs.open(jpath(f"{log_dir}/{version}.json"))
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(  # noqa: SLF001
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def try_commit_manifest(
-    fs, jpath, log_dir: str, version: int, manifest: dict
-) -> bool:
-    """Atomic publish: write temp, rename to ``<version>.json``. The rename
-    fails if the destination exists — the loser of a race retries with the
-    next version number."""
-    fs.mkdirs(jpath(log_dir))
-    tmp = jpath(f"{log_dir}/.tmp-{version}-{time.time_ns()}.json")
-    out = fs.create(tmp, False)
-    try:
-        out.write(json.dumps(manifest, sort_keys=True).encode("utf-8"))
-    finally:
-        out.close()
-    dest = jpath(f"{log_dir}/{version}.json")
-    if fs.exists(dest):
-        fs.delete(tmp, False)
-        return False
-    ok = fs.rename(tmp, dest)
-    if not ok:
-        fs.delete(tmp, False)
-    return bool(ok)
-
 
 class SnapshotStore:
     """A versioned parquet table rooted at ``root``."""
@@ -123,19 +59,53 @@ class SnapshotStore:
 
     def versions(self) -> list[int]:
         """Committed versions, ascending."""
-        return manifest_versions(
-            self._fs, self._jvm_path, f"{self.root}/_log"
-        )
+        log = self._jvm_path(f"{self.root}/_log")
+        if not self._fs.exists(log):
+            return []
+        out = []
+        for st in self._fs.listStatus(log):
+            name = st.getPath().getName()
+            if name.endswith(".json") and not name.startswith("."):
+                try:
+                    out.append(int(name[: -len(".json")]))
+                except ValueError:
+                    continue
+        return sorted(out)
 
     def _manifest(self, version: int) -> dict:
-        return read_manifest(
-            self.spark, self._fs, self._jvm_path, f"{self.root}/_log", version
+        """Parse ``_log/<version>.json``. Read JVM-side (commons-io ships
+        with Spark): py4j does not copy mutations back into a Python
+        bytearray buffer."""
+        io = self.spark._jvm.org.apache.commons.io.IOUtils  # noqa: SLF001
+        stream = self._fs.open(
+            self._jvm_path(f"{self.root}/_log/{version}.json")
         )
+        try:
+            text = io.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        return json.loads(text)
 
     def _try_commit(self, version: int, manifest: dict) -> bool:
-        return try_commit_manifest(
-            self._fs, self._jvm_path, f"{self.root}/_log", version, manifest
-        )
+        """Atomic publish: write temp, rename to ``<version>.json``. The
+        rename fails if the destination exists — the loser of a race
+        retries with the next version number."""
+        log = f"{self.root}/_log"
+        self._fs.mkdirs(self._jvm_path(log))
+        tmp = self._jvm_path(f"{log}/.tmp-{version}-{time.time_ns()}.json")
+        out = self._fs.create(tmp, False)
+        try:
+            out.write(json.dumps(manifest, sort_keys=True).encode("utf-8"))
+        finally:
+            out.close()
+        dest = self._jvm_path(f"{log}/{version}.json")
+        if self._fs.exists(dest):
+            self._fs.delete(tmp, False)
+            return False
+        ok = self._fs.rename(tmp, dest)
+        if not ok:
+            self._fs.delete(tmp, False)
+        return bool(ok)
 
     # -- commits -------------------------------------------------------------
 
