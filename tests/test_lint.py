@@ -181,6 +181,44 @@ def test_directory_swaps_go_through_replace_dir():
     assert not offenders, f"directory swap outside replace_dir: {offenders}"
 
 
+def test_pipeline_stages_do_not_reread_their_checkpoints():
+    """A stage counts its checkpoint while writing it
+    (``pipeline._write_counted``): no function in ``pipeline.py`` reads
+    back a path it wrote, so no ``read.parquet(...).count()`` re-read."""
+    import ast
+
+    src = (PKG / "pipeline.py").read_text()
+    offenders = []
+
+    def chain(node):
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+                node = node.value
+            else:
+                node = node.func
+        return names
+
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        written = set()
+        for node in sorted(
+            (n for n in ast.walk(fn) if isinstance(n, ast.Call) and n.args),
+            key=lambda n: (n.lineno, n.col_offset),
+        ):
+            names = chain(node.func)
+            if names[:1] != ["parquet"]:
+                continue
+            target = ast.dump(node.args[0])
+            if "write" in names:
+                written.add(target)
+            elif "read" in names and target in written:
+                offenders.append(f"pipeline.py:{node.lineno} ({fn.name})")
+    assert not offenders, f"checkpoint re-read after its write: {offenders}"
+
+
 def test_rotation_has_one_home():
     """The driver-check order lives in ``__spark_entry__.rotation_order``
     and is imported from there: no file-path module loading and no

@@ -84,6 +84,40 @@ def test_full_pipeline_stages(runner):
     assert "vacation" in hits[0].text.lower()
 
 
+def test_stage_checkpoint_is_counted_by_its_own_write(runner, monkeypatch):
+    """``transform`` counts the chunks checkpoint during its write. Reading
+    the checkpoint back to count it, as the stage used to, costs a schema
+    job and two count jobs more."""
+    from pathlib import Path
+
+    from vectordb_etl_spark import pipeline
+
+    if not Path(runner.documents_path).exists():  # allow -k selection to run solo
+        runner.extract()
+    sc = runner.spark.sparkContext
+
+    def jobs_of_transform(group):
+        sc.setJobGroup(group, "stage job count")
+        try:
+            result = runner.transform()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counted, counted_jobs = jobs_of_transform("transform-counted")
+    assert counted.rows == runner.spark.read.parquet(runner.chunks_path).count()
+
+    def write_then_reread(df, path):
+        df.write.mode("overwrite").parquet(path)
+        return runner.spark.read.parquet(path).count()
+
+    monkeypatch.setattr(pipeline, "_write_counted", write_then_reread)
+    reread, reread_jobs = jobs_of_transform("transform-reread")
+    assert reread.rows == counted.rows
+    assert reread_jobs - counted_jobs == 3, (reread_jobs, counted_jobs)
+
+
 def test_search_scoped_to_collection(runner):
     hits = runner.search("setup instructions", k=2, collection="html_eng")
     assert hits and all(

@@ -15,7 +15,10 @@ from vectordb_etl_spark.config import (
     SearchConfig,
     StoreConfig,
 )
-from vectordb_etl_spark.session import get_spark
+from vectordb_etl_spark.session import _reuse_unchanged_zip_directories, get_spark
+
+# Runs in every Python worker that unpickles one of the package's UDFs.
+_reuse_unchanged_zip_directories()
 
 __all__ = [
     "ChunkerConfig",

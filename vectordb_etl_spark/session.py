@@ -7,10 +7,63 @@ broadcast threshold respected, Arrow enabled for the pandas-UDF operators.
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructField, StructType
+
+
+def _reuse_unchanged_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. Before CPython 3.13, each ``zipimporter`` answers by
+    re-parsing its whole archive directory (3.11 ``zipimport.py:329``), and
+    a worker holds 16 of them (into ``pyspark.zip``, the py4j zip and the
+    spark-core jar) — 0.1–0.15 s of CPU per task before any of our code
+    runs. 3.13 only drops the
+    cache entry (``zipimport.py:276``), so this does nothing there.
+
+    The wrapper stamps each archive with ``(st_mtime_ns, st_size)`` taken
+    just before a read, and reuses the cached directory while the stamp
+    holds. An archive with no stamp yet, or one that cannot be stat'ed,
+    goes through the stdlib method exactly as before; so does one whose
+    cache entry is gone (a failed read drops it). At install, each
+    archive already imported from is read once through the wrapper, so
+    every stamp belongs to a read made after it. Installing twice is a
+    no-op: the package runs this at import, and a Python worker imports
+    it when it unpickles any of the package's UDFs, so the first task on
+    a worker pays the reads and every later task on it does not."""
+    if sys.version_info >= (3, 13):
+        return
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_reuses_unchanged_directories", False):
+        return
+    stamps: dict[str, tuple[int, int]] = {}
+
+    @functools.wraps(original)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return original(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        if cached is not None and stamps.get(self.archive) == stamp:
+            self._files = cached
+            return
+        original(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches._reuses_unchanged_directories = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            importer.invalidate_caches()
 
 
 def get_spark(
