@@ -4005,9 +4005,9 @@ _register("ivf_topk", _ivf_topk, _ANN_ORACLE)
 def _ivf_topk_filtered(spark: SparkSession, sf: str) -> DataFrame:
     """Filtered ANN at the INDEX tier (the Milvus expr+index composition,
     milvus_store.py search filters): the scalar predicate rides INSIDE the
-    partition-pruned probe scan — Catalyst stacks PartitionFilters
-    (centroid_id IN probes) with PushedFilters (label = 2) on one scan, so
-    a filtered index query reads only matching rows of probed partitions.
+    probe scan — the probe filter (centroid_id IN probes) and the
+    predicate (label = 2) are pushed to one parquet scan, so a filtered
+    index query reads only the row groups of probed cells.
     Probe-all edge keeps it oracle-checkable."""
     from vectordb_etl_spark.operators.ann import IVFIndex
 
@@ -4037,10 +4037,10 @@ _register(
 
 def _ivf_fanout_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Q2 THROUGH the IVF index tier: per-label top-3 hit lists served
-    from one partition-pruned probe scan (operators/ann.py
+    from one probe scan (operators/ann.py
     IVFIndex.search_per_group — the probe filter and the per-group window
     rank stack on the same read; reference fan-out shape
-    milvus_store.py:301-325). nprobe=nlist probes every partition, so the
+    milvus_store.py:301-325). nprobe=nlist probes every cell, so the
     result provably equals the exact per-label top-3 — the same oracle as
     fanout_topk_per_label. The per-collection-index variant is
     CollectionStore.fanout_search_indexed (tests/test_store_search.py)."""

@@ -1,4 +1,4 @@
-"""ANN tier tests: IVF build/search recall + partition pruning, LSH buckets."""
+"""ANN tier tests: IVF build/search recall + row-group pruning, LSH buckets."""
 
 from __future__ import annotations
 
@@ -12,6 +12,16 @@ from vectordb_etl_spark.operators.ann import (
     recall_at_k,
 )
 from vectordb_etl_spark.operators.topk import topk_search
+from vectordb_etl_spark.plans.inspect import pushed_filters
+
+
+def _probe_pushed(df) -> bool:
+    """The probe filter reached the parquet scan as a pushed filter (one
+    probed cell plans as EqualTo, several as In)."""
+    return any(
+        f.startswith(("In(centroid_id,", "EqualTo(centroid_id,"))
+        for f in pushed_filters(df)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -61,15 +71,14 @@ def test_ivf_probe_prunes_partitions(spark, ivf, query_vec):
     df = spark.read.parquet(f"{ivf.path}/data").filter(
         F.col("centroid_id").isin(probes)
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split("PartitionFilters")[1][:200]
+    assert _probe_pushed(df)
 
 
 def test_ivf_search_per_group_prunes_and_matches_exact_fanout(
     spark, embeddings_tiny, ivf, query_vec
 ):
     """Q2 through the index: the probe filter must reach the scan as a
-    PartitionFilter with the per-group window stacked above it (one
+    pushed filter with the per-group window stacked above it (one
     pruned read, no per-collection scans), and the probe-all edge must
     equal the exact per-group top-k."""
     from vectordb_etl_spark.operators.topk import search_per_group_topk
@@ -77,9 +86,7 @@ def test_ivf_search_per_group_prunes_and_matches_exact_fanout(
     out = ivf.search_per_group(
         query_vec, k=3, nprobe=2, group_col="label", tie_break=["vec_id"]
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "centroid_id" in plan.split("PartitionFilters")[1][:200]
+    assert _probe_pushed(out)
     # probe-all edge: equals the exact fan-out over the raw table
     got = sorted(
         map(
@@ -192,11 +199,9 @@ def test_ivf_sq8_storage_prunes_and_matches_quantized_bruteforce(
     assert got == exact
 
     # pruning still reaches the scan through the dequantize projection
-    plan = (
+    assert _probe_pushed(
         idx.search(query_vec, k=3, nprobe=1, output_cols=["vec_id"])
-        ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split("PartitionFilters")[1][:200]
 
     # incremental add() quantizes the appended batch to match the tier
     extra = embeddings_tiny.limit(3).withColumn(
@@ -267,6 +272,78 @@ def test_ivf_compact_restores_data_left_aside_by_a_crash(
     assert spark.read.parquet(f"{path}/data").count() == embeddings_tiny.count()
     assert _search(idx) == pre
     assert sorted(os.listdir(path)) == ["centroids", "data"]
+
+
+def _scan_rows(df) -> int:
+    """Rows the parquet scans of ``df`` returned when it ran."""
+    df.collect()
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves().iterator()
+    rows = 0
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName().startswith("Scan parquet"):
+            rows += leaf.metrics().apply("numOutputRows").value()
+    return rows
+
+
+def test_ivf_row_groups_let_a_probe_skip_unprobed_cells(spark, tmp_path):
+    """Row groups are about one cell long, so the pushed ``centroid_id``
+    filter skips unprobed cells by row-group statistics: a 4-of-32 probe
+    scans at most 2.5× the rows of its cells, not the whole table."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    cents = rng.standard_normal((32, 8))
+    rows = [
+        (i, [float(x) for x in cents[i % 32] + 0.05 * rng.standard_normal(8)])
+        for i in range(6400)
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    idx = IVFIndex(spark, str(tmp_path / "ivf_rg")).build(df, centroids=cents)
+    q = list(cents[5])
+    probes = idx.probe_ids(q, nprobe=4)
+    in_cells = (
+        spark.read.parquet(f"{idx.path}/data")
+        .filter(F.col("centroid_id").isin(probes)).count()
+    )
+    assert in_cells > 0
+    scanned = _scan_rows(idx.search(q, k=3, nprobe=4))
+    assert in_cells <= scanned <= 2.5 * in_cells, (scanned, in_cells)
+
+
+def test_ivf_index_in_the_per_cell_layout_serves_and_compacts(
+    spark, embeddings_tiny, tmp_path, query_vec
+):
+    """An index whose ``data/`` is in the older ``centroid_id=<i>/``
+    directory layout serves as-is from a reopened handle, and compact()
+    rewrites it to sorted files with the same top-k and no cell dirs."""
+    import os
+    import shutil
+
+    new = IVFIndex(spark, str(tmp_path / "new")).build(
+        embeddings_tiny, nlist=8, seed=42, max_iter=4
+    )
+    path = str(tmp_path / "old")
+    shutil.copytree(f"{new.path}/centroids", f"{path}/centroids")
+    spark.read.parquet(f"{new.path}/data").write.partitionBy(
+        "centroid_id"
+    ).parquet(f"{path}/data")
+    assert any(n.startswith("centroid_id=") for n in os.listdir(f"{path}/data"))
+
+    def _top(idx):
+        return [
+            (r["vec_id"], r["score"])
+            for r in idx.search(query_vec, k=10, nprobe=3, tie_break=["vec_id"],
+                                output_cols=["vec_id"]).collect()
+        ]
+
+    want = _top(new)
+    old = IVFIndex(spark, path)
+    assert _top(old) == want
+    old.compact()
+    assert not any(n.startswith("centroid_id=") for n in os.listdir(f"{path}/data"))
+    assert _top(old) == want
+    assert _top(IVFIndex(spark, path)) == want
 
 
 def test_ivf_search_many_rejects_reserved_column_names(spark, tmp_path):
@@ -1764,13 +1841,14 @@ def test_vector_lit_from_thread_without_active_session(spark):
 def test_ivf_probe_of_only_empty_cells_returns_no_rows(spark, tmp_path):
     """A probe set whose cells were never written (no vector is nearest
     to that centroid) gives 0 rows from every search path, not an error —
-    also from a reopened handle, whose schema comes from another cell."""
+    also from a reopened handle, which reads its schema from ``data/``."""
     rows = [(i, [1.0, 0.1 * i, 0.5]) for i in range(12)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     cents = [[1.0, 0.0, 0.5], [1.0, 1.0, 0.5], [-1.0, -1.0, -1.0]]
     path = str(tmp_path / "ivf_empty")
     idx = IVFIndex(spark, path).build(df, centroids=cents)
-    assert idx._cell_ids("*") == [0, 1]
+    stored = spark.read.parquet(f"{path}/data").select("centroid_id").distinct()
+    assert sorted(r[0] for r in stored.collect()) == [0, 1]
     far = [-1.0, -1.0, -1.0]
     assert idx.probe_ids(far, nprobe=1) == [2]
     for h in (idx, IVFIndex(spark, path)):

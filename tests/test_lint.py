@@ -181,6 +181,48 @@ def test_directory_swaps_go_through_replace_dir():
     assert not offenders, f"directory swap outside replace_dir: {offenders}"
 
 
+def test_ivf_layout_has_one_writer():
+    """The IVF data layout is decided in one place: in ``operators/ann.py``
+    only ``IVFIndex._write_layout`` writes anything but the centroid and
+    codebook artifacts, nothing partitions by ``centroid_id`` or reads
+    with ``basePath`` or a ``GlobFilter``, and the streaming sink
+    ``ivf_ingest_stream`` appends through ``IVFIndex.add``."""
+    import ast
+
+    src = (PKG / "operators" / "ann.py").read_text()
+    tree = ast.parse(src)
+    owner = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    offenders = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and ".write" in ast.unparse(node.func.value)
+            and owner.get(node.lineno) != "_write_layout"
+            and not ast.unparse(node.args[0]).endswith(
+                ("/centroids'", "/pq_codebook'")
+            )
+        ):
+            offenders.append(f"ann.py:{node.lineno} write")
+    for pattern in (r"partitionBy\(\s*[\"']centroid_id", r"basePath", r"\bGlobFilter\b"):
+        for m in re.finditer(pattern, src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"ann.py:{line} {m.group()}")
+    ingest = ast.parse((PKG / "streaming" / "ingest.py").read_text())
+    sink = next(
+        ast.unparse(n) for n in ast.walk(ingest)
+        if isinstance(n, ast.FunctionDef) and n.name == "ivf_ingest_stream"
+    )
+    if "index.add(" not in sink or ".write" in sink:
+        offenders.append("ingest.py ivf_ingest_stream bypasses IVFIndex.add")
+    assert not offenders, f"IVF layout written outside _write_layout: {offenders}"
+
+
 def test_pipeline_stages_do_not_reread_their_checkpoints():
     """A stage counts its checkpoint while writing it
     (``pipeline._write_counted``): no function in ``pipeline.py`` reads

@@ -386,7 +386,7 @@ def test_search_facade_index_kind_both_tiers(spark, tmp_path):
         store, q, k=3, embedding_config=EMB, index_kind="ivf", nprobe=4
     )
     assert [(h.text, round(h.score, 6)) for h in ivf] == exact_key
-    # metadata keeps user columns, drops the IVF partition key
+    # metadata keeps user columns, drops the IVF layout key
     assert all("centroid_id" not in h.metadata for h in ivf)
 
     for c in names[:2]:
@@ -1053,6 +1053,13 @@ def _ivf_store(spark, root, n_rows, n_folders, **config):
     return store
 
 
+def _stored_cells(spark, idx) -> int:
+    """How many distinct cells hold rows in an IVF index's ``data/``."""
+    return (
+        spark.read.parquet(f"{idx.path}/data").select("centroid_id").distinct().count()
+    )
+
+
 def _exact(store, q, collection=None, k=3):
     return [
         (r["doc_id"], r["score"])
@@ -1134,7 +1141,7 @@ def test_fanout_search_indexed_defaults_to_store_config(spark, tmp_path):
     store = _ivf_store(spark, tmp_path / "w", 60, 1, nlist=24, nprobe=24)
     name = store.list_collections()[0]
     store.build_index(name, kind="ivf", max_iter=3)
-    assert len(store.open_index(name, kind="ivf")._cell_ids("*")) > 16
+    assert _stored_cells(spark, store.open_index(name, kind="ivf")) > 16
     for doc in (0, 5, 11):
         q = list(store.read().filter(F.col("doc_id") == doc).select("embedding").head()[0])
         got = store.fanout_search_indexed(
@@ -1144,16 +1151,16 @@ def test_fanout_search_indexed_defaults_to_store_config(spark, tmp_path):
 
 
 def test_warm_ivf_fanout_runs_at_most_two_jobs(spark, tmp_path):
-    """A warm 4-collection IVF fan-out lists only the probed cells on the
-    driver: no partition-listing job over the >32 cells of each index
-    (Spark lists more than 32 paths with a distributed job) and no schema
-    job, so the whole search is at most 2 Spark jobs."""
+    """A warm 4-collection IVF fan-out reads each index, which has more
+    than 32 cells, from one root path: no listing job (Spark lists more
+    than 32 paths with a distributed job) and no schema job, so the whole
+    search is at most 2 Spark jobs."""
     store = _ivf_store(spark, tmp_path / "w", 4 * 48, 4, nlist=40)
     names = store.list_collections()
     assert len(names) == 4
     for n in names:
         idx = store.build_index(n, kind="ivf", max_iter=3)
-        assert len(idx._cell_ids("*")) > 32
+        assert _stored_cells(spark, idx) > 32
     q = list(store.read().select("embedding").head()[0])
     store.fanout_search_indexed(q, k=3, nprobe=4).collect()  # warm
     sc = spark.sparkContext

@@ -366,7 +366,7 @@ def test_lsh_screen_stream_flags_near_dups_once(spark, tmp_path_factory):
 
 
 def test_ivf_ingest_stream_appends_via_add(spark, embeddings_tiny, tmp_path_factory):
-    """Streamed vectors land in the index partition layout encoded per the
+    """Streamed vectors land in the index's sorted layout encoded per the
     existing storage tier; search after the stream finds them; centroid
     geometry is untouched (add never retrains)."""
     from vectordb_etl_spark.operators.ann import IVFIndex

@@ -5,13 +5,15 @@ The reference delegates ANN to Milvus IVF_FLAT (nlist=128, nprobe=16 —
 modules/milvus_store.py:125-131, config.py:22-25). The Spark-native design
 (SURVEY.md §4) turns the index into DATA LAYOUT:
 
-- **build**: KMeans (spark.ml) over the vectors; each row gets a
-  ``centroid_id``; the table is written partitioned by it. Centroids are a
-  tiny driver-side artifact (nlist × dim floats).
+- **build**: KMeans over the vectors; each row gets a ``centroid_id``; the
+  table is written sorted by it, in row groups of about one cell. Centroids
+  are a tiny driver-side artifact (nlist × dim floats).
 - **search**: rank centroids against the query ON THE DRIVER (numpy over the
-  tiny centroid matrix), then scan only the top-``nprobe`` partitions —
-  Catalyst partition pruning does the "index probe". Scan fraction ≈
-  nprobe/nlist (the reference's 16/128 = 12.5%), exactly the IVF contract.
+  tiny centroid matrix), then read the table with a ``centroid_id IN
+  (probes)`` filter pushed to the parquet scan — row-group min/max
+  statistics skip the unprobed cells, which is the "index probe". Scan
+  fraction ≈ nprobe/nlist (the reference's 16/128 = 12.5%), the IVF
+  contract, as Milvus keeps a segment's inverted lists in one index file.
 - **LSH alternative**: deterministic random-hyperplane sign buckets as a pure
   column expression (no model artifact) — :func:`lsh_bucket_col`.
 
@@ -26,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import ArrayType, IntegerType, StructType
 
 from vectordb_etl_spark.functions.vector import metric_ascending, vector_lit
 from vectordb_etl_spark.operators.topk import topk_search
@@ -138,22 +140,44 @@ def train_centroids(
     return cents
 
 
-class IVFIndex:
-    """IVF_FLAT as partitioned-parquet layout + driver-side centroid probe.
+# rows per parquet row group of an IVF layout, near parquet-mr's 100-row
+# floor for its first size check: row-group statistics then skip unprobed
+# cells even when a cell holds only a few hundred rows
+ROW_GROUP_ROWS = 150
 
-    build() writes:   <path>/data/centroid_id=<i>/...parquet
+
+def _element_bytes(schema: StructType) -> int:
+    """The stored vector's element width: the widest array element in
+    ``schema``, one struct level down (doubles 8, floats 4, PQ codes 2,
+    SQ8 codes 1)."""
+    width = {"double": 8, "float": 4, "short": 2, "byte": 1}
+    types = [f.dataType for f in schema]
+    types += [g.dataType for t in types if isinstance(t, StructType) for g in t]
+    return max((width.get(t.elementType.typeName(), 0) for t in types
+                if isinstance(t, ArrayType)), default=8)
+
+
+class IVFIndex:
+    """IVF_FLAT as a centroid-sorted parquet table + driver-side probe.
+
+    build() writes:   <path>/data/*.parquet  (sorted by centroid_id)
                       <path>/centroids/...parquet  (nlist tiny rows)
-    search() reads only the probed partitions (partition pruning).
+    search() reads ``data/`` with a pushed ``centroid_id IN (probes)``
+    filter; row-group statistics skip the unprobed cells.
 
     Everything — data AND the centroid artifact — is parquet written
     through Spark, so the index works on any warehouse URI (s3a/hdfs/
     file) with no local-filesystem side channel.
 
     A handle memoizes only what build() fixes: the centroids and the data
-    schema (a reopened handle reads each once, on first use). The cell
-    listing is NOT memoized — every probe lists ``data/`` once, so rows
-    that add() or compact() wrote, through any handle or process, are
-    visible on the next search."""
+    schema (a reopened handle reads each once, on first use). The file
+    listing is NOT memoized — every probe lists ``data/`` once on the
+    driver, so rows that add() or compact() wrote, through any handle or
+    process, are visible on the next search.
+
+    An index in the older ``data/centroid_id=<i>/`` layout serves as-is
+    (the same read sees a partition column); compact() or a rebuild
+    converts it, and must run before its next add()."""
 
     def __init__(self, spark: SparkSession, path: str, metric: str = "COSINE"):
         self.spark = spark
@@ -249,15 +273,9 @@ class IVFIndex:
             if storage == "pq_residual":
                 # residual = vector − assigned centroid; centroids join
                 # BROADCAST (nlist rows) so this adds no exchange
-                cents_df = local_rows_df(
-                    self.spark,
-                    [
-                        (int(i), [float(x) for x in cents[i]])
-                        for i in range(cents.shape[0])
-                    ],
-                    "centroid_id int, centroid array<double>",
-                )
-                src = assigned.join(F.broadcast(cents_df), "centroid_id").withColumn(
+                src = assigned.join(
+                    F.broadcast(self._centroids_df(cents)), "centroid_id"
+                ).withColumn(
                     "__res",
                     F.zip_with(
                         F.col(emb_col).cast("array<double>"),
@@ -304,24 +322,45 @@ class IVFIndex:
             )
             if storage == "pq_residual":
                 assigned = assigned.drop(emb_col)
-        # repartition by the layout key first: one file per centroid per
-        # shuffle bucket (≈nlist files total), not input-tasks × nlist
-        assigned.repartition("centroid_id").write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(f"{self.path}/data")
-        self._schema = partitioned_read_schema(assigned.schema, "centroid_id")
-        rows = [
-            (int(i), [float(x) for x in cents[i]]) for i in range(cents.shape[0])
-        ]
-        # bounded-slice local frame: ONE task writes the handful of
-        # centroid rows (createDataFrame would spread them over
-        # defaultParallelism pickled slices — 32 near-empty tasks — and
-        # the old repartition(1) added an exchange on top)
-        local_rows_df(
-            self.spark, rows, "centroid_id int, centroid array<double>"
-        ).write.mode("overwrite").parquet(f"{self.path}/centroids")
         self._centroids = cents
+        self._schema = partitioned_read_schema(assigned.schema, "centroid_id")
+        self._write_layout(assigned, f"{self.path}/data", "overwrite")
+        self._centroids_df(cents).write.mode("overwrite").parquet(
+            f"{self.path}/centroids"
+        )
         return self
+
+    def _centroids_df(self, cents: np.ndarray) -> DataFrame:
+        """(centroid_id, centroid) rows as a bounded-slice local frame:
+        ONE task holds the handful of rows (createDataFrame would spread
+        them over defaultParallelism pickled slices — 32 near-empty
+        tasks)."""
+        return local_rows_df(
+            self.spark,
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
+            "centroid_id int, centroid array<double>",
+        )
+
+    def _write_layout(self, frame: DataFrame, dest: str, mode: str) -> None:
+        """The one writer of the data layout. ``repartition`` on the key
+        keeps each cell in one file (AQE sets the file count from the data
+        size), the sort puts the cells in order, and a
+        ``parquet.block.size`` of ROW_GROUP_ROWS rows × dim × the stored
+        element width cuts row groups of about that many rows, whose
+        min/max statistics let a probe's pushed ``centroid_id IN`` filter
+        skip unprobed cells. PQ stores fewer codes than dim, so its groups
+        hold a few times more of its small rows. Columns go in
+        :attr:`schema` order."""
+        dim = self.centroids.shape[1]
+        block = ROW_GROUP_ROWS * dim * _element_bytes(self.schema)
+        (
+            frame.select(*self.schema.fieldNames())
+            .repartition("centroid_id")
+            .sortWithinPartitions("centroid_id")
+            .write.mode(mode)
+            .option("parquet.block.size", block)
+            .parquet(dest)
+        )
 
     def search_many(
         self,
@@ -334,13 +373,13 @@ class IVFIndex:
         emb_col: str = "embedding",
     ) -> DataFrame:
         """Batched retrieval: N queries answered in ONE job over the union
-        of their probed partitions — the serving shape at scale, where
+        of their probed cells — the serving shape at scale, where
         per-query jobs would pay scheduling + scan setup N times. Probe
-        sets are ranked on the driver (tiny centroid matrix), shipped as a
-        broadcast (query_id, centroid_id) pair table that prunes the scan,
-        and each query's exact top-k comes from one rank-over-window on the
-        scored candidates. Returns (query_id, *output_cols, score) rows,
-        k per query."""
+        sets are ranked on the driver (tiny centroid matrix); their union
+        filters the scan, a broadcast (query_id, centroid_id) pair table
+        joins each candidate to its queries, and each query's exact top-k
+        comes from one rank-over-window on the scored candidates. Returns
+        (query_id, *output_cols, score) rows, k per query."""
         pairs = [
             (qi, cid)
             for qi, q in enumerate(queries)
@@ -418,13 +457,15 @@ class IVFIndex:
         pq_id_col: str = "vec_id",
     ) -> "IVFIndex":
         """Incremental maintenance: assign a NEW batch against the EXISTING
-        centroids and append into the partition layout — cost proportional
-        to the batch, never a rebuild. This is how IVF indexes absorb a
-        streaming/daily ingest at 100 TB: the centroid geometry drifts only
-        when the data distribution does, at which point a scheduled build()
-        retrains (same trade Milvus/FAISS make — add() assigns, re-train is
-        an explicit operation). Readers pick up new files on their next
-        partition listing; a search mid-append sees complete old files."""
+        centroids and append it to ``data/`` as one more sorted file set
+        (:meth:`_write_layout`) — cost proportional to the batch, never a
+        rebuild. This is how IVF indexes absorb a streaming/daily ingest at
+        100 TB: the centroid geometry drifts only when the data
+        distribution does, at which point a scheduled build() retrains
+        (same trade Milvus/FAISS make — add() assigns, re-train is an
+        explicit operation). Readers pick up new files on their next
+        listing of ``data/``; a search mid-append sees complete old files.
+        An index in the older per-cell layout needs compact() first."""
         cents = self.centroids  # loads the persisted artifact if needed
         assigned = df.withColumn(
             "centroid_id",
@@ -451,16 +492,8 @@ class IVFIndex:
         if "__pqr" in existing_cols:
             cb = self.spark.read.parquet(f"{self.path}/pq_codebook")
             n_subs = cb.agg(F.max("sub")).head()[0] + 1
-            cents_df = local_rows_df(
-                self.spark,
-                [
-                    (int(i), [float(x) for x in cents[i]])
-                    for i in range(cents.shape[0])
-                ],
-                "centroid_id int, centroid array<double>",
-            )
             assigned = _with_pq_codes(
-                assigned.join(F.broadcast(cents_df), "centroid_id")
+                assigned.join(F.broadcast(self._centroids_df(cents)), "centroid_id")
                 .withColumn(
                     "__res",
                     F.zip_with(
@@ -473,41 +506,16 @@ class IVFIndex:
                 cb, n_subs=n_subs, id_col=pq_id_col, emb_col="__res",
                 out_col="__pqr",
             ).drop(emb_col)
-        assigned.repartition("centroid_id").write.mode("append").partitionBy(
-            "centroid_id"
-        ).parquet(f"{self.path}/data")
+        self._write_layout(assigned, f"{self.path}/data", "append")
         return self
 
     @property
     def schema(self) -> StructType:
         """The layout's read schema: stored columns, then ``centroid_id``.
-        Fixed by build(); a reopened handle reads it once, from one cell's
-        footer."""
+        Fixed by build(); a reopened handle reads it once, from ``data/``."""
         if self._schema is None:
-            cells = self._cell_ids("*")
-            if not cells:
-                raise ValueError(f"IVF index at {self.path} has no data cells")
-            cell = self.spark.read.parquet(self._cell_path(cells[0])).schema
-            self._schema = StructType(
-                cell.fields + [StructField("centroid_id", IntegerType(), True)]
-            )
+            self._schema = self.spark.read.parquet(f"{self.path}/data").schema
         return self._schema
-
-    def _cell_path(self, cid: int) -> str:
-        return f"{self.path}/data/centroid_id={cid}"
-
-    def _cell_ids(self, ids: str) -> list[int]:
-        """The ids of the cells that exist now among the glob ``ids``
-        (``"*"``, or ``"{3,17}"``): one driver-side listing of ``data/``
-        (no Spark job), filtered JVM-side by dir name, so the py4j cost
-        follows the matches, not nlist."""
-        fs_pkg = self.spark._jvm.org.apache.hadoop.fs
-        data = fs_pkg.Path(f"{self.path}/data")
-        fs = data.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        hits = fs.listStatus(data, fs_pkg.GlobFilter(f"centroid_id={ids}"))
-        return sorted(
-            int(p.getName().split("=", 1)[1]) for p in fs_pkg.FileUtil.stat2Paths(hits)
-        )
 
     @property
     def centroids(self) -> np.ndarray:
@@ -540,16 +548,17 @@ class IVFIndex:
         return [int(i) for i in order[:nprobe]]
 
     def compact(self) -> tuple[int, int]:
-        """Rewrite the data layout back to ~one file per centroid.
+        """Rewrite the data layout as one sorted file set.
 
-        Daily ``add()`` batches append one file per centroid per batch —
-        after N ingests a probe reads N files per probed partition and scan
-        setup starts to dominate. Compaction is one shuffle on the layout
-        key, swapped in over ``data/`` by
-        :func:`~vectordb_etl_spark.store.collections.replace_dir` (which
-        also restores a ``data/`` left aside by a crashed compaction).
-        Quantized (sq8) layouts compact as-is — codes are never decoded.
-        Returns (files_before, files_after)."""
+        Each ``add()`` batch appends its own sorted file set — after N
+        ingests a probe opens N times the footers and scan setup starts
+        to dominate. Compaction is one sort on the layout key
+        (:meth:`_write_layout`) into the staging directory of
+        :func:`~vectordb_etl_spark.store.collections.replace_dir`, swapped
+        in over ``data/`` (which also restores a ``data/`` left aside by a
+        crashed compaction). It also converts an index in the older
+        per-cell directory layout. Quantized layouts compact as-is — codes
+        are never decoded. Returns (files_before, files_after)."""
         from vectordb_etl_spark.store.collections import replace_dir
 
         data = f"{self.path}/data"
@@ -557,18 +566,11 @@ class IVFIndex:
         fs = jdata.getFileSystem(self.spark._jsc.hadoopConfiguration())
 
         def _count_files() -> int:
-            it = fs.listFiles(jdata, True)
-            n = 0
-            while it.hasNext():
-                it.next()
-                n += 1
-            return n
+            return fs.getContentSummary(jdata).getFileCount()
 
         with replace_dir(self.spark, data) as (staging, _exists):
             before = _count_files()
-            self._scan().repartition("centroid_id").write.mode(
-                "overwrite"
-            ).partitionBy("centroid_id").parquet(staging)
+            self._write_layout(self._scan(), staging, "overwrite")
         return before, _count_files()
 
     # above this many doubles (K·d), the codebook stops being a plan
@@ -583,8 +585,8 @@ class IVFIndex:
         """Codeword-concatenation reconstruction for a PQ codes column.
         Small codebooks inline as a literal (pure column expression —
         keeps the serve path 100% JVM); large ones reconstruct via
-        :func:`pq_reconstruct_udf`. Either way the partition filter still
-        prunes the scan underneath the projection, and ``dot(q,
+        :func:`pq_reconstruct_udf`. Either way the probe filter still
+        reaches the scan underneath the projection, and ``dot(q,
         reconstruction)`` is exactly the ADC score."""
         cb_df = self.spark.read.parquet(f"{self.path}/pq_codebook")
         by_sub: dict[int, dict[int, list[float]]] = {}
@@ -660,24 +662,14 @@ class IVFIndex:
         )
 
     def _scan(self, probes: list[int] | None = None) -> DataFrame:
-        """The stored layout, read with the handle's schema (no inference
-        job). With ``probes``, only the probed cells that exist are listed
-        and read, under ``basePath`` so ``centroid_id`` stays a partition
-        column, and the ``centroid_id IN (probes)`` filter on top keeps the
-        pruning visible as a PartitionFilter. No existing probed cell
-        gives an empty frame."""
-        reader = self.spark.read.schema(self.schema)
+        """The stored layout, read from its one root path with the
+        handle's schema (no inference or listing job). With ``probes``,
+        the ``centroid_id IN (probes)`` filter is pushed to the parquet
+        scan, whose row-group statistics skip the unprobed cells (over the
+        older per-cell layout it is a partition filter instead)."""
+        df = self.spark.read.schema(self.schema).parquet(f"{self.path}/data")
         if probes is None:
-            return reader.parquet(f"{self.path}/data")
-        ids = ",".join(str(c) for c in sorted(set(probes)))
-        cells = self._cell_ids("{%s}" % ids) if probes else []
-        df = (
-            reader.option("basePath", f"{self.path}/data").parquet(
-                *[self._cell_path(c) for c in cells]
-            )
-            if cells
-            else self.spark.createDataFrame([], self.schema)
-        )
+            return df
         return df.filter(F.col("centroid_id").isin(list(probes)))
 
     def _read_data(self, probes: list[int] | None = None) -> DataFrame:
@@ -688,8 +680,8 @@ class IVFIndex:
         against the codebook (literal expression at test dims, Arrow
         gather UDF at prod dims — see :meth:`_pq_recon_col`); residual-PQ
         storage adds the assigned centroid back on top of the residual
-        reconstruction (centroids join BROADCAST on the partition key, so
-        pruning still reaches the scan)."""
+        reconstruction (centroids join BROADCAST on the layout key, so the
+        probe filter still reaches the scan)."""
         df = self._scan(probes)
         if "__sq8" in df.columns:
             from vectordb_etl_spark.functions.vector import sq8_dequantize_col
@@ -725,14 +717,12 @@ class IVFIndex:
     ) -> DataFrame:
         """Probe top-nprobe clusters, exact top-k inside them.
 
-        Only the probed cells are listed and read: one driver-side listing
-        of ``data/`` picks the probed ``centroid_id=`` dirs that exist, and
-        rows appended since the last search are seen. With the handle's
-        schema and nprobe ≤ 32 (Spark's parallel-listing threshold) the
-        search runs no schema or listing job. The ``centroid_id IN (...)``
-        filter on top stays a partition filter (verify via explain:
-        PartitionFilters). A probe set with no existing cell returns an
-        empty frame."""
+        The ``centroid_id IN (probes)`` filter is pushed to the parquet
+        scan (verify via explain: PushedFilters), whose row-group
+        statistics skip the unprobed cells. With the handle's schema the
+        search runs no schema or listing job, and rows appended since the
+        last search are seen. A probe set whose cells hold no rows returns
+        an empty frame."""
         probes = self.probe_ids(query, nprobe, round_dp=probe_round_dp)
         df = self._read_data(probes)
         return topk_search(
@@ -751,9 +741,9 @@ class IVFIndex:
     ) -> DataFrame:
         """Q2 THROUGH the index tier: per-group top-k hit lists (the
         reference's multi-collection fan-out, milvus_store.py:301-325)
-        over ONE partition-pruned probe scan — the ``centroid_id IN
-        (probes)`` partition filter and the per-group window rank stack
-        on the same read, so fan-out costs one pruned scan + one
+        over ONE probe scan — the pushed ``centroid_id IN (probes)``
+        filter and the per-group window rank stack on the same read, so
+        fan-out costs one pruned scan + one
         group-keyed shuffle, never one scan per collection. With
         ``nprobe >= nlist`` (probe-all) the result provably equals the
         exact per-group top-k — the registered ``ivf_fanout_topk``

@@ -161,7 +161,7 @@ def search_with_scores(
         else:
             kwargs["nprobe"] = nprobe
             # explicit user-facing projection: aligns the indexed side
-            # (whose stored rows carry the centroid_id partition key)
+            # (whose stored rows carry the centroid_id layout key)
             # with the exact-fallback side for the union, and prunes the
             # embedding column out of the merge shuffle
             kwargs["output_cols"] = [
@@ -195,7 +195,7 @@ def search_with_scores(
         text = d.pop("text", "")
         score = d.pop("score")
         d.pop("embedding", None)
-        d.pop("centroid_id", None)  # IVF partition key, not user metadata
+        d.pop("centroid_id", None)  # IVF layout key, not user metadata
         # dynamic fields surface as top-level metadata keys, exactly like
         # Milvus returns $meta contents flattened into the hit entity;
         # typed columns win on name collision

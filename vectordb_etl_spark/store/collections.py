@@ -587,8 +587,9 @@ class CollectionStore:
         Whether a collection has an index is one status call on its
         commit marker, and handles come from the store's memo
         (:meth:`open_index`), so a warm search runs no listing or schema
-        job: an IVF probe lists ``data/`` once per index and reads only
-        the probed cells."""
+        job: an IVF probe reads each index's ``data/`` from one root path,
+        and its pushed ``centroid_id`` filter skips the row groups of the
+        unprobed cells."""
         from vectordb_etl_spark.operators.topk import topk_search
 
         if kind not in ("ivf", "graph"):

@@ -468,14 +468,14 @@ def ivf_ingest_stream(
 ) -> DataStreamWriter:
     """Continuous ANN-index maintenance: each micro-batch of vectors is
     assigned against the index's EXISTING centroid geometry and appended
-    into the partition layout via ``IVFIndex.add`` — a foreachBatch sink
+    to its sorted layout via ``IVFIndex.add`` — a foreachBatch sink
     reusing the batch path, so storage-tier encoding (flat/SQ8/PQ/
-    residual-PQ, against the PERSISTED codebook) and the
-    one-file-per-centroid layout rules are shared, not duplicated.
+    residual-PQ, against the PERSISTED codebook) and the layout's one
+    writer (``IVFIndex._write_layout``) are shared, not duplicated.
 
     This is how an IVF index absorbs a live embedding firehose at 100 TB:
-    per-batch cost ∝ batch (one assignment UDF pass + one partitioned
-    append); readers pick up new files on their next partition listing;
+    per-batch cost ∝ batch (one assignment UDF pass + one sorted
+    append); readers pick up new files on their next listing of ``data/``;
     centroid retraining stays an explicit scheduled build() exactly as in
     the batch contract (add() never moves geometry). Searches mid-stream
     see complete old files only."""
