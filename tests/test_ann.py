@@ -35,6 +35,13 @@ def query_vec(embeddings_tiny):
     return list(embeddings_tiny.filter(F.col("vec_id") == 7).head()["embedding"])
 
 
+def test_probe_filter_of_no_cells_selects_nothing(ivf):
+    """An empty probe set plans (``IN ()`` does not parse) and reads no
+    rows, while every cell probed reads the whole index."""
+    assert ivf._read_data([]).count() == 0
+    assert ivf._read_data(list(range(16))).count() == ivf._read_data().count()
+
+
 def _exact_ids(embeddings_tiny, q, k=10):
     return [
         r["vec_id"]

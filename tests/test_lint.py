@@ -223,9 +223,36 @@ def test_ivf_layout_has_one_writer():
     assert not offenders, f"IVF layout written outside _write_layout: {offenders}"
 
 
+def test_store_data_dir_has_one_reader():
+    """The store's schema memo sits in ``CollectionStore.read``: in
+    ``store/collections.py`` only that method reads the data directory
+    (``spark.read…parquet(self._data_dir)``), so no read path skips the
+    memo. Writes to it and reads of one collection's directory stay
+    allowed."""
+    import ast
+
+    tree = ast.parse((PKG / "store" / "collections.py").read_text())
+    offenders = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef) or fn.name == "read":
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("parquet", "load")
+                and ".write" not in ast.unparse(node.func.value)
+                and any(
+                    ast.unparse(a) == "self._data_dir" for a in node.args
+                )
+            ):
+                offenders.append(f"collections.py:{node.lineno} ({fn.name})")
+    assert not offenders, f"data dir read outside CollectionStore.read: {offenders}"
+
+
 def test_pipeline_stages_do_not_reread_their_checkpoints():
     """A stage counts its checkpoint while writing it
-    (``pipeline._write_counted``): no function in ``pipeline.py`` reads
+    (``write_counted``): no function in ``pipeline.py`` reads
     back a path it wrote, so no ``read.parquet(...).count()`` re-read."""
     import ast
 

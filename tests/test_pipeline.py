@@ -112,7 +112,7 @@ def test_stage_checkpoint_is_counted_by_its_own_write(runner, monkeypatch):
         df.write.mode("overwrite").parquet(path)
         return runner.spark.read.parquet(path).count()
 
-    monkeypatch.setattr(pipeline, "_write_counted", write_then_reread)
+    monkeypatch.setattr(pipeline, "write_counted", write_then_reread)
     reread, reread_jobs = jobs_of_transform("transform-reread")
     assert reread.rows == counted.rows
     assert reread_jobs - counted_jobs == 3, (reread_jobs, counted_jobs)

@@ -481,6 +481,59 @@ def test_upsert_merges_by_key_and_leaves_other_collections(spark, tmp_path):
     assert after_f2 == before_f2  # other collection byte-identical
 
 
+def _jobs_of(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_upsert_counts_each_collection_from_its_own_write(
+    spark, tmp_path, monkeypatch
+):
+    """An upsert counts each rewritten collection with an observation on
+    its staging write. The counts equal a read-back of the data, the
+    observation adds no job to the write, and the read-back it replaces
+    costs 3 jobs per collection (a schema job, and a count that adaptive
+    execution runs as two), so an upsert touching N collections runs 3N
+    fewer jobs than writing and then reading back to count."""
+    from vectordb_etl_spark.store import collections
+
+    store = _ivf_store(spark, tmp_path / "w", 30, 3)
+    # materialized: each upsert replaces the files this batch comes from
+    batch = (
+        store.read().filter(F.col("doc_id") < 6).drop("collection").localCheckpoint()
+    )
+    names = store.list_collections()
+    n = len(names)
+    assert n == 3
+
+    def upsert():
+        return store.upsert_documents(batch, key_col="doc_id", embed=False)
+
+    upsert()  # warm
+    counts, counted_jobs = _jobs_of(spark, "upsert-counted", upsert)
+    readback, readback_jobs = _jobs_of(spark, "upsert-readback", lambda: {
+        name: spark.read.parquet(f"{store._data_dir}/collection={name}").count()
+        for name in names
+    })
+    assert counts == readback == {name: 10 for name in names}
+    assert readback_jobs == 3 * n, readback_jobs
+
+    def write_uncounted(df, path):
+        df.write.mode("overwrite").parquet(path)
+        return 0
+
+    monkeypatch.setattr(collections, "write_counted", write_uncounted)
+    _, uncounted_jobs = _jobs_of(spark, "upsert-uncounted", upsert)
+    assert counted_jobs == uncounted_jobs, (counted_jobs, uncounted_jobs)
+
+
 def test_hybrid_rrf_fuses_keyword_and_vector(spark):
     import pyspark.sql.functions as F
 
@@ -1198,6 +1251,132 @@ def test_warm_graph_fanout_runs_at_most_three_jobs(spark, tmp_path):
     assert len(hits) == 3
     jobs = sc.statusTracker().getJobIdsForGroup("warm-graph-fanout")
     assert 1 <= len(jobs) <= 3, jobs
+
+
+def test_warm_searches_run_no_schema_job(spark, tmp_path):
+    """The facade reads the store under its remembered schema, so no warm
+    search runs a schema-inference job: on a 4-collection store with IVF
+    and graph indexes, a warm exact search, a warm filtered one and a
+    warm IVF fan-out run 1 Spark job each, a warm graph fan-out at most
+    2 (one per shard stage, then the merge)."""
+    store = _ivf_store(spark, tmp_path / "w", 4 * 30, 4)
+    names = store.list_collections()
+    assert len(names) == 4
+    for n in names:
+        store.build_index(n, kind="ivf", nlist=8, max_iter=3)
+        store.build_index(n, kind="graph", id_col="doc_id", num_shards=2,
+                          m=4, ef_construction=20)
+    q = "document number 5 about 5 and 10"
+    for kind, kwargs, most in (
+        ("exact", {}, 1),
+        ("filtered", {"filter": 'language == "english"'}, 1),
+        ("ivf", {"index_kind": "ivf", "nprobe": 4}, 1),
+        ("graph", {"index_kind": "graph", "ef": 10}, 2),
+    ):
+        def run(kwargs=kwargs):
+            return search_with_scores(store, q, k=3, embedding_config=EMB, **kwargs)
+
+        run()  # warm
+        hits, jobs = _jobs_of(spark, f"warm-{kind}-search", run)
+        assert len(hits) == 3, kind
+        assert 1 <= jobs <= most, (kind, jobs)
+
+
+def _assert_read_is_fresh(spark, store):
+    """The store's read has the schema and the rows of a fresh inference
+    over its data directory."""
+    got = store.read()
+    fresh = spark.read.parquet(store._data_dir)
+    assert got.schema == fresh.schema
+    assert got.count() == fresh.count()
+    return got.schema
+
+
+def test_read_schema_follows_every_write(spark, docs_tiny, tmp_path):
+    """The remembered schema is dropped whenever the data directory's
+    files change: after an insert adding a typed column, an outside
+    append with an extra column, an upsert, a drop and a reset, the
+    store reads what a fresh inference reads. An emptied or reset store
+    raises as an inference does."""
+    from pyspark.errors import AnalysisException
+
+    store = CollectionStore(
+        spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
+    )
+    docs = _f1_docs(docs_tiny, 6)
+    store.insert_documents(docs, embedding_config=EMB)
+    first = _assert_read_is_fresh(spark, store)
+    assert "rank" not in first.fieldNames()
+
+    store.insert_documents(
+        docs.withColumn("folder_name", F.lit("f2")).withColumn("rank", F.lit(3)),
+        embedding_config=EMB,
+    )
+    _assert_read_is_fresh(spark, store)
+
+    with_embeddings(docs.limit(2), config=EMB).withColumn(
+        "tag", F.lit("outside")
+    ).write.mode("append").parquet(f"{store._data_dir}/collection=html_f1")
+    _assert_read_is_fresh(spark, store)
+
+    # the upsert rewrites html_f1 whole, so every file there has `score2`
+    store.upsert_documents(
+        docs.limit(3).withColumn("score2", F.lit(0.5)), key_col="doc_id",
+        embedding_config=EMB,
+    )
+    _assert_read_is_fresh(spark, store)
+
+    store.drop_collection("html_f2")
+    assert "score2" in _assert_read_is_fresh(spark, store).fieldNames()
+
+    store.reset(confirm=True)
+    with pytest.raises(AnalysisException):
+        store.read()
+    store.insert_documents(
+        docs.drop("language").withColumn("lang2", F.lit("en")),
+        embedding_config=EMB,
+    )
+    again = _assert_read_is_fresh(spark, store)
+    assert "lang2" in again.fieldNames() and "language" not in again.fieldNames()
+
+    store.drop_collection("html_f1")
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        store.read()
+
+
+def test_concurrent_reads_share_one_schema(spark, docs_tiny, tmp_path):
+    """Two threads reading at once, right after a write changed the data
+    directory, both get the schema a fresh inference gives."""
+    import threading
+
+    store = CollectionStore(
+        spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
+    )
+    docs = _f1_docs(docs_tiny, 4)
+    store.insert_documents(docs, embedding_config=EMB)
+    for i in range(3):
+        # each round replaces html_f1 with a batch one column wider
+        store.upsert_documents(
+            docs.withColumn(f"extra{i}", F.lit(i)), key_col="doc_id",
+            embedding_config=EMB,
+        )
+        fresh = spark.read.parquet(store._data_dir).schema
+        start = threading.Barrier(2)
+        got = []
+
+        def _read():
+            start.wait(timeout=60)
+            for _ in range(3):
+                got.append(store.read().schema)
+
+        threads = [threading.Thread(target=_read) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert len(got) == 6 and all(g == fresh for g in got), i
+        assert f"extra{i}" in fresh.fieldNames()
 
 
 def test_open_index_shares_one_handle_across_concurrent_callers(

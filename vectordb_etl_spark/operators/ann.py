@@ -670,7 +670,10 @@ class IVFIndex:
         df = self.spark.read.schema(self.schema).parquet(f"{self.path}/data")
         if probes is None:
             return df
-        return df.filter(F.col("centroid_id").isin(list(probes)))
+        # one parsed expression, not one py4j literal per probe; an empty
+        # probe set selects nothing (``IN ()`` does not parse)
+        ids = ",".join(str(int(p)) for p in probes)
+        return df.filter(F.expr(f"centroid_id IN ({ids})") if ids else F.lit(False))
 
     def _read_data(self, probes: list[int] | None = None) -> DataFrame:
         """The indexed table (only the ``probes`` cells, when given — see

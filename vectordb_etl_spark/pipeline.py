@@ -25,23 +25,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_etl_spark.config import PipelineConfig
 from vectordb_etl_spark.operators import chunker
-from vectordb_etl_spark.store.collections import CollectionStore
-
-
-def _write_counted(df: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``df`` as parquet and return the rows written,
-    counted by an observation on the write itself: one job, where reading
-    the checkpoint back to count it would run three more."""
-    rows = Observation()
-    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return rows.get["rows"]
+from vectordb_etl_spark.store.collections import CollectionStore, write_counted
 
 
 @dataclass
@@ -86,13 +75,13 @@ class PipelineRunner:
         root = input_dir or self.config.input_dir
         loader = load_html_documents if kind == "html" else load_hwp_documents
         docs = loader(self.spark, root)
-        n = _write_counted(docs, self.documents_path)
+        n = write_counted(docs, self.documents_path)
         return StageResult("extract", n, time.time() - t0, self.documents_path)
 
     def extract_dataframe(self, docs: DataFrame) -> StageResult:
         """Extract from an already-loaded DataFrame (driver testdata path)."""
         t0 = time.time()
-        n = _write_counted(docs, self.documents_path)
+        n = write_counted(docs, self.documents_path)
         return StageResult("extract", n, time.time() - t0, self.documents_path)
 
     # -- transform (main.py:99-137) ------------------------------------------
@@ -109,7 +98,7 @@ class PipelineRunner:
         deduped = chunker.remove_duplicate_chunks(
             chunks, order_cols=["doc_id", "chunk_index"]
         )
-        n = _write_counted(deduped, self.chunks_path)
+        n = write_counted(deduped, self.chunks_path)
         return StageResult("transform", n, time.time() - t0, self.chunks_path)
 
     # -- curate (beyond-reference; functions/curation.py, operators/dedup.py) --
@@ -192,7 +181,7 @@ class PipelineRunner:
                 chunks, id_col="chunk_id", strata_col=strata_col,
                 fractions=sample_fractions,
             )
-        n = _write_counted(chunks, self.curated_path)
+        n = write_counted(chunks, self.curated_path)
         extra["removed_rows"] = extra["input_rows"] - n
         return StageResult("curate", n, time.time() - t0, self.curated_path, extra)
 

@@ -94,14 +94,15 @@ def search_with_scores(
         raise ValueError(
             f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
         )
-    # ONE store read for the whole call (each read is a listing plus a
-    # schema job): its columns feed the filter parse, the graph
-    # output_cols probe and the IVF projection, and the exact path scans
-    # it. ``merge_schema=True`` unions footers: needed on warehouses
-    # mixing pre-`meta` and dynamic-meta batches, where the default
-    # single-footer schema can hide the `meta` column from the filter
-    # resolver, the output projection and a dynamic-field predicate (see
-    # CollectionStore.read).
+    # ONE store read for the whole call: a listing of the data directory
+    # under the store's remembered schema, so while the directory holds
+    # the same files it runs no schema job (CollectionStore.read). Its
+    # columns feed the filter parse, the graph output_cols probe and the
+    # IVF projection, and the exact path scans it. ``merge_schema=True``
+    # unions footers on every call: needed on warehouses mixing pre-`meta`
+    # and dynamic-meta batches, where the default single-footer schema
+    # can hide the `meta` column from the filter resolver, the output
+    # projection and a dynamic-field predicate.
     base = store.read(None, merge_schema=merge_schema)
     data_cols = base.columns
     # a blank filter string parses to None and must behave like "no filter

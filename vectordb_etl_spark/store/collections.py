@@ -27,8 +27,9 @@ from contextlib import contextmanager
 from functools import reduce
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import with_embeddings
@@ -126,6 +127,18 @@ def checked_delete(fs, path, recursive: bool = True) -> None:
         raise IOError(f"delete failed: {path}")
 
 
+def write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet and return the rows written,
+    counted by an observation on the write itself: one job, where reading
+    the output back to count it runs three more (a schema job, and a
+    count that adaptive execution runs as two)."""
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return rows.get["rows"]
+
+
 # work-dir naming rule of replace_dir: the siblings of <parent>/<leaf> are
 # <parent>/.staging-<leaf> (new contents) and <parent>/.old-<leaf> (aside)
 _STAGING, _ASIDE = ".staging-", ".old-"
@@ -180,6 +193,11 @@ class CollectionStore:
         # threads share one handle per index version
         self._indexes: dict[tuple[str, str], tuple[int | None, object]] = {}
         self._indexes_lock = threading.Lock()
+        # (file list of the data directory, schema inferred from it) —
+        # see read(); the JVM class that joins a file list is resolved
+        # once here, not with four py4j lookups per read
+        self._schema: tuple[str, StructType] | None = None
+        self._array_seq = spark._jvm.scala.collection.immutable.ArraySeq  # noqa: SLF001
 
     @property
     def _root(self) -> str:
@@ -424,7 +442,8 @@ class CollectionStore:
         untouched. Parquet has no MERGE, so the affected collections are
         rewritten as (existing ANTI-JOIN new) ∪ new and swapped in by
         :func:`replace_dir` (crash restore and reader guarantees are
-        documented there). Cost scales with the AFFECTED
+        documented there). Each count is taken from the staging write
+        itself (:func:`write_counted`). Cost scales with the AFFECTED
         collections only (partition pruning on the read), not the
         warehouse; at 100 TB keep collections sized so a rewrite is an
         acceptable unit of work (this is the classic copy-on-write merge,
@@ -454,8 +473,7 @@ class CollectionStore:
                         new_part.select(key_col), key_col, "left_anti"
                     )
                     merged = keep.unionByName(new_part, allowMissingColumns=True)
-                merged.write.mode("overwrite").parquet(staging)
-            counts[name] = self.spark.read.parquet(part_dir).count()
+                counts[name] = write_counted(merged, staging)
         return counts
 
     # -- scans ---------------------------------------------------------------
@@ -465,20 +483,51 @@ class CollectionStore:
     ) -> DataFrame:
         """Scan one collection (partition-pruned) or all (fan-out).
 
+        The store remembers one pair: the file list of the data directory
+        and the schema inferred from it. A read lists the directory under
+        the remembered schema, which runs no Spark job, and keeps that
+        frame when its file list equals the remembered one; otherwise it
+        infers the schema as Spark always does (a one-task footer job)
+        and remembers the new pair. The result is exact: without
+        ``mergeSchema`` Spark infers from one file of the list (a
+        ``_common_metadata``/``_metadata`` summary first, else the first
+        data file), and no writer rewrites a part file in place — every
+        write and every :func:`replace_dir` swap makes new part-file
+        names — so the same list yields the same schema. A store whose
+        data directory is gone or empty raises as before.
+
         ``merge_schema=True`` unions footers across files — needed ONLY
         when collections were written with heterogeneous columns (e.g. a
         warehouse mixing pre-`meta` and dynamic-meta batches: the default
-        single-footer schema can silently hide the `meta` column). Off by
-        default: footer union is an extra metadata pass that a
+        single-footer schema can silently hide the `meta` column). It
+        infers on every call and does not touch the remembered pair. Off
+        by default: footer union is an extra metadata pass that a
         consistently-written warehouse never needs, and at 100 TB file
         counts it is not free."""
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(self._data_dir)
+        # one snapshot of the pair: a concurrent read may replace it, but
+        # never half of it
+        known = None if merge_schema else self._schema
+        if known is not None:
+            df = self.spark.read.schema(known[1]).parquet(self._data_dir)
+            if self._input_files(df) != known[0]:
+                known = None
+        if known is None:
+            reader = self.spark.read
+            if merge_schema:
+                reader = reader.option("mergeSchema", "true")
+            df = reader.parquet(self._data_dir)
+            if not merge_schema:
+                self._schema = (self._input_files(df), df.schema)
         if collection is not None:
             df = df.filter(F.col("collection") == collection)
         return df
+
+    def _input_files(self, df: DataFrame) -> str:
+        """The frame's file list as one string, joined in the JVM: a
+        constant number of py4j calls, where ``df.inputFiles()`` makes one
+        per file."""
+        files = df._jdf.inputFiles()  # noqa: SLF001
+        return self._array_seq.unsafeWrapArray(files).mkString("\n")
 
     def load_collection(self, collection: str | None = None) -> DataFrame:
         """X3 — memory residency ≅ cache() (milvus_store.py:72-76)."""
