@@ -1924,3 +1924,21 @@ def test_cosine_score_col_keeps_the_three_fold_bits(spark):
                     except PySparkException as exc:
                         outcomes.append(type(exc).__name__)
                 assert outcomes[0] == outcomes[1], outcomes
+
+
+def test_ip_index_probes_the_cells_it_assigned(spark, tmp_path):
+    """An IP index assigns rows by raw dot product, so its probe must rank
+    centroids by dot product too: a cosine ranking lets centroid norms
+    send the probe to a cell no row was assigned to."""
+    import numpy as np
+
+    rows = [(0, [1.0, 0.2]), (1, [0.9, -0.5]), (2, [2.5, 3.5])]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    idx = IVFIndex(spark, str(tmp_path / "ip"), metric="IP").build(
+        df, centroids=np.array([[1.0, 0.0], [3.0, 3.0]])
+    )
+    assigned = {r["centroid_id"] for r in idx._read_data().collect()}
+    assert assigned == {1}
+    assert idx.probe_ids([1.0, 0.2], 1) == [1]
+    top = idx.search([1.0, 0.2], k=3, nprobe=1, tie_break=["vec_id"]).collect()
+    assert [r["vec_id"] for r in top] == [2, 0, 1]

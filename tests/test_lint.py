@@ -225,29 +225,72 @@ def test_ivf_layout_has_one_writer():
 
 def test_store_data_dir_has_one_reader():
     """The store's schema memo sits in ``CollectionStore.read``: in
-    ``store/collections.py`` only that method reads the data directory
-    (``spark.read…parquet(self._data_dir)``), so no read path skips the
-    memo. Writes to it and reads of one collection's directory stay
-    allowed."""
+    ``store/collections.py`` and ``store/layout.py`` only that method
+    reads the data directory or a collection's directory in it (a
+    ``…parquet``/``load`` call on a path built from ``_data_dir``, given
+    directly or through a local name), so no read path skips the memo.
+    Writes to those directories stay allowed."""
     import ast
 
-    tree = ast.parse((PKG / "store" / "collections.py").read_text())
     offenders = []
-    for fn in ast.walk(tree):
-        if not isinstance(fn, ast.FunctionDef) or fn.name == "read":
+    for name in ("collections.py", "layout.py"):
+        tree = ast.parse((PKG / "store" / name).read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or fn.name == "read":
+                continue
+            paths = {
+                t.id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign)
+                and "_data_dir" in ast.unparse(node.value)
+                for t in node.targets
+                if isinstance(t, ast.Name)
+            }
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("parquet", "load")
+                    and ".write" not in ast.unparse(node.func.value)
+                    and any(
+                        "_data_dir" in ast.unparse(a) or ast.unparse(a) in paths
+                        for a in node.args
+                    )
+                ):
+                    offenders.append(f"{name}:{node.lineno} ({fn.name})")
+    assert not offenders, f"store data read outside CollectionStore.read: {offenders}"
+
+
+def test_every_config_field_is_read():
+    """Every field of a config dataclass in ``config.py`` is read as an
+    attribute somewhere else in the package (a call of a method with the
+    same name does not count): a field that nothing reads is a setting
+    that silently does nothing."""
+    import ast
+
+    tree = ast.parse((PKG / "config.py").read_text())
+    fields = {
+        f"{cls.name}.{node.target.id}": node.target.id
+        for cls in tree.body
+        if isinstance(cls, ast.ClassDef)
+        for node in cls.body
+        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name)
+    }
+    read = set()
+    for path in PKG.rglob("*.py"):
+        if path == PKG / "config.py":
             continue
-        for node in ast.walk(fn):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("parquet", "load")
-                and ".write" not in ast.unparse(node.func.value)
-                and any(
-                    ast.unparse(a) == "self._data_dir" for a in node.args
-                )
-            ):
-                offenders.append(f"collections.py:{node.lineno} ({fn.name})")
-    assert not offenders, f"data dir read outside CollectionStore.read: {offenders}"
+        t = ast.parse(path.read_text())
+        called = {id(n.func) for n in ast.walk(t) if isinstance(n, ast.Call)}
+        read |= {
+            n.attr
+            for n in ast.walk(t)
+            if isinstance(n, ast.Attribute)
+            and isinstance(n.ctx, ast.Load)
+            and id(n) not in called
+        }
+    unread = sorted(f for f, attr in fields.items() if attr not in read)
+    assert not unread, f"config fields nothing reads: {unread}"
 
 
 def test_pipeline_stages_do_not_reread_their_checkpoints():

@@ -534,6 +534,75 @@ def test_upsert_counts_each_collection_from_its_own_write(
     assert counted_jobs == uncounted_jobs, (counted_jobs, uncounted_jobs)
 
 
+def test_warm_upsert_reads_the_store_without_a_job(spark, tmp_path, monkeypatch):
+    """A warm upsert reads the rows it keeps from one listing of the
+    store under the remembered schema: outside its staging writes it
+    runs only the job that finds the affected collections, where a
+    per-collection read costs one schema job per collection."""
+    from vectordb_etl_spark.store import collections
+
+    store = _ivf_store(spark, tmp_path / "w", 30, 3)
+    batch = (
+        store.read().filter(F.col("doc_id") < 6).drop("collection").localCheckpoint()
+    )
+    names = store.list_collections()
+    n = len(names)
+    assert n == 3
+    sc = spark.sparkContext
+    write_counted = collections.write_counted
+
+    def write_in_own_group(df, path):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup("upsert-writes", "job-count pin")
+        try:
+            return write_counted(df, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+
+    monkeypatch.setattr(collections, "write_counted", write_in_own_group)
+
+    def upsert():
+        return store.upsert_documents(batch, key_col="doc_id", embed=False)
+
+    upsert()
+    store.read()  # as a search between upserts does
+    counts, rest_jobs = _jobs_of(spark, "upsert-rest", upsert)
+    assert counts == {name: 10 for name in names}
+    _, affected_jobs = _jobs_of(spark, "upsert-affected", lambda: (
+        store._tag_batch(batch, True, "folder_name", False)
+        .select("collection").distinct().collect()
+    ))
+    assert rest_jobs == affected_jobs, (rest_jobs, affected_jobs)
+    _, read_jobs = _jobs_of(spark, "per-collection-read", lambda: [
+        spark.read.parquet(f"{store._data_dir}/collection={name}")
+        for name in names
+    ])
+    assert read_jobs == n
+
+
+def test_multi_collection_upsert_restores_every_crashed_swap(spark, tmp_path):
+    """An upsert over several collections reads the store once, but a
+    collection whose crashed swap it restores after that read is read
+    again, so its old rows survive. Two crashed collections make one of
+    them come after the read in any order the upsert takes."""
+    store = _ivf_store(spark, tmp_path / "w", 30, 3)
+    fs = store._fs(store._data_dir)
+    for name in ("html_f1", "html_f2"):
+        assert fs.rename(
+            store._jpath(f"{store._data_dir}/collection={name}"),
+            store._jpath(f"{store._data_dir}/.old-collection={name}"),
+        )
+    batch = spark.createDataFrame(
+        [(i, "s", f"f{i % 3}", f"new text {i}", "english", 0) for i in range(3)],
+        ["doc_id", "source", "folder_name", "text", "language", "chunk_index"],
+    )
+    counts = store.upsert_documents(batch, key_col="doc_id", embedding_config=EMB)
+    assert counts == {"html_f0": 10, "html_f1": 10, "html_f2": 10}
+    assert store.collection_stats() == counts
+    new = store.read().filter(F.col("text").startswith("new text")).count()
+    assert new == 3
+
+
 def test_hybrid_rrf_fuses_keyword_and_vector(spark):
     import pyspark.sql.functions as F
 
@@ -826,10 +895,10 @@ def test_dynamic_meta_store_roundtrip_and_facade(spark, docs_tiny, tmp_path):
     assert n8 == 5
 
 
-def test_mixed_schema_warehouse_needs_merge_schema(spark, docs_tiny, tmp_path):
-    """A warehouse mixing pre-meta and dynamic-meta batches: the default
-    read may resolve a footer without `meta`; read(merge_schema=True)
-    must surface it."""
+def test_mixed_schema_warehouse_reads_the_union(spark, docs_tiny, tmp_path):
+    """A warehouse mixing pre-meta and dynamic-meta batches: the store's
+    read surfaces `meta` whichever footer comes first, and so do both
+    exact search paths."""
     store = CollectionStore(
         spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
     )
@@ -843,31 +912,82 @@ def test_mixed_schema_warehouse_needs_merge_schema(spark, docs_tiny, tmp_path):
         .withColumn("batch_tag", F.lit("b7")),
         embedding_config=EMB, dynamic_meta=True,
     )
-    merged = store.read(merge_schema=True)
+    merged = store.read()
     assert "meta" in merged.columns
     tagged = merged.filter(F.col("meta")["batch_tag"] == "b7")
     assert tagged.count() == 5
     # pre-meta rows read back with NULL meta, not an error
     assert merged.filter(F.col("meta").isNull()).count() == 5
 
-    # merge_schema must reach the EXACT search paths too, not just the
-    # facade's schema probe: a dynamic-field filter on this mixed
-    # warehouse through (a) the non-indexed exact path and (b) the
-    # fanout exact fallback (index_kind set, no index built) must both
-    # resolve `meta` and return only the tagged rows
+    # a dynamic-field filter through (a) the non-indexed exact path and
+    # (b) the fanout exact fallback (index_kind set, no index built) must
+    # both resolve `meta` and return only the tagged rows
     exact = search_with_scores(
         store, "query", k=10, embedding_config=EMB,
-        filter='batch_tag == "b7"', merge_schema=True,
+        filter='batch_tag == "b7"',
     )
     assert len(exact) == 5
     assert all(h.metadata["batch_tag"] == "b7" for h in exact)
     fb = search_with_scores(
         store, "query", k=10, embedding_config=EMB,
-        filter='batch_tag == "b7"', merge_schema=True, index_kind="ivf",
+        filter='batch_tag == "b7"', index_kind="ivf",
     )
     assert [h.metadata.get("doc_id") for h in fb] == [
         h.metadata.get("doc_id") for h in exact
     ]
+
+
+def test_new_typed_column_is_filterable_by_the_next_search(
+    spark, docs_tiny, tmp_path
+):
+    """A typed column that a write puts into one collection only, one
+    listed after the older collections, is visible to the next search:
+    its filter resolves and matches only the new rows."""
+    store = CollectionStore(
+        spark, StoreConfig(warehouse_dir=str(tmp_path / "w"))
+    )
+    docs = _f1_docs(docs_tiny, 6)
+    store.insert_documents(
+        docs.withColumn("folder_name", F.lit("m")), embedding_config=EMB
+    )
+    assert search_with_scores(store, "query", k=3, embedding_config=EMB)
+    store.insert_documents(
+        docs.limit(3).withColumn("folder_name", F.lit("z"))
+        .withColumn("rating", F.lit(4)),
+        embedding_config=EMB,
+    )
+    hits = search_with_scores(
+        store, "query", k=10, embedding_config=EMB, filter="rating == 4"
+    )
+    assert len(hits) == 3
+    assert all(
+        h.metadata["collection"] == "html_z" and h.metadata["rating"] == 4
+        for h in hits
+    )
+
+
+def test_l2_store_ranks_every_kind_under_its_metric(spark, tmp_path):
+    """An L2 store's facade ranks by L2 distance whatever the kind: its
+    exact search equals its IVF search with every cell probed, ids and
+    scores, and the scores are distances that ascend."""
+    store = _ivf_store(spark, tmp_path / "w", 40, 2, metric_type="L2")
+    for n in store.list_collections():
+        store.build_index(n, kind="ivf", nlist=4, max_iter=3)
+
+    def run(**kwargs):
+        return [
+            (h.metadata["doc_id"], h.score)
+            for h in search_with_scores(
+                store, "document number 5 about 5 and 10", k=5,
+                embedding_config=EMB, **kwargs,
+            )
+        ]
+
+    exact = run()
+    assert len(exact) == 5
+    assert exact == run(index_kind="ivf", nprobe=4)
+    assert exact[0] == (5, 0.0)
+    assert [s for _, s in exact] == sorted(s for _, s in exact)
 
 
 def test_collection_name_col_empty_folder_matches_python_twin(spark):
@@ -1284,9 +1404,9 @@ def test_warm_searches_run_no_schema_job(spark, tmp_path):
 
 def _assert_read_is_fresh(spark, store):
     """The store's read has the schema and the rows of a fresh inference
-    over its data directory."""
+    of the union of its data directory's footers."""
     got = store.read()
-    fresh = spark.read.parquet(store._data_dir)
+    fresh = spark.read.option("mergeSchema", "true").parquet(store._data_dir)
     assert got.schema == fresh.schema
     assert got.count() == fresh.count()
     return got.schema
@@ -1346,7 +1466,7 @@ def test_read_schema_follows_every_write(spark, docs_tiny, tmp_path):
 
 def test_concurrent_reads_share_one_schema(spark, docs_tiny, tmp_path):
     """Two threads reading at once, right after a write changed the data
-    directory, both get the schema a fresh inference gives."""
+    directory, both get the union schema a fresh inference gives."""
     import threading
 
     store = CollectionStore(
@@ -1360,7 +1480,9 @@ def test_concurrent_reads_share_one_schema(spark, docs_tiny, tmp_path):
             docs.withColumn(f"extra{i}", F.lit(i)), key_col="doc_id",
             embedding_config=EMB,
         )
-        fresh = spark.read.parquet(store._data_dir).schema
+        fresh = (
+            spark.read.option("mergeSchema", "true").parquet(store._data_dir).schema
+        )
         start = threading.Barrier(2)
         got = []
 

@@ -12,7 +12,6 @@ from vectordb_etl_spark.config import (
     ChunkerConfig,
     EmbeddingConfig,
     PipelineConfig,
-    SearchConfig,
     StoreConfig,
 )
 from vectordb_etl_spark.session import _reuse_unchanged_zip_directories, get_spark
@@ -24,7 +23,6 @@ __all__ = [
     "ChunkerConfig",
     "EmbeddingConfig",
     "PipelineConfig",
-    "SearchConfig",
     "StoreConfig",
     "get_spark",
 ]

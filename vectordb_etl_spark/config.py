@@ -34,9 +34,6 @@ class ChunkerConfig:
     # skips the embedding-driven stage (reference fallback, chunker.py:47-63).
     chunking_mode: str = "character_only"
     semantic_breakpoint_percentile: float = 70.0
-    # accepted by the reference but unused there (chunker.py:182-186); we honor
-    # exact-hash dedup for parity and expose near-dup as explicit operators.
-    similarity_threshold: float = 0.95
 
 
 @dataclass
@@ -62,7 +59,9 @@ class StoreConfig:
     warehouse_dir: str = "data/warehouse"
     collection_prefix: str = "html"  # name rule: collection_name() (config.py:37-43)
     metric_type: str = "COSINE"  # COSINE | IP | L2
-    index_type: str = "IVF_FLAT"  # IVF_FLAT | HNSW ('graph' tier) | NONE
+    # what build_index builds: HNSW builds the 'graph' tier; any other
+    # value, NONE included, builds IVF
+    index_type: str = "IVF_FLAT"
     nlist: int = 128
     nprobe: int = 16
     ef_construction: int = 200  # HNSW build beam (reference config.py:26)
@@ -85,14 +84,6 @@ class StoreConfig:
 
 
 @dataclass
-class SearchConfig:
-    """Search defaults (reference: modules/config.py:108, main.py:521-526)."""
-
-    default_k: int = 3
-    search_all_collections: bool = False
-
-
-@dataclass
 class PipelineConfig:
     """Top-level pipeline config (reference: modules/config.py:95-126)."""
 
@@ -101,5 +92,3 @@ class PipelineConfig:
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)
     embedding: EmbeddingConfig = field(default_factory=EmbeddingConfig)
     store: StoreConfig = field(default_factory=StoreConfig)
-    search: SearchConfig = field(default_factory=SearchConfig)
-    min_doc_chars: int = 10  # viability filter (reference hwp_loader.py:338-346)

@@ -35,11 +35,38 @@ from vectordb_etl_spark.operators.topk import topk_search
 from vectordb_etl_spark.session import local_rows_df, partitioned_read_schema
 
 
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """``m`` with each row scaled to unit L2 norm; a zero row stays zero."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def centroid_scores(
+    points: np.ndarray, centroids: np.ndarray, metric: str = "COSINE"
+) -> np.ndarray:
+    """Score each row of ``points`` against each centroid, higher = nearer:
+    negated squared distance for L2, cosine for COSINE, dot product for IP.
+    The one nearest-centroid rule of an IVF index: assignment
+    (:func:`assign_centroids_udf`), probing (:meth:`IVFIndex.probe_ids`)
+    and the residual codebook's sample (:func:`train_pq_codebook_residual`)
+    all rank by it, so a probe visits the cells rows were assigned to."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    up = metric.upper()
+    if up == "L2":
+        # one centroid at a time: an n × dim temporary, not n × nlist × dim
+        return -np.stack(
+            [((points - c) ** 2).sum(axis=1) for c in cents], axis=1
+        )
+    if up == "COSINE":
+        points, cents = _unit_rows(points), _unit_rows(cents)
+    return points @ cents.T
+
+
 def assign_centroids_udf(
     centroids: np.ndarray, metric: str = "COSINE", round_dp: int | None = None
 ):
-    """Vectorized nearest-centroid assignment. ``centroids`` is broadcast in
-    the UDF closure (nlist × dim — a few KB; fine in task binaries).
+    """Vectorized nearest-centroid assignment by :func:`centroid_scores`.
+    ``centroids`` is broadcast in the UDF closure (nlist × dim — a few KB;
+    fine in task binaries).
 
     ``round_dp`` rounds scores before the argmax so the assignment is
     reproducible across engines (numpy BLAS vs a SQL oracle may differ in
@@ -47,28 +74,14 @@ def assign_centroids_udf(
     returns the FIRST maximal index — i.e. ties break to the lowest
     centroid id, matching ``ORDER BY score DESC, cid ASC``."""
     cents = np.asarray(centroids, dtype=np.float64)
-    if metric.upper() in ("COSINE",):
-        norms = np.linalg.norm(cents, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cents = cents / norms
 
     @F.pandas_udf(IntegerType())
     def _assign(embs: pd.Series) -> pd.Series:
         mat = np.stack(embs.to_numpy()).astype(np.float64)
-        if metric.upper() == "L2":
-            # argmin of squared distance
-            d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            if round_dp is not None:
-                d = np.round(d, round_dp)
-            return pd.Series(d.argmin(axis=1).astype(np.int32))
-        if metric.upper() == "COSINE":
-            row_norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            row_norms[row_norms == 0] = 1.0
-            mat = mat / row_norms
-        sims = mat @ cents.T
+        scores = centroid_scores(mat, cents, metric)
         if round_dp is not None:
-            sims = np.round(sims, round_dp)
-        return pd.Series(sims.argmax(axis=1).astype(np.int32))
+            scores = np.round(scores, round_dp)
+        return pd.Series(scores.argmax(axis=1).astype(np.int32))
 
     return _assign
 
@@ -107,13 +120,9 @@ def train_centroids(
     rng = np.random.RandomState(seed)
     cents = mat[rng.choice(mat.shape[0], size=k, replace=False)].copy()
 
-    def _unit(m: np.ndarray) -> np.ndarray:
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        return m / np.maximum(norms, 1e-12)
-
-    pts = _unit(mat) if up == "COSINE" else mat
+    pts = _unit_rows(mat) if up == "COSINE" else mat
     if up == "COSINE":
-        cents = _unit(cents)
+        cents = _unit_rows(cents)
 
     prev = None
     for _ in range(max_iter):
@@ -136,7 +145,7 @@ def train_centroids(
         if empty.any():  # reseed dead clusters to random sample points
             cents[empty] = pts[rng.choice(pts.shape[0], size=int(empty.sum()))]
         if up == "COSINE":  # spherical k-means: centroids live on the sphere
-            cents = _unit(cents)
+            cents = _unit_rows(cents)
     return cents
 
 
@@ -534,14 +543,8 @@ class IVFIndex:
         """Rank centroids on the driver (tiny matrix — no Spark job).
         ``round_dp`` + stable sort ties to the lowest centroid id, matching
         ``ORDER BY score DESC, cid ASC`` in a SQL oracle."""
-        cents = self.centroids
         q = np.asarray(query, dtype=np.float64)
-        if self.metric.upper() == "L2":
-            scores = -((cents - q) ** 2).sum(axis=1)
-        else:
-            cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-            qn = q / max(np.linalg.norm(q), 1e-12)
-            scores = cn @ qn
+        scores = centroid_scores(q[None, :], self.centroids, self.metric)[0]
         if round_dp is not None:
             scores = np.round(scores, round_dp)
         order = np.argsort(-scores, kind="stable")
@@ -1310,19 +1313,7 @@ def train_pq_codebook_residual(
     )
     mat = np.stack(sample.toPandas()[emb_col].to_numpy()).astype(np.float64)
     cents = np.asarray(centroids, dtype=np.float64)
-    up = metric.upper()
-    if up == "COSINE":
-        cn = np.linalg.norm(cents, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        ucents = cents / cn
-        rn = np.linalg.norm(mat, axis=1, keepdims=True)
-        rn[rn == 0] = 1.0
-        assign = ((mat / rn) @ ucents.T).argmax(axis=1)
-    elif up == "L2":
-        d = -2.0 * (mat @ cents.T) + (cents**2).sum(axis=1)[None, :]
-        assign = d.argmin(axis=1)
-    else:  # IP
-        assign = (mat @ cents.T).argmax(axis=1)
+    assign = centroid_scores(mat, cents, metric).argmax(axis=1)
     residuals = mat - cents[assign]
     if n_subs is None:  # recall-grade default (see PQ_RECALL_GRADE_SUB_WIDTH)
         n_subs = recall_grade_pq_subs(residuals.shape[1])

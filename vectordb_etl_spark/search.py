@@ -11,7 +11,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from vectordb_etl_spark.config import EmbeddingConfig, SearchConfig
+from vectordb_etl_spark.config import EmbeddingConfig
 from vectordb_etl_spark.embeddings import query_vector
 from vectordb_etl_spark.functions.filter_expr import parse_filter
 from vectordb_etl_spark.functions.language import detect_language_query
@@ -36,20 +36,21 @@ def search_with_scores(
     auto_detect_language: bool = True,
     collection_name: str | None = None,
     search_all_collections: bool = False,
-    metric: str = "COSINE",
     embedding_config: EmbeddingConfig | None = None,
     filter: "str | Column | None" = None,
     index_kind: str | None = None,
     nprobe: int | None = None,
     ef: int | None = None,
     filter_mode: str = "post",
-    merge_schema: bool = False,
 ) -> list[SearchHit]:
     """Q4 — language-filtered search facade
     (reference: modules/search_utils.py:70-98).
 
     Auto-detects the query language with the P4 detector when no filter is
     given (search_utils.py:84-87) and embeds the query ONCE on the driver.
+    Every kind ranks under the store's ``StoreConfig.metric_type`` and
+    resolves names against the store's schema (:meth:`CollectionStore.read`),
+    as a Milvus search uses its collection's declared metric and schema.
 
     ``filter`` takes either a Spark Column or a Milvus-style expression
     string (``language == "korean"``, ``filename == "x.html" and
@@ -65,9 +66,7 @@ def search_with_scores(
     partition-pruned scan; ``'ivf'``/``'graph'`` route through the store's
     per-collection indexes via ``fanout_search_indexed(
     on_missing='exact')``, so un-indexed collections are still served
-    (brute-force, Milvus-style) rather than erroring. The indexed path
-    ranks under the STORE's configured metric (the index artifact's
-    contract), not this function's ``metric`` argument; ``nprobe``/``ef``
+    (brute-force, Milvus-style) rather than erroring. ``nprobe``/``ef``
     are the IVF/graph serving knobs — ``None`` (default) takes the
     store's configured ``StoreConfig.nprobe``/``ef_search`` (the
     reference's MilvusConfig serving params, modules/config.py:25-27).
@@ -98,12 +97,8 @@ def search_with_scores(
     # under the store's remembered schema, so while the directory holds
     # the same files it runs no schema job (CollectionStore.read). Its
     # columns feed the filter parse, the graph output_cols probe and the
-    # IVF projection, and the exact path scans it. ``merge_schema=True``
-    # unions footers on every call: needed on warehouses mixing pre-`meta`
-    # and dynamic-meta batches, where the default single-footer schema
-    # can hide the `meta` column from the filter resolver, the output
-    # projection and a dynamic-field predicate.
-    base = store.read(None, merge_schema=merge_schema)
+    # IVF projection, and the exact path scans it.
+    base = store.read()
     data_cols = base.columns
     # a blank filter string parses to None and must behave like "no filter
     # given" (auto-detect still applies), not like "filter everything off".
@@ -172,7 +167,7 @@ def search_with_scores(
                 kwargs["tie_break"] = ["chunk_id"]
         rows = store.fanout_search_indexed(
             vec, k=k, kind=index_kind, collections=names,
-            on_missing="exact", merge_schema=merge_schema, **kwargs,
+            on_missing="exact", **kwargs,
         ).collect()
     else:
         # the same plan as store.read(collection_name): a named collection
@@ -186,7 +181,7 @@ def search_with_scores(
             df,
             vec,
             k=k,
-            metric=metric,
+            metric=store.config.metric_type,
             predicate=predicate,
             tie_break=["chunk_id"] if "chunk_id" in data_cols else None,
         ).collect()

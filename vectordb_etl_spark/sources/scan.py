@@ -86,34 +86,29 @@ def dynamic_meta_col(extra_meta: dict[str, Column | str]) -> Column:
     return F.create_map(*entries)
 
 
-def load_html_documents(
+def _load_documents(
     spark: SparkSession,
     root: str,
-    extra_meta: dict[str, Column | str] | None = None,
+    glob: str,
+    parsed: Column,
+    fields: tuple[str, ...],
+    extra_meta: dict[str, Column | str] | None,
 ) -> DataFrame:
-    """S1+S2+S3+P3+S6 composed: scan → parse (one pandas-UDF projection) →
-    metadata + language columns → min-viable filter. Returns the documents
-    schema of SURVEY.md §1.4.
-
-    ``extra_meta`` maps dynamic-field names to column expressions over the
-    scan/parse columns; they land in the ``meta`` map column and ride the
-    chunker passthrough into the store (enable_dynamic_field parity)."""
-    scanned = _with_metadata(scan_files(spark, root, "*.{html,jsp}"), root)
-    parsed = scanned.withColumn("parsed", parse_html_udf(html_from_binary("content")))
+    """Scan → parse (one UDF projection, ``parsed``, a struct with the
+    parser's ``fields``) → metadata + language columns → min-viable
+    filter: the documents schema of SURVEY.md §1.4, shared by both
+    loaders."""
+    scanned = _with_metadata(scan_files(spark, root, glob), root)
     return (
-        parsed.select(
+        scanned.withColumn("parsed", parsed)
+        .select(
             "source",
             "filename",
             "folder_name",
             "file_type",
             "file_size",
             "modified_time",
-            F.col("parsed.text").alias("text"),
-            F.col("parsed.title").alias("title"),
-            F.col("parsed.heading_count").alias("heading_count"),
-            F.col("parsed.paragraph_count").alias("paragraph_count"),
-            F.col("parsed.table_count").alias("table_count"),
-            F.col("parsed.list_count").alias("list_count"),
+            *(F.col(f"parsed.{f}").alias(f) for f in fields),
             *(
                 [dynamic_meta_col(extra_meta).alias("meta")]
                 if extra_meta
@@ -126,6 +121,27 @@ def load_html_documents(
     )
 
 
+def load_html_documents(
+    spark: SparkSession,
+    root: str,
+    extra_meta: dict[str, Column | str] | None = None,
+) -> DataFrame:
+    """S1+S2+S3+P3+S6 composed: scan → parse (one pandas-UDF projection) →
+    metadata + language columns → min-viable filter. Returns the documents
+    schema of SURVEY.md §1.4.
+
+    ``extra_meta`` maps dynamic-field names to column expressions over the
+    scan/parse columns; they land in the ``meta`` map column and ride the
+    chunker passthrough into the store (enable_dynamic_field parity)."""
+    return _load_documents(
+        spark, root, "*.{html,jsp}",
+        parse_html_udf(html_from_binary("content")),
+        ("text", "title", "heading_count", "paragraph_count", "table_count",
+         "list_count"),
+        extra_meta,
+    )
+
+
 def load_hwp_documents(
     spark: SparkSession,
     root: str,
@@ -133,29 +149,9 @@ def load_hwp_documents(
 ) -> DataFrame:
     """S1+S4/S5+P3+S6 composed for HWP/HWPX trees (hwp_loader.py:241-371).
     ``extra_meta`` as in :func:`load_html_documents`."""
-    scanned = _with_metadata(scan_files(spark, root, "*.{hwp,hwpx}"), root)
-    parsed = scanned.withColumn("parsed", extract_hwp_udf(F.col("content")))
-    return (
-        parsed.select(
-            "source",
-            "filename",
-            "folder_name",
-            "file_type",
-            "file_size",
-            "modified_time",
-            F.col("parsed.text").alias("text"),
-            F.col("parsed.title").alias("title"),
-            F.col("parsed.author").alias("author"),
-            F.col("parsed.subject").alias("subject"),
-            F.col("parsed.keywords").alias("keywords"),
-            F.col("parsed.n_sections").alias("n_sections"),
-            *(
-                [dynamic_meta_col(extra_meta).alias("meta")]
-                if extra_meta
-                else []
-            ),
-        )
-        .withColumn("char_count", F.length("text"))
-        .withColumn("language", language.detect_language_content_col("text"))
-        .filter(F.length(F.trim(F.col("text"))) >= MIN_VIABLE_CHARS)
+    return _load_documents(
+        spark, root, "*.{hwp,hwpx}",
+        extract_hwp_udf(F.col("content")),
+        ("text", "title", "author", "subject", "keywords", "n_sections"),
+        extra_meta,
     )

@@ -63,8 +63,9 @@ def fold_dynamic_meta(
     fold into a ``meta: map<string,string>`` column — Milvus's hidden
     ``$meta`` JSON field, re-expressed as Spark's native map type so the
     parquet schema stays STABLE across heterogeneous loader batches
-    (appending typed one-off columns to an existing dataset makes them
-    invisible to later non-mergeSchema reads; a map column does not).
+    (each typed one-off column appended to an existing dataset widens the
+    store's union schema (:meth:`CollectionStore.read`) with a column
+    that is null everywhere else; a map column does not).
 
     Values are stringified (map<string,string> — the lowest common
     denominator across loaders); numeric comparisons on dynamic keys cast
@@ -447,7 +448,9 @@ class CollectionStore:
         collections only (partition pruning on the read), not the
         warehouse; at 100 TB keep collections sized so a rewrite is an
         acceptable unit of work (this is the classic copy-on-write merge,
-        the same trade Hive-style COW tables make).
+        the same trade Hive-style COW tables make). The existing rows come
+        from one :meth:`read` of the store, so a rewritten collection
+        carries the store's union columns, null where it had none.
         Returns per-affected-collection row counts."""
         incoming = self._tag_batch(
             chunks, split_by_folder, folder_col, dynamic_meta
@@ -461,6 +464,7 @@ class CollectionStore:
         ]
         self._warn_pre_rule_partitions(affected)
         counts: dict[str, int] = {}
+        base, listed = None, ""
         for name in affected:
             part_dir = f"{self._data_dir}/collection={name}"
             new_part = incoming.filter(F.col("collection") == name).drop(
@@ -469,8 +473,18 @@ class CollectionStore:
             with replace_dir(self.spark, part_dir) as (staging, exists):
                 merged = new_part
                 if exists:
-                    keep = self.spark.read.parquet(part_dir).join(
-                        new_part.select(key_col), key_col, "left_anti"
+                    # the listing of ``base`` pins its files, and a
+                    # collection's files change only at its own swap, so
+                    # one read serves every collection; read again when
+                    # this one is absent from it (a crash restore just
+                    # put it back)
+                    if f"/collection={name}/" not in listed:
+                        base = self.read()
+                        listed = self._input_files(base)
+                    keep = (
+                        base.filter(F.col("collection") == name)
+                        .drop("collection")
+                        .join(new_part.select(key_col), key_col, "left_anti")
                     )
                     merged = keep.unionByName(new_part, allowMissingColumns=True)
                 counts[name] = write_counted(merged, staging)
@@ -478,46 +492,38 @@ class CollectionStore:
 
     # -- scans ---------------------------------------------------------------
 
-    def read(
-        self, collection: str | None = None, merge_schema: bool = False
-    ) -> DataFrame:
+    def read(self, collection: str | None = None) -> DataFrame:
         """Scan one collection (partition-pruned) or all (fan-out).
 
-        The store remembers one pair: the file list of the data directory
-        and the schema inferred from it. A read lists the directory under
-        the remembered schema, which runs no Spark job, and keeps that
-        frame when its file list equals the remembered one; otherwise it
-        infers the schema as Spark always does (a one-task footer job)
-        and remembers the new pair. The result is exact: without
-        ``mergeSchema`` Spark infers from one file of the list (a
-        ``_common_metadata``/``_metadata`` summary first, else the first
-        data file), and no writer rewrites a part file in place — every
+        Every read uses one schema: the union of the footers of the data
+        directory's files (``mergeSchema``). A column that any write put
+        in any collection is visible to the next read, whichever
+        collections were written since, with nulls in the rows that lack
+        it. The store remembers one pair: the file list of the data
+        directory and the union inferred from it. A read lists the
+        directory under the remembered schema, which runs no Spark job,
+        and keeps that frame when its file list equals the remembered
+        one; otherwise it infers again and remembers the new pair. The
+        result is exact: no writer rewrites a part file in place (every
         write and every :func:`replace_dir` swap makes new part-file
-        names — so the same list yields the same schema. A store whose
-        data directory is gone or empty raises as before.
+        names), so the same list yields the same union.
 
-        ``merge_schema=True`` unions footers across files — needed ONLY
-        when collections were written with heterogeneous columns (e.g. a
-        warehouse mixing pre-`meta` and dynamic-meta batches: the default
-        single-footer schema can silently hide the `meta` column). It
-        infers on every call and does not touch the remembered pair. Off
-        by default: footer union is an extra metadata pass that a
-        consistently-written warehouse never needs, and at 100 TB file
-        counts it is not free."""
+        A changed list reads every footer once, so a store that appends
+        many small files should be compacted
+        (:func:`~vectordb_etl_spark.store.layout.compact_collection`). A
+        store whose data directory is gone or empty raises."""
         # one snapshot of the pair: a concurrent read may replace it, but
         # never half of it
-        known = None if merge_schema else self._schema
+        known = self._schema
         if known is not None:
             df = self.spark.read.schema(known[1]).parquet(self._data_dir)
             if self._input_files(df) != known[0]:
                 known = None
         if known is None:
-            reader = self.spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(self._data_dir)
-            if not merge_schema:
-                self._schema = (self._input_files(df), df.schema)
+            df = self.spark.read.option("mergeSchema", "true").parquet(
+                self._data_dir
+            )
+            self._schema = (self._input_files(df), df.schema)
         if collection is not None:
             df = df.filter(F.col("collection") == collection)
         return df
@@ -610,7 +616,6 @@ class CollectionStore:
         ef: int | None = None,
         on_missing: str = "raise",
         fallback_id_col: str = "chunk_id",
-        merge_schema: bool = False,
         **search_kwargs,
     ) -> DataFrame:
         """Q2 through PER-COLLECTION indexes (the Milvus fan-out,
@@ -668,14 +673,8 @@ class CollectionStore:
                 )
             else:
                 missing.append(n)
-        # merge_schema reaches the exact branch: on a mixed pre-meta/
-        # dynamic-meta warehouse the single-footer default could hide the
-        # `meta` column from a dynamic-field predicate, while the indexed
-        # tiers (which store their own schema) resolve it fine
         exact = (
-            self.read(None, merge_schema=merge_schema).filter(
-                F.col("collection").isin(missing)
-            )
+            self.read().filter(F.col("collection").isin(missing))
             if missing
             else None
         )

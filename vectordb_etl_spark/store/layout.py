@@ -58,7 +58,9 @@ def compact_collection(
 ) -> tuple[int, int]:
     """Rewrite one collection's partition directory with
     ``target_partitions`` output files, swapped in by
-    :func:`~vectordb_etl_spark.store.collections.replace_dir`. Returns
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`. The rows
+    come from :meth:`CollectionStore.read`, so the rewritten collection
+    carries the store's union columns, null where it had none. Returns
     (files_before, files_after)."""
     spark: SparkSession = store.spark
     part_dir = f"{store._data_dir}/collection={collection}"
@@ -72,7 +74,7 @@ def compact_collection(
         )
 
     with replace_dir(spark, part_dir) as (staging, _exists):
-        df = spark.read.parquet(part_dir)
+        df = store.read(collection).drop("collection")
         before = _n_files()
         df.repartition(target_partitions).write.mode("overwrite").parquet(staging)
     return before, _n_files()

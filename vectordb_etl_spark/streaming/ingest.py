@@ -76,6 +76,29 @@ def _foreach_batch(stream: DataFrame, checkpoint_dir: str, sink) -> DataStreamWr
     )
 
 
+def _sketch_stream(
+    stream_df: DataFrame, checkpoint_dir: str, path: str, merge
+) -> DataStreamWriter:
+    """The foreachBatch writer of the sketch sinks. An empty batch is
+    skipped. Otherwise ``merge(batch_df, batch_id, old)`` gets the
+    persisted table at ``path`` as ``old`` (None before the first batch),
+    and the frame it returns is published at ``path`` through
+    :func:`~vectordb_etl_spark.store.collections.replace_dir`; a None
+    result publishes nothing, so the table is left as it was."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        with replace_dir(spark, path) as (staging, exists):
+            old = spark.read.parquet(path) if exists else None
+            out = merge(batch_df, batch_id, old)
+            if out is not None:
+                out.write.mode("overwrite").parquet(staging)
+
+    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+
+
 def read_document_stream(
     spark: SparkSession,
     landing_dir: str,
@@ -555,18 +578,11 @@ def hll_ingest_stream(
 
     group_cols = group_cols or []
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, batch_id: int, old: DataFrame | None):
         regs = hll_registers(batch_df, value_col, group_cols, p)
-        with replace_dir(spark, registers_path) as (staging, exists):
-            if exists:
-                old = spark.read.parquet(registers_path)
-                regs = hll_merge(regs.unionByName(old), group_cols)
-            regs.write.mode("overwrite").parquet(staging)
+        return regs if old is None else hll_merge(regs.unionByName(old), group_cols)
 
-    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+    return _sketch_stream(stream_df, checkpoint_dir, registers_path, _merge)
 
 
 def cm_ingest_stream(
@@ -617,17 +633,7 @@ def cm_ingest_stream(
         )
         return merged.unionByName(meta)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return  # nothing to merge; replay of an empty batch is free
-        spark = batch_df.sparkSession
-        with replace_dir(spark, sketch_path) as (staging, exists):
-            old = spark.read.parquet(sketch_path) if exists else None
-            out = _merge(batch_df, batch_id, old)
-            if out is not None:
-                out.write.mode("overwrite").parquet(staging)
-
-    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+    return _sketch_stream(stream_df, checkpoint_dir, sketch_path, _merge)
 
 
 def kmv_ingest_stream(
@@ -648,17 +654,11 @@ def kmv_ingest_stream(
     :func:`~vectordb_etl_spark.store.collections.replace_dir`."""
     from vectordb_etl_spark.functions.sketches import kmv_merge, kmv_registers
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, batch_id: int, old: DataFrame | None):
         regs = kmv_registers(batch_df, value_col, k=k)
-        with replace_dir(spark, registers_path) as (staging, exists):
-            if exists:
-                regs = kmv_merge(spark.read.parquet(registers_path), regs, k=k)
-            regs.write.mode("overwrite").parquet(staging)
+        return regs if old is None else kmv_merge(old, regs, k=k)
 
-    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+    return _sketch_stream(stream_df, checkpoint_dir, registers_path, _merge)
 
 
 def bloom_ingest_stream(
@@ -686,17 +686,11 @@ def bloom_ingest_stream(
     other sketch sinks."""
     from vectordb_etl_spark.operators.bloom import bloom_build, bloom_merge
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, batch_id: int, old: DataFrame | None):
         words = bloom_build(batch_df, key_col, m_bits, k)
-        with replace_dir(spark, bloom_path) as (staging, exists):
-            if exists:
-                words = bloom_merge(words, spark.read.parquet(bloom_path))
-            words.write.mode("overwrite").parquet(staging)
+        return words if old is None else bloom_merge(words, old)
 
-    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+    return _sketch_stream(stream_df, checkpoint_dir, bloom_path, _merge)
 
 
 def bitmap_ingest_stream(
@@ -725,15 +719,8 @@ def bitmap_ingest_stream(
 
     group_cols = group_cols or []
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, batch_id: int, old: DataFrame | None):
         regs = bitmap_registers(batch_df, value_col, group_cols)
-        with replace_dir(spark, registers_path) as (staging, exists):
-            if exists:
-                old = spark.read.parquet(registers_path)
-                regs = bitmap_merge(regs.unionByName(old), group_cols)
-            regs.write.mode("overwrite").parquet(staging)
+        return regs if old is None else bitmap_merge(regs.unionByName(old), group_cols)
 
-    return _foreach_batch(stream_df, checkpoint_dir, _sink)
+    return _sketch_stream(stream_df, checkpoint_dir, registers_path, _merge)
