@@ -1,24 +1,63 @@
-"""Headline benchmark suite.
+"""Headline benchmark suite: the rows of :data:`ROWS` plus design points and
+scale probes over the testdata at $SPARK_GRAFT_SF_DIR (default: sf0.1) on
+local[$SPARK_GRAFT_CPUS]. Prints the full JSON record (also written to
+bench_full.json), then ONE compact line.
 
-Runs the flagship pipeline + representative queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
-
-Execution is forced with the noop sink (full computation, no result IO) for
-wide results and collect() for small aggregates.
+:func:`run_rows` is the one loop and :func:`measure` its one timer: each
+measurement runs inside a ``perfbench.trace.Tracer`` span, so next to each
+row's wall time (``queries``) and plan fingerprint (``plans``) the record
+carries the jobs, stages and tasks of the measurement it kept (``layers``).
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import string
 import sys
+import tempfile
 import time
 from pathlib import Path
+from typing import Callable, NamedTuple
 
+import numpy as np
 import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+# the imports below need the repo root on sys.path
+# ruff: noqa: E402
+from pyspark.sql import functions as F
+
+from perfbench.trace import Tracer
+from vectordb_etl_spark.config import ChunkerConfig, EmbeddingConfig, StoreConfig
+from vectordb_etl_spark.embeddings import query_vector, with_embeddings
+from vectordb_etl_spark.functions import cleaning, language
+from vectordb_etl_spark.functions import text as text_fns
+from vectordb_etl_spark.operators import chunker
+from vectordb_etl_spark.operators import dedup as dedup_ops
+from vectordb_etl_spark.operators import graph_analytics as graph_ops
+from vectordb_etl_spark.operators.ann import (
+    IVFIndex,
+    lsh_topk_search,
+    pq_encode,
+    pq_topk_adc,
+    recall_at_k,
+    train_pq_codebook,
+)
+from vectordb_etl_spark.operators.graph_ann import (
+    GraphANNIndex,
+    beam_search,
+    build_hnsw,
+    build_nsw,
+    hnsw_levels,
+    hnsw_search,
+)
+from vectordb_etl_spark.plans.inspect import plan_fingerprint
+from vectordb_etl_spark.search import search_with_scores
+from vectordb_etl_spark.session import ensure_min_partitions, get_spark
+from vectordb_etl_spark.store.collections import CollectionStore
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,621 +70,433 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def main() -> None:
-    import __spark_entry__ as entrymod
-    from vectordb_etl_spark.config import ChunkerConfig, EmbeddingConfig
-    from vectordb_etl_spark.embeddings import with_embeddings
-    from vectordb_etl_spark.functions import cleaning, language
-    from vectordb_etl_spark.operators import chunker
-    from vectordb_etl_spark.session import get_spark
+class Row(NamedTuple):
+    """``body(ctx)`` returns the frame that ``force`` runs (``"collect"`` or
+    ``"noop"``), or with ``force="self"`` is the whole timed action.
+    ``check(ctx, rows)`` returns the row's meta from the rows its first
+    measurement collected; ``plan(ctx)`` is the frame fingerprinted when
+    the body's is not the one to record."""
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
+    name: str
+    body: Callable
+    force: str = "collect"
+    check: Callable | None = None
+    plan: Callable | None = None
 
-    # Warm-up: spawn the Python worker pool (pandas-UDF path), touch every
-    # parquet footer, JIT the scan path. Steady-state numbers, not JVM boot.
-    from pyspark.sql import functions as F
+
+def measure(ctx, row: Row, plans: dict | None = None):
+    """The one timer: run ``row`` once inside a span of ``ctx.tracer`` and
+    return (seconds, layers, collected rows or None). With ``plans``,
+    record the row's plan fingerprint: the body's frame inside the timed
+    region, a ``plan`` frame after it."""
+    tracer, out = ctx.tracer, None
+    with tracer.span(row.name) as span:
+        frame = row.body(ctx)
+        if plans is not None and row.plan is None:
+            plans[row.name] = plan_fingerprint(frame)
+        if row.force == "collect":
+            out = frame.collect()
+        elif row.force == "noop":
+            frame.write.format("noop").mode("overwrite").save()
+    if plans is not None and row.plan is not None:
+        plans[row.name] = plan_fingerprint(row.plan(ctx))
+    jobs = tracer.resolve()
+    tracer.spans.clear()  # resolve() walks every kept span: keep only this one
+    stages, tasks = (sum(jobs[j][i] for j in span.jobs) for i in (0, 1))
+    layers = {"jobs": len(span.jobs), "stages": stages, "tasks": tasks}
+    return round(span.ms / 1000.0, 3), layers, out
+
+
+def best(ctx, row: Row, n: int = 2) -> float:
+    """Min-of-``n`` seconds, the low-noise estimate of a row's cost."""
+    return min(measure(ctx, row)[0] for _ in range(n))
+
+
+def run_rows(ctx, rows: list[Row], budget_s: float):
+    """Measure every row once (fingerprint, then check), then re-measure
+    cheapest-first while under ``budget_s`` and keep each row's MIN with
+    the layers of that measurement: on a shared host single-shot timings
+    swing 3-7x under neighbours' load, and the min is the steady-state
+    cost the plan has. Returns (timings, plans, layers, metas)."""
+    t0 = time.perf_counter()
+    timings, plans, layers, metas = {}, {}, {}, {}
+    for row in rows:
+        timings[row.name], layers[row.name], out = measure(ctx, row, plans)
+        if row.check is not None:
+            metas[row.name] = row.check(ctx, out)
+    by_name = {r.name: r for r in rows}
+    for name in sorted(timings, key=timings.get):
+        if time.perf_counter() - t0 > budget_s:
+            break
+        t, lay, _ = measure(ctx, by_name[name])
+        if t < timings[name]:
+            timings[name], layers[name] = t, lay
+    return timings, plans, layers, metas
+
+
+def _normalize(mat: np.ndarray) -> np.ndarray:
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _unit_vec(q) -> np.ndarray:
+    return np.asarray(q) / max(np.linalg.norm(q), 1e-12)
+
+
+def exact_topk(unit: np.ndarray, q, k: int, mask=None) -> list[int]:
+    """Row positions of the exact cosine top-k of ``q`` over the rows of
+    ``unit`` (ties by position); ``mask`` keeps only the allowed rows."""
+    neg = -(unit @ _unit_vec(q))
+    if mask is not None:
+        neg = np.where(mask, neg, np.inf)
+    return [int(i) for i in np.argsort(neg, kind="stable")[:k]]
+
+
+def mean_recall(exact: list, approx: list) -> float:
+    """Mean recall@k over the queries, rounded to 4 dp."""
+    return round(float(np.mean([recall_at_k(e, a) for e, a in zip(exact, approx)])), 4)
+
+
+def served_recall(rows, unit, queries, k: int, ids=None) -> float:
+    """Recall@k of served ``(query_id, vec_id)`` rows against exact cosine
+    over ``unit``, whose row i holds vec_id ``ids[i]`` (default i)."""
+    got: dict[int, list] = {}
+    for r in rows:
+        got.setdefault(r["query_id"], []).append(r["vec_id"])
+    exact = [exact_topk(unit, q, k) for q in queries]
+    if ids is not None:
+        exact = [[ids[i] for i in e] for e in exact]
+    return mean_recall(exact, [got.get(qi, []) for qi in range(len(queries))])
+
+
+def pq_recall(ctx, recon: np.ndarray) -> float:
+    """recall@10 of the ADC ranking over a reconstruction matrix, averaged
+    over the first 10 corpus vectors as queries (one query's recall over a
+    10-item cut swings ±0.3, too noisy to grade a codebook)."""
+    qs = ctx.base[:10]
+    return mean_recall(
+        [exact_topk(ctx.base_unit, q, 10) for q in qs],
+        [exact_topk(recon, q, 10) for q in qs],
+    )
+
+
+def exponent(t1: float, t10: float) -> float:
+    """Measured scaling exponent log10(t10/t1) of a 10x probe."""
+    return round(math.log10(max(t10, 1e-3) / max(t1, 1e-3)), 3)
+
+
+def sf1_record(t1: float, t_sf1: float, design: float, note: str) -> dict:
+    """Measured-vs-design agreement of one sf1.0 rehearsal: >1 means the
+    10x leg cost more than the design exponent predicts from the 1x leg."""
+    return {
+        "t_1x": t1, "t_sf1": t_sf1, "measured_exponent": exponent(t1, t_sf1),
+        "design_exponent": design,
+        "measured_over_predicted": round(t_sf1 / max(t1 * 10.0**design, 1e-3), 3),
+        "note": note,
+    }
+
+
+FACADE_QUERY = "shipping delays and supplier quality"
+
+
+class Ctx:
+    """What the rows and probes share, built once before the loop and
+    untimed: the sf's embeddings and query vector, the 10x jittered corpus
+    with its queries, the trained PQ codebook and the facade store with
+    its per-collection indexes."""
+
+    def __init__(self, spark, sf_dir: str, tmp: str):
+        import __spark_entry__ as entrymod
+
+        self.spark, self.sf, self.tmp = spark, sf_dir, tmp
+        # one tracer for the run: each outermost span gets its own job group
+        self.tracer = Tracer(spark.sparkContext, enabled=True)
+        self.qs = entrymod.queries()
+        self.emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        self.q = list(self.emb.filter(F.col("vec_id") == 0).select("embedding").head()[0])
+        # The testdata tops out at 2,000 vectors, where the reference's 128
+        # cells are degenerate, so the corpus is scaled 10x by seeded
+        # jitter of the real embeddings (natural clusters, deterministic).
+        # Queries are off-center jitters, wider than the corpus jitter, so
+        # some true neighbours straddle cell boundaries.
+        rows = self.emb.select("vec_id", "embedding").collect()
+        self.ids = [r["vec_id"] for r in rows]
+        self.pos = {vid: i for i, vid in enumerate(self.ids)}
+        self.base = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        self.base_unit = _normalize(self.base)
+        rng = np.random.RandomState(42)
+        n, d = self.base.shape
+        self.big = np.repeat(self.base, 10, axis=0) + 0.05 * rng.standard_normal((n * 10, d))
+        self.unit = _normalize(self.big)
+        self.queries = [list(v) for v in self.base[:10] + 0.1 * rng.standard_normal((10, d))]
+        self.pq_cb = train_pq_codebook(self.emb, spark, n_codes=256, n_subs=8)
+        # facade corpus: 4 folder-derived collections (the reference's
+        # folder->collection split at a bench-sane fan-out)
+        self.fac_cfg = EmbeddingConfig(dimension=64)
+        self.store = CollectionStore(spark, StoreConfig(warehouse_dir=f"{tmp}/facade_wh"))
+        self.store.insert_documents(self.docs(
+            "doc_id", F.concat(F.lit("c"), F.col("doc_id")).alias("chunk_id"), "source",
+            F.concat(F.lit("f"), F.col("doc_id") % 4).alias("folder_name"), "text",
+            F.coalesce(F.col("lang"), F.lit("english")).alias("language"),
+            F.lit(0).alias("chunk_index"),
+        ), embedding_config=self.fac_cfg)
+        for c in self.store.list_collections():
+            self.store.build_index(c, kind="ivf", nlist=8, max_iter=4)
+            self.store.build_index(c, kind="graph", m=16, ef_construction=64)
+        self.fac_vec = query_vector(FACADE_QUERY, self.fac_cfg)
+
+    def docs(self, *cols):
+        return self.spark.read.parquet(f"{self.sf}/documents.parquet").select(*cols)
+
+    def big_df(self):
+        """The jittered 10x corpus as a Spark frame via pandas+Arrow."""
+        pdf = pd.DataFrame({
+            "vec_id": np.arange(self.big.shape[0], dtype=np.int64),
+            "embedding": list(self.big),
+        })
+        return self.spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
+
+    def big_queries(self, n: int) -> list:
+        """``n`` rows of the 10x corpus at an even stride."""
+        stride = max(1, self.big.shape[0] // n)
+        return [[float(x) for x in self.big[(i * stride) % len(self.big)]] for i in range(n)]
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Spawn the Python workers (the scalar pandas-UDF path and the
+    distinct mapInPandas Arrow-stream path), touch every parquet footer,
+    JIT the scan path: steady-state numbers, not JVM boot."""
 
     @F.pandas_udf("double")
     def _warm(s: pd.Series) -> pd.Series:
         return s * 1.0
 
-    spark.range(10000).select(_warm(F.col("id"))).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # mapInPandas uses a distinct eval path (Arrow stream, not scalar UDF) —
-    # warm it too so the multimodal timings are steady-state
-    spark.range(10000).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    for df in (spark.range(10000).select(_warm(F.col("id"))),
+               spark.range(10000).mapInPandas(lambda it: it, "id long")):
+        df.write.format("noop").mode("overwrite").save()
     for t in ("documents", "embeddings", "lineitem", "orders", "customer",
               "nation", "region", "events"):
         try:
-            spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(1).collect()
+            spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).collect()
         except Exception:
             pass
 
-    bench_t0 = time.time()
-    # Second-pass budget: this host runs other tenants, and single-shot
-    # timings swing 3-7x under their load spikes (observed: the same query
-    # 3.8 s and 26.6 s in back-to-back suite runs). Each query is measured
-    # once in pass 1 and re-measured in pass 2 (cheapest-first) while the
-    # suite is under budget; the recorded number is the MIN — the
-    # steady-state cost the plan actually has, which is what a regression
-    # bar can meaningfully compare.
-    # default budget scaled for the ~98-query suite: 420 s was sized for 65
-    # queries, after which pass 1 alone consumed it and the expensive rows
-    # kept their noisy single-shot readings (observed: a 0.26 s noop query
-    # recorded 4.5 s because its one measurement ate a GC pause)
-    SECOND_PASS_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "780"))
-    _runners: dict[str, tuple] = {}
-    # plan-shape fingerprints recorded next to wall-time: wall-clock swings
-    # 3-7x under neighbor load on this host, but {exchange, bhj, python_eval}
-    # counts are deterministic — a scale regression (new shuffle / new python
-    # hop) is visible in the bench JSON even when the timing looks fine.
-    # tests/test_plans.py enforces the same counts against
-    # tools/plan_fingerprints.json.
-    from vectordb_etl_spark.plans.inspect import plan_fingerprint
 
-    plan_fps: dict[str, dict] = {}
-
-    def _measure(fn, collect: bool, fp_name: str | None = None) -> float:
-        t0 = time.time()
-        df = fn()
-        if fp_name is not None and fp_name not in plan_fps:
-            plan_fps[fp_name] = plan_fingerprint(df)
-        if collect:
-            df.collect()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    def run(name: str, fn, collect: bool = False) -> None:
-        _runners[name] = (fn, collect)
-        timings[name] = _measure(fn, collect, fp_name=name)
-
-    # flagship ETL: clean → chunk → dedup → hash-embed (the write path minus IO)
-    from vectordb_etl_spark.session import ensure_min_partitions
-
-    def etl():
-        docs = ensure_min_partitions(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        ).select(
-            "doc_id",
-            "source",
-            cleaning.clean_text_col("text").alias("text"),
-            language.detect_language_content_col("text").alias("language"),
-        )
-        chunks = chunker.chunk_documents(docs, ChunkerConfig())
-        deduped = chunker.remove_duplicate_chunks(chunks)
-        return with_embeddings(deduped, config=EmbeddingConfig(dimension=64))
-
-    run("etl_pipeline", etl)
-
-    # per-query timings from the registered suite (small results → collect)
-    collect_queries = [
-        "vector_topk",
-        "fanout_topk_per_label",
-        "quality_report",
-        "chunk_stats",
-        "pricing_summary",
-        "regional_revenue",
-        "top_customers",
-        "events_sessionize",
-        "language_distribution",
-        "minhash_lsh_candidates",
-        "simhash_near_dups",
-        "embedding_topk_pairs",
-        "range_join_purchase_followups",
-        "returned_orders",
-        "customers_without_big_orders",
-        "small_quantity_revenue",
-        "dedup_components",
-        "sq8_topk",
-        "events_cube",
-        "user_event_windows",
-        "order_value_percentiles",
-        "salted_join_enrichment",
-        "stratified_sample",
-        "corpus_health",
-        "hybrid_rrf_search",
-        "lsh_incremental_candidates",
-        "fuzzy_prefix_pairs",
-        "shipping_priority",
-        "priority_shipments",
-        "brand_revenue",
-        "supplier_balance_by_region",
-        "salted_distinct_users_by_type",
-        "vocab_top_terms",
-        "streaming_windowed_counts",
-        "ivf_topk_nprobe",
-        "filter_expr_search",
-        "promo_revenue_ratio",
-        "forecast_revenue_change",
-        "min_cost_supplier_per_part",
-        "supplier_part_counts",
-        "product_type_profit",
-        "large_order_customers",
-        "disjunctive_predicate_revenue",
-        "bilateral_shipping_volume",
-        "top_terms_per_language",
-        "streaming_interval_join",
-        "purchasers_without_errors",
-        "event_type_pivot",
-        "events_gap_fill",
-        "cumulative_unique_users",
-        "gopher_quality_signals",
-        "gopher_pass_rate",
-        "sequence_packing",
-        "token_budget_mix",
-        "ivf_topk_batch",
-        # round-4 additions
-        "chunk_metadata",
-        "boilerplate_fraction",
-        "weighted_sample",
-        "ivf_sq8_topk",
-        "multimodal_decoded_features",
-        "streaming_sessionize",
-        "length_outlier_screen",
-        "tfidf_top_terms",
-        "conversion_funnel",
-        "graph_topk_batch",
-        "graph_topk_incremental",
-        "strip_common_lines",
-        "semantic_dedup",
-        "bigram_logprob",
-        "streaming_exact_dedup",
-        "streaming_dynamic_meta",
-        "streaming_lsh_dedup",
-        "streaming_ivf_ingest",
-        "streaming_graph_ingest",
-        "pq_topk",
-        "ivf_pq_topk",
-        "ivf_pq_residual_topk",
-        "retention_cohorts",
-        "json_props_stats",
-        "events_gap_interpolate",
-        "regional_supplier_volume",
-        "market_share",
-        "returned_item_customers",
-        "customer_order_distribution",
-        "top_revenue_suppliers",
-        "suppliers_kept_waiting",
-        "integrity_report",
-        "corpus_drift",
-        "ivf_topk_filtered",
-        "graph_topk_filtered",
-        "hll_distinct_orders",
-        "bipartite_pagerank",
-        "scd2_order_status",
-        "idle_rich_customers",
-        "kmv_corpus_overlap",
-        "streaming_hll_ingest",
-        "cm_token_freq",
-        "skew_report_events",
-        "streaming_cm_ingest",
-        "events_daily_anomalies",
-        "corpus_drift_chi2",
-        "join_size_estimate",
-        "sample_quantiles_prices",
-        "hll_multigrain_users",
-        "inverted_term_lookup",
-        # late-r06 additions
-        "dedup_aware_split",
-        "incremental_agg_merge",
-        "part_copurchase_triangles",
-        "ewma_daily_events",
-        "dominant_part_suppliers",
-        "bm25_ranked_lookup",
-        "heavy_hitter_terms",
-        "prefix_jaccard_pairs",
-        "bloom_semi_revenue",
-        "bfs_part_reach",
-        "kcore_copurchase",
-        "streaming_bloom_ingest",
-        "bitmap_distinct_users",
-        "bpe_first_merges",
-        "open_orders_daily",
-        "column_profile_orders",
-        "order_status_diff",
-        "kmv_returned_only_parts",
-        "price_depth_histogram",
-        "price_quantity_corr",
-        "events_daily_trend",
-        "critical_parts_share",
-        "frequent_part_pairs",
-        "session_attribution",
-        "part_communities",
-        "image_ahash_dups",
-        "image_near_dup_pairs",
-        "audio_ahash_dups",
-        "session_window_stats",
-        "part_affinity_ppr",
-        "streaming_bitmap_ingest",
-        # round-7 additions (VERDICT r07 item 2): the converged fixpoint
-        # trio surfaces round-count regressions (the max-round guard
-        # silently absorbing more rounds); the fan-out pair surfaces
-        # fan-out shuffle-volume regressions
-        "kcore_converged",
-        "communities_converged",
-        "pagerank_converged",
-        "ivf_fanout_topk",
-        "graph_fanout_topk",
-        # round-8 addition: mixed index state (one IVF collection + one
-        # exact-fallback collection) through the store fan-out
-        "fanout_mixed_topk",
-        # dedup_rate_report is deliberately NOT benched: it composes five
-        # already-benched dedup operators into one dashboard, so its
-        # wall-time is their sum (~50 s at sf0.1) with no new plan shape
-    ]
-    noop_queries = [
-        "embedding_drift",
-        "quality_classifier_scores",
-        "domain_cap_sample",
-        "ngram_novelty",
-        "substring_dup_stats",
-        "substring_dup_incremental",
-        "dsir_log_weights",
-        "pii_redaction",
-        "contamination_check",
-        "html_parse_roundtrip",
-        "hwp_cfb_roundtrip",
-        "clean_text",
-        "exact_dedup",
-        "token_counts",
-        "doc_fingerprint",
-        "asof_join_events_orders",
-        "multimodal_image_meta",
-        "multimodal_resize_roundtrip",
-        "multimodal_resample_roundtrip",
-        "zorder_locality",
-    ]
-    for name in collect_queries:
-        run(name, lambda n=name: qs[n](spark, SF_DIR), collect=True)
-    for name in noop_queries:
-        run(name, lambda n=name: qs[n](spark, SF_DIR), collect=False)
-
-    # ANN tier at its DESIGN POINT (nprobe < nlist / hamming radius 1 —
-    # the reference's 16-of-128 contract scaled to test size). The entries
-    # registered in queries() deliberately run the probe-all edge so the
-    # driver can oracle-check them; benching that edge would measure a full
-    # scan, not the index. Same build path, same search path — only the
-    # probe width differs.
-    import tempfile
-
-    from pyspark.sql import functions as _F
-
-    from vectordb_etl_spark.operators.ann import IVFIndex, lsh_topk_search
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(_F.col("vec_id") == 0).select("embedding").head()[0]
-    # tempdirs are created INSIDE each closure: the min-of-two pass re-runs
-    # these after any with-block would have cleaned up
-    _bench_tmp = tempfile.mkdtemp(prefix="bench_ann_")
-
-    def ivf():
-        idx = IVFIndex(spark, f"{_bench_tmp}/ivf").build(
-            emb, nlist=16, seed=42, max_iter=4
-        )
-        return idx.search(
-            list(q), k=10, nprobe=4, tie_break=["vec_id"],
-            output_cols=["vec_id", "label"],
-        )
-
-    run("ivf_topk", ivf, collect=True)
-    run(
-        "lsh_topk",
-        lambda: lsh_topk_search(
-            emb, list(q), k=10, multiprobe_hamming=1, tie_break=["vec_id"],
-            output_cols=["vec_id", "label"],
-        ),
-        collect=True,
+def etl_frame(docs):
+    """The flagship ETL (clean → chunk → dedup → hash-embed), the write path
+    minus IO, over a (doc_id, source, text) frame."""
+    d = ensure_min_partitions(docs).select(
+        "doc_id", "source", cleaning.clean_text_col("text").alias("text"),
+        language.detect_language_content_col("text").alias("language"),
     )
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex
+    chunks = chunker.chunk_documents(d, ChunkerConfig())
+    deduped = chunker.remove_duplicate_chunks(chunks)
+    return with_embeddings(deduped, config=EmbeddingConfig(dimension=64))
 
-    def graph():
-        idx = GraphANNIndex(spark, f"{_bench_tmp}/graph").build(
-            emb, num_shards=8, m=16, ef_construction=64,
-            passthrough=["label"],
-        )
-        return idx.search(list(q), k=10, ef=100, output_cols=["id", "label"])
 
-    run("graph_topk", graph, collect=True)
+# registered queries: small results are collected, wide ones go to the noop
+# sink (full computation, no result IO)
+COLLECT_QUERIES = [
+    "vector_topk", "fanout_topk_per_label", "quality_report", "chunk_stats",
+    "pricing_summary", "regional_revenue", "top_customers",
+    "events_sessionize", "language_distribution", "minhash_lsh_candidates",
+    "simhash_near_dups", "embedding_topk_pairs",
+    "range_join_purchase_followups", "returned_orders",
+    "customers_without_big_orders", "small_quantity_revenue",
+    "dedup_components", "sq8_topk", "events_cube", "user_event_windows",
+    "order_value_percentiles", "salted_join_enrichment", "stratified_sample",
+    "corpus_health", "hybrid_rrf_search", "lsh_incremental_candidates",
+    "fuzzy_prefix_pairs", "shipping_priority", "priority_shipments",
+    "brand_revenue", "supplier_balance_by_region",
+    "salted_distinct_users_by_type", "vocab_top_terms",
+    "streaming_windowed_counts", "ivf_topk_nprobe", "filter_expr_search",
+    "promo_revenue_ratio", "forecast_revenue_change",
+    "min_cost_supplier_per_part", "supplier_part_counts",
+    "product_type_profit", "large_order_customers",
+    "disjunctive_predicate_revenue", "bilateral_shipping_volume",
+    "top_terms_per_language", "streaming_interval_join",
+    "purchasers_without_errors", "event_type_pivot", "events_gap_fill",
+    "cumulative_unique_users", "gopher_quality_signals", "gopher_pass_rate",
+    "sequence_packing", "token_budget_mix", "ivf_topk_batch", "chunk_metadata",
+    "boilerplate_fraction", "weighted_sample", "ivf_sq8_topk",
+    "multimodal_decoded_features", "streaming_sessionize",
+    "length_outlier_screen", "tfidf_top_terms", "conversion_funnel",
+    "graph_topk_batch", "graph_topk_incremental", "strip_common_lines",
+    "semantic_dedup", "bigram_logprob", "streaming_exact_dedup",
+    "streaming_dynamic_meta", "streaming_lsh_dedup", "streaming_ivf_ingest",
+    "streaming_graph_ingest", "pq_topk", "ivf_pq_topk", "ivf_pq_residual_topk",
+    "retention_cohorts", "json_props_stats", "events_gap_interpolate",
+    "regional_supplier_volume", "market_share", "returned_item_customers",
+    "customer_order_distribution", "top_revenue_suppliers",
+    "suppliers_kept_waiting", "integrity_report", "corpus_drift",
+    "ivf_topk_filtered", "graph_topk_filtered", "hll_distinct_orders",
+    "bipartite_pagerank", "scd2_order_status", "idle_rich_customers",
+    "kmv_corpus_overlap", "streaming_hll_ingest", "cm_token_freq",
+    "skew_report_events", "streaming_cm_ingest", "events_daily_anomalies",
+    "corpus_drift_chi2", "join_size_estimate", "sample_quantiles_prices",
+    "hll_multigrain_users", "inverted_term_lookup", "dedup_aware_split",
+    "incremental_agg_merge", "part_copurchase_triangles", "ewma_daily_events",
+    "dominant_part_suppliers", "bm25_ranked_lookup", "heavy_hitter_terms",
+    "prefix_jaccard_pairs", "bloom_semi_revenue", "bfs_part_reach",
+    "kcore_copurchase", "streaming_bloom_ingest", "bitmap_distinct_users",
+    "bpe_first_merges", "open_orders_daily", "column_profile_orders",
+    "order_status_diff", "kmv_returned_only_parts", "price_depth_histogram",
+    "price_quantity_corr", "events_daily_trend", "critical_parts_share",
+    "frequent_part_pairs", "session_attribution", "part_communities",
+    "image_ahash_dups", "image_near_dup_pairs", "audio_ahash_dups",
+    "session_window_stats", "part_affinity_ppr", "streaming_bitmap_ingest",
+    # the converged fixpoint trio surfaces round-count regressions (the
+    # max-round guard silently absorbing more rounds); the fan-out rows
+    # surface fan-out shuffle-volume regressions
+    "kcore_converged", "communities_converged", "pagerank_converged",
+    "ivf_fanout_topk", "graph_fanout_topk", "fanout_mixed_topk",
+    # dedup_rate_report is deliberately NOT benched: it composes five
+    # already-benched dedup operators into one dashboard, so its
+    # wall-time is their sum (~50 s at sf0.1) with no new plan shape
+]
+NOOP_QUERIES = [
+    "embedding_drift", "quality_classifier_scores", "domain_cap_sample",
+    "ngram_novelty", "substring_dup_stats", "substring_dup_incremental",
+    "dsir_log_weights", "pii_redaction", "contamination_check",
+    "html_parse_roundtrip", "hwp_cfb_roundtrip", "clean_text", "exact_dedup",
+    "token_counts", "doc_fingerprint", "asof_join_events_orders",
+    "multimodal_image_meta", "multimodal_resize_roundtrip",
+    "multimodal_resample_roundtrip", "zorder_locality",
+]
 
-    def graph_acorn():
-        # serve-only row over the index graph_topk just built: ~1%-selective
-        # predicate filtered DURING traversal at the same k-scaled ef the
-        # unfiltered row uses — the timed proof ef doesn't grow with
-        # 1/selectivity (the numpy design point below records recall/evals)
-        idx = GraphANNIndex(spark, f"{_bench_tmp}/graph")
-        return idx.search(
-            list(q), k=10, ef=100, output_cols=["id", "label"],
-            predicate=_F.col("id") % 97 == 0, filter_mode="traversal",
-        )
 
-    run("graph_acorn_topk", graph_acorn, collect=True)
+def _registered(name: str, force: str) -> Row:
+    return Row(name, lambda c: c.qs[name](c.spark, c.sf), force)
 
-    # facade serve rows (VERDICT r09 item 7): END-TO-END search_with_scores
-    # with index_kind — store open -> per-collection indexed probe -> merge
-    # -> SearchHit conversion — timed exactly as a user calls it. The
-    # facade collects internally (returns hits, not a DataFrame), so these
-    # rows are timed outside run()'s DataFrame contract but with the same
-    # MIN-of-2 policy; plan counters for the same serving path come from
-    # the underlying indexed fan-out frame so facade overhead regressions
-    # are visible in both wall-clock and plan shape. Store setup (insert +
-    # index builds) is serving-corpus preparation, not timed.
-    from vectordb_etl_spark.config import StoreConfig
-    from vectordb_etl_spark.search import search_with_scores
-    from vectordb_etl_spark.store.collections import CollectionStore
 
-    _fac_emb_cfg = EmbeddingConfig(dimension=64)
-    _fac_store = CollectionStore(
-        spark, StoreConfig(warehouse_dir=f"{_bench_tmp}/facade_wh")
+def _ivf_topk(c):
+    """The ANN rows run each tier at its DESIGN POINT (nprobe < nlist,
+    hamming radius 1), not the registered queries' oracle-checkable
+    probe-all edge, which would measure a full scan, not the index."""
+    idx = IVFIndex(c.spark, f"{c.tmp}/ivf").build(c.emb, nlist=16, seed=42, max_iter=4)
+    return idx.search(
+        list(c.q), k=10, nprobe=4, tie_break=["vec_id"], output_cols=["vec_id", "label"]
     )
-    _fac_store.insert_documents(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-            "doc_id",
-            F.concat(F.lit("c"), F.col("doc_id")).alias("chunk_id"),
-            "source",
-            # 4 folder-derived collections (the reference's
-            # folder->collection split at a bench-sane fan-out)
-            F.concat(F.lit("f"), F.col("doc_id") % 4).alias("folder_name"),
-            "text",
-            F.coalesce(F.col("lang"), F.lit("english")).alias("language"),
-            F.lit(0).alias("chunk_index"),
-        ),
-        embedding_config=_fac_emb_cfg,
-    )
-    for _c in _fac_store.list_collections():
-        _fac_store.build_index(_c, kind="ivf", nlist=8, max_iter=4)
-        _fac_store.build_index(_c, kind="graph", m=16, ef_construction=64)
-    _FAC_Q = "shipping delays and supplier quality"
 
-    def _fac_time(kind: str, **kw) -> float:
-        t0 = time.time()
+
+def _lsh_topk(c):
+    return lsh_topk_search(
+        c.emb, list(c.q), k=10, multiprobe_hamming=1, tie_break=["vec_id"],
+        output_cols=["vec_id", "label"],
+    )
+
+
+def _graph_topk(c):
+    idx = GraphANNIndex(c.spark, f"{c.tmp}/graph").build(
+        c.emb, num_shards=8, m=16, ef_construction=64, passthrough=["label"]
+    )
+    return idx.search(list(c.q), k=10, ef=100, output_cols=["id", "label"])
+
+
+def _graph_acorn_topk(c):
+    """Serve-only over graph_topk's index: a ~1%-selective predicate
+    filtered DURING traversal at the unfiltered row's ef, the timed proof
+    that ef doesn't grow with 1/selectivity."""
+    return GraphANNIndex(c.spark, f"{c.tmp}/graph").search(
+        list(c.q), k=10, ef=100, output_cols=["id", "label"],
+        predicate=F.col("id") % 97 == 0, filter_mode="traversal",
+    )
+
+
+def _facade_row(kind: str, **kw) -> Row:
+    """END-TO-END search_with_scores with ``index_kind`` (store open ->
+    indexed probe -> merge -> SearchHit conversion), timed as a user calls
+    it. It collects internally, so the row forces itself; its plan is the
+    same serving path's fan-out frame."""
+
+    def body(c):
         search_with_scores(
-            _fac_store, _FAC_Q, k=10, embedding_config=_fac_emb_cfg,
-            index_kind=kind, search_all_collections=True,
-            auto_detect_language=False, **kw,
-        )
-        return round(time.time() - t0, 3)
-
-    timings["facade_search_ivf"] = min(
-        _fac_time("ivf", nprobe=4), _fac_time("ivf", nprobe=4)
-    )
-    timings["facade_search_graph"] = min(
-        _fac_time("graph", ef=100), _fac_time("graph", ef=100)
-    )
-    from vectordb_etl_spark.embeddings import query_vector as _fac_qv
-
-    _fac_vec = _fac_qv(_FAC_Q, _fac_emb_cfg)
-    _fac_cols = [
-        c for c in _fac_store.read(None).columns
-        if c not in ("collection", "embedding")
-    ]
-    plan_fps["facade_search_ivf"] = plan_fingerprint(
-        _fac_store.fanout_search_indexed(
-            _fac_vec, k=10, kind="ivf", nprobe=4, on_missing="exact",
-            output_cols=_fac_cols, tie_break=["chunk_id"],
-        )
-    )
-    plan_fps["facade_search_graph"] = plan_fingerprint(
-        _fac_store.fanout_search_indexed(
-            _fac_vec, k=10, kind="graph", ef=100, on_missing="exact",
-            output_cols=["id", "text", "language"],
-        )
-    )
-
-    # IVF at the REFERENCE design point: nlist=128, nprobe=16 (12.5% scan
-    # fraction — modules/config.py:24-25 of gudwls215/vectordb-etl). The
-    # testdata tops out at 2,000 vectors (sf0.1), where 128 cells is
-    # degenerate (~16 rows/cell), so the corpus is scaled 10x by seeded
-    # jitter of the REAL embeddings (natural clusters, deterministic) to
-    # 20,000 vectors. Timed: full build + 10-query batched serve at
-    # nprobe=16. Recorded next to the timing: recall@3 vs exact numpy
-    # ground truth (BASELINE.md target >= 0.9).
-    import numpy as _np
-
-    _dp_rows = emb.select("vec_id", "embedding").collect()
-    _dp_base = _np.array([r["embedding"] for r in _dp_rows], dtype=_np.float64)
-    _dp_rng = _np.random.RandomState(42)
-    _DP_REPS = 10
-    _dp_big = _np.repeat(_dp_base, _DP_REPS, axis=0) + 0.05 * _dp_rng.standard_normal(
-        (_dp_base.shape[0] * _DP_REPS, _dp_base.shape[1])
-    )
-    # queries are off-center jitters (NOT corpus members, wider than the
-    # corpus jitter) so some true neighbors straddle cell boundaries — a
-    # center query would trivially find its own cell and overstate recall
-    _dp_queries = [
-        list(v)
-        for v in _dp_base[:10]
-        + 0.1 * _dp_rng.standard_normal((10, _dp_base.shape[1]))
-    ]
-
-    def _dp_spark_df():
-        """The jittered 20k corpus as a Spark frame via pandas+Arrow —
-        bit-identical rows to the old list-of-tuples createDataFrame
-        (verified: same schema, same collected values) but ~2-3x faster
-        to construct (guide §6: Arrow for driver transfers; the pickle
-        path re-serialized 1.28M floats per build). Same timed region,
-        same data — only the construction API changed (noted in
-        OPTIMIZATION_r13.md).
-        """
-        pdf = pd.DataFrame({
-            "vec_id": _np.arange(_dp_big.shape[0], dtype=_np.int64),
-            "embedding": list(_dp_big),
-        })
-        return spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
-
-    def ivf_design_point():
-        bigdf = _dp_spark_df()
-        idx = IVFIndex(spark, f"{_bench_tmp}/ivf_dp").build(
-            bigdf, nlist=128, seed=42, max_iter=8
-        )
-        return idx.search_many(
-            _dp_queries, k=3, nprobe=16, tie_break=["vec_id"],
-            output_cols=["vec_id"],
+            c.store, FACADE_QUERY, k=10, embedding_config=c.fac_cfg, index_kind=kind,
+            search_all_collections=True, auto_detect_language=False, **kw,
         )
 
-    run("ivf_design_point", ivf_design_point, collect=True)
-    # recall@3 against exact cosine on the scaled corpus (numpy oracle —
-    # ground truth, not the measured path)
-    _dp_unit = _dp_big / _np.maximum(
-        _np.linalg.norm(_dp_big, axis=1, keepdims=True), 1e-12
-    )
-    _dp_got: dict[int, list[int]] = {}
-    for r in ivf_design_point().collect():
-        _dp_got.setdefault(r["query_id"], []).append(r["vec_id"])
-    _dp_recall_num, _dp_recall_den = 0, 0
-    for qi, qv in enumerate(_dp_queries):
-        qn = _np.asarray(qv) / max(_np.linalg.norm(qv), 1e-12)
-        exact = _np.argsort(-(_dp_unit @ qn), kind="stable")[:3]
-        _dp_recall_num += len(set(int(x) for x in exact) & set(_dp_got.get(qi, [])))
-        _dp_recall_den += 3
-    ivf_design_point_meta = {
-        "nlist": 128,
-        "nprobe": 16,
-        "n_vectors": int(_dp_big.shape[0]),
-        "recall_at_3": round(_dp_recall_num / _dp_recall_den, 4),
-    }
-
-    # PQ tier quality at a REAL design point (TRAINED per-subspace k-means
-    # codebook, 256 codes × 8 subspaces — the registered pq_topk query uses
-    # a 16-code designated codebook so its oracle stays readable; quality
-    # is graded here instead): recall@10 of ADC serving vs exact cosine
-    # over this sf's embeddings. Both the trained and the same-size
-    # DESIGNATED codebook recalls are recorded in the meta below — k-means
-    # provably lowers quantization error (tests/test_ann.py pins that),
-    # but on this near-uniform synthetic corpus the recall gap at K=256 is
-    # small (r04 measured trained ≈ 0.48); the residual design point below
-    # is where recall actually recovers.
-    from vectordb_etl_spark.operators.ann import pq_topk_adc, train_pq_codebook
-
-    _pq_cb = train_pq_codebook(emb, spark, n_codes=256, n_subs=8)
-
-    def pq_design_point():
-        return pq_topk_adc(
-            emb.select("vec_id", "embedding"), list(q), k=10,
-            n_codes=256, n_subs=8, codebook=_pq_cb, encode="numpy",
-        )
-
-    run("pq_design_point", pq_design_point, collect=True)
-    # recall@10 AVERAGED over 10 queries (single-query recall over a
-    # 10-item cut swings ±0.3 — too noisy to grade a codebook): ONE encode
-    # job, then numpy ADC over the tiny codes table vs exact cosine
-    from vectordb_etl_spark.operators.ann import pq_encode
-
-    _rows = emb.select("vec_id", "embedding").collect()
-    _emb_ids = [r["vec_id"] for r in _rows]
-    _emb_mat = _np.stack([r["embedding"] for r in _rows]).astype(float)
-    _emb_unit = _emb_mat / _np.maximum(
-        _np.linalg.norm(_emb_mat, axis=1, keepdims=True), 1e-12
-    )
-    _cw = {
-        (r["sub"], r["code"]): _np.asarray(r["cw"], dtype=float)
-        for r in _pq_cb.collect()
-    }
-    _sw = _emb_mat.shape[1] // 8
-    _recon = _np.zeros_like(_emb_mat)
-    _codes = pq_encode(
-        emb.select("vec_id", "embedding"), _pq_cb, n_subs=8
-    ).collect()
-    _pos = {vid: i for i, vid in enumerate(_emb_ids)}
-    for r in _codes:
-        i = _pos[r["id"]]
-        _recon[i, r["sub"] * _sw : (r["sub"] + 1) * _sw] = _cw[(r["sub"], r["code"])]
-    _hits = 0
-    for _qi in range(10):
-        _qv = _emb_mat[_pos[_emb_ids[_qi]]] if _qi < len(_emb_ids) else None
-        _qn2 = _qv / max(float(_np.linalg.norm(_qv)), 1e-12)
-        _ex = set(
-            _emb_ids[i] for i in _np.argsort(-(_emb_unit @ _qn2), kind="stable")[:10]
-        )
-        _adc = set(
-            _emb_ids[i] for i in _np.argsort(-(_recon @ _qv), kind="stable")[:10]
-        )
-        _hits += len(_ex & _adc)
-    # same-size DESIGNATED codebook recall (codeword j := slice of vec j,
-    # j < 256), numpy-only — the equal-size control for the trained number
-    _des_ids = [j for j in range(256) if j in _pos]
-    _des_cb = _np.stack([_emb_mat[_pos[j]] for j in _des_ids])
-    _des_recon = _np.zeros_like(_emb_mat)
-    for s in range(8):
-        sl = slice(s * _sw, (s + 1) * _sw)
-        d = (
-            (_emb_mat[:, sl] ** 2).sum(axis=1)[:, None]
-            - 2.0 * (_emb_mat[:, sl] @ _des_cb[:, sl].T)
-            + (_des_cb[:, sl] ** 2).sum(axis=1)[None, :]
-        )
-        _des_recon[:, sl] = _des_cb[_np.argmin(_np.round(d, 12), axis=1), sl]
-    _des_hits = 0
-    for _qi in range(10):
-        _qv = _emb_mat[_pos[_emb_ids[_qi]]]
-        _qn2 = _qv / max(float(_np.linalg.norm(_qv)), 1e-12)
-        _ex = set(
-            _emb_ids[i] for i in _np.argsort(-(_emb_unit @ _qn2), kind="stable")[:10]
-        )
-        _des_adc = set(
-            _emb_ids[i]
-            for i in _np.argsort(-(_des_recon @ _qv), kind="stable")[:10]
-        )
-        _des_hits += len(_ex & _des_adc)
-    # Recall-grade plain-PQ design point (VERDICT r08 item 5): on this
-    # near-uniform synthetic corpus there is no variance structure for an
-    # OPQ-style rotation to exploit (the data is already isotropic), so
-    # the recall lever is CODE BUDGET — finer subspaces. Measured curve
-    # (trained codebooks, same 10-query protocol): m=8 -> 0.48,
-    # m=16 -> 0.67, m=32 -> 0.87. m=8 (64x compression of float64) is the
-    # storage-size play; m=32 (16x compression) is the recall-grade plain
-    # -PQ point; ivf_pq_residual remains the recall-grade tier when the
-    # corpus is clustered (0.80 at a 16-code budget).
-    def _pq_trained_recall(n_subs: int) -> float:
-        cb_m = train_pq_codebook(emb, spark, n_codes=256, n_subs=n_subs)
-        cw_m = {
-            (r["sub"], r["code"]): _np.asarray(r["cw"], dtype=float)
-            for r in cb_m.collect()
+    def plan(c):
+        cols = {"output_cols": ["id", "text", "language"]} if kind == "graph" else {
+            "output_cols": [x for x in c.store.read(None).columns
+                            if x not in ("collection", "embedding")],
+            "tie_break": ["chunk_id"],
         }
-        sw_m = _emb_mat.shape[1] // n_subs
-        recon_m = _np.zeros_like(_emb_mat)
-        for r in pq_encode(
-            emb.select("vec_id", "embedding"), cb_m, n_subs=n_subs
-        ).collect():
-            i = _pos[r["id"]]
-            recon_m[i, r["sub"] * sw_m : (r["sub"] + 1) * sw_m] = cw_m[
-                (r["sub"], r["code"])
-            ]
-        hits_m = 0
-        for qi in range(10):
-            qv = _emb_mat[_pos[_emb_ids[qi]]]
-            qn = qv / max(float(_np.linalg.norm(qv)), 1e-12)
-            ex = set(
-                _emb_ids[i]
-                for i in _np.argsort(-(_emb_unit @ qn), kind="stable")[:10]
-            )
-            adc = set(
-                _emb_ids[i]
-                for i in _np.argsort(-(recon_m @ qv), kind="stable")[:10]
-            )
-            hits_m += len(ex & adc)
-        return round(hits_m / 100.0, 4)
+        return c.store.fanout_search_indexed(
+            c.fac_vec, k=10, kind=kind, on_missing="exact", **kw, **cols
+        )
 
-    _r16, _r32 = _pq_trained_recall(16), _pq_trained_recall(32)
-    pq_design_point_meta = {
-        "n_codes": 256,
-        "n_subs": 8,
-        "codebook": "trained",
-        "n_queries": 10,
-        "recall_at_10": round(_hits / 100.0, 4),
-        "designated_recall_at_10": round(_des_hits / 100.0, 4),
+    return Row(f"facade_search_{kind}", body, "self", plan=plan)
+
+
+def _ivf_design_point(c):
+    """IVF at the REFERENCE design point, nlist=128 and nprobe=16 (a 12.5%
+    scan fraction, modules/config.py:24-25 of gudwls215/vectordb-etl): a
+    full build of the 20k jittered corpus plus a 10-query batched serve,
+    graded by recall@3 (BASELINE.md target >= 0.9)."""
+    idx = IVFIndex(c.spark, f"{c.tmp}/ivf_dp").build(c.big_df(), nlist=128, seed=42, max_iter=8)
+    return idx.search_many(
+        c.queries, k=3, nprobe=16, tie_break=["vec_id"], output_cols=["vec_id"]
+    )
+
+
+def _ivf_design_point_meta(c, out) -> dict:
+    return {"nlist": 128, "nprobe": 16, "n_vectors": int(c.big.shape[0]),
+            "recall_at_3": served_recall(out, c.unit, c.queries, 3)}
+
+
+def _pq_design_point(c):
+    """PQ with a TRAINED 256-code x 8-subspace codebook (the registered
+    pq_topk keeps a readable designated one for its oracle)."""
+    return pq_topk_adc(
+        c.emb.select("vec_id", "embedding"), list(c.q), k=10,
+        n_codes=256, n_subs=8, codebook=c.pq_cb, encode="numpy",
+    )
+
+
+def _pq_recon(c, cb, n_subs: int) -> np.ndarray:
+    """Each corpus row rebuilt from the codes ``pq_encode`` assigns under
+    codebook ``cb``: one encode job, then numpy."""
+    cw = {(r["sub"], r["code"]): np.asarray(r["cw"], dtype=float) for r in cb.collect()}
+    sw = c.base.shape[1] // n_subs
+    recon = np.zeros_like(c.base)
+    for r in pq_encode(c.emb.select("vec_id", "embedding"), cb, n_subs=n_subs).collect():
+        recon[c.pos[r["id"]], r["sub"] * sw:(r["sub"] + 1) * sw] = cw[(r["sub"], r["code"])]
+    return recon
+
+
+def _designated_recon(c) -> np.ndarray:
+    """The same-size DESIGNATED codebook (codeword j := slice of vector j,
+    j < 256, 8 subspaces), numpy-only: the control for the trained one."""
+    cb = np.stack([c.base[c.pos[j]] for j in range(256) if j in c.pos])
+    sw = c.base.shape[1] // 8
+    recon = np.zeros_like(c.base)
+    for s in range(8):
+        sl = slice(s * sw, (s + 1) * sw)
+        d = (
+            (c.base[:, sl] ** 2).sum(axis=1)[:, None]
+            - 2.0 * (c.base[:, sl] @ cb[:, sl].T)
+            + (cb[:, sl] ** 2).sum(axis=1)[None, :]
+        )
+        recon[:, sl] = cb[np.argmin(np.round(d, 12), axis=1), sl]
+    return recon
+
+
+def _pq_design_point_meta(c, out) -> dict:
+    """This near-uniform corpus is isotropic, so an OPQ-style rotation has
+    no structure to exploit and the recall lever is CODE BUDGET (finer
+    subspaces): the trained m=8/16/32 curve is recorded next to the
+    designated control."""
+    curve = {"8": pq_recall(c, _pq_recon(c, c.pq_cb, 8))}
+    designated = pq_recall(c, _designated_recon(c))
+    for m in (16, 32):
+        cb = train_pq_codebook(c.emb, c.spark, n_codes=256, n_subs=m)
+        curve[str(m)] = pq_recall(c, _pq_recon(c, cb, m))
+    return {
+        "n_codes": 256, "n_subs": 8, "codebook": "trained", "n_queries": 10,
+        "recall_at_10": curve["8"],
+        "designated_recall_at_10": designated,
         "recall_grade_n_subs": 32,
-        "recall_grade_recall_at_10": _r32,
-        "recall_curve_by_n_subs": {
-            "8": round(_hits / 100.0, 4),
-            "16": _r16,
-            "32": _r32,
-        },
+        "recall_grade_recall_at_10": curve["32"],
+        "recall_curve_by_n_subs": curve,
         "note": "near-uniform corpus: isotropic, so OPQ rotation has no "
                 "structure to exploit; recall lever is code budget. m=8 "
                 "(64x compression) is the storage-size play, m=32 (16x) "
@@ -653,622 +504,386 @@ def main() -> None:
                 "should use ivf_pq_residual.",
     }
 
-    # IVF_PQ RESIDUAL design point (storage='pq_residual', pq_train=True —
-    # FAISS's IVF_PQ recipe, Jégou et al. 2011 §IV): codes quantize
-    # vector − assigned centroid. Measured on the CLUSTERED 20k jittered
-    # corpus (ivf_design_point's corpus — residual encoding only pays off
-    # when cells capture real cluster structure; on the near-uniform raw
-    # sf corpus it measurably does NOT, which is the paper's own
-    # precondition) at a BINDING code budget (K=16, m=8) where the
-    # encoding choice decides recall. Serve at the reference nprobe=16.
-    # The non-residual control at identical size is built untimed and its
-    # recall recorded alongside — measured r05: residual 0.80 vs raw 0.77
-    # (probe-all: 0.80 vs 0.70).
-    def _dp_pq_build(storage, path):
-        bigdf = _dp_spark_df()
-        return IVFIndex(spark, path).build(
-            bigdf, nlist=128, seed=42, max_iter=8,
-            storage=storage, pq_subs=8, pq_codes=16, pq_train=True,
-        )
 
-    def ivf_pq_residual_design_point():
-        idx = _dp_pq_build("pq_residual", f"{_bench_tmp}/ivfpqr_dp")
-        return idx.search_many(
-            _dp_queries, k=10, nprobe=16, tie_break=["vec_id"],
-            output_cols=["vec_id"],
-        )
-
-    run("ivf_pq_residual_design_point", ivf_pq_residual_design_point, collect=True)
-
-    def _dp_recall10(out) -> float:
-        got: dict[int, list[int]] = {}
-        for r in out.collect():
-            got.setdefault(r["query_id"], []).append(r["vec_id"])
-        hits = 0
-        for qi, qv in enumerate(_dp_queries):
-            qn = _np.asarray(qv) / max(_np.linalg.norm(qv), 1e-12)
-            ex = set(
-                int(x) for x in _np.argsort(-(_dp_unit @ qn), kind="stable")[:10]
-            )
-            hits += len(ex & set(got.get(qi, [])))
-        return round(hits / (10.0 * len(_dp_queries)), 4)
-
-    _res_recall = _dp_recall10(ivf_pq_residual_design_point())
-    _raw_idx = _dp_pq_build("pq", f"{_bench_tmp}/ivfpq_raw_dp")
-    _raw_recall = _dp_recall10(
-        _raw_idx.search_many(
-            _dp_queries, k=10, nprobe=16, tie_break=["vec_id"],
-            output_cols=["vec_id"],
-        )
+def _pq_index_search(c, storage: str):
+    """IVF_PQ (``storage="pq_residual"`` is FAISS's recipe, Jégou et al.
+    2011 §IV: codes quantize vector − assigned centroid, which pays off
+    only when cells capture real clusters) on the CLUSTERED 20k corpus at
+    a BINDING code budget (K=16, m=8), served at nprobe=16."""
+    idx = IVFIndex(c.spark, f"{c.tmp}/{storage}_dp").build(
+        c.big_df(), nlist=128, seed=42, max_iter=8,
+        storage=storage, pq_subs=8, pq_codes=16, pq_train=True,
     )
-    pq_residual_design_point_meta = {
-        "corpus": "jittered_20k_clustered",
-        "nlist": 128,
-        "nprobe": 16,
-        "n_codes": 16,
-        "n_subs": 8,
-        "codebook": "trained-residual",
-        "n_queries": len(_dp_queries),
-        "recall_at_10": _res_recall,
-        "non_residual_recall_at_10": _raw_recall,
+    return idx.search_many(
+        c.queries, k=10, nprobe=16, tie_break=["vec_id"], output_cols=["vec_id"]
+    )
+
+
+def _pq_residual_meta(c, out) -> dict:
+    """Residual recall next to the same-size non-residual control's."""
+    raw = _pq_index_search(c, "pq").collect()
+    return {
+        "corpus": "jittered_20k_clustered", "nlist": 128, "nprobe": 16,
+        "n_codes": 16, "n_subs": 8, "codebook": "trained-residual",
+        "n_queries": len(c.queries),
+        "recall_at_10": served_recall(out, c.unit, c.queries, 10),
+        "non_residual_recall_at_10": served_recall(raw, c.unit, c.queries, 10),
     }
 
-    # pass 2: re-measure cheapest-first while under budget, keep the min
-    # (rows timed outside run() — the facade serve rows — are already
-    # MIN-of-2 and have no registered runner)
-    for name in sorted(timings, key=timings.get):
-        if time.time() - bench_t0 > SECOND_PASS_BUDGET_S:
-            break
-        if name not in _runners:
-            continue
-        fn, collect = _runners[name]
-        timings[name] = min(timings[name], _measure(fn, collect))
 
-    # (Runs AFTER pass 2 on purpose: this is minutes-free but not
-    # instant single-threaded numpy, and it must not eat the pass-2
-    # re-measure budget.)
-    # Graph tier at the REFERENCE design point (m=16, efc=200, ef=100 —
-    # milvus_store.py:115-124, config.py:26-27): one shard-sized slice of the jittered
-    # corpus (≈2,500 rows ≈ a real shard after hashing), hierarchical HNSW
-    # vs the flat NSW it replaced, recall@10 against exact numpy truth AND
-    # total distance evaluations. Honest regime note: this corpus is
-    # 10-clone replica clusters, where any beam locks onto the clone group
-    # immediately — expect recall parity and near-equal evals (descent
-    # overhead ~7%). The hierarchy's win is on SPREAD-cluster corpora where
-    # flat NSW actually struggles (0.875 -> 0.992 recall with 17% fewer
-    # evals at n=3000, efc=200 — pinned deterministically in tests/test_ann.py
-    # ::test_hnsw_exact_edge_and_recall_not_worse_with_fewer_evals); both
-    # numbers are recorded so the trade is visible per run.
-    from vectordb_etl_spark.operators.graph_ann import (
-        beam_search as _gbeam,
-        build_hnsw as _gbuild_h,
-        build_nsw as _gbuild_f,
-        hnsw_levels as _glevels,
-        hnsw_search as _gsearch_h,
-    )
+ROWS: list[Row] = [
+    Row("etl_pipeline", lambda c: etl_frame(c.docs("doc_id", "source", "text")), "noop"),
+    *[_registered(n, "collect") for n in COLLECT_QUERIES],
+    *[_registered(n, "noop") for n in NOOP_QUERIES],
+    Row("ivf_topk", _ivf_topk),
+    Row("lsh_topk", _lsh_topk),
+    Row("graph_topk", _graph_topk),
+    Row("graph_acorn_topk", _graph_acorn_topk),
+    _facade_row("ivf", nprobe=4),
+    _facade_row("graph", ef=100),
+    Row("ivf_design_point", _ivf_design_point, check=_ivf_design_point_meta),
+    Row("pq_design_point", _pq_design_point, check=_pq_design_point_meta),
+    Row("ivf_pq_residual_design_point", lambda c: _pq_index_search(c, "pq_residual"),
+        check=_pq_residual_meta),
+]
 
-    _g_mat = _dp_unit[:2500]
-    _g_adjs, _g_entry = _gbuild_h(
-        _g_mat,
-        _glevels(_np.arange(_g_mat.shape[0]), m=16),
-        m=16,
-        ef_construction=200,
-    )
-    _g_flat = _gbuild_f(_g_mat, m=16, ef_construction=200)
-    _g_h = {"recall": 0, "evals": 0}
-    _g_f = {"recall": 0, "evals": 0}
-    for qv in _dp_queries:
-        qn = _np.asarray(qv) / max(_np.linalg.norm(qv), 1e-12)
-        truth = set(
-            int(x) for x in _np.argsort(-(_g_mat @ qn), kind="stable")[:10]
-        )
-        hs, fs = {"evals": 0}, {"evals": 0}
-        hh = {nd for _, nd in _gsearch_h(_g_mat, _g_adjs, _g_entry, qn, 100, stats=hs)[:10]}
-        fh = {nd for _, nd in _gbeam(_g_mat, _g_flat, qn, 100, stats=fs)[:10]}
-        _g_h["recall"] += len(truth & hh)
-        _g_f["recall"] += len(truth & fh)
-        _g_h["evals"] += hs["evals"]
-        _g_f["evals"] += fs["evals"]
-    _g_den = 10 * len(_dp_queries)
-    graph_design_point_meta = {
-        "corpus": "jittered_replica_shard",
-        "n_rows": int(_g_mat.shape[0]),
-        "m": 16,
-        "ef_construction": 200,
-        "ef": 100,
-        "n_queries": len(_dp_queries),
-        "hnsw_recall_at_10": round(_g_h["recall"] / _g_den, 4),
-        "flat_nsw_recall_at_10": round(_g_f["recall"] / _g_den, 4),
-        "hnsw_evals": _g_h["evals"],
-        "flat_nsw_evals": _g_f["evals"],
+
+def graph_design_points(c) -> tuple[dict, dict]:
+    """The graph tier at the REFERENCE design point (m=16, efc=200, ef=100,
+    milvus_store.py:115-124) on one shard-sized slice of the jittered
+    corpus: hierarchical HNSW vs the flat NSW it replaced, and ACORN
+    filtering during traversal vs post-filtering at a ~1%-selective
+    predicate, each as recall@10 against exact truth plus total distance
+    evaluations.
+
+    This corpus is 10-clone replica clusters, where any beam locks onto the
+    clone group at once, so HNSW and flat NSW reach parity; the hierarchy's
+    win on spread clusters (0.875 -> 0.992 recall, 17% fewer evals) is
+    pinned in tests/test_ann.py. At a fixed ef, post-filtering keeps ~ef x
+    selectivity matching rows, while traversal filtering fills k at the
+    same ef and pays hops instead."""
+    g = c.unit[:2500]
+    levels = hnsw_levels(np.arange(g.shape[0]), m=16)
+    adjs, entry = build_hnsw(g, levels, m=16, ef_construction=200)
+    flat = build_nsw(g, m=16, ef_construction=200)
+    mask = np.zeros(g.shape[0], dtype=bool)
+    mask[::89] = True  # 29 of 2500 rows ~ 1.1% selectivity
+    found = {v: [] for v in ("hnsw", "flat", "acorn", "post")}
+    evals = dict.fromkeys(found, 0)
+    for qv in c.queries:
+        qn = _unit_vec(qv)
+        st = {v: {"evals": 0} for v in ("hnsw", "flat", "acorn")}
+        beam = hnsw_search(g, adjs, entry, qn, 100, stats=st["hnsw"])
+        found["hnsw"].append([nd for _, nd in beam[:10]])
+        found["post"].append([nd for _, nd in beam if mask[nd]][:10])
+        flat_beam = beam_search(g, flat, qn, 100, stats=st["flat"])
+        found["flat"].append([nd for _, nd in flat_beam[:10]])
+        acorn = hnsw_search(g, adjs, entry, qn, 100, stats=st["acorn"], allowed=mask)
+        found["acorn"].append([nd for _, nd in acorn[:10]])
+        for v, s in st.items():
+            evals[v] += s["evals"]
+    evals["post"] = evals["hnsw"]  # the post-filter reads the same beam
+    truth = [exact_topk(g, qv, 10) for qv in c.queries]
+    truth_f = [exact_topk(g, qv, 10, mask) for qv in c.queries]
+    common = {"corpus": "jittered_replica_shard", "n_rows": int(g.shape[0])}
+    return {
+        **common, "m": 16, "ef_construction": 200, "ef": 100, "n_queries": len(c.queries),
+        "hnsw_recall_at_10": mean_recall(truth, found["hnsw"]),
+        "flat_nsw_recall_at_10": mean_recall(truth, found["flat"]),
+        "hnsw_evals": evals["hnsw"],
+        "flat_nsw_evals": evals["flat"],
         "note": "replica-cluster corpus: parity expected; spread-cluster "
                 "win (0.875->0.992 recall, -17% evals) pinned in "
                 "tests/test_ann.py",
-    }
-
-    # ACORN filtered-traversal design point (VERDICT r09 item 5): at a
-    # ~1%-selective predicate and a FIXED ef=100, compare the two filtered
-    # strategies on the same shard graph. Post-filter keeps ~ef×selectivity
-    # matching rows (≈1 of 100 — the beam must scale with 1/selectivity to
-    # fill k=10); during-traversal filtering keeps non-matching nodes
-    # navigable and expands until ef MATCHING hits bound the frontier, so
-    # the same ef fills k at any selectivity — the extra cost shows up as
-    # evals, not as a 100× beam. Both recalls + eval counts are recorded
-    # so the trade is visible per run.
-    _ac_mask = _np.zeros(_g_mat.shape[0], dtype=bool)
-    _ac_mask[::89] = True  # 29 of 2500 rows ~ 1.1% selectivity
-    _ac = {"recall": 0, "evals": 0}
-    _ac_post = {"recall": 0, "evals": 0}
-    for qv in _dp_queries:
-        qn = _np.asarray(qv) / max(_np.linalg.norm(qv), 1e-12)
-        scores = _g_mat @ qn
-        truth = set(
-            int(x)
-            for x in _np.argsort(
-                _np.where(_ac_mask, -scores, _np.inf), kind="stable"
-            )[:10]
-        )
-        a_s, p_s = {"evals": 0}, {"evals": 0}
-        a_hits = {
-            nd
-            for _, nd in _gsearch_h(
-                _g_mat, _g_adjs, _g_entry, qn, 100, stats=a_s,
-                allowed=_ac_mask,
-            )[:10]
-        }
-        p_hits = set(
-            [
-                nd
-                for _, nd in _gsearch_h(
-                    _g_mat, _g_adjs, _g_entry, qn, 100, stats=p_s
-                )
-                if _ac_mask[nd]
-            ][:10]
-        )
-        _ac["recall"] += len(truth & a_hits)
-        _ac_post["recall"] += len(truth & p_hits)
-        _ac["evals"] += a_s["evals"]
-        _ac_post["evals"] += p_s["evals"]
-    graph_acorn_meta = {
-        "corpus": "jittered_replica_shard",
-        "n_rows": int(_g_mat.shape[0]),
-        "selectivity": round(float(_ac_mask.mean()), 4),
-        "ef": 100,
-        "k": 10,
-        "n_queries": len(_dp_queries),
-        "acorn_recall_at_10": round(_ac["recall"] / _g_den, 4),
-        "post_filter_recall_at_10": round(_ac_post["recall"] / _g_den, 4),
-        "acorn_evals": _ac["evals"],
-        "post_filter_evals": _ac_post["evals"],
-        "post_filter_ef_for_k": int(10 / max(float(_ac_mask.mean()), 1e-9)),
+    }, {
+        **common, "selectivity": round(float(mask.mean()), 4), "ef": 100, "k": 10,
+        "n_queries": len(c.queries),
+        "acorn_recall_at_10": mean_recall(truth_f, found["acorn"]),
+        "post_filter_recall_at_10": mean_recall(truth_f, found["post"]),
+        "acorn_evals": evals["acorn"],
+        "post_filter_evals": evals["post"],
+        "post_filter_ef_for_k": int(10 / max(float(mask.mean()), 1e-9)),
         "note": "fixed ef=100 at ~1% selectivity: post-filter keeps "
                 "~ef*sel matching rows (beam must scale with "
                 "1/selectivity, ef~900 for k=10); traversal filtering "
                 "fills k at the same ef, paying hops instead",
     }
 
-    # Scale probe (untimed meta, not part of the suite metric): run the
-    # r04 dedup family at 1x and a 10x deterministically-replicated corpus
-    # and record the measured scaling exponent log10(t10/t1) — the
-    # empirical check that the claimed linear shapes (exchanges keyed only
-    # by md5(window) / cluster id / bigram) hold beyond the bench sf. Doc
-    # replicas get distinct ids and a replica-token suffix (near- but not
-    # exact-duplicate text keeps candidate volumes honest); the embedding
-    # 10x corpus is the jittered _dp_big already built above.
-    import math
 
-    from vectordb_etl_spark.functions import text as text_fns
-    from vectordb_etl_spark.operators import dedup as dedup_ops
-
-    _sp_docs1 = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    _sp_reps = spark.range(10).select(F.col("id").cast("int").alias("rep"))
-    _sp_docs10 = _sp_docs1.crossJoin(_sp_reps).select(
-        (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
-        F.concat("text", F.lit(" r"), F.col("rep")).alias("text"),
-    )
-    _sp_emb10 = _dp_spark_df()
-    _etl_docs1 = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    _etl_docs10 = _etl_docs1.crossJoin(_sp_reps).select(
-        (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
-        "source",
-        F.concat("text", F.lit(" r"), F.col("rep")).alias("text"),
-    )
-
-    def _etl_probe(docs):
-        d = ensure_min_partitions(docs).select(
-            "doc_id",
-            "source",
-            cleaning.clean_text_col("text").alias("text"),
-            language.detect_language_content_col("text").alias("language"),
+def _rot10(df):
+    """Ten disjoint-vocabulary replicas (per-replica alphabet rotation,
+    distinct ids, other columns unchanged). Suffix-token replicas would be
+    near-identical shingle sets whose LSH buckets and simhash blocks
+    collide ACROSS replicas, growing pair counts quadratically by
+    construction."""
+    lo, up = string.ascii_lowercase, string.ascii_uppercase
+    out = None
+    for rep in range(10):
+        rot = lo[rep:] + lo[:rep] + up[rep:] + up[:rep]
+        part = df.select(
+            (F.col("doc_id") + rep * 1_000_000).alias("doc_id"),
+            *[c for c in df.columns if c not in ("doc_id", "text")],
+            F.translate("text", lo + up, rot).alias("text"),
         )
-        chunks = chunker.chunk_documents(d, ChunkerConfig())
-        deduped = chunker.remove_duplicate_chunks(chunks)
-        return with_embeddings(deduped, config=EmbeddingConfig(dimension=64))
-    _sp_cents1 = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
-    )
-    # SemDeDup's linear shape is Σ n_c² ≈ n²/k with k CHOSEN so rows/cluster
-    # stays constant (the operator's documented contract) — so the 10x
-    # probe runs 10x clusters, not 10x-fatter clusters
-    _sp_cents10 = _sp_emb10.filter(F.col("vec_id") < 80).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
-    )
+        out = part if out is None else out.unionByName(part)
+    return out
 
-    def _noop_time(fn) -> float:
-        t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
 
-    # Graph-family probe edges (VERDICT r06 item 5): base = the part
-    # co-purchase graph of 1/10 of orders; 10x = ten DISJOINT id-offset
-    # replicas of that base. Replicas (not "all orders") keep the degree
-    # distribution fixed while edges grow 10x, so the exponent isolates
-    # the operators' scaling — triangle counting's O(m^1.5) wedge bound
-    # with degree-ordered orientation, and kcore/LPA's
-    # bounded-shuffles-per-round — from density drift.
-    from vectordb_etl_spark.operators import graph_analytics as graph_ops
+def noop_probes(c) -> tuple[dict, dict]:
+    """Noop-sink probes at 1x and 10x, min-of-2 per leg (single-shot legs
+    swung the exponent by ~0.5 run to run), and the sf1.0 rehearsal of the
+    dedup headliners. Doc replicas get distinct ids and a replica-token
+    suffix (near- but not exact-duplicate text keeps candidate volumes
+    honest). Graph edges are the part co-purchase graph of 1/10 of orders
+    and ten DISJOINT id-offset replicas of it, so degrees stay fixed while
+    edges grow 10x. SemDeDup's Σ n_c² ≈ n²/k is linear when k keeps
+    rows/cluster constant, so its 10x leg runs 10x clusters. Returns
+    (scale_probe, sf1_checks)."""
+    reps = c.spark.range(10).select(F.col("id").cast("int").alias("rep"))
 
-    _sp_li = (
-        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    def rep10(df, *cols):
+        return df.crossJoin(reps).select(
+            (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
+            *cols,
+            F.concat("text", F.lit(" r"), F.col("rep")).alias("text"),
+        )
+
+    def cents(e, n):
+        return e.filter(F.col("vec_id") < n).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
+        )
+
+    docs1, etl1, emb10 = c.docs("doc_id", "text"), c.docs("doc_id", "source", "text"), c.big_df()
+    docs10 = rep10(docs1)
+    li = (
+        c.spark.read.parquet(f"{c.sf}/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
         .filter(F.col("l_orderkey") % 10 == 0)
     )
-    _sp_li2 = _sp_li.select(
-        F.col("l_orderkey").alias("k2"), F.col("l_partkey").alias("p2")
-    )
-    _sp_edges1 = (
-        _sp_li.join(_sp_li2, _sp_li.l_orderkey == _sp_li2.k2)
+    li2 = li.select(F.col("l_orderkey").alias("k2"), F.col("l_partkey").alias("p2"))
+    edges1 = (
+        li.join(li2, li.l_orderkey == li2.k2)
         .filter(F.col("l_partkey") < F.col("p2"))
         .select(F.col("l_partkey").alias("src"), F.col("p2").alias("dst"))
     )
-    _sp_edges10 = _sp_edges1.crossJoin(_sp_reps).select(
-        (F.col("src") + F.col("rep").cast("long") * 10_000_000).alias("src"),
-        (F.col("dst") + F.col("rep").cast("long") * 10_000_000).alias("dst"),
+    edges10 = edges1.crossJoin(reps).select(
+        *[(F.col(x) + F.col("rep").cast("long") * 10_000_000).alias(x) for x in ("src", "dst")]
     )
-
-    _sp_cases = {
+    cases = {  # name: (op, 1x input, 10x input)
         "substring_dup_stats": (
-            lambda: dedup_ops.substring_dup_stats(_sp_docs1, width=40, stride=20),
-            lambda: dedup_ops.substring_dup_stats(_sp_docs10, width=40, stride=20),
+            lambda d: dedup_ops.substring_dup_stats(d, width=40, stride=20), docs1, docs10
         ),
         "semantic_dedup": (
-            lambda: dedup_ops.semantic_dedup(emb, _sp_cents1, threshold=0.45),
-            lambda: dedup_ops.semantic_dedup(_sp_emb10, _sp_cents10, threshold=0.45),
+            lambda ec: dedup_ops.semantic_dedup(*ec, threshold=0.45),
+            (c.emb, cents(c.emb, 8)), (emb10, cents(emb10, 80)),
         ),
-        "bigram_logprob": (
-            lambda: text_fns.bigram_logprob_scores(_sp_docs1),
-            lambda: text_fns.bigram_logprob_scores(_sp_docs10),
-        ),
-        "triangle_count": (
-            lambda: graph_ops.triangle_count(_sp_edges1),
-            lambda: graph_ops.triangle_count(_sp_edges10),
-        ),
-        "kcore": (
-            lambda: graph_ops.kcore(_sp_edges1, k=10, rounds=4),
-            lambda: graph_ops.kcore(_sp_edges10, k=10, rounds=4),
-        ),
-        "label_propagation": (
-            lambda: graph_ops.label_propagation(_sp_edges1, rounds=2),
-            lambda: graph_ops.label_propagation(_sp_edges10, rounds=2),
-        ),
-        # flagship ETL probe (VERDICT r09 item 3): the clean -> chunk ->
-        # dedup -> hash-embed lifecycle was the one SURVEY §3.1 path with
-        # no measured exponent; its hot path is the chunk_text pandas UDF.
-        # Regime note: per-document parallelism (the three pandas UDFs map
-        # rows independently; the only exchange is the dedup window keyed
-        # by chunk md5) => expect ~1.0 LINEAR, no super-linear shuffle.
-        # Replica docs get distinct ids + a replica-token text suffix so
-        # dedup candidate volumes stay honest (near- not exact-dup).
-        "etl_pipeline": (
-            lambda: _etl_probe(_etl_docs1),
-            lambda: _etl_probe(_etl_docs10),
-        ),
+        "bigram_logprob": (text_fns.bigram_logprob_scores, docs1, docs10),
+        "triangle_count": (graph_ops.triangle_count, edges1, edges10),
+        "kcore": (lambda e: graph_ops.kcore(e, k=10, rounds=4), edges1, edges10),
+        "label_propagation": (lambda e: graph_ops.label_propagation(e, rounds=2), edges1, edges10),
+        "etl_pipeline": (etl_frame, etl1, rep10(etl1, "source")),
     }
-    # MIN-of-2 per leg (VERDICT r08 item 3): single-shot 1x/10x timings
-    # swung the measured exponent by ~0.5 run-to-run (bigram_logprob
-    # 0.461 vs 0.927 on identical code) — GC pauses / first-touch page
-    # faults on one leg shift log10(t10/t1) directly. Same policy as the
-    # main suite rows: best-of-N is the low-noise estimator of the
-    # code's cost, and the exponent needs BOTH legs de-noised.
     scale_probe = {}
-    for name, (f1, f10) in _sp_cases.items():
-        t1 = min(_noop_time(f1), _noop_time(f1))
-        t10 = min(_noop_time(f10), _noop_time(f10))
-        scale_probe[name] = {
-            "t_1x": t1,
-            "t_10x": t10,
-            "exponent": round(math.log10(max(t10, 1e-3) / max(t1, 1e-3)), 3),
-        }
+    for name, (op, x1, x10) in cases.items():
+        t1, t10 = (best(c, Row(name, lambda _, x=x: op(x), "noop")) for x in (x1, x10))
+        scale_probe[name] = {"t_1x": t1, "t_10x": t10, "exponent": exponent(t1, t10)}
     scale_probe["etl_pipeline"]["note"] = (
         "clean->chunk->dedup->embed lifecycle; per-document parallelism "
         "(three pandas UDFs map rows independently; the only exchange is "
         "the dedup window keyed by chunk md5) => expect ~1.0 LINEAR, no "
         "super-linear shuffle"
     )
-
-    # sf1.0 rehearsal (VERDICT r10 item 4): run the dedup headliners that
-    # had NO measured exponent — minhash LSH, simhash blocking, connected
-    # components — once at sf1.0 volume (10x the sf0.1 documents) and
-    # record measured-vs-design agreement. The 10x corpus is DISJOINT-
-    # vocabulary replicas (per-replica alphabet rotation via translate):
-    # suffix-token replicas would be near-identical shingle sets, so LSH
-    # buckets/simhash blocks would collide ACROSS replicas and the pair
-    # count would grow quadratically by construction — measuring the
-    # corpus trick, not the operator. Rotated vocabularies keep replica
-    # content disjoint, the true "10x more distinct documents" shape.
-    # Design bound for all three: ~1.0 (pair work bucketed by band/block
-    # keys; components do O(log n) bounded-shuffle rounds).
-    import string as _string
-
-    _lo, _up = _string.ascii_lowercase, _string.ascii_uppercase
-
-    def _rot10(df):
-        """Ten disjoint-vocabulary replicas: per-replica alphabet rotation,
-        distinct ids, every non-text column carried through unchanged."""
-        out = None
-        for _rep in range(10):
-            _rot = _lo[_rep:] + _lo[:_rep] + _up[_rep:] + _up[:_rep]
-            _part = df.select(
-                (F.col("doc_id") + _rep * 1_000_000).alias("doc_id"),
-                *[c for c in df.columns if c not in ("doc_id", "text")],
-                F.translate("text", _lo + _up, _rot).alias("text"),
-            )
-            out = _part if out is None else out.unionByName(_part)
-        return out
-
-    _sf1_docs = _rot10(_sp_docs1)
-
-    def _components_probe(docs):
-        pairs = dedup_ops.lsh_candidate_pairs(docs, num_hashes=8, bands=4)
-        return dedup_ops.connected_components(docs, pairs)
-
-    _sf1_cases = {
-        "minhash_lsh_candidates": lambda d: dedup_ops.lsh_candidate_pairs(
-            d, num_hashes=8, bands=4
-        ),
+    # sf1.0 rehearsal, once at 10x disjoint-vocabulary volume; the design
+    # bound is ~1.0 for all three (pair work is bucketed by band/block keys,
+    # components run O(log n) bounded-shuffle rounds)
+    sf1_cases = {
+        "minhash_lsh_candidates": lambda d: dedup_ops.lsh_candidate_pairs(d, num_hashes=8, bands=4),
         "simhash_near_dups": lambda d: dedup_ops.simhash_near_dup_pairs(
             d, bits=32, max_hamming=3, blocks=4
         ),
-        "dedup_components": _components_probe,
+        "dedup_components": lambda d: dedup_ops.connected_components(
+            d, dedup_ops.lsh_candidate_pairs(d, num_hashes=8, bands=4)
+        ),
     }
+    sf1_docs = _rot10(docs1)
     sf1_checks = {}
-    for name, op in _sf1_cases.items():
-        t1 = min(
-            _noop_time(lambda: op(_sp_docs1)),
-            _noop_time(lambda: op(_sp_docs1)),
+    for name, op in sf1_cases.items():
+        t1 = best(c, Row(name, lambda _: op(docs1), "noop"))
+        t_sf1 = measure(c, Row(name, lambda _: op(sf1_docs), "noop"))[0]
+        # end-to-end, job overhead included: far below 1 means
+        # overhead-dominated legs; a quadratic pair blowup would read ~10
+        sf1_checks[name] = sf1_record(
+            t1, t_sf1, 1.0,
+            "end-to-end incl. job overhead; binding claim is "
+            "measured_over_predicted <= ~1",
         )
-        t_sf1 = _noop_time(lambda: op(_sf1_docs))  # once, per the rehearsal
-        measured = round(math.log10(max(t_sf1, 1e-3) / max(t1, 1e-3)), 3)
-        sf1_checks[name] = {
-            "t_1x": t1,
-            "t_sf1": t_sf1,
-            "measured_exponent": measured,
-            "design_exponent": 1.0,
-            # >1 means the sf1 run cost more than the linear design
-            # predicts from the 1x leg; the scalar the compact line keeps
-            "measured_over_predicted": round(
-                t_sf1 / max(t1 * 10.0, 1e-3), 3
-            ),
-            # end-to-end job times, fixed overhead NOT subtracted: values
-            # far below 1 mean overhead-dominated legs at bench scale;
-            # the binding rehearsal claim is the absence of super-linear
-            # blowup (a quadratic pair explosion would read ~10x here)
-            "note": "end-to-end incl. job overhead; binding claim is "
-                    "measured_over_predicted <= ~1",
-        }
+    return scale_probe, sf1_checks
 
-    # ANN index BUILD probes (VERDICT r07 item 6): the 100 TB risk in the
-    # ANN tier is build, not probe — IVF is a bounded driver-sample train
-    # plus a linear assign scan, HNSW is hash-sharding plus per-shard
-    # in-memory construction at FIXED shard size (10x rows => 10x shards,
-    # not 10x-fatter shards), so both must probe sub-linear wall-clock on
-    # local[32]. build() writes its layout, which is the action being
-    # timed (no noop sink needed).
-    from vectordb_etl_spark.operators.graph_ann import GraphANNIndex as _GIdx
 
-    def _build_time(fn) -> float:
-        t0 = time.time()
-        fn()
-        return round(time.time() - t0, 3)
+def marginal_legs(c, serve, queries) -> dict:
+    """Marginal per-batch serve cost: an N-query batch and a 1-query batch
+    (same plan shape, same launch cost) timed twice each and differenced,
+    so job overhead cancels and the per-query work remains.
+    ``serve(qs)`` returns the batch's result frame."""
+    runs = [
+        tuple(measure(c, Row("serve", lambda _, q=q: serve(q)))[0] for q in (queries, queries[:1]))
+        for _ in range(2)
+    ]
+    return {
+        "t_batch": [r[0] for r in runs],
+        "t_one": [r[1] for r in runs],
+        "marginal": [round(max(r[0] - r[1], 1e-3), 3) for r in runs],
+    }
 
-    _build_cases = {
-        "ivf_build": (
-            lambda: IVFIndex(spark, f"{_bench_tmp}/sp_ivf1").build(
-                emb, nlist=64, seed=42, max_iter=8
-            ),
-            lambda: IVFIndex(spark, f"{_bench_tmp}/sp_ivf10").build(
-                _sp_emb10, nlist=64, seed=42, max_iter=8
-            ),
-        ),
-        "hnsw_build": (
-            lambda: _GIdx(spark, f"{_bench_tmp}/sp_g1").build(
-                emb, target_rows_per_shard=250, m=16, ef_construction=64
-            ),
-            lambda: _GIdx(spark, f"{_bench_tmp}/sp_g10").build(
-                _sp_emb10, target_rows_per_shard=250, m=16,
-                ef_construction=64,
-            ),
+
+def marginal_exponents(legs1: dict, legs10: dict, n_queries: int) -> dict:
+    """The headline exponent from MIN-of-2 marginals, plus one exponent per
+    raw run so sign stability is visible per record."""
+    m1, m10 = min(legs1["marginal"]), min(legs10["marginal"])
+    per_run = [exponent(a, b) for a, b in zip(legs1["marginal"], legs10["marginal"])]
+    return {
+        "n_queries": n_queries,
+        "t_batch_1x": legs1["t_batch"], "t_one_1x": legs1["t_one"],
+        "t_batch_10x": legs10["t_batch"], "t_one_10x": legs10["t_one"],
+        "marginal_1x": m1, "marginal_10x": m10,
+        "exponent": exponent(m1, m10),
+        "exponent_runs": per_run,
+        "exponent_spread": round(max(per_run) - min(per_run), 3),
+        # valid only when the timed work dwarfs the launch cost it
+        # subtracts: marginal >= ~10x the 1-query job
+        "overhead_ratio_1x": round(m1 / max(min(legs1["t_one"]), 1e-3), 2),
+        "overhead_ratio_10x": round(m10 / max(min(legs10["t_one"]), 1e-3), 2),
+    }
+
+
+def index_probes(c, scale_probe: dict, sf1_checks: dict) -> dict:
+    """ANN build and serve probes: adds to ``scale_probe`` and
+    ``sf1_checks`` and returns the graph_serve_skew block.
+
+    Builds: IVF is a bounded driver-sample train plus a linear assign scan,
+    and HNSW hash-shards at a FIXED shard size (10x rows => 10x shards), so
+    both must probe sub-linear. Serve batches are sized so the 1x leg's
+    marginal work clears ~10x the 1-query job cost. Graph serve's per-query
+    work grows with shard count (throughput via shard parallelism, a linear
+    BOUND on fixed cores); IVF serve is FAISS-standard nlist ∝ √n with
+    nprobe fixed, so probed rows per query grow as √n. The serving tiers'
+    10x corpora ARE sf1.0 volume, so their marginal legs are also the sf1.0
+    rehearsal."""
+    emb10 = c.big_df()
+    builds = {
+        "ivf_build": lambda e, p: IVFIndex(c.spark, p).build(e, nlist=64, seed=42, max_iter=8),
+        "hnsw_build": lambda e, p: GraphANNIndex(c.spark, p).build(
+            e, target_rows_per_shard=250, m=16, ef_construction=64
         ),
     }
-    for name, (f1, f10) in _build_cases.items():
-        t1 = min(_build_time(f1), _build_time(f1))
-        t10 = min(_build_time(f10), _build_time(f10))
+    for name, build in builds.items():
+        t1, t10 = (
+            best(c, Row(name, lambda _, e=e, p=p: build(e, f"{c.tmp}/{name}{p}"), "self"))
+            for e, p in ((c.emb, 1), (emb10, 10))
+        )
         scale_probe[name] = {
-            "t_1x": t1,
-            "t_10x": t10,
-            "exponent": round(math.log10(max(t10, 1e-3) / max(t1, 1e-3)), 3),
-            # at bench scale the 1x corpus builds fewer shards than the
-            # host has cores, so the 10x run gains parallelism the 1x run
-            # never used — exponents can land near (even below) zero;
-            # the claim probed is "<= 1", not a specific slope
+            "t_1x": t1, "t_10x": t10, "exponent": exponent(t1, t10),
+            # the 1x corpus builds fewer shards than the host has cores, so
+            # the 10x leg gains parallelism: the claim probed is "<= 1"
             "note": "fixed shard/sample size; 10x adds shards not shard rows",
         }
-
-    # SERVE scale probes (r09 verdict item 1 rewrite): the r09 probes
-    # timed one 10-query batch per leg, and at 2k->20k vectors that is
-    # dominated by fixed Spark job overhead — the committed r09 record
-    # shows ivf_serve t_10x FASTER than t_1x (exponent -0.32 on a sqrt-n
-    # design; sign unstable run to run). The instrument now measures the
-    # MARGINAL per-batch cost: at each scale, time an N-query batch and a
-    # 1-query batch (same plan shape, same launch cost) and difference
-    # them — job overhead cancels, leaving the per-query scan/beam work
-    # the 100 TB claim is actually about. Each timing is run twice;
-    # the headline exponent uses MIN-of-2 marginals and the two raw runs
-    # yield an independent exponent apiece, recorded as exponent_runs so
-    # sign stability and the ±0.15 agreement are visible per record.
-    # batch sizes per tier, sized so the 1x leg's marginal work clears
-    # ~10x the 1-query job cost (the gate below records the measured
-    # ratio): IVF probes are CHEAP by design (constant-fraction pruned
-    # scan, one JVM job for any N) so N must be large; graph beams cost
-    # real python per query so a smaller N already dwarfs launch.
-    # (Measured at sf0.1: IVF N=6000 -> marginal_1x ~10 s vs ~0.8 s
-    # 1-query job; graph N=300 -> ~10 s vs ~0.4 s.)
-    _SV_NQ_IVF, _SV_NQ_GRAPH = 6_000, 300
-
-    def _sv_queries(n: int) -> list:
-        stride = max(1, _dp_big.shape[0] // n)
-        return [
-            [float(x) for x in _dp_big[(i * stride) % _dp_big.shape[0]]]
-            for i in range(n)
-        ]
-
-    def _marginal_probe(serve_batch, queries) -> dict:
-        """serve_batch(queries) runs one batched serve job; returns the
-        marginal-cost legs: two (t_N, t_1) timing pairs."""
-        runs = []
-        for _ in range(2):
-            t0 = time.time()
-            serve_batch(queries)
-            t_n = round(time.time() - t0, 3)
-            t0 = time.time()
-            serve_batch(queries[:1])
-            t_1 = round(time.time() - t0, 3)
-            runs.append((t_n, t_1))
-        return {
-            "t_batch": [r[0] for r in runs],
-            "t_one": [r[1] for r in runs],
-            "marginal": [round(max(r[0] - r[1], 1e-3), 3) for r in runs],
-        }
-
-    def _marginal_exponents(legs1, legs10, n_queries) -> dict:
-        m1 = min(legs1["marginal"])
-        m10 = min(legs10["marginal"])
-        per_run = [
-            round(math.log10(max(b, 1e-3) / max(a, 1e-3)), 3)
-            for a, b in zip(legs1["marginal"], legs10["marginal"])
-        ]
-        return {
-            "n_queries": n_queries,
-            "t_batch_1x": legs1["t_batch"], "t_one_1x": legs1["t_one"],
-            "t_batch_10x": legs10["t_batch"], "t_one_10x": legs10["t_one"],
-            "marginal_1x": m1,
-            "marginal_10x": m10,
-            "exponent": round(math.log10(max(m10, 1e-3) / max(m1, 1e-3)), 3),
-            "exponent_runs": per_run,
-            "exponent_spread": round(max(per_run) - min(per_run), 3),
-            # the instrument is only valid when the timed work dwarfs the
-            # launch cost it subtracts: marginal >= ~10x the 1-query job
-            "overhead_ratio_1x": round(
-                m1 / max(min(legs1["t_one"]), 1e-3), 2
-            ),
-            "overhead_ratio_10x": round(
-                m10 / max(min(legs10["t_one"]), 1e-3), 2
-            ),
-        }
-
-    # GRAPH serve: fixed shard size means per-QUERY work grows with shard
-    # count — every shard is beam-searched and merged — so the graph
-    # tier's serve contract is THROUGHPUT via shard parallelism
-    # (wall-clock flattens when executors scale with data), not per-query
-    # sublinearity. On fixed local[32] cores the 10x leg runs 80 shards
-    # over 32 slots (~2.5 waves): the honest expectation is an exponent
-    # near (or below) 1 from batch amortization + parallel slack, ABOVE
-    # ivf_serve's (partition pruning scans a constant fraction; shard
-    # fan-out does not). Reuses the layouts the build probes persisted.
-    _g1_idx = _GIdx(spark, f"{_bench_tmp}/sp_g1")
-    _g10_idx = _GIdx(spark, f"{_bench_tmp}/sp_g10")
-    _gq = _sv_queries(_SV_NQ_GRAPH)
-    _gs_legs1 = _marginal_probe(
-        lambda qs: _g1_idx.search_many(qs, k=10, ef=64).collect(), _gq
-    )
-    _gs_legs10 = _marginal_probe(
-        lambda qs: _g10_idx.search_many(qs, k=10, ef=64).collect(), _gq
-    )
+    n_graph, n_ivf = 300, 6_000
+    gq = c.big_queries(n_graph)
+    graph_legs = [
+        marginal_legs(c, lambda qs, i=i: i.search_many(qs, k=10, ef=64), gq)
+        for i in (GraphANNIndex(c.spark, f"{c.tmp}/hnsw_build{s}") for s in (1, 10))
+    ]
     scale_probe["graph_serve"] = {
-        **_marginal_exponents(_gs_legs1, _gs_legs10, _SV_NQ_GRAPH),
+        **marginal_exponents(*graph_legs, n_graph),
         "note": "marginal cost of a 300-query batch (batch minus 1-query "
                 "job, min-of-2); fixed shard size: per-query work grows "
                 "with shard count (8 -> 80), served by shard PARALLELISM "
                 "— throughput contract, cores fixed at 32 here",
     }
+    skew = skew_probe(c)
+    sv1 = IVFIndex(c.spark, f"{c.tmp}/sv1").build(c.emb, nlist=20, seed=42, max_iter=8)
+    sv10 = IVFIndex(c.spark, f"{c.tmp}/sv10").build(emb10, nlist=63, seed=42, max_iter=8)
 
-    # GRAPH serve under shard SKEW (VERDICT r10 item 6): the exponent
-    # above assumes balanced shards; real corpora skew via append-heavy
-    # segment mixes (one old compacted segment + many small add() ones).
-    # Layout A (skewed 10:1): ~10/19 of the 1x corpus as ONE base segment
-    # (build num_shards=1) + the rest add()ed at a unit-sized
-    # target_rows_per_shard — the derived count keeps NEW batches
-    # balanced (recorded), but the oversized base segment persists until
-    # rebuild. Layout B (balanced): same corpus, 10 equal hash shards.
-    # Both serve the same 100-query batch; penalty = t_skew/t_balanced is
-    # the tail-shard price a compaction would reclaim.
-    _skew_key = F.pmod(F.hash(F.col("vec_id")), F.lit(19))
-    _skew_big = emb.where(_skew_key < 10)
-    _skew_rest = emb.where(_skew_key >= 10)
-    _skew_unit = max(1, _skew_rest.count() // 9)
-    _gskew = _GIdx(spark, f"{_bench_tmp}/sp_gskew").build(
-        _skew_big, num_shards=1, m=16, ef_construction=64
+    def serve(idx, qs):
+        return idx.search_many(qs, k=10, nprobe=8, tie_break=["vec_id"], output_cols=["vec_id"])
+
+    ivq = c.big_queries(n_ivf)
+    ivf_legs = [marginal_legs(c, lambda qs, i=i: serve(i, qs), ivq) for i in (sv1, sv10)]
+    scale_probe["ivf_serve"] = {
+        **marginal_exponents(*ivf_legs, n_ivf),
+        "recall_at_10_1x": served_recall(
+            serve(sv1, c.queries).collect(), c.base_unit, c.queries, 10, c.ids
+        ),
+        "recall_at_10_10x": served_recall(serve(sv10, c.queries).collect(), c.unit, c.queries, 10),
+        "note": "marginal cost of a 6k-query batch (batch minus 1-query "
+                "job, min-of-2); nlist scales as sqrt(n) (20 -> 63), "
+                "nprobe fixed at 8: probed rows per query grow as "
+                "sqrt(n); fixed nlist on growing data is the serving "
+                "anti-pattern",
+    }
+    sf1_checks["ivf_serve"] = sf1_record(
+        *(min(leg["marginal"]) for leg in ivf_legs), 0.5,
+        "marginal 6k-query serve legs (same instrument as "
+        "scale_probe.ivf_serve); design sqrt(n) via sqrt-n nlist",
     )
-    _gskew.add(
-        _skew_rest, m=16, ef_construction=64,
-        target_rows_per_shard=_skew_unit,
+    sf1_checks["graph_serve"] = sf1_record(
+        *(min(leg["marginal"]) for leg in graph_legs), 1.0,
+        "marginal 300-query serve legs; linear BOUND on fixed "
+        "cores (throughput contract: shard parallelism absorbs "
+        "the growth when executors scale with data)",
     )
-    _gbal = _GIdx(spark, f"{_bench_tmp}/sp_gbal").build(
-        emb, num_shards=10, m=16, ef_construction=64
+    etl_sf1 = _rot10(c.docs("doc_id", "source", "text"))
+    sf1_checks["etl_pipeline"] = sf1_record(
+        scale_probe["etl_pipeline"]["t_1x"],
+        measure(c, Row("etl_pipeline", lambda _: etl_frame(etl_sf1), "noop"))[0],
+        1.0,
+        "clean->chunk->dedup->embed once at 10x disjoint-"
+        "vocabulary volume; per-document parallelism => linear",
     )
-    _skew_sizes = sorted(
+    return skew
+
+
+def skew_probe(c) -> dict:
+    """Graph serve under shard SKEW: ~10/19 of the 1x corpus as ONE base
+    segment plus the rest add()ed at a unit-sized target_rows_per_shard
+    (new batches stay balanced, the oversized base persists), against the
+    same corpus in 10 equal hash shards. The index must SAY it needs
+    compacting (rebalance_hint), and the same 100-query batch re-served
+    after compact() prices the result."""
+    key = F.pmod(F.hash(F.col("vec_id")), F.lit(19))
+    rest = c.emb.where(key >= 10)
+    skewed = GraphANNIndex(c.spark, f"{c.tmp}/sp_gskew").build(
+        c.emb.where(key < 10), num_shards=1, m=16, ef_construction=64
+    )
+    skewed.add(rest, m=16, ef_construction=64, target_rows_per_shard=max(1, rest.count() // 9))
+    balanced = GraphANNIndex(c.spark, f"{c.tmp}/sp_gbal").build(
+        c.emb, num_shards=10, m=16, ef_construction=64
+    )
+    sizes = sorted(
         r["count"]
-        for r in spark.read.parquet(f"{_bench_tmp}/sp_gskew")
-        .groupBy("shard").count().collect()
+        for r in c.spark.read.parquet(f"{c.tmp}/sp_gskew").groupBy("shard").count().collect()
     )
+    qs = c.big_queries(100)
 
-    def _t_serve_skew(idx) -> float:
-        qs = _sv_queries(100)
-        ts = []
-        for _ in range(2):
-            t0 = time.time()
-            idx.search_many(qs, k=10, ef=64).collect()
-            ts.append(round(time.time() - t0, 3))
-        return min(ts)
+    def t_serve(idx) -> float:
+        return best(c, Row("graph_serve_skew", lambda _: idx.search_many(qs, k=10, ef=64)))
 
-    _t_skew, _t_bal = _t_serve_skew(_gskew), _t_serve_skew(_gbal)
-    _med_shard = _skew_sizes[(len(_skew_sizes) - 1) // 2]  # lower median, as rebalance_hint
-    # third leg (VERDICT r11 item 1): close the compaction loop — the
-    # index itself must SAY it needs compacting (rebalance_hint), and
-    # compact() must actually remove the tail-shard penalty, not just
-    # exist. Re-serve the SAME query batch on the re-sharded layout.
-    _hint_before = _gskew.rebalance_hint()
-    _gskew.compact(num_shards=10, m=16, ef_construction=64)
-    _hint_after = _gskew.rebalance_hint()
-    _t_compacted = _t_serve_skew(_gskew)
-    graph_serve_skew = {
-        "t_skew": _t_skew,
-        "t_balanced": _t_bal,
-        "t_compacted": _t_compacted,
-        "penalty": round(_t_skew / max(_t_bal, 1e-3), 3),
-        "penalty_compacted": round(_t_compacted / max(_t_bal, 1e-3), 3),
-        "n_shards": len(_skew_sizes),
-        "max_shard": _skew_sizes[-1],
-        "median_shard": _med_shard,
-        "max_over_median": round(_skew_sizes[-1] / max(_med_shard, 1), 2),
-        "max_over_median_compacted": _hint_after["max_over_median"],
-        "recommend_compact_before": _hint_before["recommend_compact"],
-        "recommend_compact_after": _hint_after["recommend_compact"],
-        "derived_add_shards": len(_skew_sizes) - 1,
+    t_skew, t_bal = t_serve(skewed), t_serve(balanced)
+    med = sizes[(len(sizes) - 1) // 2]  # lower median, as rebalance_hint
+    hint_before = skewed.rebalance_hint()
+    skewed.compact(num_shards=10, m=16, ef_construction=64)
+    hint_after = skewed.rebalance_hint()
+    t_compacted = t_serve(skewed)
+    return {
+        "t_skew": t_skew, "t_balanced": t_bal, "t_compacted": t_compacted,
+        "penalty": round(t_skew / max(t_bal, 1e-3), 3),
+        "penalty_compacted": round(t_compacted / max(t_bal, 1e-3), 3),
+        "n_shards": len(sizes), "max_shard": sizes[-1], "median_shard": med,
+        "max_over_median": round(sizes[-1] / max(med, 1), 2),
+        "max_over_median_compacted": hint_after["max_over_median"],
+        "recommend_compact_before": hint_before["recommend_compact"],
+        "recommend_compact_after": hint_after["recommend_compact"],
+        "derived_add_shards": len(sizes) - 1,
         "note": "100-query batch, min-of-2, identical corpus/ef; add() "
                 "derives unit-sized shards for NEW data (stays balanced) "
                 "but the oversized base segment persists until compact() "
@@ -1276,175 +891,58 @@ def main() -> None:
                 "re-shards by id hash, and t_compacted prices the result",
     }
 
-    # IVF SERVE scale probe (r09): the serving contract at scale is
-    # FAISS-standard nlist ∝ √n with nprobe fixed — probed rows per query
-    # grow as √n, so batched serve wall-clock should probe ~0.5, NOT ~1
-    # (fixed nlist on growing data is the serving anti-pattern: cells
-    # fatten linearly and every probe scans linearly more). Builds are
-    # untimed here (the build probes above own that claim); recall@10 vs
-    # exact numpy is recorded on BOTH legs to show the √n-nlist choice
-    # holds quality roughly flat while serve cost stays sub-linear.
-    _sv1 = IVFIndex(spark, f"{_bench_tmp}/sp_sv1").build(
-        emb, nlist=20, seed=42, max_iter=8
-    )
-    _sv10 = IVFIndex(spark, f"{_bench_tmp}/sp_sv10").build(
-        _sp_emb10, nlist=63, seed=42, max_iter=8
-    )
 
-    def _serve_out(idx, qs=None):
-        return idx.search_many(
-            qs if qs is not None else _dp_queries, k=10, nprobe=8,
-            tie_break=["vec_id"], output_cols=["vec_id"],
-        )
-
-    _ivq = _sv_queries(_SV_NQ_IVF)
-    _iv_legs1 = _marginal_probe(
-        lambda qs: _serve_out(_sv1, qs).collect(), _ivq
-    )
-    _iv_legs10 = _marginal_probe(
-        lambda qs: _serve_out(_sv10, qs).collect(), _ivq
-    )
-
-    def _serve_recall(idx, unit, ids) -> float:
-        # ids maps a row position in `unit` to the corpus vec_id (the 1x
-        # corpus was collected in partition order, not vec_id order)
-        got: dict[int, set] = {}
-        for r in _serve_out(idx).collect():
-            got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        hits = 0
-        for qi, qv in enumerate(_dp_queries):
-            qn = _np.asarray(qv) / max(_np.linalg.norm(qv), 1e-12)
-            top = _np.argsort(-(unit @ qn), kind="stable")[:10]
-            ex = {int(ids[x]) for x in top}
-            hits += len(ex & got.get(qi, set()))
-        return round(hits / (10.0 * len(_dp_queries)), 4)
-
-    _base_unit = _dp_base / _np.maximum(
-        _np.linalg.norm(_dp_base, axis=1, keepdims=True), 1e-12
-    )
-    _base_ids = [r["vec_id"] for r in _dp_rows]
-    scale_probe["ivf_serve"] = {
-        **_marginal_exponents(_iv_legs1, _iv_legs10, _SV_NQ_IVF),
-        "recall_at_10_1x": _serve_recall(_sv1, _base_unit, _base_ids),
-        "recall_at_10_10x": _serve_recall(
-            _sv10, _dp_unit, list(range(_dp_big.shape[0]))
-        ),
-        "note": "marginal cost of a 6k-query batch (batch minus 1-query "
-                "job, min-of-2); nlist scales as sqrt(n) (20 -> 63), "
-                "nprobe fixed at 8: probed rows per query grow as "
-                "sqrt(n); fixed nlist on growing data is the serving "
-                "anti-pattern",
-    }
-
-    # sf1.0 rehearsal of the remaining lifecycles (VERDICT r11 item 3):
-    # the serving tiers' 10x corpora (jittered-distinct replicas of the
-    # sf0.1 vectors) ARE sf1.0 volume, so their marginal legs above are
-    # the rehearsal — record measured-vs-design agreement next to the
-    # dedup headliners. Designs differ per tier: ivf_serve probes sqrt(n)
-    # rows per query under the sqrt-n-nlist rule (predicted x3.16);
-    # graph_serve's per-query work grows with shard count, bounded LINEAR
-    # on fixed cores (the throughput contract — shard parallelism absorbs
-    # it on a cluster, local[32] caps the bound at x10). etl re-runs its
-    # lifecycle once on the disjoint-vocabulary corpus (suffix-token
-    # replicas leave pre-suffix chunks exact-dup ACROSS replicas, which
-    # measures the dedup window's collapse, not the pipeline).
-    _m1_iv, _m10_iv = (
-        min(_iv_legs1["marginal"]), min(_iv_legs10["marginal"])
-    )
-    sf1_checks["ivf_serve"] = {
-        "t_1x": _m1_iv,
-        "t_sf1": _m10_iv,
-        "measured_exponent": round(
-            math.log10(max(_m10_iv, 1e-3) / max(_m1_iv, 1e-3)), 3
-        ),
-        "design_exponent": 0.5,
-        "measured_over_predicted": round(
-            _m10_iv / max(_m1_iv * 10.0 ** 0.5, 1e-3), 3
-        ),
-        "note": "marginal 6k-query serve legs (same instrument as "
-                "scale_probe.ivf_serve); design sqrt(n) via sqrt-n nlist",
-    }
-    _m1_g, _m10_g = (
-        min(_gs_legs1["marginal"]), min(_gs_legs10["marginal"])
-    )
-    sf1_checks["graph_serve"] = {
-        "t_1x": _m1_g,
-        "t_sf1": _m10_g,
-        "measured_exponent": round(
-            math.log10(max(_m10_g, 1e-3) / max(_m1_g, 1e-3)), 3
-        ),
-        "design_exponent": 1.0,
-        "measured_over_predicted": round(
-            _m10_g / max(_m1_g * 10.0, 1e-3), 3
-        ),
-        "note": "marginal 300-query serve legs; linear BOUND on fixed "
-                "cores (throughput contract: shard parallelism absorbs "
-                "the growth when executors scale with data)",
-    }
-    _t1_etl = scale_probe["etl_pipeline"]["t_1x"]
-    _t_sf1_etl = _noop_time(lambda: _etl_probe(_rot10(_etl_docs1)))
-    sf1_checks["etl_pipeline"] = {
-        "t_1x": _t1_etl,
-        "t_sf1": _t_sf1_etl,
-        "measured_exponent": round(
-            math.log10(max(_t_sf1_etl, 1e-3) / max(_t1_etl, 1e-3)), 3
-        ),
-        "design_exponent": 1.0,
-        "measured_over_predicted": round(
-            _t_sf1_etl / max(_t1_etl * 10.0, 1e-3), 3
-        ),
-        "note": "clean->chunk->dedup->embed once at 10x disjoint-"
-                "vocabulary volume; per-document parallelism => linear",
-    }
-
-    import shutil
-
-    shutil.rmtree(_bench_tmp, ignore_errors=True)
-    total = round(sum(timings.values()), 3)
-    _repo = Path(__file__).resolve().parent
-    noise_vs_prev = noise_comparison(
-        {k: timings[k] for k in HEADLINE_QUERIES if k in timings},
-        previous_round_queries(_repo),
-        sf=_sf_from_dir(SF_DIR),
-    )
+def main() -> None:
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        cpus = spark.sparkContext.defaultParallelism
+        with tempfile.TemporaryDirectory(prefix="bench_ann_") as tmp:
+            warm_up(spark, SF_DIR)
+            ctx = Ctx(spark, SF_DIR, tmp)
+            budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "780"))
+            timings, plans, layers, metas = run_rows(ctx, ROWS, budget)
+            graph_meta, acorn_meta = graph_design_points(ctx)
+            scale_probe, sf1_checks = noop_probes(ctx)
+            skew = index_probes(ctx, scale_probe, sf1_checks)
+    finally:
+        spark.stop()
+    sf = _sf_from_dir(SF_DIR)
     full = {
         "metric": "suite_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "plans": plan_fps,
-        "ivf_design_point": ivf_design_point_meta,
-        "pq_design_point": pq_design_point_meta,
-        "pq_residual_design_point": pq_residual_design_point_meta,
-        "graph_design_point": graph_design_point_meta,
-        "graph_acorn_design_point": graph_acorn_meta,
+        "plans": plans,
+        "layers": layers,
+        "ivf_design_point": metas["ivf_design_point"],
+        "pq_design_point": metas["pq_design_point"],
+        "pq_residual_design_point": metas["ivf_pq_residual_design_point"],
+        "graph_design_point": graph_meta,
+        "graph_acorn_design_point": acorn_meta,
         "scale_probe": scale_probe,
-        # observed run-to-convergence depths from the converged
-        # trio's timed rows (r09): label_propagation reporting ==
-        # its 12-round cap is EXPECTED — the bundle graph is a
-        # period-2 limit cycle at sf>=0.01 (see
-        # _LPA_CONVERGED_MAX_ROUNDS) — but a kcore/pagerank depth
-        # creeping toward its cap is the early signal to re-size
-        # before the loud cap-trip fires
+        # run-to-convergence depths: label_propagation at its 12-round cap
+        # is EXPECTED (the bundle graph is a period-2 limit cycle at
+        # sf>=0.01); a kcore/pagerank depth creeping toward its cap is the
+        # signal to re-size before the cap trips
         "convergence_depths": dict(graph_ops.convergence_stats),
-        "graph_serve_skew": graph_serve_skew,
+        "graph_serve_skew": skew,
         "sf1_checks": sf1_checks,
-        "noise_vs_prev": noise_vs_prev,
-        "rotation_age": rotation_age(qs),
-        "sf": _sf_from_dir(SF_DIR),
+        "noise_vs_prev": noise_comparison(
+            {k: timings[k] for k in HEADLINE_QUERIES if k in timings},
+            previous_round_queries(Path(__file__).resolve().parent, cpus),
+            sf=sf, cpus=cpus,
+        ),
+        "rotation_age": rotation_age(ctx.qs),
+        "sf": sf,
+        "cpus": cpus,
     }
     full_line = json.dumps(full)
-    # Full detail first (manual runs / CI logs see everything), and persist
-    # it next to this script: BENCH_r04–r08 all recorded parsed=null because
-    # the driver keeps only the LAST 2000 chars of stdout and parses the
-    # JSON line out of that window — the full line outgrew it at r04
-    # (r03's line was 1952 chars) and its head got cut off.
+    # full detail first, persisted next to this script: a reader that keeps
+    # only the LAST 2000 chars of stdout parses the compact line after it
     print(full_line)
-    Path(__file__).resolve().parent.joinpath("bench_full.json").write_text(
-        full_line + "\n"
-    )
+    Path(__file__).resolve().parent.joinpath("bench_full.json").write_text(full_line + "\n")
     print(compact_record(full))
-    spark.stop()
 
 
 # The FINAL stdout line is a compact record sized to survive the 2000-char
@@ -1453,77 +951,70 @@ def main() -> None:
 # reference. Headline rows drop from the end if the line ever outgrows
 # the budget (never silently truncating the scalar fields).
 HEADLINE_QUERIES = [
-    "etl_pipeline",
-    "vector_topk",
-    "fanout_topk_per_label",
-    "minhash_lsh_candidates",
-    "simhash_near_dups",
-    "embedding_topk_pairs",
-    "ivf_topk",
-    "lsh_topk",
-    "graph_topk",
-    "asof_join_events_orders",
-    "range_join_purchase_followups",
-    "streaming_windowed_counts",
-    "salted_distinct_users_by_type",
-    "vocab_top_terms",
-    "multimodal_image_meta",
-    "pricing_summary",
-    "regional_revenue",
-    "top_customers",
-    "fanout_mixed_topk",
-    "pagerank_converged",
-    "kcore_converged",
-    "communities_converged",
+    "etl_pipeline", "vector_topk", "fanout_topk_per_label",
+    "minhash_lsh_candidates", "simhash_near_dups", "embedding_topk_pairs",
+    "ivf_topk", "lsh_topk", "graph_topk", "asof_join_events_orders",
+    "range_join_purchase_followups", "streaming_windowed_counts",
+    "salted_distinct_users_by_type", "vocab_top_terms",
+    "multimodal_image_meta", "pricing_summary", "regional_revenue",
+    "top_customers", "fanout_mixed_topk", "pagerank_converged",
+    "kcore_converged", "communities_converged",
 ]
 
 # Strictly-under bound: the driver's stdout window parses null at >=1800.
 COMPACT_BUDGET = 1799
 
 
-def previous_round_queries(repo: Path):
-    """Headline timings from the newest committed driver BENCH_r*.json
-    whose compact line parsed (VERDICT r10 item 5 — the noise
+def previous_round_queries(repo: Path, cpus: int | None = None):
+    """Headline timings from the newest committed
+    ``BENCH_r<N>[_c<M>].json`` whose compact line parsed and whose
+    top-level ``cpus`` equals ``cpus`` (any record when None) — the noise
     comparator's reference point is the previous round's committed
-    MIN-of-2 numbers, not a local rerun). Returns (record_name, queries)
-    or None when no parsed record exists."""
-    def _round_num(p: Path) -> int:
+    MIN-of-2 numbers at the same core count, not a local rerun. Returns
+    (record_name, queries, sf, cpus) or None when no record matches."""
+    def _round_num(p: Path) -> tuple[int, str]:
         # numeric, not lexicographic: sorted() strings put BENCH_r100
-        # before BENCH_r99 (same class of bug plan_rotation.py fixes for
-        # CORRECTNESS_r*.json)
+        # before BENCH_r99; "r14_c8" is round 14
         try:
-            return int(p.stem.split("_r", 1)[1])
+            return int(p.stem.split("_r", 1)[1].split("_", 1)[0]), p.stem
         except (IndexError, ValueError):
-            return -1
+            return -1, p.stem
 
     for p in sorted(
         repo.glob("BENCH_r[0-9]*.json"), key=_round_num, reverse=True
     ):
         try:
-            parsed = json.loads(p.read_text()).get("parsed") or {}
+            rec = json.loads(p.read_text())
+            parsed = rec.get("parsed") or {}
             q = parsed.get("queries") or {}
-            if q:
-                return p.stem, {k: float(v) for k, v in q.items()}, parsed.get("sf")
+            if q and (cpus is None or rec.get("cpus") == cpus):
+                return (
+                    p.stem, {k: float(v) for k, v in q.items()},
+                    parsed.get("sf"), rec.get("cpus"),
+                )
         except (OSError, ValueError, TypeError):
             continue
     return None
 
 
-def noise_comparison(current: dict, prev_rec, sf=None) -> dict:
+def noise_comparison(current: dict, prev_rec, sf=None, cpus=None) -> dict:
     """Per-row ratio vs the previous committed round + a noise flag:
     when >=80% of common rows drift the SAME direction, the drift is
     host load, not plan changes — plan regressions hit specific rows,
-    load shifts everything together (the r10 +18% suite drift was
-    exactly this shape and the record couldn't prove it by itself).
+    load shifts everything together.
 
-    Only compares SAME-sf records: a local sf0.01 run vs the driver's
-    sf0.1 record would flag 'everything faster' as drift."""
+    Only compares records at the same sf and core count: a local sf0.01
+    run vs a committed sf0.1 record, or a c8 run vs a c32 record, would
+    flag 'everything slower/faster' as drift."""
     if not prev_rec:
         return {"suspect": False, "n_common": 0}
-    name, prev, prev_sf = prev_rec
+    name, prev, prev_sf, prev_cpus = prev_rec
     if sf is not None and prev_sf is not None and prev_sf != sf:
         return {"suspect": False, "n_common": 0, "vs": name,
                 "skipped": f"sf mismatch ({prev_sf} vs {sf})"}
+    if cpus is not None and prev_cpus is not None and prev_cpus != cpus:
+        return {"suspect": False, "n_common": 0, "vs": name,
+                "skipped": f"cpus mismatch ({prev_cpus} vs {cpus})"}
     ratios = {
         k: round(float(current[k]) / prev[k], 3)
         for k in current

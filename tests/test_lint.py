@@ -616,7 +616,7 @@ def test_bench_noise_comparator_flags_uniform_drift():
     sys.path.insert(0, str(PKG.parent))
     import bench
 
-    prev = ("BENCH_r99", {f"q{i}": 1.0 for i in range(20)}, 0.1)
+    prev = ("BENCH_r99", {f"q{i}": 1.0 for i in range(20)}, 0.1, 32)
     up = {f"q{i}": 1.1 for i in range(20)}          # everything +10%
     down = {f"q{i}": 0.9 for i in range(20)}        # everything -10%
     mixed = {f"q{i}": (1.2 if i % 2 else 0.8) for i in range(20)}
@@ -631,8 +631,11 @@ def test_bench_noise_comparator_flags_uniform_drift():
     # cross-sf comparison is meaningless — skipped, never suspect
     skip = bench.noise_comparison(up, prev, sf=0.01)
     assert skip["suspect"] is False and "skipped" in skip
+    # so is a comparison across core counts
+    skip = bench.noise_comparison(up, prev, sf=0.1, cpus=8)
+    assert skip["suspect"] is False and "cpus mismatch" in skip["skipped"]
     # per-row ratios ride the full record
-    assert bench.noise_comparison(up, prev, sf=0.1)["ratios"]["q3"] == 1.1
+    assert bench.noise_comparison(up, prev, sf=0.1, cpus=32)["ratios"]["q3"] == 1.1
 
 
 def test_bench_previous_round_queries_reads_committed_record():
@@ -643,10 +646,61 @@ def test_bench_previous_round_queries_reads_committed_record():
 
     got = bench.previous_round_queries(PKG.parent)
     assert got is not None
-    name, queries, sf = got
+    name, queries, sf, cpus = got
     assert name.startswith("BENCH_r") and len(queries) >= 5
     assert all(isinstance(v, float) for v in queries.values())
     assert sf == 0.1  # the driver records at sf0.1
+
+
+def test_bench_previous_round_queries_matches_the_core_count():
+    """``BENCH_r14_c8`` is round 14 at 8 CPUs: the noise baseline of a
+    c8 run is that record, and of a c32 run the c32 record of the same
+    round — never the newest record whatever its core count."""
+    import sys
+
+    sys.path.insert(0, str(PKG.parent))
+    import bench
+
+    c8 = bench.previous_round_queries(PKG.parent, cpus=8)
+    c32 = bench.previous_round_queries(PKG.parent, cpus=32)
+    assert c8[0] == "BENCH_r14_c8" and c8[3] == 8
+    assert c32[0] == "BENCH_r14" and c32[3] == 32
+    assert bench.previous_round_queries(PKG.parent, cpus=3) is None
+
+
+def test_bench_times_in_one_loop_and_ranks_truth_in_one_helper():
+    """bench.py reads the clock only inside ``run_rows`` (its budget; every
+    row time comes from the Tracer span in ``measure``) and calls
+    ``argsort`` only inside ``exact_topk``."""
+    import ast
+
+    homes = {"time": "run_rows", "perf_counter": "run_rows", "argsort": "exact_topk"}
+    offenders = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name if fn is None else fn)
+                continue
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                home = homes.get(child.func.attr)
+                if home is not None and fn != home:
+                    offenders.append(f"bench.py:{child.lineno} {child.func.attr} in {fn}")
+            visit(child, fn)
+
+    visit(ast.parse((PKG.parent / "bench.py").read_text()), None)
+    assert not offenders, offenders
+
+
+def test_filesystem_lookups_have_one_home():
+    """Every Hadoop FileSystem lookup in the package goes through
+    ``store/collections.py:hadoop_fs``."""
+    hits = [
+        str(path.relative_to(PKG.parent))
+        for path in PKG.rglob("*.py")
+        for _ in re.finditer(r"\.getFileSystem\(", path.read_text())
+    ]
+    assert hits == ["vectordb_etl_spark/store/collections.py"], hits
 
 
 def test_bench_rotation_age_telemetry():

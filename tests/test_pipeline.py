@@ -159,6 +159,22 @@ def test_curate_stage_and_load_prefers_curated(runner):
     assert sum(ld.extra["collections"].values()) == cur.rows
 
 
+def test_commit_stamp_is_the_marker_mtime_in_ms(spark, tmp_path):
+    """A written directory's stamp is its ``_SUCCESS`` mtime in epoch ms,
+    then the directory's once the marker is gone; a missing path has none."""
+    import os
+
+    from vectordb_etl_spark.store.collections import commit_stamp
+
+    out = tmp_path / "t"
+    assert commit_stamp(spark, str(out)) is None
+    spark.range(3).write.parquet(str(out))
+    marker = out / "_SUCCESS"
+    assert commit_stamp(spark, str(out)) == int(os.stat(marker).st_mtime_ns // 1_000_000)
+    marker.unlink()
+    assert commit_stamp(spark, str(out)) == int(os.stat(out).st_mtime_ns // 1_000_000)
+
+
 def test_load_skips_stale_curated(runner):
     # re-running transform AFTER curate makes curated.parquet stale; load
     # must warn and fall back to the fresh chunks checkpoint (the run_all
@@ -177,8 +193,10 @@ def test_load_skips_stale_curated(runner):
 
     _time.sleep(1.1)  # ensure a strictly newer mtime on the chunks commit
     tr = runner.transform()
-    assert runner._ckpt_mtime(runner.chunks_path) > runner._ckpt_mtime(
-        runner.curated_path
+    from vectordb_etl_spark.store.collections import commit_stamp
+
+    assert commit_stamp(runner.spark, runner.chunks_path) > commit_stamp(
+        runner.spark, runner.curated_path
     )
     with pytest.warns(UserWarning, match="predates"):
         ld = runner.load()

@@ -120,20 +120,29 @@ def vector_lit(vec, elem: str = "double") -> Column:
     return col if elem == "double" else col.cast(f"array<{elem}>")
 
 
-def score_col(emb: Column | str, query: list[float], metric: str = "COSINE") -> Column:
-    """Similarity of a stored vector against a literal query vector.
+def score_col(
+    emb: Column | str,
+    query: list[float] | Column,
+    metric: str = "COSINE",
+    query_norm: Column | None = None,
+) -> Column:
+    """Similarity of a stored vector against a query vector.
 
-    The query vector is one plan literal (:func:`vector_lit` — broadcast
-    with the plan, no shuffle, no join); `metric` ∈ {COSINE, IP, L2}.
-    COSINE takes the query norm from the driver (:func:`vector_norm`),
-    so each row pays only its own norm and the dot product: 1 `zip_with`
-    and 2 `aggregate`s, with scores bit-identical to
-    ``dot(e, q) / (norm(e) * norm(q))`` evaluated per row.
+    A literal query is one plan literal (:func:`vector_lit` — broadcast
+    with the plan, no shuffle, no join) whose COSINE norm comes from the
+    driver (:func:`vector_norm`), so each row pays only its own norm and
+    the dot product: 1 `zip_with` and 2 `aggregate`s, with scores
+    bit-identical to ``dot(e, q) / (norm(e) * norm(q))`` evaluated per
+    row. A query Column (a batched search's per-row query) takes its norm
+    from ``query_norm``. `metric` ∈ {COSINE, IP, L2}.
     """
-    q = vector_lit(query)
+    if isinstance(query, Column):
+        q, q_norm = query, query_norm
+    else:
+        q, q_norm = vector_lit(query), vector_norm(query)
     m = metric.upper()
     if m == "COSINE":
-        return cosine_col(emb, q, vector_norm(query))
+        return cosine_col(emb, q, q_norm)
     if m == "IP":
         return dot_col(emb, q)
     if m == "L2":

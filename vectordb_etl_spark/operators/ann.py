@@ -30,7 +30,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructType
 
-from vectordb_etl_spark.functions.vector import metric_ascending, vector_lit
+from vectordb_etl_spark.functions.vector import (
+    metric_ascending,
+    score_col,
+    vector_lit,
+    vector_norm,
+)
 from vectordb_etl_spark.operators.topk import topk_search
 from vectordb_etl_spark.session import local_rows_df, partitioned_read_schema
 
@@ -399,12 +404,6 @@ class IVFIndex:
         )
         from pyspark.sql.window import Window
 
-        from vectordb_etl_spark.functions.vector import (
-            cosine_col,
-            dot_col,
-            vector_norm,
-        )
-
         # each query's norm rides in the broadcast table, folded on the
         # driver exactly as score_col folds a single query's, so batched
         # and single-query scores share one kernel and stay bit-identical
@@ -435,15 +434,7 @@ class IVFIndex:
         # (topk_search/score_col): COSINE/IP rank descending, L2 reports the
         # positive sqrt distance and ranks ASCENDING — direction comes from
         # the shared metric_ascending so the two paths cannot drift
-        up = self.metric.upper()
-        if up == "COSINE":
-            score = cosine_col(emb_col, F.col("qvec"), F.col("qnorm"))
-        elif up == "IP":
-            score = dot_col(emb_col, F.col("qvec"))
-        else:  # L2
-            from vectordb_etl_spark.functions.vector import l2_distance_col
-
-            score = l2_distance_col(emb_col, F.col("qvec"))
+        score = score_col(emb_col, F.col("qvec"), self.metric, F.col("qnorm"))
         direction = F.asc if metric_ascending(self.metric) else F.desc
         scored = cand.withColumn("score", F.round(score, 6))
         order = [direction("score")] + [F.asc(c) for c in (tie_break or [])]
@@ -562,11 +553,10 @@ class IVFIndex:
         crashed compaction). It also converts an index in the older
         per-cell directory layout. Quantized layouts compact as-is — codes
         are never decoded. Returns (files_before, files_after)."""
-        from vectordb_etl_spark.store.collections import replace_dir
+        from vectordb_etl_spark.store.collections import hadoop_fs, replace_dir
 
         data = f"{self.path}/data"
-        jdata = self.spark._jvm.org.apache.hadoop.fs.Path(data)
-        fs = jdata.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, jdata = hadoop_fs(self.spark, data)
 
         def _count_files() -> int:
             return fs.getContentSummary(jdata).getFileCount()

@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 
 from vectordb_etl_spark.config import PipelineConfig
 from vectordb_etl_spark.operators import chunker
-from vectordb_etl_spark.store.collections import CollectionStore, write_counted
+from vectordb_etl_spark.store.collections import (
+    CollectionStore,
+    commit_stamp,
+    hadoop_fs,
+    write_counted,
+)
 
 
 @dataclass
@@ -185,32 +190,6 @@ class PipelineRunner:
         extra["removed_rows"] = extra["input_rows"] - n
         return StageResult("curate", n, time.time() - t0, self.curated_path, extra)
 
-    def _jpath(self, uri: str):
-        return self.spark._jvm.org.apache.hadoop.fs.Path(uri)
-
-    def _ckpt_exists(self, path: str) -> bool:
-        """Existence probe through the Hadoop FileSystem API — same stance
-        as store/collections.py, so checkpoint_dir may be any supported URI
-        (s3a://, hdfs://, file:). A local ``pathlib`` probe would silently
-        return False on remote URIs and bypass the freshness logic."""
-        p = self._jpath(path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.exists(p)
-
-    def _ckpt_mtime(self, path: str) -> float:
-        """Commit time of a parquet checkpoint: the ``_SUCCESS`` marker's
-        mtime (written at job commit), falling back to the directory's.
-        Resolved through the Hadoop FileSystem so remote checkpoint URIs
-        behave identically to local paths."""
-        p = self._jpath(path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        marker = self._jpath(f"{path}/_SUCCESS")
-        if fs.exists(marker):
-            return fs.getFileStatus(marker).getModificationTime() / 1000.0
-        if fs.exists(p):
-            return fs.getFileStatus(p).getModificationTime() / 1000.0
-        return 0.0
-
     # -- load (main.py:139-168) ----------------------------------------------
     def load(
         self,
@@ -233,13 +212,13 @@ class PipelineRunner:
         """
         t0 = time.time()
         if use_curated is None:
-            curated_exists = self._ckpt_exists(self.curated_path)
-            curated_ok = (
-                curated_exists
-                and self._ckpt_mtime(self.curated_path)
-                >= self._ckpt_mtime(self.chunks_path)
+            # commit stamps through the Hadoop FileSystem, so remote
+            # checkpoint URIs behave like local paths
+            curated = commit_stamp(self.spark, self.curated_path)
+            curated_ok = curated is not None and curated >= (
+                commit_stamp(self.spark, self.chunks_path) or 0
             )
-            if curated_exists and not curated_ok:
+            if curated is not None and not curated_ok:
                 import warnings
 
                 warnings.warn(
@@ -311,8 +290,7 @@ class PipelineRunner:
     def reset(self, confirm: bool = False) -> int:
         n = self.store.reset(confirm=confirm)
         if confirm:
-            p = self._jpath(self.config.checkpoint_dir)
-            fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            fs, p = hadoop_fs(self.spark, self.config.checkpoint_dir)
             if fs.exists(p):
                 fs.delete(p, True)
         return n

@@ -145,6 +145,28 @@ def write_counted(df: DataFrame, path: str) -> int:
 _STAGING, _ASIDE = ".staging-", ".old-"
 
 
+def hadoop_fs(spark: SparkSession, uri: str):
+    """``(FileSystem, Path)`` of ``uri`` through the Hadoop API, so the
+    caller works on any supported scheme (s3a://, hdfs://, file:) — a
+    local ``pathlib`` probe would silently miss remote URIs."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)  # noqa: SLF001
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path  # noqa: SLF001
+
+
+def commit_stamp(spark: SparkSession, path: str) -> int | None:
+    """Commit time of a written directory in epoch milliseconds: the
+    ``_SUCCESS`` marker's mtime (written at job commit), falling back to
+    the directory's; None when neither exists. A marker hit is one
+    status call."""
+    fs, marker = hadoop_fs(spark, f"{path}/_SUCCESS")
+    for p in (marker, marker.getParent()):
+        try:
+            return fs.getFileStatus(p).getModificationTime()
+        except Py4JJavaError:  # FileNotFoundException
+            continue
+    return None
+
+
 @contextmanager
 def replace_dir(spark: SparkSession, dest: str):
     """Replace the directory ``dest`` so that it is never absent.
@@ -167,8 +189,7 @@ def replace_dir(spark: SparkSession, dest: str):
     is a non-atomic copy+delete and a concurrent reader can observe a
     partial swap — use a table format (Iceberg/Delta) there."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    target = jpath(dest)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, target = hadoop_fs(spark, dest)
     parent, leaf = target.getParent(), target.getName()
     staging = jpath(parent, _STAGING + leaf)
     aside = jpath(parent, _ASIDE + leaf)
@@ -215,9 +236,7 @@ class CollectionStore:
         return self.spark._jvm.org.apache.hadoop.fs.Path(uri)
 
     def _fs(self, uri: str):
-        return self._jpath(uri).getFileSystem(
-            self.spark._jsc.hadoopConfiguration()
-        )
+        return hadoop_fs(self.spark, uri)[0]
 
     # -- S9: DDL ------------------------------------------------------------
 
@@ -750,19 +769,12 @@ class CollectionStore:
         return idx
 
     def _index_stamp(self, path: str, kind: str) -> int | None:
-        """Modification time of the index's commit marker: the centroids'
-        ``_SUCCESS`` for IVF (add/compact leave it alone, so appended
-        rows keep the handle), the layout's ``_SUCCESS`` for graph — the
-        same probe as pipeline._ckpt_mtime, falling back to the artifact
-        directory. None when neither exists."""
-        artifact = f"{path}/centroids" if kind == "ivf" else path
-        fs = self._fs(artifact)
-        for p in (f"{artifact}/_SUCCESS", artifact):
-            try:
-                return fs.getFileStatus(self._jpath(p)).getModificationTime()
-            except Py4JJavaError:  # FileNotFoundException
-                continue
-        return None
+        """:func:`commit_stamp` of the index's commit marker: the
+        centroids' for IVF (add/compact leave it alone, so appended rows
+        keep the handle), the layout's for graph."""
+        return commit_stamp(
+            self.spark, f"{path}/centroids" if kind == "ivf" else path
+        )
 
     def _remember(self, path: str, kind: str, idx):
         """Keep a handle this store just built, so its centroids and

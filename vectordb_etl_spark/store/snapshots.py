@@ -41,6 +41,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectordb_etl_spark.store.collections import hadoop_fs
+
 
 class SnapshotStore:
     """A versioned parquet table rooted at ``root``."""
@@ -49,9 +51,7 @@ class SnapshotStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self._jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-        self._fs = self._jvm_path(self.root).getFileSystem(
-            spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        )
+        self._fs, _ = hadoop_fs(spark, self.root)
         for d in (f"{self.root}/files", f"{self.root}/_log"):
             self._fs.mkdirs(self._jvm_path(d))
 
