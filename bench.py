@@ -6,7 +6,8 @@ bench_full.json), then ONE compact line.
 :func:`run_rows` is the one loop and :func:`measure` its one timer: each
 measurement runs inside a ``perfbench.trace.Tracer`` span, so next to each
 row's wall time (``queries``) and plan fingerprint (``plans``) the record
-carries the jobs, stages and tasks of the measurement it kept (``layers``).
+carries the jobs, stages, tasks and py4j commands (not counting the
+fingerprint) of the measurement it kept (``layers``).
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ from vectordb_etl_spark.operators.graph_ann import (
     hnsw_levels,
     hnsw_search,
 )
-from vectordb_etl_spark.plans.inspect import plan_fingerprint
+from vectordb_etl_spark.plans.inspect import plan_fingerprint, py4j_commands
 from vectordb_etl_spark.search import search_with_scores
 from vectordb_etl_spark.session import ensure_min_partitions, get_spark
 from vectordb_etl_spark.store.collections import CollectionStore
@@ -91,19 +92,24 @@ def measure(ctx, row: Row, plans: dict | None = None):
     region, a ``plan`` frame after it."""
     tracer, out = ctx.tracer, None
     with tracer.span(row.name) as span:
-        frame = row.body(ctx)
+        with py4j_commands() as planned:
+            frame = row.body(ctx)
         if plans is not None and row.plan is None:
             plans[row.name] = plan_fingerprint(frame)
-        if row.force == "collect":
-            out = frame.collect()
-        elif row.force == "noop":
-            frame.write.format("noop").mode("overwrite").save()
+        with py4j_commands() as forced:
+            if row.force == "collect":
+                out = frame.collect()
+            elif row.force == "noop":
+                frame.write.format("noop").mode("overwrite").save()
     if plans is not None and row.plan is not None:
         plans[row.name] = plan_fingerprint(row.plan(ctx))
     jobs = tracer.resolve()
     tracer.spans.clear()  # resolve() walks every kept span: keep only this one
     stages, tasks = (sum(jobs[j][i] for j in span.jobs) for i in (0, 1))
-    layers = {"jobs": len(span.jobs), "stages": stages, "tasks": tasks}
+    layers = {
+        "jobs": len(span.jobs), "stages": stages, "tasks": tasks,
+        "py4j_commands": planned["commands"] + forced["commands"],
+    }
     return round(span.ms / 1000.0, 3), layers, out
 
 

@@ -1926,6 +1926,37 @@ def test_cosine_score_col_keeps_the_three_fold_bits(spark):
                 assert outcomes[0] == outcomes[1], outcomes
 
 
+def test_with_score_inlines_the_query_literal_and_keeps_score_col_bits(spark):
+    """``with_score`` carries the query into the score text as one literal
+    column, which CollapseProject inlines: the executed plan holds no
+    ``__q`` column. For every metric its scores carry the bits of
+    ``score_col``, whose text renders the same query as parsed DOUBLE
+    literals (signed zeros and subnormals included)."""
+    import numpy as np
+
+    from vectordb_etl_spark.functions.vector import score_col, with_score
+    from vectordb_etl_spark.plans.inspect import executed_plan
+
+    rng = np.random.RandomState(5)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(16) * s])
+         for i, s in enumerate((1.0, 1e-3, 42.0, 1e120))],
+        "i int, embedding array<double>",
+    )
+    q = rng.standard_normal(16)
+    q[::4] = -0.0
+    q[1] = 5e-324
+    for metric in ("COSINE", "IP", "L2"):
+        scored = with_score(df, list(q), metric).orderBy("i")
+        assert "__q" not in executed_plan(scored)
+        assert scored.columns == ["i", "embedding", "score"]
+        want = df.orderBy("i").select(
+            F.round(score_col("embedding", list(q), metric), 6).alias("s")
+        ).collect()
+        got = [r["score"] for r in scored.collect()]
+        assert _bits(got) == _bits([r["s"] for r in want]), metric
+
+
 def test_ip_index_probes_the_cells_it_assigned(spark, tmp_path):
     """An IP index assigns rows by raw dot product, so its probe must rank
     centroids by dot product too: a cosine ranking lets centroid norms

@@ -432,3 +432,30 @@ def test_mixed_filter_typed_half_still_pushes_down(spark, tmp_path, meta_df):
     assert "PushedFilters: [" in plan and "language" in plan.split(
         "PushedFilters: [", 1
     )[1].split("]", 1)[0]
+
+
+def test_filter_renders_one_text_with_quoted_names_and_values(spark):
+    """A filter is one Spark SQL text: names backquoted, string values
+    escaped, so a quote, a backslash, LIKE's ``_`` or SQL in a value
+    matches literally and cannot change the expression."""
+    from vectordb_etl_spark.functions.filter_expr import filter_sql
+
+    assert filter_sql('language == "korean"') == "(`language` = 'korean')"
+    assert filter_sql("rating > 5", columns=["meta"]) == (
+        "(CAST(`meta`['rating'] AS DOUBLE) > 5)"
+    )
+    df = spark.createDataFrame(
+        [(0, "it's"), (1, "a\\b"), (2, "x_y"), (3, "xzy"), (4, "x' or '1'='1")],
+        "id long, s string",
+    )
+    for expr, want in (
+        ('s == "it\'s"', [0]),
+        ('s == "a\\\\b"', [1]),
+        ('s like "x_y"', [2]),
+        ('s == "x\' or \'1\'=\'1"', [4]),
+        ('s in ["xzy", "it\'s"]', [0, 3]),
+    ):
+        got = sorted(
+            r["id"] for r in df.filter(parse_filter(expr)).select("id").collect()
+        )
+        assert got == want, expr

@@ -1697,3 +1697,177 @@ def test_fused_fanout_equals_per_collection_merge(spark, tmp_path):
     }
     assert meta["html_f2"] is None
     assert meta["html_f1"]["tag"] and meta["html_f0"]["tag"]
+
+
+def _indexed_store(spark, root, n_folders, dim):
+    """A store of ``n_folders`` collections of 24 rows each, embedded at
+    ``dim``, with an IVF and a graph index on every collection."""
+    emb = EmbeddingConfig(dimension=dim)
+    store = CollectionStore(spark, StoreConfig(warehouse_dir=str(root)))
+    store.insert_documents(
+        spark.createDataFrame(
+            [
+                (i, "s", f"f{i % n_folders}",
+                 f"document number {i} about {i % 7} and {i * 13 % 11}",
+                 "english", i % 5)
+                for i in range(24 * n_folders)
+            ],
+            ["doc_id", "source", "folder_name", "text", "language",
+             "chunk_index"],
+        ),
+        embedding_config=emb,
+    )
+    for n in store.list_collections():
+        store.build_index(n, kind="ivf", nlist=4, max_iter=3)
+        store.build_index(n, kind="graph", id_col="doc_id", num_shards=2,
+                          m=4, ef_construction=20)
+    return store, emb
+
+
+# A warm facade search's py4j commands per kind on a 4-collection store,
+# at most a quarter of what the Column-API plans made before (exact 340,
+# filtered 365, IVF 834, graph 380 on perfbench's serve store).
+_WARM_COMMANDS_AT_MOST = {"exact": 85, "filtered": 91, "ivf": 208, "graph": 95}
+
+
+def _warm_commands(store, emb) -> dict[str, int]:
+    from vectordb_etl_spark.plans.inspect import py4j_commands
+
+    first = store.list_collections()[0]
+    kinds = {
+        "exact": {},
+        "filtered": {
+            "collection_name": first,
+            "filter": 'language == "english" and chunk_index < 3',
+        },
+        "ivf": {"index_kind": "ivf", "nprobe": 2},
+        "graph": {"index_kind": "graph", "ef": 10},
+    }
+    out = {}
+    for kind, kwargs in kinds.items():
+        def run(kwargs=kwargs):
+            return search_with_scores(
+                store, "document number 5 about 5 and 10", k=3,
+                embedding_config=emb, **kwargs,
+            )
+
+        run()
+        run()  # warm: handles, schemas and JVM readers are resolved
+        with py4j_commands() as counts:
+            assert len(run()) == 3, kind
+        out[kind] = counts["commands"]
+    return out
+
+
+def test_warm_facade_search_plans_in_a_fixed_number_of_py4j_commands(
+    spark, tmp_path
+):
+    """A warm search of every kind plans in a fixed number of py4j
+    commands: the same at dimension 8 and 64 (the query is one literal and
+    the score one parsed text), the same on a 2- and a 4-collection store
+    (one fused scan per tier, one glob for every index's commit marker),
+    and at most a quarter of the Column-API plans' count."""
+    four8 = _warm_commands(*_indexed_store(spark, tmp_path / "d8", 4, 8))
+    four64 = _warm_commands(*_indexed_store(spark, tmp_path / "d64", 4, 64))
+    two8 = _warm_commands(*_indexed_store(spark, tmp_path / "c2", 2, 8))
+    assert four8 == four64, (four8, four64)
+    for kind, most in _WARM_COMMANDS_AT_MOST.items():
+        assert four8[kind] <= most, (kind, four8)
+        # only a freshness check may cost more per collection, and by at
+        # most 2 commands each: the plan itself does not grow with the
+        # collections (the index stamps are one glob, the IVF probes and
+        # the graph layouts one scan)
+        assert 0 <= four8[kind] - two8[kind] <= 2 * (4 - 2), (kind, four8, two8)
+
+
+def test_fanout_names_come_from_the_validated_file_list(spark, tmp_path):
+    """A fan-out over every collection takes the names from the
+    ``collection=<name>/`` segments of the file list the store's scan has
+    just validated; they equal list_collections() after an insert, an
+    outside append (including a name the partition writer escapes), an
+    upsert and a drop_collection."""
+    store = _ivf_store(spark, tmp_path / "w", 30, 3)
+
+    def check():
+        assert store.scan()[1] == store.list_collections()
+
+    check()
+    outside = store.read("html_f0").drop("collection").limit(2)
+    for name in ("outside", "a b:c"):
+        outside.withColumn("collection", F.lit(name)).write.mode(
+            "append"
+        ).partitionBy("collection").parquet(store._data_dir)
+        check()
+    assert "a b%3Ac" in store.list_collections()
+    store.upsert_documents(
+        store.read("html_f1").drop("collection", "embedding").limit(3)
+        .withColumn("folder_name", F.lit("f1")),
+        key_col="doc_id", embedding_config=EMB,
+    )
+    check()
+    store.drop_collection("outside")
+    check()
+    assert "outside" not in store.scan()[1]
+
+
+def test_index_stamps_equal_the_per_index_stamps(spark, tmp_path):
+    """The one-glob stamp of every index equals each index's own commit
+    stamp: a marker's time, a directory's time when the marker is gone,
+    None without an index, and a name the glob would read as syntax."""
+    from vectordb_etl_spark.store.collections import hadoop_fs
+
+    store = _ivf_store(spark, tmp_path / "w", 30, 3)
+    names = store.list_collections()
+    store.build_index(names[0], kind="ivf", nlist=2, max_iter=2)
+    store.build_index(names[1], kind="ivf", nlist=2, max_iter=2)
+    store.build_index(names[1], kind="graph", id_col="doc_id", num_shards=1,
+                      m=4, ef_construction=10)
+    fs, marker = hadoop_fs(
+        spark, store._index_path(names[1], "ivf") + "/centroids/_SUCCESS"
+    )
+    assert fs.delete(marker, False)
+    odd = ["x,y", "missing"]
+    for kind in ("ivf", "graph"):
+        want = {
+            n: store._index_stamp(store._index_path(n, kind), kind)
+            for n in names + odd
+        }
+        assert store._index_stamps(names + odd, kind) == want, kind
+    assert store._index_stamps(names, "ivf")[names[1]] is not None
+    assert store._index_stamps(names, "ivf")[names[2]] is None
+
+
+def test_fused_ivf_fanout_serves_an_index_in_the_per_cell_layout(
+    spark, tmp_path
+):
+    """Spark will not infer the older ``centroid_id=<i>/`` layout beside a
+    current one in one multi-root read, so the fused IVF fan-out scans
+    such an index on its own: the answer is the same as before the
+    layout change, and the same again after compact()."""
+    import shutil
+
+    store = _ivf_store(spark, tmp_path / "w", 40, 2, nlist=4, nprobe=4)
+    names = store.list_collections()
+    for n in names:
+        store.build_index(n, kind="ivf", max_iter=3)
+    q = list(store.read().filter(F.col("doc_id") == 7).select("embedding").head()[0])
+
+    def top():
+        return [
+            (r["doc_id"], r["score"], r["collection"])
+            for r in store.fanout_search_indexed(
+                q, k=6, tie_break=["doc_id"], output_cols=["doc_id"],
+            ).collect()
+        ]
+
+    want = top()
+    data = store._index_path(names[1], "ivf") + "/data"
+    spark.read.parquet(data).write.partitionBy("centroid_id").parquet(
+        data + "-cells"
+    )
+    shutil.rmtree(data)
+    shutil.move(data + "-cells", data)
+    store._indexes.clear()  # a reopened handle finds the per-cell layout
+    assert top() == want
+    store.open_index(names[1], kind="ivf").compact()
+    assert top() == want

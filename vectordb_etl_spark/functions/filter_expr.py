@@ -4,10 +4,12 @@ The reference's entire query surface is filter strings handed to Milvus:
 ``language == "korean"`` (modules/search_utils.py:56,90;
 modules/quality_monitor.py:134) and ``filename == "x.html"``
 (test/find_curriculum.py:19-24). This facade makes those strings drop-in:
-``search(..., filter='language == "korean"')`` parses to
-``F.col("language") == F.lit("korean")`` and from there Catalyst pushes the
-predicate into the parquet scan exactly like a native Column filter —
-string-vs-Column is purely an API-surface difference, with zero plan cost.
+``search(..., filter='language == "korean"')`` renders the Spark SQL text
+``(`language` = 'korean')`` (:func:`filter_sql`), parsed in the JVM as ONE
+expression — one py4j round trip however long the filter, where the
+Column API pays several per field, literal and operator. From there
+Catalyst pushes the predicate into the parquet scan exactly like a native
+Column filter.
 
 Grammar (covers Milvus boolean expressions over scalar fields):
 
@@ -20,8 +22,11 @@ Grammar (covers Milvus boolean expressions over scalar fields):
                   | ['not'] 'in' '[' literal (',' literal)* ']')
     literal  := string ('"..."' or "'...'") | int | float | 'true' | 'false'
 
-``like`` translates Milvus ``%`` wildcards to Spark's ``like`` (same
-semantics). Identifiers may be dotted (``meta.lang`` reaches into structs).
+``like`` translates Milvus ``%`` wildcards to an anchored ``rlike`` (Milvus
+has no ``_`` wildcard). Identifiers may be dotted (``meta.lang`` reaches
+into structs). Identifiers render backquoted and string literals escaped
+(functions/sqltext.py), so no filter value can change the expression's
+shape.
 """
 
 from __future__ import annotations
@@ -29,7 +34,13 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from vectordb_etl_spark.functions.sqltext import (
+    sql_col,
+    sql_double,
+    sql_name,
+    sql_string,
+)
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -69,8 +80,8 @@ def _tokenize(text: str) -> list[tuple[str, object]]:
             is_float = "." in raw or "e" in raw or "E" in raw
             value = float(raw) if is_float else int(raw)
             if not is_float and not (-(2**63) <= value < 2**63):
-                # beyond int64: a bare Column comparison would die inside
-                # py4j with an untyped error; fail the parse contractually
+                # beyond int64 Spark would parse a DECIMAL literal, which
+                # F.lit cannot make; fail the parse contractually
                 raise FilterExprError(
                     f"integer literal {raw} exceeds int64 range "
                     f"in filter {text!r}"
@@ -104,7 +115,7 @@ class _Parser:
         self.columns = set(columns) if columns is not None else None
         self.meta_col = meta_col
 
-    def _field(self, name: str) -> tuple[Column, bool]:
+    def _field(self, name: str) -> tuple[str, bool]:
         """Resolve a field reference. With a known column list, a bare
         identifier that is NOT a typed column resolves into the dynamic
         ``meta`` map (Milvus enable_dynamic_field semantics: filters name
@@ -116,8 +127,8 @@ class _Parser:
             and "." not in name
             and self.meta_col in self.columns
         ):
-            return F.col(self.meta_col)[name], True
-        return F.col(name), False
+            return f"{sql_name(self.meta_col)}[{sql_string(name)}]", True
+        return ".".join(sql_name(p) for p in name.split(".")), False
 
     def _peek(self) -> tuple[str, object] | None:
         return self.tokens[self.i] if self.i < len(self.tokens) else None
@@ -137,7 +148,7 @@ class _Parser:
             )
         return tok[1]
 
-    def parse(self) -> Column:
+    def parse(self) -> str:
         col = self._or_expr()
         if self._peek() is not None:
             raise FilterExprError(
@@ -146,31 +157,31 @@ class _Parser:
             )
         return col
 
-    def _or_expr(self) -> Column:
+    def _or_expr(self) -> str:
         left = self._and_expr()
         while True:
             tok = self._peek()
             if tok in (("kw", "or"), ("op", "||")):
                 self._next()
-                left = left | self._and_expr()
+                left = f"({left} OR {self._and_expr()})"
             else:
                 return left
 
-    def _and_expr(self) -> Column:
+    def _and_expr(self) -> str:
         left = self._not_expr()
         while True:
             tok = self._peek()
             if tok in (("kw", "and"), ("op", "&&")):
                 self._next()
-                left = left & self._not_expr()
+                left = f"({left} AND {self._not_expr()})"
             else:
                 return left
 
-    def _not_expr(self) -> Column:
+    def _not_expr(self) -> str:
         tok = self._peek()
         if tok == ("kw", "not"):
             self._next()
-            return ~self._not_expr()
+            return f"(NOT {self._not_expr()})"
         if tok == ("op", "("):
             self._next()
             inner = self._or_expr()
@@ -178,7 +189,7 @@ class _Parser:
             return inner
         return self._comparison()
 
-    def _comparison(self) -> Column:
+    def _comparison(self) -> str:
         kind, name = self._next()
         if kind != "ident":
             raise FilterExprError(
@@ -194,22 +205,12 @@ class _Parser:
                 # the map value back (NULL for non-numeric garbage, which
                 # correctly fails every comparison)
                 if isinstance(rhs, bool):
-                    col = col.cast("boolean")
+                    col = f"CAST({col} AS BOOLEAN)"
                 elif isinstance(rhs, (int, float)):
-                    col = col.cast("double")
-            if op == "==":
-                return col == rhs
-            if op == "!=":
-                return col != rhs
-            if op == ">":
-                return col > rhs
-            if op == ">=":
-                return col >= rhs
-            if op == "<":
-                return col < rhs
-            if op == "<=":
-                return col <= rhs
-            raise FilterExprError(f"bad operator {op!r} in {self.text!r}")
+                    col = f"CAST({col} AS DOUBLE)"
+            if op not in _SQL_OPS:
+                raise FilterExprError(f"bad operator {op!r} in {self.text!r}")
+            return f"({col} {_SQL_OPS[op]} {_sql_literal(rhs)})"
         if kind == "kw" and op == "like":
             pat = self._next()
             if pat[0] != "lit" or not isinstance(pat[1], str):
@@ -217,11 +218,11 @@ class _Parser:
                     f"like needs a string pattern in {self.text!r}"
                 )
             # Milvus `like` has ONE wildcard: % (underscore is a literal).
-            # Spark's Column.like would treat _ as a one-char wildcard, so
+            # Spark's LIKE would treat _ as a one-char wildcard, so
             # translate to an anchored regex instead: escape everything,
             # then turn % into .*
             regex = "^" + re.escape(pat[1]).replace("%", ".*") + "$"
-            return col.rlike(regex)
+            return f"({col} RLIKE {sql_string(regex)})"
         negate = False
         if kind == "kw" and op == "not":
             negate = True
@@ -237,9 +238,9 @@ class _Parser:
                 isinstance(v, (int, float)) and not isinstance(v, bool)
                 for v in values
             ):
-                col = col.cast("double")
-            pred = col.isin(values)
-            return ~pred if negate else pred
+                col = f"CAST({col} AS DOUBLE)"
+            pred = f"({col} IN ({', '.join(_sql_literal(v) for v in values)}))"
+            return f"(NOT {pred})" if negate else pred
         raise FilterExprError(
             f"expected a comparison after field, got {op!r} in {self.text!r}"
         )
@@ -253,12 +254,41 @@ class _Parser:
         return tok[1]
 
 
+_SQL_OPS = {"==": "=", "!=": "!=", ">": ">", ">=": ">=", "<": "<", "<=": "<="}
+
+
+def _sql_literal(value) -> str:
+    """A filter literal as the SQL literal of the type ``F.lit`` gives it:
+    BOOLEAN, INT/BIGINT, DOUBLE or STRING."""
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        return sql_double(value)
+    return sql_string(value)
+
+
+def filter_sql(
+    expr: str,
+    columns: list[str] | None = None,
+    meta_col: str = "meta",
+) -> str | None:
+    """A Milvus-style filter string as Spark SQL predicate text (None for
+    a blank string); :func:`parse_filter` documents the resolution."""
+    tokens = _tokenize(expr)
+    if not tokens:
+        return None
+    return _Parser(tokens, expr, columns=columns, meta_col=meta_col).parse()
+
+
 def parse_filter(
     expr: str | Column | None,
     columns: list[str] | None = None,
     meta_col: str = "meta",
 ) -> Column | None:
-    """Parse a Milvus-style filter string into a Spark Column predicate.
+    """Parse a Milvus-style filter string into a Spark Column predicate:
+    the :func:`filter_sql` text as one parsed expression.
 
     Column and None pass through, so call sites accept either surface.
 
@@ -270,7 +300,5 @@ def parse_filter(
     typed column reference (the pre-dynamic behavior)."""
     if expr is None or isinstance(expr, Column):
         return expr
-    tokens = _tokenize(expr)
-    if not tokens:
-        return None
-    return _Parser(tokens, expr, columns=columns, meta_col=meta_col).parse()
+    text = filter_sql(expr, columns=columns, meta_col=meta_col)
+    return None if text is None else sql_col(text)

@@ -1,10 +1,14 @@
 """Vector math as higher-order column expressions (operators E3/Q1 support,
 SURVEY.md §2.4-2.5).
 
-All JVM-side — `zip_with`/`aggregate`/`transform` over `array<double>`; no
-Python in the scoring hot path. Arrays are cast to double so Spark and the
-DuckDB oracle (`list_dot_product` on `DOUBLE[]`) accumulate in the same
+All JVM-side — `zip_with`/`aggregate` over `array<double>`; no Python in
+the scoring hot path. Arrays are cast to double so Spark and the DuckDB
+oracle (`list_dot_product` on `DOUBLE[]`) accumulate in the same
 precision; score comparisons round to 6 dp to absorb summation-order ULPs.
+
+Every score is built by ONE text builder, :func:`score_sql`, and parsed in
+the JVM (functions/sqltext.py): a PySpark lambda costs several py4j round
+trips each, the parsed text one at any dimension.
 
 Metric-aware scoring fixes the reference's desc-only assumption
 (milvus_store.py:324): COSINE/IP sort descending, L2 ascending.
@@ -15,9 +19,20 @@ from __future__ import annotations
 import math
 import struct
 
-from pyspark import SparkContext
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from vectordb_etl_spark.functions.sqltext import (
+    jvm_static,
+    sql_col,
+    sql_double,
+    sql_name,
+    sql_of,
+)
+
+# the column that carries a query literal into a frame's score text; it
+# lives for one projection (with_score) and CollapseProject inlines it
+QUERY_COL = "__q"
 
 
 def _as_col(col: Column | str) -> Column:
@@ -28,21 +43,56 @@ def _as_double_array(col: Column | str) -> Column:
     return _as_col(col).cast("array<double>")
 
 
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
+        f"CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(aggregate(CAST({a} AS ARRAY<DOUBLE>), 0.0D, "
+        "(acc, x) -> acc + x * x))"
+    )
+
+
+def score_sql(
+    emb: str, query: str, metric: str = "COSINE", query_norm: str | None = None
+) -> str:
+    """The similarity of the stored vectors ``emb`` to the query ``query``
+    (both SQL expressions, e.g. backquoted column names) as ONE SQL text.
+
+    Every fold is a left fold in element order, so the bits match the
+    per-row formula: dot = ``aggregate(zip_with(e, q, x*y), 0.0, acc +
+    x)``, norm = ``sqrt(aggregate(e, 0.0, acc + x*x))``, COSINE = ``dot /
+    (norm(e) * query_norm)`` with ``query_norm`` defaulting to
+    ``norm(q)``, L2 = ``sqrt`` of the left fold of squared differences.
+    The optimizer removes a cast of an ``array<double>`` to itself."""
+    m = metric.upper()
+    if m == "COSINE":
+        qn = query_norm if query_norm is not None else _norm_sql(query)
+        return f"{_dot_sql(emb, query)} / ({_norm_sql(emb)} * {qn})"
+    if m == "IP":
+        return _dot_sql(emb, query)
+    if m == "L2":
+        return (
+            f"sqrt(aggregate(zip_with(CAST({emb} AS ARRAY<DOUBLE>), "
+            f"CAST({query} AS ARRAY<DOUBLE>), (x, y) -> x - y), 0.0D, "
+            "(acc, x) -> acc + x * x))"
+        )
+    raise ValueError(f"unknown metric {metric!r}")
+
+
 def dot_col(a: Column | str, b: Column | str) -> Column:
     """Dot product — `aggregate(zip_with(a, b, *), 0.0, +)`."""
-    return F.aggregate(
-        F.zip_with(_as_double_array(a), _as_double_array(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return sql_col(_dot_sql(sql_of(a), sql_of(b)))
 
 
 def norm_col(a: Column | str) -> Column:
     """L2 norm — `sqrt(aggregate(a, 0.0, acc + x*x))`: the same left fold
     of rounded squares as `dot_col(a, a)`, without the `zip_with`."""
-    return F.sqrt(
-        F.aggregate(_as_double_array(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    return sql_col(_norm_sql(sql_of(a)))
 
 
 def vector_norm(vec) -> float:
@@ -64,22 +114,14 @@ def cosine_col(
 
     ``b_norm`` is ``b``'s norm when the caller already has it — a driver
     float from :func:`vector_norm` for a query literal, or a column of
-    per-query norms — so a query's norm is never recomputed per row. The
-    stored side ``a`` is cast once and costs one `zip_with` (the dot) and
-    two `aggregate`s; the score's bits equal the three-fold formula's."""
-    arr = _as_double_array(a)
-    if b_norm is None:
-        b_norm = norm_col(b)
-    elif not isinstance(b_norm, Column):
-        b_norm = F.lit(float(b_norm))
-    return dot_col(arr, b) / (norm_col(arr) * b_norm)
+    per-query norms — so a query's norm is never recomputed per row."""
+    if b_norm is not None:
+        b_norm = sql_of(b_norm) if isinstance(b_norm, Column) else sql_double(b_norm)
+    return sql_col(score_sql(sql_of(a), sql_of(b), "COSINE", b_norm))
 
 
 def l2_distance_col(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(_as_double_array(a), _as_double_array(b), lambda x, y: x - y)
-    return F.sqrt(
-        F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    return sql_col(score_sql(sql_of(a), sql_of(b), "L2"))
 
 
 def l2_normalize_col(a: Column | str) -> Column:
@@ -99,24 +141,25 @@ def vector_lit(vec, elem: str = "double") -> Column:
     search's planning time. Here the
     values cross py4j as one big-endian byte string, are copied into a
     JVM ``double[]`` through a ``DoubleBuffer`` view and become one
-    literal: a constant number of py4j calls at any dimension. The IEEE
-    bits are copied exactly (``-0.0``, subnormals, NaN and ±inf included,
-    which a parsed SQL string cannot express), so scores are unchanged.
+    literal: five py4j calls at any dimension, through handles resolved
+    once. The IEEE bits are copied exactly (``-0.0``, subnormals, NaN
+    and ±inf included), so scores are unchanged.
 
     The JVM comes from the active SparkContext, not the active session:
     the session is thread-local and is unset in serving threads that did
     not create it."""
+    from pyspark import SparkContext
+
     sc = SparkContext._active_spark_context
     if sc is None:
         raise RuntimeError("vector_lit needs a running SparkContext")
-    jvm = sc._jvm
     n = len(vec)
-    arr = sc._gateway.new_array(jvm.double, n)
+    arr = sc._gateway.new_array(jvm_static("double"), n)
     if n:
-        jvm.java.nio.ByteBuffer.wrap(
+        jvm_static("java.nio.ByteBuffer", "wrap")(
             struct.pack(f">{n}d", *vec)
         ).asDoubleBuffer().get(arr)
-    col = Column(jvm.org.apache.spark.sql.functions.lit(arr))
+    col = Column(jvm_static("org.apache.spark.sql.functions", "lit")(arr))
     return col if elem == "double" else col.cast(f"array<{elem}>")
 
 
@@ -126,28 +169,47 @@ def score_col(
     metric: str = "COSINE",
     query_norm: Column | None = None,
 ) -> Column:
-    """Similarity of a stored vector against a query vector.
-
-    A literal query is one plan literal (:func:`vector_lit` — broadcast
-    with the plan, no shuffle, no join) whose COSINE norm comes from the
-    driver (:func:`vector_norm`), so each row pays only its own norm and
-    the dot product: 1 `zip_with` and 2 `aggregate`s, with scores
-    bit-identical to ``dot(e, q) / (norm(e) * norm(q))`` evaluated per
-    row. A query Column (a batched search's per-row query) takes its norm
-    from ``query_norm``. `metric` ∈ {COSINE, IP, L2}.
-    """
+    """Similarity of a stored vector against a query vector, as a Column
+    that stands alone (:func:`score_sql` parsed once). A literal query is
+    rendered into the text with its exact bits (:func:`sql_double`) and
+    its COSINE norm folded on the driver (:func:`vector_norm`); a query
+    Column (a batched search's per-row query) takes its norm from
+    ``query_norm``. A frame search scores with :func:`with_score`
+    instead, which carries the query as one literal. `metric` ∈ {COSINE,
+    IP, L2}."""
     if isinstance(query, Column):
-        q, q_norm = query, query_norm
+        q = sql_of(query)
+        qn = sql_of(query_norm) if query_norm is not None else None
     else:
-        q, q_norm = vector_lit(query), vector_norm(query)
-    m = metric.upper()
-    if m == "COSINE":
-        return cosine_col(emb, q, q_norm)
-    if m == "IP":
-        return dot_col(emb, q)
-    if m == "L2":
-        return l2_distance_col(emb, q)
-    raise ValueError(f"unknown metric {metric!r}")
+        q = "array({})".format(", ".join(sql_double(x) for x in query))
+        qn = sql_double(vector_norm(query))
+    return sql_col(score_sql(sql_of(emb), q, metric, qn))
+
+
+def with_score(
+    df: DataFrame,
+    query: list[float],
+    metric: str = "COSINE",
+    emb_col: str = "embedding",
+    score_name: str = "score",
+    round_dp: int = 6,
+) -> DataFrame:
+    """``df`` plus ``score_name``: the :func:`score_sql` of ``emb_col``
+    against ``query`` rounded to ``round_dp``. The query enters as one
+    :func:`vector_lit` column that the score text names and the same
+    projection drops; CollapseProject inlines the literal, so the
+    physical plan is the single scored projection. Its COSINE norm is
+    folded on the driver. Nine py4j round trips at any dimension."""
+    text = score_sql(
+        sql_name(emb_col), sql_name(QUERY_COL), metric,
+        sql_double(vector_norm(query)),
+    )
+    jdf = (
+        df._jdf.withColumn(QUERY_COL, vector_lit(query)._jc)
+        .withColumn(score_name, sql_col(f"round({text}, {int(round_dp)})")._jc)
+        .drop(QUERY_COL)
+    )
+    return DataFrame(jdf, df.sparkSession)
 
 
 def metric_ascending(metric: str) -> bool:

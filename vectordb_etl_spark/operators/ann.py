@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructType
 
+from vectordb_etl_spark.functions.sqltext import read_parquet, sql_col, sql_string
 from vectordb_etl_spark.functions.vector import (
     metric_ascending,
     score_col,
@@ -37,7 +38,11 @@ from vectordb_etl_spark.functions.vector import (
     vector_norm,
 )
 from vectordb_etl_spark.operators.topk import topk_search
-from vectordb_etl_spark.session import local_rows_df, partitioned_read_schema
+from vectordb_etl_spark.session import (
+    local_rows_df,
+    partitioned_read_schema,
+    union_schema,
+)
 
 
 def _unit_rows(m: np.ndarray) -> np.ndarray:
@@ -199,6 +204,9 @@ class IVFIndex:
         self.metric = metric
         self._centroids: np.ndarray | None = None
         self._schema: StructType | None = None
+        # data/ in the older one-directory-per-cell layout (read_probed
+        # cannot scan it beside current layouts); build/compact clear it
+        self._per_cell = False
 
     def build(
         self,
@@ -514,7 +522,10 @@ class IVFIndex:
         """The layout's read schema: stored columns, then ``centroid_id``.
         Fixed by build(); a reopened handle reads it once, from ``data/``."""
         if self._schema is None:
-            self._schema = self.spark.read.parquet(f"{self.path}/data").schema
+            df = self.spark.read.parquet(f"{self.path}/data")
+            files = df._jdf.inputFiles()  # noqa: SLF001
+            self._per_cell = len(files) > 0 and "/centroid_id=" in files[0]
+            self._schema = df.schema
         return self._schema
 
     @property
@@ -564,6 +575,7 @@ class IVFIndex:
         with replace_dir(self.spark, data) as (staging, _exists):
             before = _count_files()
             self._write_layout(self._scan(), staging, "overwrite")
+        self._per_cell = False
         return before, _count_files()
 
     # above this many doubles (K·d), the codebook stops being a plan
@@ -660,13 +672,10 @@ class IVFIndex:
         the ``centroid_id IN (probes)`` filter is pushed to the parquet
         scan, whose row-group statistics skip the unprobed cells (over the
         older per-cell layout it is a partition filter instead)."""
-        df = self.spark.read.schema(self.schema).parquet(f"{self.path}/data")
+        df = read_parquet(self.spark, self.schema, [f"{self.path}/data"])
         if probes is None:
             return df
-        # one parsed expression, not one py4j literal per probe; an empty
-        # probe set selects nothing (``IN ()`` does not parse)
-        ids = ",".join(str(int(p)) for p in probes)
-        return df.filter(F.expr(f"centroid_id IN ({ids})") if ids else F.lit(False))
+        return df.filter(sql_col(_probe_sql(probes) or "FALSE"))
 
     def _read_data(self, probes: list[int] | None = None) -> DataFrame:
         """The indexed table (only the ``probes`` cells, when given — see
@@ -758,6 +767,61 @@ class IVFIndex:
             df, query, k=k, metric=self.metric, group_col=group_col,
             **topk_kwargs,
         )
+
+
+def _probe_sql(probes: list[int]) -> str:
+    """The probe filter as SQL text, one parsed expression at any nprobe;
+    empty for an empty probe set (``IN ()`` does not parse)."""
+    ids = ", ".join(str(int(p)) for p in probes)
+    return f"`centroid_id` IN ({ids})" if ids else ""
+
+
+def read_probed(
+    indexes: dict[str, IVFIndex], probes: dict[str, list[int]]
+) -> list[DataFrame]:
+    """The ``probes[name]`` cells of each collection's index, every row
+    tagged with its ``collection``, in as few scans as the layouts allow.
+
+    Flat layouts whose rows carry ``collection`` (every index
+    ``CollectionStore.build_index`` makes) are ONE read of all their
+    ``data/`` directories under the union of their schemas, filtered by
+    one ``(collection = n AND centroid_id IN (…)) OR …`` text that
+    reaches the scan's row-group statistics: one scan, one set of tasks
+    and a constant number of py4j round trips for any number of indexes.
+    Every other index — quantized storage decodes with its own codebook,
+    and a layout without ``collection`` gets its name as a literal — is
+    a scan of its own (:meth:`IVFIndex._read_data`), and so is an index
+    still in the older per-cell directory layout, whose partition
+    directories Spark will not infer under several roots."""
+    fused, branches = {}, []
+    for n, idx in indexes.items():
+        cols = set(idx.schema.fieldNames())
+        if (
+            "collection" in cols
+            and not {"__sq8", "__pq", "__pqr"} & cols
+            and not idx._per_cell
+        ):
+            fused[n] = idx
+        else:
+            branches.append(
+                idx._read_data(probes[n]).withColumn("collection", F.lit(n))
+            )
+    schema = union_schema(idx.schema for idx in fused.values())
+    if schema is None:  # two layouts type one column differently
+        return [
+            idx._read_data(probes[n]) for n, idx in fused.items()
+        ] + branches
+    if fused:
+        cond = " OR ".join(
+            f"(`collection` = {sql_string(n)} AND {_probe_sql(probes[n])})"
+            for n in fused if probes[n]
+        )
+        first = next(iter(fused.values()))
+        df = read_parquet(
+            first.spark, schema, [f"{idx.path}/data" for idx in fused.values()]
+        )
+        branches.insert(0, df.filter(sql_col(cond or "FALSE")))
+    return branches
 
 
 def lsh_bucket_col(

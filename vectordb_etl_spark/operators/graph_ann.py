@@ -52,9 +52,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from vectordb_etl_spark.session import partitioned_read_schema
+from vectordb_etl_spark.functions.sqltext import (
+    apply_in_pandas,
+    read_parquet,
+    select_names,
+    select_sql,
+    sort_limit,
+    sql_name,
+)
+from vectordb_etl_spark.session import partitioned_read_schema, union_schema
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -380,16 +388,16 @@ _INDEX_META_COLS = ("shard", "id", "pos", "embedding", "node_level",
                     "neighbors", "upper")
 
 
-def _orderable_tiebreak(idx_schema, out_cols: list[str]):
-    """Tie-break columns for the global merge sort: every output column
-    EXCEPT non-orderable types (map columns — e.g. the store's dynamic
-    `meta` field riding passthrough). Dropping them is safe: the
+def _orderable_tiebreak(idx_schema, out_cols: list[str]) -> list[str]:
+    """Tie-break columns (ascending) for the global merge sort: every
+    output column EXCEPT non-orderable types (map columns — e.g. the
+    store's dynamic `meta` field riding passthrough). Dropping them is safe: the
     orderable remainder (id first by convention) already makes the order
     deterministic, while sorting on a MapType is an AnalysisException."""
     from pyspark.sql.types import MapType
 
     return [
-        F.asc(c)
+        c
         for c in out_cols
         if c not in idx_schema.fieldNames()
         or not isinstance(idx_schema[c].dataType, MapType)
@@ -483,6 +491,7 @@ def _beam_hits(
     lead_cols: list[str] | None = None,
     keys: tuple[str, ...] = ("shard",),
     qid_offset: int | None = None,
+    computed: dict[str, str] | None = None,
 ) -> tuple[DataFrame, list]:
     """Every shard's beam hits for each row of ``qmat`` over the layout
     ``idx``, through the one applyInPandas body all graph searches share
@@ -490,8 +499,9 @@ def _beam_hits(
     queries and emits ``lead_cols``, ``out_cols`` and the score of its
     top-k hits — its full ef-beam under a post-filter or with
     ``emit_all`` — gathered with one positional ``take`` per query; the
-    post-filter then prunes them. Returns the hits and the orderable
-    ``out_cols`` tie-break for the caller's merge."""
+    post-filter then prunes them. ``computed`` maps a column the layout
+    does not hold to the SQL that derives it. Returns the hits and the
+    orderable ``out_cols`` tie-break for the caller's merge."""
     if filter_mode not in ("post", "traversal"):
         raise ValueError(
             f"filter_mode must be 'post' or 'traversal'; got {filter_mode!r}"
@@ -504,12 +514,13 @@ def _beam_hits(
         idx = idx.withColumn("__allowed", predicate.cast("boolean"))
     lead = lead_cols or []
     emit_cols = list(dict.fromkeys([*lead, *out_cols]))
-    fields = ", ".join(
-        f"`{c}` {idx.schema[c].dataType.simpleString()}" for c in emit_cols
+    schema = idx.schema
+    # a StructType, not a DDL string the JVM would have to parse
+    out_schema = StructType(
+        ([StructField("query_id", IntegerType())] if qid_offset is not None else [])
+        + [StructField(c, schema[c].dataType) for c in emit_cols]
+        + [StructField(score_name, DoubleType())]
     )
-    out_schema = (
-        "query_id int, " if qid_offset is not None else ""
-    ) + f"{fields}, {score_name} double"
     emit = None if emit_all else (max(ef, k) if post else k)
 
     def _search(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -539,10 +550,15 @@ def _beam_hits(
         *keys, *emit_cols, "pos", "embedding", "node_level", "neighbors",
         "upper", *(["__allowed"] if during else []),
     ])
-    local = idx.select(*read).groupBy(*keys).applyInPandas(_search, out_schema)
+    computed = computed or {}
+    cols = select_sql(idx, [
+        f"{computed[c]} AS {sql_name(c)}" if c in computed else sql_name(c)
+        for c in read
+    ])
+    local = apply_in_pandas(cols, list(read), list(keys), _search, out_schema)
     if post:
         local = local.filter(predicate)
-    return local, _orderable_tiebreak(idx.schema, out_cols)
+    return local, _orderable_tiebreak(schema, out_cols)
 
 
 class GraphANNIndex:
@@ -567,14 +583,19 @@ class GraphANNIndex:
         self.path = path
         self._schema: StructType | None = None
 
-    def _read(self) -> DataFrame:
-        """The shard layout, read with the handle's schema."""
+    @property
+    def schema(self) -> StructType:
+        """The layout's read schema. Fixed by build(); a reopened handle
+        infers it, and checks the HNSW format, once."""
         if self._schema is None:
             idx = self.spark.read.parquet(self.path)
             _require_hnsw_format(idx, self.path)
             self._schema = idx.schema
-            return idx
-        return self.spark.read.schema(self._schema).parquet(self.path)
+        return self._schema
+
+    def _read(self) -> DataFrame:
+        """The shard layout, read with the handle's schema."""
+        return read_parquet(self.spark, self.schema, [self.path])
 
     def build(
         self,
@@ -805,7 +826,9 @@ class GraphANNIndex:
             self._read(), _unit_query(query), k, ef, out_cols, score_name,
             round_dp, predicate, filter_mode,
         )
-        return local.orderBy(F.desc(score_name), *ties).limit(k)
+        return sort_limit(
+            local, [(score_name, False)] + [(c, True) for c in ties], k
+        )
 
     def search_per_group(
         self,
@@ -843,7 +866,9 @@ class GraphANNIndex:
             round_dp, predicate, filter_mode, emit_all=True,
             lead_cols=[group_col],
         )
-        w = Window.partitionBy(group_col).orderBy(F.desc(score_name), *ties)
+        w = Window.partitionBy(group_col).orderBy(
+            F.desc(score_name), *[F.asc(c) for c in ties]
+        )
         return (
             local.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
@@ -897,7 +922,7 @@ class GraphANNIndex:
         local = reduce(DataFrame.unionByName, [p for p, _ in parts])
         if not len(qmat):
             local = local.limit(0)
-        order = [F.desc(score_name)] + parts[0][1]
+        order = [F.desc(score_name)] + [F.asc(c) for c in parts[0][1]]
         w = Window.partitionBy("query_id").orderBy(*order)
         return (
             local.withColumn("__rn", F.row_number().over(w))
@@ -921,50 +946,91 @@ def fanout_search(
     filter_mode: str = "post",
 ) -> DataFrame:
     """Graph search over several collections' indexes (``indexes``: name
-    → handle) as ONE plan: the layouts are unioned (a passthrough column
-    one lacks reads as null) and tagged with ``collection``, one
-    ``groupBy("collection", "shard").applyInPandas`` beams every shard,
-    and one merge orders by score, ``tie_break``, ``collection``, then
-    the orderable ``output_cols``. ``exact`` rows (un-indexed
-    collections: ``id``, ``collection``, ``embedding``) are one more
-    union branch, filtered exactly and scored with the same
-    COSINE/rounding. ``predicate``/``filter_mode`` follow
-    :meth:`GraphANNIndex.search`. Returns (*output_cols, score,
-    collection)."""
-    from vectordb_etl_spark.functions.vector import score_col
+    → handle) as ONE plan: one read of all the shard layouts (their
+    ``collection`` passthrough tags the rows; a passthrough column one
+    layout lacks reads as null), one ``groupBy("collection",
+    "shard").applyInPandas`` beams every shard, and one merge orders by
+    score, ``tie_break``, ``collection``, then the orderable
+    ``output_cols``. ``exact`` rows (un-indexed collections: ``id``,
+    ``collection``, ``embedding``) are one more union branch, filtered
+    exactly and scored with the same COSINE/rounding.
+    ``predicate``/``filter_mode`` follow :meth:`GraphANNIndex.search`.
+    Returns (*output_cols, score, collection)."""
+    from vectordb_etl_spark.functions.vector import with_score
 
     out_cols = output_cols or ["id"]
-    branches = []
+    branches, ties = [], None
     if indexes:
-        layouts = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            [
-                h._read().withColumn("collection", F.lit(n))
-                for n, h in indexes.items()
-            ],
-        )
-        local, _ = _beam_hits(
-            layouts, _unit_query(query), k, ef, out_cols, score_name,
-            round_dp, predicate, filter_mode, lead_cols=["collection"],
-            keys=("collection", "shard"),
+        layouts, computed = _tagged_layouts(indexes)
+        local, ties = _beam_hits(
+            layouts, _unit_query(query), k, ef, out_cols,
+            score_name, round_dp, predicate, filter_mode,
+            lead_cols=["collection"], keys=("collection", "shard"),
+            computed=computed,
         )
         branches.append(local)
     if exact is not None:
         if predicate is not None:
             exact = exact.filter(predicate)
-        branches.append(exact.select(
-            *dict.fromkeys([*out_cols, "collection"]),
-            F.round(score_col("embedding", query, "COSINE"), round_dp).alias(
-                score_name
-            ),
+        branches.append(select_names(
+            with_score(exact, query, "COSINE", "embedding", score_name, round_dp),
+            [*dict.fromkeys([*out_cols, "collection"]), score_name],
         ))
     merged = reduce(DataFrame.unionByName, branches)
-    order = [
-        F.desc(score_name),
-        *[F.asc(c) for c in tie_break or []],
-        F.asc("collection"),
-        *_orderable_tiebreak(merged.schema, out_cols),
+    keys = [
+        (score_name, False),
+        *[(c, True) for c in tie_break or []],
+        ("collection", True),
+        *[(c, True) for c in ties or _orderable_tiebreak(merged.schema, out_cols)],
     ]
-    return merged.orderBy(*order).limit(k).select(
-        *dict.fromkeys([*out_cols, score_name, "collection"])
+    return select_names(
+        sort_limit(merged, keys, k),
+        dict.fromkeys([*out_cols, score_name, "collection"]),
     )
+
+
+# a row's shard in a layout scan that did not infer partitions
+_SHARD_SQL = (
+    "CAST(regexp_extract(_metadata.file_path, '/shard=([0-9]+)/', 1) AS INT)"
+)
+
+
+def _tagged_layouts(
+    indexes: dict[str, GraphANNIndex],
+) -> tuple[DataFrame, dict[str, str]]:
+    """Every index's shard layout with its rows tagged by ``collection``,
+    and the SQL of the layout columns the frame does not hold.
+
+    The layouts that carry the ``collection`` passthrough (every index
+    ``CollectionStore.build_index`` makes) are ONE scan of all their
+    paths under the union of their schemas. Spark infers partitions
+    under one root only, so that scan lists the files recursively and a
+    row's ``shard`` is derived from its file's ``shard=<i>`` directory.
+    Any other layout is read on its own, tagged with its name, and
+    unioned by name (the fused scan then derives ``shard`` itself)."""
+    fused = {n: h for n, h in indexes.items() if "collection" in h.schema.fieldNames()}
+    schema = union_schema(
+        [f for f in h.schema.fields if f.name != "shard"] for h in fused.values()
+    )
+    if schema is None:  # two layouts type one column differently
+        fused = {}
+    parts = [
+        h._read().withColumn("collection", F.lit(n))
+        for n, h in indexes.items()
+        if n not in fused
+    ]
+    if not fused:
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        ), {}
+    first = next(iter(fused.values()))
+    scan = read_parquet(
+        first.spark, schema, [h.path for h in fused.values()],
+        recursiveFileLookup="true",
+    )
+    if not parts:
+        return scan, {"shard": _SHARD_SQL}
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [select_sql(scan, ["*", f"{_SHARD_SQL} AS shard"]), *parts],
+    ), {}

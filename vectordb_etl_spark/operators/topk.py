@@ -8,7 +8,9 @@ take the global top-k. The Catalyst plan is the one you want at 100 TB:
         → TakeOrderedAndProject (per-partition heap top-k, then driver merge
           of k·num_partitions rows — no global sort, no shuffle)
 
-The query vector is a plan literal (broadcast with the task binaries). The
+The query vector is a plan literal (broadcast with the task binaries) and
+the score one parsed SQL text (functions/vector.py:with_score), so the
+plan costs a constant number of py4j round trips at any dimension. The
 Q2 fan-out (reference modules/milvus_store.py:301-325) is ``topk_search``
 over the store scan without a collection filter: one job, the query
 embedded once, the ``collection`` column kept as the hit's tag. The
@@ -23,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_etl_spark.functions.vector import metric_ascending, score_col
+from vectordb_etl_spark.functions.sqltext import select_names, sort_limit
+from vectordb_etl_spark.functions.vector import metric_ascending, with_score
 
 
 def topk_search(
@@ -46,17 +49,15 @@ def topk_search(
     """
     if predicate is not None:
         df = df.filter(predicate)
-    scored = df.withColumn(
-        score_name, F.round(score_col(emb_col, query, metric), round_dp)
+    scored = with_score(df, query, metric, emb_col, score_name, round_dp)
+    out = sort_limit(
+        scored,
+        [(score_name, metric_ascending(metric))]
+        + [(c, True) for c in tie_break or []],
+        k,
     )
-    order = [
-        F.col(score_name).asc() if metric_ascending(metric) else F.col(score_name).desc()
-    ]
-    for c in tie_break or []:
-        order.append(F.col(c).asc())
-    out = scored.orderBy(*order).limit(k)
     if output_cols is not None:
-        out = out.select(*output_cols, score_name)
+        out = select_names(out, [*output_cols, score_name])
     return out
 
 
@@ -77,9 +78,7 @@ def search_per_group_topk(
     group key."""
     from pyspark.sql.window import Window
 
-    scored = df.withColumn(
-        score_name, F.round(score_col(emb_col, query, metric), round_dp)
-    )
+    scored = with_score(df, query, metric, emb_col, score_name, round_dp)
     order = [
         F.col(score_name).asc() if metric_ascending(metric) else F.col(score_name).desc()
     ]
@@ -150,8 +149,8 @@ def hybrid_rrf_search(
         ),
         F.lit(0),
     )
-    scored = df.withColumn("kw_score", kw).withColumn(
-        "vec_score", F.round(score_col(emb_col, query_vec, "COSINE"), 6)
+    scored = with_score(
+        df.withColumn("kw_score", kw), query_vec, "COSINE", emb_col, "vec_score"
     )
     pool_n = k * pool_factor
     kw_pool = (

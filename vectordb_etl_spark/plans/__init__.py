@@ -14,6 +14,7 @@ from vectordb_etl_spark.plans.inspect import (
     has_broadcast_join,
     has_partition_filter,
     uses_python_eval,
+    py4j_commands,
 )
 
 __all__ = [
@@ -24,4 +25,5 @@ __all__ = [
     "has_broadcast_join",
     "has_partition_filter",
     "uses_python_eval",
+    "py4j_commands",
 ]

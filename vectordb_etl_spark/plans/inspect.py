@@ -1,10 +1,54 @@
-"""Executed-plan string inspection (the stable cross-version surface)."""
+"""Executed-plan string inspection (the stable cross-version surface),
+and a counter of the py4j messages that build a plan."""
 
 from __future__ import annotations
 
 import re
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+
+# py4j's proxy-release message ("memory: delete <object id>"), sent when a
+# Python proxy of a JVM object is garbage-collected
+_RELEASE = "m\nd\n"
+
+
+@contextmanager
+def py4j_commands():
+    """Count the py4j messages the driver sends to the JVM while the block
+    runs, from every thread: ``{"commands": n, "releases": m}``.
+    ``commands`` are calls, reflection lookups and object transfers — the
+    round trips that building and running a plan costs; ``releases`` are
+    py4j's proxy-release messages, which go out whenever Python's garbage
+    collector frees JVM proxies and so depend on when it runs. Wraps
+    ``send_command`` of both connection classes (the pinned-thread
+    ``ClientServerConnection`` PySpark uses by default, and
+    ``GatewayConnection``) and restores them on exit."""
+    from py4j import clientserver, java_gateway
+
+    counts = {"commands": 0, "releases": 0}
+    lock = threading.Lock()
+    classes = (clientserver.ClientServerConnection, java_gateway.GatewayConnection)
+    originals = [cls.__dict__["send_command"] for cls in classes]
+
+    def counting(original):
+        def send_command(self, command, *args, **kwargs):
+            key = "releases" if command.startswith(_RELEASE) else "commands"
+            with lock:
+                counts[key] += 1
+            return original(self, command, *args, **kwargs)
+
+        return send_command
+
+    for cls, original in zip(classes, originals):
+        cls.send_command = counting(original)
+    try:
+        yield counts
+    finally:
+        for cls, original in zip(classes, originals):
+            cls.send_command = original
 
 
 def executed_plan(df: DataFrame) -> str:

@@ -9,7 +9,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from vectordb_etl_spark.config import EmbeddingConfig
 from vectordb_etl_spark.embeddings import query_vector
@@ -95,30 +94,38 @@ def search_with_scores(
         )
     # ONE store read for the whole call: a listing of the data directory
     # under the store's remembered schema, so while the directory holds
-    # the same files it runs no schema job (CollectionStore.read). Its
+    # the same files it runs no schema job (CollectionStore.scan). Its
     # columns feed the filter parse, the graph output_cols probe and the
-    # IVF projection, and the exact path scans it.
-    base = store.read()
-    data_cols = base.columns
-    # a blank filter string parses to None and must behave like "no filter
-    # given" (auto-detect still applies), not like "filter everything off".
+    # IVF projection, its file list names the collections an index
+    # fan-out searches, and the exact path scans it.
+    base, listed, data_cols = store.scan()
+    # a blank filter string must behave like "no filter given"
+    # (auto-detect still applies), not like "filter everything off".
     # Filter strings resolve against the store schema so bare identifiers
     # that aren't typed columns reach the dynamic `meta` map (the
     # reference's enable_dynamic_field filter surface) — schema-only read,
-    # no scan.
-    predicate = (
-        parse_filter(filter, columns=data_cols)
-        if filter is not None
+    # no scan. The filter, the language and the collection conditions are
+    # one filter string, parsed once into one SQL text
+    # (functions/filter_expr.py).
+    custom = (
+        filter
+        if isinstance(filter, Column) or (filter and filter.strip())
         else None
     )
-    if predicate is None:
-        if auto_detect_language and filter_language is None:
-            filter_language = detect_language_query(query)
-        predicate = (
-            F.col("language") == filter_language if filter_language else None
-        )
-    elif filter_language:
-        predicate = predicate & (F.col("language") == filter_language)
+    if custom is None and auto_detect_language and filter_language is None:
+        filter_language = detect_language_query(query)
+
+    def where(*scope: str) -> Column | None:
+        conds = list(scope)
+        if isinstance(custom, str):
+            conds.append(f"({custom})")
+        if filter_language:
+            conds.append(f"language == {_quoted(filter_language)}")
+        pred = parse_filter(" and ".join(conds), columns=data_cols) if conds else None
+        if isinstance(custom, Column):
+            pred = custom if pred is None else custom & pred
+        return pred
+
     vec = query_vector(query, embedding_config)
     if index_kind is not None:
         if index_kind not in ("ivf", "graph"):
@@ -126,11 +133,12 @@ def search_with_scores(
                 f"index_kind must be 'ivf'|'graph'|None; got {index_kind!r}"
             )
         names = (
-            None
+            listed
             if search_all_collections or collection_name is None
             else [collection_name]
         )
         kwargs: dict = {}
+        predicate = where()
         if predicate is not None:
             kwargs["predicate"] = predicate
         if index_kind == "graph":
@@ -171,18 +179,18 @@ def search_with_scores(
         ).collect()
     else:
         # the same plan as store.read(collection_name): a named collection
-        # is a partition filter over the one read
-        df = (
-            base
+        # is a partition filter over the one read, in the same predicate
+        scope = (
+            ()
             if search_all_collections or collection_name is None
-            else base.filter(F.col("collection") == collection_name)
+            else (f"collection == {_quoted(collection_name)}",)
         )
         rows = topk_search(
-            df,
+            base,
             vec,
             k=k,
             metric=store.config.metric_type,
-            predicate=predicate,
+            predicate=where(*scope),
             tie_break=["chunk_id"] if "chunk_id" in data_cols else None,
         ).collect()
     hits = []
@@ -203,6 +211,11 @@ def search_with_scores(
                 d.setdefault(mk, mv)
         hits.append(SearchHit(text=text, score=score, metadata=d))
     return hits
+
+
+def _quoted(value: str) -> str:
+    """A filter-string literal holding exactly ``value``."""
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
 
 
 def search(store: CollectionStore, query: str, k: int = 3, **kwargs) -> list[str]:

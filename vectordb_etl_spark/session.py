@@ -127,6 +127,22 @@ def partitioned_read_schema(frame_schema: StructType, key: str) -> StructType:
     return StructType(fields + [StructField(key, frame_schema[key].dataType, True)])
 
 
+def union_schema(schemas) -> StructType | None:
+    """The by-name union of read schemas (or field lists): each field
+    once, in order of first appearance, nullable (a file without the
+    column reads it as null); None when two schemas give one name
+    different types."""
+    fields: dict[str, StructField] = {}
+    for schema in schemas:
+        for f in schema:
+            seen = fields.get(f.name)
+            if seen is None:
+                fields[f.name] = StructField(f.name, f.dataType, True)
+            elif seen.dataType != f.dataType:
+                return None
+    return StructType(list(fields.values()))
+
+
 def ensure_min_partitions(df, min_partitions: int | None = None):
     """Round-robin repartition iff the input is under-partitioned.
 

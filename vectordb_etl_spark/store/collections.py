@@ -21,10 +21,12 @@ to absolute local paths, preserving the local behavior.
 from __future__ import annotations
 
 import os
+import re
 import threading
 import time
 from contextlib import contextmanager
 from functools import reduce
+from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -33,6 +35,12 @@ from pyspark.sql.types import StructType
 
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import with_embeddings
+from vectordb_etl_spark.functions.sqltext import (
+    read_parquet,
+    select_names,
+    sql_col,
+    sql_string,
+)
 from vectordb_etl_spark.functions.text import truncate_cols
 
 
@@ -140,6 +148,15 @@ def write_counted(df: DataFrame, path: str) -> int:
     return rows.get["rows"]
 
 
+# a collection's name in one line of a store file list
+_LISTED_NAME = re.compile(r"/collection=([^/\n]+)/[^/\n]*$", re.M)
+# a Hadoop FileStatus rendered by toString(): path, kind, commit time
+_STATUS = re.compile(
+    r"\{path=(.*?); isDirectory=(true|false);.*?modification_time=(\d+)"
+)
+# characters a Hadoop glob reads as syntax
+_GLOB_SYNTAX = frozenset("{}[]*?\\,")
+
 # work-dir naming rule of replace_dir: the siblings of <parent>/<leaf> are
 # <parent>/.staging-<leaf> (new contents) and <parent>/.old-<leaf> (aside)
 _STAGING, _ASIDE = ".staging-", ".old-"
@@ -158,7 +175,12 @@ def commit_stamp(spark: SparkSession, path: str) -> int | None:
     ``_SUCCESS`` marker's mtime (written at job commit), falling back to
     the directory's; None when neither exists. A marker hit is one
     status call."""
-    fs, marker = hadoop_fs(spark, f"{path}/_SUCCESS")
+    return marker_stamp(*hadoop_fs(spark, f"{path}/_SUCCESS"))
+
+
+def marker_stamp(fs, marker) -> int | None:
+    """:func:`commit_stamp` of the directory whose ``_SUCCESS`` marker is
+    the Hadoop path ``marker`` on ``fs``."""
     for p in (marker, marker.getParent()):
         try:
             return fs.getFileStatus(p).getModificationTime()
@@ -216,10 +238,16 @@ class CollectionStore:
         self._indexes: dict[tuple[str, str], tuple[int | None, object]] = {}
         self._indexes_lock = threading.Lock()
         # (file list of the data directory, schema inferred from it) —
-        # see read(); the JVM class that joins a file list is resolved
-        # once here, not with four py4j lookups per read
+        # see read(). The JVM classes that join a file list and make a
+        # Hadoop path, and the warehouse root's FileSystem, are resolved
+        # once here, not with several py4j lookups per call
         self._schema: tuple[str, StructType] | None = None
-        self._array_seq = spark._jvm.scala.collection.immutable.ArraySeq  # noqa: SLF001
+        # the pair each thread's last read() used (see scan())
+        self._listed = threading.local()
+        jvm = spark._jvm  # noqa: SLF001
+        self._array_seq = jvm.scala.collection.immutable.ArraySeq
+        self._path_cls = jvm.org.apache.hadoop.fs.Path
+        self._root_fs: tuple[str, object] | None = None
 
     @property
     def _root(self) -> str:
@@ -233,10 +261,16 @@ class CollectionStore:
     # -- Hadoop FS plumbing (URI-scheme-agnostic DDL) ------------------------
 
     def _jpath(self, uri: str):
-        return self.spark._jvm.org.apache.hadoop.fs.Path(uri)
+        return self._path_cls(uri)
 
     def _fs(self, uri: str):
-        return hadoop_fs(self.spark, uri)[0]
+        """The FileSystem of ``uri``: the warehouse root's, held by the
+        store, since every path the store touches lies under the root."""
+        root = self._root
+        held = self._root_fs
+        if held is None or held[0] != root:
+            held = self._root_fs = (root, hadoop_fs(self.spark, root)[0])
+        return held[1]
 
     # -- S9: DDL ------------------------------------------------------------
 
@@ -525,7 +559,8 @@ class CollectionStore:
         one; otherwise it infers again and remembers the new pair. The
         result is exact: no writer rewrites a part file in place (every
         write and every :func:`replace_dir` swap makes new part-file
-        names), so the same list yields the same union.
+        names), so the same list yields the same union. A warm read is a
+        few py4j round trips (:func:`read_parquet`).
 
         A changed list reads every footer once, so a store that appends
         many small files should be compacted
@@ -535,17 +570,30 @@ class CollectionStore:
         # never half of it
         known = self._schema
         if known is not None:
-            df = self.spark.read.schema(known[1]).parquet(self._data_dir)
+            df = read_parquet(self.spark, known[1], [self._data_dir])
             if self._input_files(df) != known[0]:
                 known = None
         if known is None:
             df = self.spark.read.option("mergeSchema", "true").parquet(
                 self._data_dir
             )
-            self._schema = (self._input_files(df), df.schema)
+            known = self._schema = (self._input_files(df), df.schema)
+        self._listed.pair = known
         if collection is not None:
-            df = df.filter(F.col("collection") == collection)
+            df = df.filter(sql_col(f"`collection` = {sql_string(collection)}"))
         return df
+
+    def scan(self) -> tuple[DataFrame, list[str], list[str]]:
+        """:meth:`read` of the whole store, with the collections its file
+        list holds (the ``collection=<name>`` directories that have data
+        files, names as :meth:`list_collections` spells them) and its
+        column names — no listing or py4j round trip beyond the read's."""
+        df = self.read()
+        files, schema = self._listed.pair  # what this thread's read listed
+        # the file list holds URIs: a name the partition writer escaped
+        # (``%XX``) reads back URI-encoded once more
+        names = sorted({unquote(n) for n in _LISTED_NAME.findall(files)})
+        return df, names, schema.fieldNames()
 
     def _input_files(self, df: DataFrame) -> str:
         """The frame's file list as one string, joined in the JVM: a
@@ -640,29 +688,32 @@ class CollectionStore:
         """Q2 through PER-COLLECTION indexes (the Milvus fan-out,
         milvus_store.py:301-325: search each collection's index, merge one
         global top-k), planned as ONE query over all named collections.
-        IVF: each index ranks its own centroids; the probed-cell scans
-        are unioned and tagged with ``collection``, scored by one
-        expression and cut by one ``orderBy(score, *tie_break,
+        IVF: each index ranks its own centroids, and the probed cells of
+        every index are ONE scan of all their ``data/`` directories with
+        one combined ``collection``/``centroid_id`` probe filter
+        (:func:`~vectordb_etl_spark.operators.ann.read_probed`), scored by
+        one expression and cut by one ``orderBy(score, *tie_break,
         collection).limit(k)`` — per-collection top-k lists merged equal
         the global top-k of the union, so no per-collection limit is
-        planned. Graph: one beam over the union of the shard layouts
+        planned. Graph: one beam over one read of all the shard layouts
         (:func:`~vectordb_etl_spark.operators.graph_ann.fanout_search`).
 
-        ``on_missing`` governs collections without an index: ``'raise'``
-        (default — a hidden full scan should be an explicit decision) or
-        ``'exact'``, which serves them by brute force over one
-        partition-pruned store scan in the same union, as Milvus searches
-        every loaded collection regardless of index state. That branch
-        scores with the index tiers' metric and rounding; for
+        ``collections=None`` searches every collection the store's file
+        list holds (:meth:`read` validates it), with no directory listing
+        of its own. ``on_missing`` governs collections without an index:
+        ``'raise'`` (default — a hidden full scan should be an explicit
+        decision) or ``'exact'``, which serves them by brute force over
+        one partition-pruned store scan in the same union, as Milvus
+        searches every loaded collection regardless of index state. That
+        branch scores with the index tiers' metric and rounding; for
         ``kind='graph'`` it surfaces ``fallback_id_col`` as ``id``.
 
         ``nprobe``/``ef`` default to ``StoreConfig.nprobe``/``ef_search``.
-        Whether a collection has an index is one status call on its
-        commit marker, and handles come from the store's memo
-        (:meth:`open_index`), so a warm search runs no listing or schema
-        job: an IVF probe reads each index's ``data/`` from one root path,
-        and its pushed ``centroid_id`` filter skips the row groups of the
-        unprobed cells."""
+        Whether each collection has an index is one glob of the commit
+        markers for all of them (:meth:`_index_stamps`), and handles come
+        from the store's memo (:meth:`open_index`), so a warm search runs
+        no listing or schema job and plans in a number of py4j round trips
+        that does not grow with the collections or the dimension."""
         from vectordb_etl_spark.operators.topk import topk_search
 
         if kind not in ("ivf", "graph"):
@@ -675,15 +726,16 @@ class CollectionStore:
                 "graph index tier is COSINE-only; store metric "
                 f"is {self.config.metric_type!r}"
             )
-        names = collections if collections is not None else self.list_collections()
+        base, names, _ = (
+            (None, collections, None) if collections is not None else self.scan()
+        )
         if not names:
             raise ValueError("fanout_search_indexed: no collections to search")
+        stamps = self._index_stamps(names, kind)
         indexed, missing = {}, []
         for n in names:
-            path = self._index_path(n, kind)
-            stamp = self._index_stamp(path, kind)
-            if stamp is not None:
-                indexed[n] = self._handle(path, kind, stamp)
+            if stamps[n] is not None:
+                indexed[n] = self._handle(self._index_path(n, kind), kind, stamps[n])
             elif on_missing == "raise":
                 raise ValueError(
                     f"collection {n!r} has no {kind} index — build_index "
@@ -692,11 +744,12 @@ class CollectionStore:
                 )
             else:
                 missing.append(n)
-        exact = (
-            self.read().filter(F.col("collection").isin(missing))
-            if missing
-            else None
-        )
+        exact = None
+        if missing:
+            base = base if base is not None else self.read()
+            exact = base.filter(sql_col("`collection` IN ({})".format(
+                ", ".join(sql_string(n) for n in missing)
+            )))
         tie_break = search_kwargs.pop("tie_break", None) or []
         if kind == "graph":
             from vectordb_etl_spark.operators.graph_ann import fanout_search
@@ -708,6 +761,8 @@ class CollectionStore:
                 ef=self.config.ef_search if ef is None else ef,
                 exact=exact, tie_break=tie_break, **search_kwargs,
             )
+        from vectordb_etl_spark.operators.ann import read_probed
+
         if nprobe is None:
             nprobe = self.config.nprobe
         # graph-only beam knob: the IVF and exact branches apply the
@@ -716,20 +771,20 @@ class CollectionStore:
         predicate = search_kwargs.pop("predicate", None)
         output_cols = search_kwargs.pop("output_cols", None)
         probe_dp = search_kwargs.pop("probe_round_dp", None)
-        branches = [
-            idx._read_data(
-                idx.probe_ids(query, nprobe, round_dp=probe_dp)
-            ).withColumn("collection", F.lit(n))
+        branches = read_probed(indexed, {
+            n: idx.probe_ids(query, nprobe, round_dp=probe_dp)
             for n, idx in indexed.items()
-        ] + ([exact] if exact is not None else [])
+        }) + ([exact] if exact is not None else [])
         if predicate is not None:
             branches = [b.filter(predicate) for b in branches]
-        if output_cols is not None:
-            keep = dict.fromkeys([
+        if output_cols is not None and len(branches) > 1:
+            # one column set per union branch (the indexed side carries
+            # its centroid_id layout key, the exact side does not)
+            keep = list(dict.fromkeys([
                 *output_cols, search_kwargs.get("emb_col", "embedding"),
                 *tie_break, "collection",
-            ])
-            branches = [b.select(*keep) for b in branches]
+            ]))
+            branches = [select_names(b, keep) for b in branches]
         out = topk_search(
             reduce(DataFrame.unionByName, branches), query, k=k,
             metric=self.config.metric_type,
@@ -737,7 +792,7 @@ class CollectionStore:
         )
         if output_cols is None:
             return out
-        return out.select(*dict.fromkeys([
+        return select_names(out, dict.fromkeys([
             *output_cols, search_kwargs.get("score_name", "score"),
             "collection",
         ]))
@@ -772,9 +827,41 @@ class CollectionStore:
         """:func:`commit_stamp` of the index's commit marker: the
         centroids' for IVF (add/compact leave it alone, so appended rows
         keep the handle), the layout's for graph."""
-        return commit_stamp(
-            self.spark, f"{path}/centroids" if kind == "ivf" else path
-        )
+        leaf = f"{path}/centroids" if kind == "ivf" else path
+        return marker_stamp(self._fs(leaf), self._jpath(f"{leaf}/_SUCCESS"))
+
+    def _index_stamps(self, names: list[str], kind: str) -> dict[str, int | None]:
+        """:meth:`_index_stamp` of every named collection's index from ONE
+        ``globStatus`` of their commit directories and markers, joined in
+        the JVM: a constant number of py4j round trips for any number of
+        collections. A name (or a warehouse root) the glob would read as
+        syntax is stamped on its own."""
+        leaf = "ivf/centroids" if kind == "ivf" else "graph"
+        plain = [
+            n for n in names
+            if n and not _GLOB_SYNTAX & set(n) and not _GLOB_SYNTAX & set(self._root)
+        ]
+        stamps: dict[str, int | None] = {
+            n: self._index_stamp(self._index_path(n, kind), kind)
+            for n in names if n not in plain
+        }
+        if not plain:
+            return stamps
+        statuses = self._fs(self._root).globStatus(self._jpath(
+            f"{self._root}/indexes/{{{','.join(plain)}}}/{leaf}{{,/_SUCCESS}}"
+        ))
+        found: dict[str, dict[bool, int]] = {}
+        if statuses is not None:
+            text = self._array_seq.unsafeWrapArray(statuses).mkString("\n")
+            depth = leaf.count("/") + 2
+            for path, is_dir, mtime in _STATUS.findall(text):
+                marker = is_dir == "false"
+                parts = path.rsplit("/", depth + marker)
+                found.setdefault(parts[1], {})[marker] = int(mtime)
+        for n in plain:
+            got = found.get(n, {})
+            stamps[n] = got.get(True, got.get(False))
+        return stamps
 
     def _remember(self, path: str, kind: str, idx):
         """Keep a handle this store just built, so its centroids and
