@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import hashlib
 import math
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -32,15 +36,81 @@ def test_hash_embedder_normalized():
     assert math.isclose(np.linalg.norm(v), 1.0, rel_tol=1e-5)
 
 
+def _fresh_generator_vector(text: str, dim: int, normalize: bool = True):
+    """The hash embedding as first defined: a new RandomState per text."""
+    seed = int.from_bytes(hashlib.md5(text.encode()).digest()[:4], "big")
+    vec = np.random.RandomState(seed).standard_normal(dim)
+    if normalize:
+        n = np.linalg.norm(vec)
+        if n > 0:
+            vec = vec / n
+    return vec.astype(np.float32)
+
+
+TEXTS = ["hello world", "서울 사무실 주소와 수강신청방법", "", "Hà Nội", "x" * 3000]
+
+
+def test_hash_embedder_bits_match_a_fresh_generator_per_text():
+    """Re-seeding one held generator draws the same stream as building a
+    new one for each text: every API returns the same bits."""
+    for normalize in (True, False):
+        e = HashEmbedder(dimension=48, normalize=normalize)
+        want = np.stack([_fresh_generator_vector(t, 48, normalize) for t in TEXTS])
+        m = e.embed_matrix(TEXTS)
+        assert m.dtype == np.float32 and m.shape == (len(TEXTS), 48)
+        assert (m.view(np.uint32) == want.view(np.uint32)).all()
+        docs = np.asarray(e.embed_documents(TEXTS), dtype=np.float32)
+        assert (docs.view(np.uint32) == want.view(np.uint32)).all()
+        for t, w in zip(TEXTS, want):
+            q = np.asarray(e.embed_query(t), dtype=np.float32)
+            assert (q.view(np.uint32) == w.view(np.uint32)).all()
+            assert (e.embed_one(t).view(np.uint32) == w.view(np.uint32)).all()
+    assert HashEmbedder(dimension=4).embed_matrix([]).shape == (0, 4)
+
+
+def test_concurrent_embed_query_on_one_embedder():
+    """Serving threads share one embedder: each must draw from its own
+    generator, or one thread's seed lands in another's draw. More threads
+    than cores, switching as often as the interpreter allows."""
+    e = HashEmbedder(dimension=256)
+    texts = [f"query {i} 질문" for i in range(40)]
+    want = {t: _fresh_generator_vector(t, 256).tolist() for t in texts}
+    n_threads = 8
+    start = threading.Barrier(n_threads)
+
+    def worker(i):
+        start.wait(timeout=30)
+        order = texts[i:] + texts[:i]
+        return [(t, e.embed_query(t)) for _ in range(5) for t in order]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n_threads) as pool:
+            futures = [pool.submit(worker, i) for i in range(n_threads)]
+            runs = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(v == want[t] for run in runs for t, v in run)
+
+
 def test_embed_udf_matches_driver(spark):
-    cfg = EmbeddingConfig(dimension=32)
-    df = spark.createDataFrame([("alpha",), ("beta",)], ["text"])
-    rows = {r["text"]: r["embedding"] for r in with_embeddings(df, config=cfg).collect()}
-    e = get_embedder(cfg)
-    for t in ("alpha", "beta"):
-        expected = e.embed_query(t)
-        got = rows[t]
-        assert np.allclose(got, expected, atol=1e-6)
+    """The Arrow UDF stores the driver's vectors bit for bit, a null text
+    as the empty string's, across several Arrow batches of one task."""
+    cfg = EmbeddingConfig(dimension=8)
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    n = batch + 3
+    df = spark.range(n).coalesce(1).select(
+        "id",
+        F.when(F.col("id") % 1000 == 7, F.lit(None))
+        .otherwise(F.concat(F.lit("텍스트 "), F.col("id").cast("string")))
+        .alias("text"),
+    )
+    rows = with_embeddings(df, config=cfg).orderBy("id").collect()
+    assert len(rows) == n and rows[7]["text"] is None
+    got = np.asarray([r["embedding"] for r in rows], dtype=np.float32)
+    want = get_embedder(cfg).embed_matrix([r["text"] or "" for r in rows])
+    assert (got.view(np.uint32) == want.view(np.uint32)).all()
 
 
 def test_query_vector_shape():

@@ -175,6 +175,23 @@ def test_commit_stamp_is_the_marker_mtime_in_ms(spark, tmp_path):
     assert commit_stamp(spark, str(out)) == int(os.stat(out).st_mtime_ns // 1_000_000)
 
 
+def test_commit_stamp_of_a_missing_path_raises_no_jvm_exception(spark, tmp_path):
+    """A miss is answered by ``exists`` in the JVM. Probing it with
+    ``getFileStatus`` threw a Java exception per probe, and PySpark's
+    conversion of each cost about 75 py4j commands: 159 for the marker
+    and its directory."""
+    from vectordb_etl_spark.plans.inspect import py4j_commands
+    from vectordb_etl_spark.store.collections import commit_stamp
+
+    missing = str(tmp_path / "never-written")
+    commit_stamp(spark, missing)  # warm the JVM class lookups
+    with py4j_commands() as n:
+        assert commit_stamp(spark, missing) is None
+    # the Hadoop Path and FileSystem lookups, then one exists() each for
+    # the marker and its directory
+    assert n["commands"] == 11, n
+
+
 def test_load_skips_stale_curated(runner):
     # re-running transform AFTER curate makes curated.parquet stale; load
     # must warn and fall back to the fresh chunks checkpoint (the run_all
@@ -272,3 +289,45 @@ def test_cli_filter_arg_parses():
         ["--stage", "search", "--query", "x", "--filter", 'language == "korean"']
     )
     assert args.filter == 'language == "korean"'
+
+
+def test_run_all_jobs_per_stage(spark, tmp_path, monkeypatch):
+    """The job count of each ``run_all`` stage, per source kind, on a tiny
+    seeded tree: a change that adds a job to a stage has to change this
+    table on purpose."""
+    from perfbench import gen
+
+    tree = gen.write_tree(str(tmp_path / "input"), 5, 10)
+    assert tree.html_files and tree.hwp_files
+    sc = spark.sparkContext
+    jobs = {}
+    for kind in ("html", "hwp"):
+        runner = PipelineRunner(spark, PipelineConfig(
+            input_dir=tree.root,
+            checkpoint_dir=str(tmp_path / kind / "ckpt"),
+            embedding=EmbeddingConfig(dimension=32),
+            store=StoreConfig(
+                warehouse_dir=str(tmp_path / kind / "warehouse"),
+                collection_prefix=kind,
+            ),
+        ))
+        for stage in ("extract", "transform", "load", "validate"):
+
+            def grouped(*args, _run=getattr(runner, stage),
+                        _group=f"jobs-{kind}-{stage}", **kwargs):
+                sc.setJobGroup(_group, "stage job count")
+                try:
+                    return _run(*args, **kwargs)
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+
+            monkeypatch.setattr(runner, stage, grouped)
+        results = runner.run_all(kind=kind)
+        assert results[1].rows == results[2].rows == results[3].rows > 0
+        jobs[kind] = {
+            stage: len(sc.statusTracker().getJobIdsForGroup(f"jobs-{kind}-{stage}"))
+            for stage in ("extract", "transform", "load", "validate")
+        }
+    per_stage = {"extract": 1, "transform": 3, "load": 4, "validate": 5}
+    assert jobs == {"html": per_stage, "hwp": per_stage}, jobs

@@ -1,6 +1,10 @@
 """Embedding operators E1–E3 (SURVEY.md §2.4).
 
-Pluggable backends behind one pandas-UDF harness:
+Pluggable backends behind one Arrow-UDF harness. Each backend embeds a
+batch as one ``(n, dimension)`` float32 matrix (``embed_matrix``), as the
+reference embeds a batch with one ``encode`` call and L2-normalises it
+(reference modules/embeddings.py:32-40); ``embed_documents`` and
+``embed_query`` are the reference's list API on top of it.
 
 - :class:`HashEmbedder` — deterministic pseudo-embedder (md5-seeded normal
   vector, L2-normalized). Same signature as the real model; used by every
@@ -10,18 +14,19 @@ Pluggable backends behind one pandas-UDF harness:
   stack isn't available in this environment.
 
 The Spark shape mirrors the reference's lazy singleton (embeddings.py:20-30):
-an **iterator** pandas UDF initializes the encoder once per executor/python
-worker and streams Arrow batches through it — the idiomatic
-``predict_batch_udf`` pattern without the spark.ml dependency.
+an **iterator** Arrow UDF initializes the encoder once per python worker
+and hands each batch's matrix to Arrow as one flat float32 buffer — the
+idiomatic ``predict_batch_udf`` pattern without the spark.ml dependency.
 """
 
 from __future__ import annotations
 
 import hashlib
+import threading
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
@@ -29,37 +34,60 @@ from pyspark.sql.types import ArrayType, FloatType
 from vectordb_etl_spark.config import EmbeddingConfig
 from vectordb_etl_spark.functions.vector import vector_lit
 
+# one legacy generator per thread, re-seeded for each text: constructing a
+# RandomState draws OS entropy before the seed overwrites it, which costs
+# several times the draw itself, while ``seed`` gives the same stream
+_generators = threading.local()
 
-class HashEmbedder:
+
+class _MatrixEmbedder:
+    """The list API of an embedder, on top of its ``embed_matrix``."""
+
+    def embed_matrix(self, texts: list[str]) -> np.ndarray:
+        raise NotImplementedError
+
+    def embed_documents(self, texts: list[str]) -> list[list[float]]:
+        """E1 — batch embedding (reference: embeddings.py:32-40)."""
+        return self.embed_matrix(texts).tolist()
+
+    def embed_query(self, text: str) -> list[float]:
+        """E2 — single query embedding (reference: embeddings.py:42-48)."""
+        return self.embed_matrix([text])[0].tolist()
+
+
+class HashEmbedder(_MatrixEmbedder):
     """Deterministic 1024-d (configurable) embedder.
 
     embed(text) = L2-normalized standard-normal vector seeded from md5(text).
     Identical texts ⇒ identical vectors (so dedup/search tests are exact);
-    normalization matches normalize_embeddings=True (embeddings.py:36)."""
+    normalization matches normalize_embeddings=True (embeddings.py:36).
+    Safe to share between threads: each thread draws from its own
+    generator."""
 
     def __init__(self, dimension: int = 1024, normalize: bool = True):
         self.dimension = dimension
         self.normalize = normalize
 
+    def embed_matrix(self, texts: list[str]) -> np.ndarray:
+        out = np.empty((len(texts), self.dimension), dtype=np.float32)
+        rng = getattr(_generators, "rng", None)
+        if rng is None:
+            rng = _generators.rng = np.random.RandomState()
+        for i, text in enumerate(texts):
+            rng.seed(int.from_bytes(hashlib.md5(text.encode()).digest()[:4], "big"))
+            vec = rng.standard_normal(self.dimension)
+            if self.normalize:
+                n = np.linalg.norm(vec)
+                if n > 0:
+                    vec = vec / n
+            out[i] = vec
+        return out
+
     def embed_one(self, text: str) -> np.ndarray:
-        seed = int.from_bytes(hashlib.md5(text.encode()).digest()[:4], "big")
-        vec = np.random.RandomState(seed).standard_normal(self.dimension)
-        if self.normalize:
-            n = np.linalg.norm(vec)
-            if n > 0:
-                vec = vec / n
-        return vec.astype(np.float32)
-
-    def embed_documents(self, texts: list[str]) -> list[list[float]]:
-        """E1 — batch embedding (reference: embeddings.py:32-40)."""
-        return [self.embed_one(t).tolist() for t in texts]
-
-    def embed_query(self, text: str) -> list[float]:
-        """E2 — single query embedding (reference: embeddings.py:42-48)."""
-        return self.embed_one(text).tolist()
+        return self.embed_matrix([text])[0]
 
 
-class SentenceTransformerEmbedder:
+class SentenceTransformerEmbedder(_MatrixEmbedder):
     """BGE-M3 production path (reference: modules/embeddings.py). Lazy model
     init; raises a clear error when sentence-transformers is unavailable."""
 
@@ -83,17 +111,15 @@ class SentenceTransformerEmbedder:
             self._model = SentenceTransformer(self.config.model_name)
         return self._model
 
-    def embed_documents(self, texts: list[str]) -> list[list[float]]:
-        model = self._get_model()
-        vecs = model.encode(
+    def embed_matrix(self, texts: list[str]) -> np.ndarray:
+        if not texts:
+            return np.empty((0, self.dimension), dtype=np.float32)
+        vecs = self._get_model().encode(
             texts,
             batch_size=self.config.batch_size,
             normalize_embeddings=self.config.normalize,
         )
-        return [v.tolist() for v in vecs]
-
-    def embed_query(self, text: str) -> list[float]:
-        return self.embed_documents([text])[0]
+        return np.asarray(vecs, dtype=np.float32)
 
 
 def get_embedder(config: EmbeddingConfig | None = None):
@@ -106,16 +132,20 @@ def get_embedder(config: EmbeddingConfig | None = None):
 
 
 def embed_udf(config: EmbeddingConfig | None = None):
-    """E1 as an iterator pandas UDF: one encoder init per python worker,
-    Arrow-batched transfer, vectorized encode — the UDF is the only Python
-    hop in the write path."""
+    """E1 as an iterator Arrow UDF — the only Python hop in the write path.
+    The encoder is built once per python worker; each Arrow batch of texts
+    (a null embeds as ``""``) becomes one ``embed_matrix`` call, and the
+    matrix's flat float32 buffer becomes the values of the output list
+    array, so no vector element passes through a Python float."""
     cfg = config or EmbeddingConfig()
 
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(ArrayType(FloatType()))
+    def _embed(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         embedder = get_embedder(cfg)  # lazy, once per worker
         for batch in batches:
-            yield pd.Series(embedder.embed_documents(batch.fillna("").tolist()))
+            m = embedder.embed_matrix(batch.fill_null("").to_pylist())
+            offsets = np.arange(len(m) + 1, dtype=np.int32) * m.shape[1]
+            yield pa.ListArray.from_arrays(offsets, m.reshape(-1))
 
     return _embed
 

@@ -43,6 +43,7 @@ from vectordb_etl_spark.session import (
     partitioned_read_schema,
     union_schema,
 )
+from vectordb_etl_spark.store.collections import vector_write_options
 
 
 def _unit_rows(m: np.ndarray) -> np.ndarray:
@@ -334,9 +335,9 @@ class IVFIndex:
                     src, n_codes=pq_codes, n_subs=pq_subs,
                     id_col=pq_id_col, emb_col=enc_col,
                 )
-            cb.repartition(1).write.mode("overwrite").parquet(
-                f"{self.path}/pq_codebook"
-            )
+            cb.repartition(1).write.options(**vector_write_options(cb)).mode(
+                "overwrite"
+            ).parquet(f"{self.path}/pq_codebook")
             cb = self.spark.read.parquet(f"{self.path}/pq_codebook")
             assigned = _with_pq_codes(
                 src, cb, n_subs=pq_subs, id_col=pq_id_col, emb_col=enc_col,
@@ -347,9 +348,10 @@ class IVFIndex:
         self._centroids = cents
         self._schema = partitioned_read_schema(assigned.schema, "centroid_id")
         self._write_layout(assigned, f"{self.path}/data", "overwrite")
-        self._centroids_df(cents).write.mode("overwrite").parquet(
-            f"{self.path}/centroids"
-        )
+        cents_df = self._centroids_df(cents)
+        cents_df.write.options(**vector_write_options(cents_df)).mode(
+            "overwrite"
+        ).parquet(f"{self.path}/centroids")
         return self
 
     def _centroids_df(self, cents: np.ndarray) -> DataFrame:
@@ -372,7 +374,8 @@ class IVFIndex:
         min/max statistics let a probe's pushed ``centroid_id IN`` filter
         skip unprobed cells. PQ stores fewer codes than dim, so its groups
         hold a few times more of its small rows. Columns go in
-        :attr:`schema` order."""
+        :attr:`schema` order; vectors skip parquet's dictionary attempt
+        (:func:`~vectordb_etl_spark.store.collections.vector_write_options`)."""
         dim = self.centroids.shape[1]
         block = ROW_GROUP_ROWS * dim * _element_bytes(self.schema)
         (
@@ -381,6 +384,7 @@ class IVFIndex:
             .sortWithinPartitions("centroid_id")
             .write.mode(mode)
             .option("parquet.block.size", block)
+            .options(**vector_write_options(frame))
             .parquet(dest)
         )
 

@@ -63,6 +63,7 @@ from vectordb_etl_spark.functions.sqltext import (
     sql_name,
 )
 from vectordb_etl_spark.session import partitioned_read_schema, union_schema
+from vectordb_etl_spark.store.collections import vector_write_options
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -641,7 +642,9 @@ class GraphANNIndex:
         out_schema = _index_schema(tagged, passthrough)
         _build = _make_shard_builder(passthrough, m, ef_construction, max_level)
         shards = tagged.groupBy("shard").applyInPandas(_build, out_schema)
-        shards.write.mode("overwrite").partitionBy("shard").parquet(self.path)
+        shards.write.options(**vector_write_options(shards)).mode(
+            "overwrite"
+        ).partitionBy("shard").parquet(self.path)
         self._schema = partitioned_read_schema(shards.schema, "shard")
         return self
 
@@ -693,7 +696,8 @@ class GraphANNIndex:
         )
         out_schema = _index_schema(tagged, passthrough)
         _build = _make_shard_builder(passthrough, m, ef_construction, max_level)
-        tagged.groupBy("shard").applyInPandas(_build, out_schema).write.mode(
+        segments = tagged.groupBy("shard").applyInPandas(_build, out_schema)
+        segments.write.options(**vector_write_options(segments)).mode(
             "append"
         ).partitionBy("shard").parquet(self.path)
         return self

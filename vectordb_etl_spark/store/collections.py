@@ -31,7 +31,7 @@ from urllib.parse import unquote
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructType
 
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import with_embeddings
@@ -136,15 +136,33 @@ def checked_delete(fs, path, recursive: bool = True) -> None:
         raise IOError(f"delete failed: {path}")
 
 
+def vector_write_options(df: DataFrame) -> dict[str, str]:
+    """The parquet write options of a frame that carries vectors:
+    dictionary encoding off for each top-level ``array<float|double>``
+    column (``df.write.options(**vector_write_options(df))``). Parquet
+    tries a dictionary on every column chunk first; vector elements
+    almost never repeat, so each chunk falls back to PLAIN after paying
+    for the attempt. The fallback writes the same PLAIN pages, so on
+    such vectors the options change no stored byte; vectors that do
+    repeat are stored PLAIN too."""
+    return {
+        f"parquet.enable.dictionary#{f.name}.list.element": "false"
+        for f in df.schema.fields
+        if isinstance(f.dataType, ArrayType)
+        and isinstance(f.dataType.elementType, (FloatType, DoubleType))
+    }
+
+
 def write_counted(df: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``df`` as parquet and return the rows written,
-    counted by an observation on the write itself: one job, where reading
-    the output back to count it runs three more (a schema job, and a
-    count that adaptive execution runs as two)."""
+    """Overwrite ``path`` with ``df`` as parquet
+    (:func:`vector_write_options`) and return the rows written, counted
+    by an observation on the write itself: one job, where reading the
+    output back to count it runs three more (a schema job, and a count
+    that adaptive execution runs as two)."""
     rows = Observation()
-    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(path)
+    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.options(
+        **vector_write_options(df)
+    ).mode("overwrite").parquet(path)
     return rows.get["rows"]
 
 
@@ -173,19 +191,23 @@ def hadoop_fs(spark: SparkSession, uri: str):
 def commit_stamp(spark: SparkSession, path: str) -> int | None:
     """Commit time of a written directory in epoch milliseconds: the
     ``_SUCCESS`` marker's mtime (written at job commit), falling back to
-    the directory's; None when neither exists. A marker hit is one
-    status call."""
+    the directory's; None when neither exists. No miss raises in the
+    JVM (:func:`marker_stamp`)."""
     return marker_stamp(*hadoop_fs(spark, f"{path}/_SUCCESS"))
 
 
 def marker_stamp(fs, marker) -> int | None:
     """:func:`commit_stamp` of the directory whose ``_SUCCESS`` marker is
-    the Hadoop path ``marker`` on ``fs``."""
+    the Hadoop path ``marker`` on ``fs``. A missing path is asked with
+    ``exists``, which answers in the JVM: a failed ``getFileStatus``
+    costs PySpark's conversion of the Java exception, about 75 py4j
+    round trips."""
     for p in (marker, marker.getParent()):
-        try:
-            return fs.getFileStatus(p).getModificationTime()
-        except Py4JJavaError:  # FileNotFoundException
-            continue
+        if fs.exists(p):
+            try:
+                return fs.getFileStatus(p).getModificationTime()
+            except Py4JJavaError:  # deleted since exists()
+                continue
     return None
 
 
@@ -478,7 +500,9 @@ class CollectionStore:
             self._warn_pre_rule_partitions(counts)
         if embed and "embedding" not in df.columns:
             df = with_embeddings(df, config=embedding_config)
-        df.write.mode(mode).partitionBy("collection").parquet(self._data_dir)
+        df.write.options(**vector_write_options(df)).mode(mode).partitionBy(
+            "collection"
+        ).parquet(self._data_dir)
         return counts
 
     def upsert_documents(

@@ -25,7 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vectordb_etl_spark.store.collections import CollectionStore, replace_dir
+from vectordb_etl_spark.store.collections import (
+    CollectionStore,
+    replace_dir,
+    vector_write_options,
+)
 
 
 def write_bucketed(
@@ -76,7 +80,9 @@ def compact_collection(
     with replace_dir(spark, part_dir) as (staging, _exists):
         df = store.read(collection).drop("collection")
         before = _n_files()
-        df.repartition(target_partitions).write.mode("overwrite").parquet(staging)
+        df.repartition(target_partitions).write.options(
+            **vector_write_options(df)
+        ).mode("overwrite").parquet(staging)
     return before, _n_files()
 
 
