@@ -179,7 +179,8 @@ def test_commit_stamp_of_a_missing_path_raises_no_jvm_exception(spark, tmp_path)
     """A miss is answered by ``exists`` in the JVM. Probing it with
     ``getFileStatus`` threw a Java exception per probe, and PySpark's
     conversion of each cost about 75 py4j commands: 159 for the marker
-    and its directory."""
+    and its directory. Resolving the Hadoop ``Path`` class by package
+    lookups cost 5 more than its cached handle."""
     from vectordb_etl_spark.plans.inspect import py4j_commands
     from vectordb_etl_spark.store.collections import commit_stamp
 
@@ -187,9 +188,10 @@ def test_commit_stamp_of_a_missing_path_raises_no_jvm_exception(spark, tmp_path)
     commit_stamp(spark, missing)  # warm the JVM class lookups
     with py4j_commands() as n:
         assert commit_stamp(spark, missing) is None
-    # the Hadoop Path and FileSystem lookups, then one exists() each for
-    # the marker and its directory
-    assert n["commands"] == 11, n
+    # the Path (a cached class handle), the Hadoop configuration and its
+    # FileSystem, then one exists() each for the marker and its directory
+    # (getParent between them)
+    assert n["commands"] == 6, n
 
 
 def test_load_skips_stale_curated(runner):
@@ -291,43 +293,126 @@ def test_cli_filter_arg_parses():
     assert args.filter == 'language == "korean"'
 
 
-def test_run_all_jobs_per_stage(spark, tmp_path, monkeypatch):
+STAGES = ("extract", "transform", "load", "validate")
+
+
+def _run_all_per_stage(spark, tree, work, measure):
+    """``run_all`` over ``tree`` for each source kind, each stage inside
+    ``measure(kind, stage)`` (a context manager yielding a dict the stage
+    result is stored in). Returns the stage results per kind."""
+    out = {}
+    for kind in ("html", "hwp"):
+        runner = PipelineRunner(spark, PipelineConfig(
+            input_dir=tree.root,
+            checkpoint_dir=f"{work}/{kind}/ckpt",
+            embedding=EmbeddingConfig(dimension=32),
+            store=StoreConfig(
+                warehouse_dir=f"{work}/{kind}/warehouse",
+                collection_prefix=kind,
+            ),
+        ))
+        for stage in STAGES:
+
+            def measured(*args, _run=getattr(runner, stage), _key=(kind, stage),
+                         **kwargs):
+                with measure(*_key):
+                    return _run(*args, **kwargs)
+
+            setattr(runner, stage, measured)
+        out[kind] = runner.run_all(kind=kind)
+        assert out[kind][1].rows == out[kind][2].rows == out[kind][3].rows > 0
+    return out
+
+
+def test_run_all_jobs_per_stage(spark, tmp_path):
     """The job count of each ``run_all`` stage, per source kind, on a tiny
     seeded tree: a change that adds a job to a stage has to change this
-    table on purpose."""
+    table on purpose. Transform and load read the checkpoint this runner
+    wrote under its remembered schema (no footer job); validate is one
+    aggregate action (its job and the job of its shuffle) after the
+    store read's schema job."""
+    from contextlib import contextmanager
+
     from perfbench import gen
 
     tree = gen.write_tree(str(tmp_path / "input"), 5, 10)
     assert tree.html_files and tree.hwp_files
     sc = spark.sparkContext
-    jobs = {}
-    for kind in ("html", "hwp"):
-        runner = PipelineRunner(spark, PipelineConfig(
-            input_dir=tree.root,
-            checkpoint_dir=str(tmp_path / kind / "ckpt"),
-            embedding=EmbeddingConfig(dimension=32),
-            store=StoreConfig(
-                warehouse_dir=str(tmp_path / kind / "warehouse"),
-                collection_prefix=kind,
-            ),
-        ))
-        for stage in ("extract", "transform", "load", "validate"):
+    jobs = {"html": {}, "hwp": {}}
 
-            def grouped(*args, _run=getattr(runner, stage),
-                        _group=f"jobs-{kind}-{stage}", **kwargs):
-                sc.setJobGroup(_group, "stage job count")
-                try:
-                    return _run(*args, **kwargs)
-                finally:
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
+    @contextmanager
+    def grouped(kind, stage):
+        group = f"jobs-{kind}-{stage}"
+        sc.setJobGroup(group, "stage job count")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[kind][stage] = len(sc.statusTracker().getJobIdsForGroup(group))
 
-            monkeypatch.setattr(runner, stage, grouped)
-        results = runner.run_all(kind=kind)
-        assert results[1].rows == results[2].rows == results[3].rows > 0
-        jobs[kind] = {
-            stage: len(sc.statusTracker().getJobIdsForGroup(f"jobs-{kind}-{stage}"))
-            for stage in ("extract", "transform", "load", "validate")
-        }
-    per_stage = {"extract": 1, "transform": 3, "load": 4, "validate": 5}
+    _run_all_per_stage(spark, tree, str(tmp_path), grouped)
+    per_stage = {"extract": 1, "transform": 2, "load": 3, "validate": 3}
     assert jobs == {"html": per_stage, "hwp": per_stage}, jobs
+
+
+def test_run_all_py4j_commands_per_stage(spark, tmp_path):
+    """The py4j commands each warm ``run_all`` stage sends, per source
+    kind. Every stage builds its plan from SQL text, a handful of round
+    trips whatever the input (equal on a 10-file and a 20-file tree).
+    Built through the Column API, at about three round trips per
+    function call, the html stages sent 769, 661, 305 and 312."""
+    from contextlib import contextmanager
+
+    from perfbench import gen
+    from vectordb_etl_spark.plans.inspect import py4j_commands
+
+    counts: dict = {}
+
+    @contextmanager
+    def counted(kind, stage):
+        with py4j_commands() as n:
+            yield
+        counts[kind][stage] = n["commands"]
+
+    per_size = {}
+    for i, n_docs in enumerate((10, 10, 20)):  # pass 0 warms the JVM handles
+        counts = {"html": {}, "hwp": {}}
+        tree = gen.write_tree(str(tmp_path / f"input{i}"), 5, n_docs)
+        _run_all_per_stage(spark, tree, str(tmp_path / f"work{i}"), counted)
+        per_size[n_docs] = counts
+    assert per_size[10] == per_size[20], per_size
+    assert per_size[20] == {
+        "html": {"extract": 59, "transform": 91, "load": 94, "validate": 36},
+        "hwp": {"extract": 56, "transform": 91, "load": 94, "validate": 36},
+    }, per_size
+
+
+def test_checkpoint_rewritten_by_another_writer_is_read_with_its_own_schema(
+    spark, input_tree, tmp_path
+):
+    """A runner reads its own checkpoint under the schema it remembered
+    while the checkpoint's commit stamp is the one its write left.
+    Another runner's ``extract_dataframe`` between extract and transform
+    rewrites ``documents.parquet`` with one more column; transform must
+    infer the new schema and carry the column into the chunks."""
+    cfg = PipelineConfig(
+        input_dir=str(input_tree),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        embedding=EmbeddingConfig(dimension=32),
+        store=StoreConfig(warehouse_dir=str(tmp_path / "warehouse")),
+    )
+    first, second = PipelineRunner(spark, cfg), PipelineRunner(spark, cfg)
+    first.extract()
+    docs = spark.read.parquet(first.documents_path)
+    assert first._read_checkpoint(first.documents_path).columns == docs.columns
+    # collected first: the rewrite overwrites the files docs reads
+    tagged = docs.withColumn("batch_tag", docs["filename"])
+    second.extract_dataframe(spark.createDataFrame(tagged.collect(), tagged.schema))
+    first.transform()
+    chunks = spark.read.parquet(first.chunks_path)
+    assert "batch_tag" in chunks.columns
+    assert chunks.filter("batch_tag IS NULL OR batch_tag != filename").count() == 0
+    # the remembered pair is still used for the runner's own rewrite
+    first.extract()
+    assert "batch_tag" not in first._read_checkpoint(first.documents_path).columns

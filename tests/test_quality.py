@@ -125,3 +125,61 @@ def test_plot_distribution_renders_buckets(spark, tmp_path):
     if path.endswith(".txt"):
         text = open(path).read()
         assert "chunk size (chars)" in text and "#" in text
+
+
+_REPORT_SCHEMA = "chunk_id string, text string, language string, " \
+    "chunk_size_chars int, chunk_size_tokens int"
+_REPORT_ROWS = [
+    ("a", "x", "korean", 100, 350),
+    ("b", "x", None, 50, 20),
+    ("c", "x", "english", 10, 400),
+    ("d", "x", None, 7, 3),
+    ("e", "x", "korean", 33, 301),
+]
+# the report of _REPORT_ROWS from a Column-API agg plus a groupBy collect
+_REPORT = {
+    "total_chunks": 5,
+    "vector_count": 5,
+    "avg_char_size": 40.0,
+    "avg_token_size": 214.8,
+    "in_range_pct": 60.0,
+    "cv_pct": 78.680539,
+    "language_distribution": {None: 2, "korean": 2, "english": 1},
+    "recommendations": [
+        "in-target-range ratio below 70% — revisit chunk_size/overlap",
+        "token-size coefficient of variation above 50% — uneven chunks",
+    ],
+}
+
+
+def test_validate_keeps_a_null_language_group(spark, tmp_path):
+    """A stored NULL language is a group of its own; the rollup's grand
+    total (also NULL in its language column) is told apart by
+    grouping_id()."""
+    from vectordb_etl_spark.config import StoreConfig
+    from vectordb_etl_spark.store.collections import CollectionStore
+
+    store = CollectionStore(spark, StoreConfig(warehouse_dir=str(tmp_path / "w")))
+    store.insert_documents(
+        spark.createDataFrame(_REPORT_ROWS, _REPORT_SCHEMA),
+        split_by_folder=False, embed=False,
+    )
+    assert quality.validate_pipeline(store.read()).to_dict() == _REPORT
+
+
+def test_validate_of_no_chunks_and_of_no_language_column(spark):
+    empty = quality.validate_pipeline(spark.createDataFrame([], _REPORT_SCHEMA))
+    assert empty.to_dict() == {
+        "total_chunks": 0,
+        "vector_count": 0,
+        "avg_char_size": None,
+        "avg_token_size": None,
+        "in_range_pct": None,
+        "cv_pct": None,
+        "language_distribution": {},
+        "recommendations": ["chunk distribution within quality thresholds"],
+    }
+    frame = spark.createDataFrame(_REPORT_ROWS, _REPORT_SCHEMA).drop("language")
+    assert quality.validate_pipeline(frame).to_dict() == {
+        **_REPORT, "language_distribution": {},
+    }

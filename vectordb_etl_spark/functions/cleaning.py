@@ -5,8 +5,9 @@ Reimplements the reference's ordered regex battery
 shared table of ``(pattern, replacement)`` steps from which BOTH renderings
 are generated:
 
-- :func:`clean_text_col` — a chained ``regexp_replace`` PySpark Column
-  (pure JVM, stays inside whole-stage codegen; no Python in the hot path);
+- :func:`clean_text_spark_sql` — a chained ``regexp_replace`` Spark SQL
+  expression, which :func:`clean_text_col` parses into a Column (pure JVM,
+  stays inside whole-stage codegen; no Python in the hot path);
 - :func:`clean_text_sql` — the equivalent DuckDB SQL expression used as the
   correctness oracle.
 
@@ -25,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from vectordb_etl_spark.functions.sqltext import regexp_replace_sql, sql_col, sql_of
 
 # --------------------------------------------------------------------------
 # shared pattern data
@@ -138,25 +141,30 @@ def _sql_quote(s: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def clean_text_col(col: Column | str) -> Column:
-    """P1 — ordered cleaning pipeline as a pure Column expression.
+def clean_text_spark_sql(expr: str) -> str:
+    """P1 — the ordered cleaning pipeline as Spark SQL text over ``expr``.
 
     Step 9 (per-line strip + collapse blank runs, text_cleaner.py:210-222) is
     expressed with higher-order functions: split → transform(trim) → join,
     then a final blank-run collapse + trim.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    e = expr
     for pattern, spark_repl, _ in CLEAN_STEPS:
-        c = F.regexp_replace(c, pattern, spark_repl)
+        e = regexp_replace_sql(e, pattern, spark_repl)
     # step 9: trim each line, collapse runs of blank lines to one, strip ends
-    c = F.array_join(F.transform(F.split(c, "\n"), lambda x: F.trim(x)), "\n")
-    c = F.regexp_replace(c, r"\n{3,}", "\n\n")
-    c = F.trim(c)
-    return c
+    e = f"array_join(transform(split({e}, '\\n'), line -> trim(line)), '\\n')"
+    e = regexp_replace_sql(e, r"\n{3,}", "\n\n")
+    return f"trim({e})"
+
+
+def clean_text_col(col: Column | str) -> Column:
+    """P1 — :func:`clean_text_spark_sql` as a Column (pure JVM; no
+    Python in the hot path)."""
+    return sql_col(clean_text_spark_sql(sql_of(col)))
 
 
 def clean_text_sql(expr: str) -> str:
-    """DuckDB rendering of :func:`clean_text_col` (the oracle)."""
+    """DuckDB rendering of :func:`clean_text_spark_sql` (the oracle)."""
     e = expr
     for pattern, _, duck_repl in CLEAN_STEPS:
         e = f"regexp_replace({e}, {_sql_quote(pattern)}, {_sql_quote(duck_repl)}, 'g')"

@@ -21,6 +21,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vectordb_etl_spark.functions.sqltext import count_matches_sql, sql_col, sql_of
+
 # ASCII letters (reference counts c.isalpha() and ord(c) < 128)
 _ENGLISH_CLASS = "[a-zA-Z]"
 _KOREAN_CLASS = "[가-힣]"  # U+AC00..U+D7A3 (html_loader.py:121)
@@ -40,22 +42,28 @@ def _count_sql(expr: str, cls: str) -> str:
     return f"(length({expr}) - length(regexp_replace({expr}, '{cls}', '', 'g')))"
 
 
+def detect_language_content_spark_sql(expr: str) -> str:
+    """Spark SQL text of the P3 content detector over the expression
+    ``expr``; :func:`detect_language_content_sql` is its DuckDB twin."""
+    total = f"CAST(length({expr}) AS DOUBLE)"
+    kr, vi, en = (
+        f"(CAST({count_matches_sql(expr, cls)} AS DOUBLE) / {total})"
+        for cls in (_KOREAN_CLASS, _VIET_CONTENT_CLASS, _ENGLISH_CLASS)
+    )
+    return (
+        f"CASE WHEN length({expr}) = 0 THEN 'korean' "
+        f"WHEN {kr} > 0.1D THEN 'korean' "
+        f"WHEN {vi} > 0.02D THEN 'vietnamese' "
+        f"WHEN {en} > 0.3D THEN 'english' "
+        f"WHEN {kr} >= {vi} AND {kr} >= {en} THEN 'korean' "
+        f"WHEN {vi} >= {en} THEN 'vietnamese' "
+        f"ELSE 'english' END"
+    )
+
+
 def detect_language_content_col(col: Column | str) -> Column:
     """P3 — content-based detector (loader flavor)."""
-    c = F.col(col) if isinstance(col, str) else col
-    total = F.length(c).cast("double")
-    kr = _count_col(c, _KOREAN_CLASS).cast("double") / total
-    vi = _count_col(c, _VIET_CONTENT_CLASS).cast("double") / total
-    en = _count_col(c, _ENGLISH_CLASS).cast("double") / total
-    return (
-        F.when(F.length(c) == 0, F.lit("korean"))
-        .when(kr > 0.10, F.lit("korean"))
-        .when(vi > 0.02, F.lit("vietnamese"))
-        .when(en > 0.30, F.lit("english"))
-        .when((kr >= vi) & (kr >= en), F.lit("korean"))
-        .when(vi >= en, F.lit("vietnamese"))
-        .otherwise(F.lit("english"))
-    )
+    return sql_col(detect_language_content_spark_sql(sql_of(col)))
 
 
 def detect_language_content_sql(expr: str) -> str:

@@ -12,6 +12,10 @@ list of paths two.
 
 Text rendering follows Spark's default parser settings (backslash escapes
 in string literals, ``spark.sql.parser.escapedStringLiterals=false``).
+Where a function also has a DuckDB rendering for the oracle (the
+``*_sql`` builders of the text, language, cleaning and chunker modules),
+its Spark-SQL text builder ends in ``_spark_sql``, so the two dialects
+never share a name.
 """
 
 from __future__ import annotations
@@ -79,6 +83,20 @@ def select_sql(df: DataFrame, exprs: list[str]) -> DataFrame:
 def select_names(df: DataFrame, names) -> DataFrame:
     """``df.select(*names)`` in two round trips at any width."""
     return select_sql(df, [sql_name(n) for n in names])
+
+
+def with_columns_sql(
+    df: DataFrame, exprs: dict[str, str], columns: list[str]
+) -> DataFrame:
+    """``df.withColumns({name: F.expr(text)})`` in two round trips, given
+    ``df``'s column names: a column that ``df`` has is replaced in place,
+    a new one is appended, in ``exprs`` order."""
+    out = [
+        f"{exprs[c]} AS {sql_name(c)}" if c in exprs else sql_name(c)
+        for c in columns
+    ]
+    out += [f"{t} AS {sql_name(c)}" for c, t in exprs.items() if c not in columns]
+    return select_sql(df, out)
 
 
 def apply_in_pandas(
@@ -159,3 +177,15 @@ def sql_of(col: Column | str) -> str:
     """SQL text of a column name (backquoted) or of a plain Column
     expression (its node's own rendering)."""
     return sql_name(col) if isinstance(col, str) else col._jc.node().sql()
+
+
+def regexp_replace_sql(expr: str, pattern: str, replacement: str) -> str:
+    """Spark SQL text of ``regexp_replace`` (Java regex, every match
+    replaced, ``$n`` group references)."""
+    return f"regexp_replace({expr}, {sql_string(pattern)}, {sql_string(replacement)})"
+
+
+def count_matches_sql(expr: str, pattern: str) -> str:
+    """Spark SQL text of the number of characters of ``expr`` that the
+    one-character class ``pattern`` matches."""
+    return f"(length({expr}) - length({regexp_replace_sql(expr, pattern, '')}))"

@@ -12,6 +12,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vectordb_etl_spark.functions.sqltext import (
+    count_matches_sql,
+    sql_col,
+    sql_name,
+    sql_of,
+)
+
 _HANGUL = "[가-힣]"
 
 
@@ -24,11 +31,16 @@ def _as_col(col: Column | str) -> Column:
 # --------------------------------------------------------------------------
 
 
+def estimate_tokens_spark_sql(expr: str) -> str:
+    """Spark SQL text of the P5 token estimate over ``expr``;
+    :func:`estimate_tokens_sql` is its DuckDB twin."""
+    hangul = f"CAST({count_matches_sql(expr, _HANGUL)} AS DOUBLE)"
+    other = f"(CAST(length({expr}) AS DOUBLE) - {hangul})"
+    return f"CAST(floor({hangul} / 1.5D + {other} / 4.0D) AS INT)"
+
+
 def estimate_tokens_col(col: Column | str) -> Column:
-    c = _as_col(col)
-    hangul = (F.length(c) - F.length(F.regexp_replace(c, _HANGUL, ""))).cast("double")
-    other = F.length(c).cast("double") - hangul
-    return F.floor(hangul / 1.5 + other / 4.0).cast("int")
+    return sql_col(estimate_tokens_spark_sql(sql_of(col)))
 
 
 def estimate_tokens_sql(expr: str) -> str:
@@ -42,10 +54,15 @@ def estimate_tokens_sql(expr: str) -> str:
 # --------------------------------------------------------------------------
 
 
+def chunk_id_spark_sql(source: str, index: str, text: str) -> str:
+    """Spark SQL text of the P6 chunk id; :func:`chunk_id_sql` is its
+    DuckDB twin."""
+    key = f"concat_ws('_', {source}, CAST({index} AS STRING), substring({text}, 1, 50))"
+    return f"substring(md5({key}), 1, 12)"
+
+
 def chunk_id_col(source: Column | str, index: Column | str, text: Column | str) -> Column:
-    s, i, t = _as_col(source), _as_col(index), _as_col(text)
-    key = F.concat_ws("_", s, i.cast("string"), F.substring(t, 1, 50))
-    return F.substring(F.md5(key), 1, 12)
+    return sql_col(chunk_id_spark_sql(sql_of(source), sql_of(index), sql_of(text)))
 
 
 def chunk_id_sql(source: str, index: str, text: str) -> str:
@@ -58,6 +75,21 @@ def chunk_id_sql(source: str, index: str, text: str) -> str:
 # --------------------------------------------------------------------------
 
 
+def truncate_spark_sql(
+    text_max: int = 65535,
+    source_max: int = 512,
+    filename_max: int = 256,
+    language_max: int = 32,
+) -> dict[str, str]:
+    """Spark SQL texts enforcing the collection schema's varchar limits,
+    by the column each one replaces."""
+    widths = {
+        "text": text_max, "source": source_max,
+        "filename": filename_max, "language": language_max,
+    }
+    return {c: f"substring({sql_name(c)}, 1, {int(n)})" for c, n in widths.items()}
+
+
 def truncate_cols(
     text_max: int = 65535,
     source_max: int = 512,
@@ -66,10 +98,10 @@ def truncate_cols(
 ) -> dict[str, Column]:
     """Projection map enforcing the collection schema's varchar limits."""
     return {
-        "text": F.substring(F.col("text"), 1, text_max),
-        "source": F.substring(F.col("source"), 1, source_max),
-        "filename": F.substring(F.col("filename"), 1, filename_max),
-        "language": F.substring(F.col("language"), 1, language_max),
+        c: sql_col(t)
+        for c, t in truncate_spark_sql(
+            text_max, source_max, filename_max, language_max
+        ).items()
     }
 
 

@@ -26,10 +26,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
-from pyspark.sql.window import Window
 
 from vectordb_etl_spark.config import ChunkerConfig
-from vectordb_etl_spark.functions.text import chunk_id_col, estimate_tokens_col
+from vectordb_etl_spark.functions.sqltext import (
+    regexp_replace_sql,
+    select_names,
+    select_sql,
+    sql_col,
+    sql_name,
+    sql_of,
+)
+from vectordb_etl_spark.functions.text import chunk_id_spark_sql, estimate_tokens_spark_sql
 
 # --------------------------------------------------------------------------
 # C1 — recursive character split (pure Python, runs inside the pandas UDF)
@@ -492,23 +499,24 @@ def attach_chunk_metadata(
     fixed-width substring slices). ``total_chunks`` comes from
     ``size(chunks)`` computed BEFORE the explode — no window, no extra
     shuffle; the whole operator is map-side."""
-    passthrough = [c for c in df.columns if c not in (chunks_col, text_col)]
-    exploded = df.select(
+    passthrough = [
+        sql_name(c) for c in df.columns if c not in (chunks_col, text_col)
+    ]
+    chunks, text, index = sql_name(chunks_col), sql_name(text_col), "`chunk_index`"
+    exploded = select_sql(df, [
         *passthrough,
-        F.size(chunks_col).alias("total_chunks"),
-        F.posexplode(chunks_col).alias("chunk_index", text_col),
-    )
-    return exploded.select(
+        f"size({chunks}) AS `total_chunks`",
+        f"posexplode({chunks}) AS ({index}, {text})",
+    ])
+    return select_sql(exploded, [
         *passthrough,
-        F.col(text_col),
-        "chunk_index",
-        "total_chunks",
-        F.length(text_col).alias("chunk_size_chars"),
-        estimate_tokens_col(text_col).alias("chunk_size_tokens"),
-        chunk_id_col(source_col, F.col("chunk_index"), F.col(text_col)).alias(
-            "chunk_id"
-        ),
-    )
+        text,
+        index,
+        "`total_chunks`",
+        f"length({text}) AS `chunk_size_chars`",
+        f"{estimate_tokens_spark_sql(text)} AS `chunk_size_tokens`",
+        f"{chunk_id_spark_sql(sql_name(source_col), index, text)} AS `chunk_id`",
+    ])
 
 
 # --------------------------------------------------------------------------
@@ -517,14 +525,17 @@ def attach_chunk_metadata(
 # --------------------------------------------------------------------------
 
 
+def normalized_hash_spark_sql(expr: str) -> str:
+    """Spark SQL text of the md5 of whitespace-normalized lowercase text
+    (`' '.join(text.lower().split())`, chunker.py:194-195);
+    :func:`normalized_hash_sql` is its DuckDB twin."""
+    trimmed = regexp_replace_sql(f"lower({expr})", r"^\s+|\s+$", "")
+    collapsed = regexp_replace_sql(trimmed, r"\s+", " ")
+    return f"md5({collapsed})"
+
+
 def normalized_hash_col(col: Column | str = "text") -> Column:
-    """md5 of whitespace-normalized lowercase text
-    (`' '.join(text.lower().split())`, chunker.py:194-195)."""
-    c = F.col(col) if isinstance(col, str) else col
-    normalized = F.regexp_replace(
-        F.regexp_replace(F.lower(c), r"^\s+|\s+$", ""), r"\s+", " "
-    )
-    return F.md5(normalized)
+    return sql_col(normalized_hash_spark_sql(sql_of(col)))
 
 
 def normalized_hash_sql(expr: str) -> str:
@@ -547,13 +558,14 @@ def remove_duplicate_chunks(
     §7.4). One hash-partitioned shuffle; md5 keys don't skew.
     """
     order_cols = order_cols or ["doc_id", "chunk_index"]
-    h = normalized_hash_col(text_col)
-    w = Window.partitionBy(h).orderBy(*[F.col(c) for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    columns = df.columns
+    first = (
+        f"row_number() OVER (PARTITION BY "
+        f"{normalized_hash_spark_sql(sql_name(text_col))} "
+        f"ORDER BY {', '.join(sql_name(c) for c in order_cols)}) AS `__rn`"
     )
+    ranked = select_sql(df, ["*", first]).filter("`__rn` = 1")
+    return select_names(ranked, columns)
 
 
 def chunk_hash(text: str) -> str:

@@ -3,12 +3,17 @@ dags/vectordb_etl_dag.py).
 
 The reference's ``PipelineRunner`` runs extract → transform → load →
 validate with pickle files between stages (main.py:93-94, 133-134). Here
-each stage is a Spark job and the stage contract is a parquet directory —
-same restart semantics, but columnar, splittable, and predicate-pushdown-
-friendly for every downstream read. The Airflow DAG's task boundaries
-(dags/vectordb_etl_dag.py:265-318) map to these stage methods 1:1, so an
-orchestrator can call one stage per task and pass only paths (exactly what
-the DAG's XCom does).
+each stage runs a few Spark jobs and the stage contract is a parquet
+directory — same restart semantics, but columnar, splittable, and
+predicate-pushdown-friendly for every downstream read. The Airflow DAG's
+task boundaries (dags/vectordb_etl_dag.py:265-318) map to these stage
+methods 1:1, so an orchestrator can call one stage per task and pass only
+paths (exactly what the DAG's XCom does).
+
+Driver cost: every stage builds its plan from Spark SQL text
+(:mod:`functions.sqltext`), a fixed number of py4j round trips whatever
+the input, and a runner reads a checkpoint it wrote itself under the
+schema it remembered, so no job re-reads a footer it just wrote.
 
 Scale notes:
 - Stage checkpoints mean each stage's lineage is cut — a 100 TB transform
@@ -27,8 +32,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from vectordb_etl_spark.config import PipelineConfig
+from vectordb_etl_spark.functions.sqltext import read_parquet, with_columns_sql
 from vectordb_etl_spark.operators import chunker
 from vectordb_etl_spark.store.collections import (
     CollectionStore,
@@ -36,6 +43,21 @@ from vectordb_etl_spark.store.collections import (
     hadoop_fs,
     write_counted,
 )
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every struct field, array element and map value
+    nullable (Spark's ``asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 @dataclass
@@ -54,6 +76,9 @@ class PipelineRunner:
         self.spark = spark
         self.config = config or PipelineConfig()
         self.store = CollectionStore(spark, self.config.store)
+        # checkpoint path -> (commit stamp, read schema) of this runner's
+        # last write there (see _read_checkpoint)
+        self._written: dict[str, tuple[int | None, StructType]] = {}
 
     # -- stage paths (≅ the reference's data/documents.pkl, data/chunks.pkl) --
     def _ckpt(self, name: str) -> str:
@@ -69,6 +94,24 @@ class PipelineRunner:
     def chunks_path(self) -> str:
         return self._ckpt("chunks.parquet")
 
+    def _write_checkpoint(self, df: DataFrame, path: str) -> int:
+        """:func:`write_counted`, remembering the checkpoint's commit stamp
+        and the schema a read of it infers: the written one with every
+        field nullable, as a parquet read makes it."""
+        n = write_counted(df, path)
+        self._written[path] = (commit_stamp(self.spark, path), _nullable(df.schema))
+        return n
+
+    def _read_checkpoint(self, path: str) -> DataFrame:
+        """Read a checkpoint. While its commit stamp is the one this
+        runner's own write left, the remembered schema is the read schema,
+        so no job reads a footer to learn it; after any other writer's
+        commit the schema is inferred."""
+        known = self._written.get(path)
+        if known is not None and commit_stamp(self.spark, path) == known[0]:
+            return read_parquet(self.spark, known[1], [path])
+        return self.spark.read.parquet(path)
+
     # -- extract (main.py:71-97) ---------------------------------------------
     def extract(self, input_dir: str | None = None, kind: str = "html") -> StageResult:
         from vectordb_etl_spark.sources.scan import (
@@ -80,13 +123,13 @@ class PipelineRunner:
         root = input_dir or self.config.input_dir
         loader = load_html_documents if kind == "html" else load_hwp_documents
         docs = loader(self.spark, root)
-        n = write_counted(docs, self.documents_path)
+        n = self._write_checkpoint(docs, self.documents_path)
         return StageResult("extract", n, time.time() - t0, self.documents_path)
 
     def extract_dataframe(self, docs: DataFrame) -> StageResult:
         """Extract from an already-loaded DataFrame (driver testdata path)."""
         t0 = time.time()
-        n = write_counted(docs, self.documents_path)
+        n = self._write_checkpoint(docs, self.documents_path)
         return StageResult("extract", n, time.time() - t0, self.documents_path)
 
     # -- transform (main.py:99-137) ------------------------------------------
@@ -94,16 +137,15 @@ class PipelineRunner:
         from vectordb_etl_spark.session import ensure_min_partitions
 
         t0 = time.time()
-        docs = ensure_min_partitions(self.spark.read.parquet(self.documents_path))
-        if "doc_id" not in docs.columns:
-            docs = docs.withColumn(
-                "doc_id", F.md5("source").alias("doc_id")
-            )
+        docs = ensure_min_partitions(self._read_checkpoint(self.documents_path))
+        columns = docs.columns
+        if "doc_id" not in columns:
+            docs = with_columns_sql(docs, {"doc_id": "md5(`source`)"}, columns)
         chunks = chunker.chunk_documents(docs, self.config.chunker)
         deduped = chunker.remove_duplicate_chunks(
             chunks, order_cols=["doc_id", "chunk_index"]
         )
-        n = write_counted(deduped, self.chunks_path)
+        n = self._write_checkpoint(deduped, self.chunks_path)
         return StageResult("transform", n, time.time() - t0, self.chunks_path)
 
     # -- curate (beyond-reference; functions/curation.py, operators/dedup.py) --
@@ -143,7 +185,7 @@ class PipelineRunner:
         from vectordb_etl_spark.operators import dedup as D
 
         t0 = time.time()
-        chunks = self.spark.read.parquet(self.chunks_path)
+        chunks = self._read_checkpoint(self.chunks_path)
         extra: dict = {"input_rows": chunks.count()}
         if length_band is not None:
             lo_p, hi_p = length_band
@@ -186,7 +228,7 @@ class PipelineRunner:
                 chunks, id_col="chunk_id", strata_col=strata_col,
                 fractions=sample_fractions,
             )
-        n = write_counted(chunks, self.curated_path)
+        n = self._write_checkpoint(chunks, self.curated_path)
         extra["removed_rows"] = extra["input_rows"] - n
         return StageResult("curate", n, time.time() - t0, self.curated_path, extra)
 
@@ -230,7 +272,7 @@ class PipelineRunner:
         else:
             curated_ok = use_curated
         src = self.curated_path if curated_ok else self.chunks_path
-        chunks = self.spark.read.parquet(src)
+        chunks = self._read_checkpoint(src)
         if drop_existing:
             for name in self.store.list_collections():
                 self.store.drop_collection(name)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from vectordb_etl_spark.functions import text as T
+from vectordb_etl_spark.functions.sqltext import sql_col, sql_name
 
 
 # --------------------------------------------------------------------------
@@ -283,34 +284,49 @@ def validate_pipeline(
     target_lo: int = 300,
     target_hi: int = 500,
 ) -> QualityReport:
-    """One-pass report: all scalar aggregates fused into a single agg (one
-    job, one shuffle-free partial+final aggregate), language dist as a second
-    small job. The reference runs five separate passes over Python lists."""
-    tok = F.col(token_col).cast("double")
-    row = chunks.agg(
-        F.count("*").alias("total"),
-        F.round(F.avg(F.col(char_col).cast("double")), 6).alias("avg_chars"),
-        F.round(F.avg(tok), 6).alias("avg_tokens"),
-        F.round(
-            F.avg(F.when(tok.between(target_lo, target_hi), 1.0).otherwise(0.0))
-            * 100.0,
-            6,
-        ).alias("in_range_pct"),
-        F.round(F.stddev_pop(tok) / F.avg(tok) * 100.0, 6).alias("cv_pct"),
-    ).first()
-    langs = {
-        r[0]: r[1]
-        for r in chunks.groupBy("language").agg(F.count("*").alias("n")).collect()
-    } if "language" in chunks.columns else {}
+    """The report in one aggregate action: the scalar aggregates and the
+    per-language counts are one rollup over ``language`` (grouping sets
+    (language) and ()), collected in one job plus the job of its shuffle.
+    ``grouping_id()`` tells the grand total from a group whose language
+    is NULL, which keeps its own ``None`` entry. Without a ``language``
+    column the report has no distribution. An empty frame gives the
+    report of no chunks: zero counts and no averages. The reference runs
+    five separate passes over Python lists."""
+    tok = f"CAST({sql_name(token_col)} AS DOUBLE)"
+    in_range = (
+        f"CASE WHEN {tok} BETWEEN {int(target_lo)} AND {int(target_hi)} "
+        "THEN 1.0D ELSE 0.0D END"
+    )
+    has_language = "language" in chunks.columns
+    report = sql_col(
+        "struct("
+        f"{'grouping_id()' if has_language else '1'} AS total_row, "
+        "count(*) AS total, "
+        f"round(avg(CAST({sql_name(char_col)} AS DOUBLE)), 6) AS avg_chars, "
+        f"round(avg({tok}), 6) AS avg_tokens, "
+        f"round(avg({in_range}) * 100.0D, 6) AS in_range_pct, "
+        f"round(stddev_pop({tok}) / avg({tok}) * 100.0D, 6) AS cv_pct"
+        ") AS r"
+    )
+    grouped = chunks.rollup("language") if has_language else chunks.groupBy()
+    total, langs = None, {}
+    for row in grouped.agg(report).collect():
+        if row["r"]["total_row"]:
+            total = row["r"]
+        else:
+            langs[row["language"]] = row["r"]["total"]
+    if total is None:  # no rows: the rollup has no grand-total group
+        total = {"total": 0, "avg_chars": None, "avg_tokens": None,
+                 "in_range_pct": None, "cv_pct": None}
     return QualityReport(
-        total_chunks=row["total"],
-        vector_count=row["total"],
-        avg_char_size=row["avg_chars"],
-        avg_token_size=row["avg_tokens"],
-        in_range_pct=row["in_range_pct"],
-        cv_pct=row["cv_pct"],
+        total_chunks=total["total"],
+        vector_count=total["total"],
+        avg_char_size=total["avg_chars"],
+        avg_token_size=total["avg_tokens"],
+        in_range_pct=total["in_range_pct"],
+        cv_pct=total["cv_pct"],
         language_distribution=langs,
-        recommendations=recommendations(row["in_range_pct"], row["cv_pct"]),
+        recommendations=recommendations(total["in_range_pct"], total["cv_pct"]),
     )
 
 

@@ -153,6 +153,7 @@ def ensure_min_partitions(df, min_partitions: int | None = None):
     when the source is already parallel."""
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
+    # the partitions of df.rdd, without PySpark's RDD wrapper around it
+    if df._jdf.javaToPython().getNumPartitions() < max(2, target // 2):  # noqa: SLF001
         return df.repartition(target)
     return df

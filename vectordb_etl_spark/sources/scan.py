@@ -16,6 +16,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_etl_spark.functions import language
+from vectordb_etl_spark.functions.sqltext import (
+    select_sql,
+    sql_col,
+    sql_name,
+    sql_of,
+    sql_string,
+)
 from vectordb_etl_spark.sources.html import html_from_binary, parse_html_udf
 from vectordb_etl_spark.sources.hwp import extract_hwp_udf
 
@@ -39,37 +46,38 @@ def scan_files(
     )
 
 
-def file_metadata_cols(path_col: Column | str = "path") -> dict[str, Column]:
-    """P8 — source path, filename, parent-folder name ('root' at top level
-    is resolved by the caller since the scan root isn't visible here),
-    lowercased extension, size, ISO mtime (html_loader.py:88-109)."""
-    p = F.col(path_col) if isinstance(path_col, str) else path_col
-    parts = F.split(p, "/")
+def file_metadata_spark_sql(
+    path: str = "`path`", root: str | None = None
+) -> dict[str, str]:
+    """P8 — Spark SQL texts of the file metadata over the path expression
+    ``path``: source path, filename, parent-folder name, lowercased
+    extension, size, ISO mtime (html_loader.py:88-109). Given the scan
+    ``root``, a file directly under it gets the folder 'root'
+    (html_loader.py:92-95); without it the folder is the parent's name."""
+    parts = f"split({path}, '/')"
+    filename, folder = f"element_at({parts}, -1)", f"element_at({parts}, -2)"
+    if root is not None:
+        root_name = root.rstrip("/").rsplit("/", 1)[-1]
+        folder = (
+            f"CASE WHEN {folder} = {sql_string(root_name)} THEN 'root' "
+            f"ELSE {folder} END"
+        )
+    extension = f"regexp_extract({filename}, '\\\\.([^.]+)$', 1)"
     return {
-        "source": p,
-        "filename": F.element_at(parts, -1),
-        "folder_name": F.element_at(parts, -2),
-        "file_type": F.lower(F.regexp_extract(F.element_at(parts, -1), r"\.([^.]+)$", 1)),
-        "file_size": F.col("length"),
-        "modified_time": F.date_format(
-            F.col("modificationTime"), "yyyy-MM-dd'T'HH:mm:ss"
-        ),
+        "source": path,
+        "filename": filename,
+        "folder_name": folder,
+        "file_type": f"lower({extension})",
+        "file_size": "`length`",
+        "modified_time": "date_format(`modificationTime`, 'yyyy-MM-dd\\'T\\'HH:mm:ss')",
     }
 
 
-def _with_metadata(df: DataFrame, root: str) -> DataFrame:
-    meta = file_metadata_cols()
-    out = df
-    for name, col in meta.items():
-        out = out.withColumn(name, col)
-    # top-level files get folder 'root' (html_loader.py:92-95)
-    root_name = root.rstrip("/").rsplit("/", 1)[-1]
-    return out.withColumn(
-        "folder_name",
-        F.when(F.col("folder_name") == root_name, F.lit("root")).otherwise(
-            F.col("folder_name")
-        ),
-    )
+def file_metadata_cols(path_col: Column | str = "path") -> dict[str, Column]:
+    """P8 — :func:`file_metadata_spark_sql` as Columns ('root' at top
+    level is resolved by the caller since the scan root isn't visible
+    here)."""
+    return {k: sql_col(t) for k, t in file_metadata_spark_sql(sql_of(path_col)).items()}
 
 
 def dynamic_meta_col(extra_meta: dict[str, Column | str]) -> Column:
@@ -98,27 +106,21 @@ def _load_documents(
     parser's ``fields``) → metadata + language columns → min-viable
     filter: the documents schema of SURVEY.md §1.4, shared by both
     loaders."""
-    scanned = _with_metadata(scan_files(spark, root, glob), root)
-    return (
-        scanned.withColumn("parsed", parsed)
-        .select(
-            "source",
-            "filename",
-            "folder_name",
-            "file_type",
-            "file_size",
-            "modified_time",
-            *(F.col(f"parsed.{f}").alias(f) for f in fields),
-            *(
-                [dynamic_meta_col(extra_meta).alias("meta")]
-                if extra_meta
-                else []
-            ),
-        )
-        .withColumn("char_count", F.length("text"))
-        .withColumn("language", language.detect_language_content_col("text"))
-        .filter(F.length(F.trim(F.col("text"))) >= MIN_VIABLE_CHARS)
+    meta = file_metadata_spark_sql(root=root)
+    scanned = select_sql(
+        scan_files(spark, root, glob).withColumn("parsed", parsed),
+        ["*", *(f"{t} AS {sql_name(c)}" for c, t in meta.items())],
     )
+    if extra_meta:
+        scanned = scanned.withColumn("meta", dynamic_meta_col(extra_meta))
+    text = "`parsed`.`text`"
+    return select_sql(scanned, [
+        *map(sql_name, meta),
+        *(f"`parsed`.{sql_name(f)} AS {sql_name(f)}" for f in fields),
+        *(["`meta`"] if extra_meta else []),
+        f"length({text}) AS `char_count`",
+        f"{language.detect_language_content_spark_sql(text)} AS `language`",
+    ]).filter(f"length(trim(`text`)) >= {MIN_VIABLE_CHARS}")
 
 
 def load_html_documents(

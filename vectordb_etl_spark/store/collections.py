@@ -29,19 +29,23 @@ from functools import reduce
 from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructType
 
 from vectordb_etl_spark.config import EmbeddingConfig, StoreConfig
 from vectordb_etl_spark.embeddings import with_embeddings
 from vectordb_etl_spark.functions.sqltext import (
+    jvm_static,
     read_parquet,
     select_names,
     sql_col,
+    sql_name,
+    sql_of,
     sql_string,
+    with_columns_sql,
 )
-from vectordb_etl_spark.functions.text import truncate_cols
+from vectordb_etl_spark.functions.text import truncate_spark_sql
 
 
 # The declared document/chunk schema — the analog of the reference's fixed
@@ -105,19 +109,26 @@ def fold_dynamic_meta(
     return df.withColumn(meta_col, folded).drop(*extras)
 
 
-def collection_name_col(prefix: str, folder_col):
-    """Column twin of StoreConfig.collection_name — the reference's
-    collection-naming rule applied JVM-side at the sink
-    (modules/config.py:37-43): lowercase, '-'/' ' -> '_', and the 'root'
-    folder (or NULL) falls back to the '<prefix>_documents' default."""
-    clean = F.translate(F.lower(folder_col), "- ", "__")
+def collection_name_spark_sql(prefix: str, folder: str) -> str:
+    """Spark SQL text of StoreConfig.collection_name over the folder
+    expression ``folder`` — the reference's collection-naming rule
+    applied JVM-side at the sink (modules/config.py:37-43): lowercase,
+    '-'/' ' -> '_', and the 'root' folder (or NULL) falls back to the
+    '<prefix>_documents' default."""
     # '' must hit the default too: StoreConfig.collection_name's
     # `if folder and folder != "root"` treats the empty string as falsy,
     # and the two twins must agree on where a row lands
-    return F.when(
-        folder_col.isNull() | (folder_col == "root") | (folder_col == ""),
-        F.lit(f"{prefix}_documents"),
-    ).otherwise(F.concat_ws("_", F.lit(prefix), clean))
+    return (
+        f"CASE WHEN {folder} IS NULL OR {folder} = 'root' OR {folder} = '' "
+        f"THEN {sql_string(f'{prefix}_documents')} ELSE concat_ws('_', "
+        f"{sql_string(prefix)}, translate(lower({folder}), '- ', '__')) END"
+    )
+
+
+def collection_name_col(prefix: str, folder_col) -> Column:
+    """Column twin of StoreConfig.collection_name
+    (:func:`collection_name_spark_sql`)."""
+    return sql_col(collection_name_spark_sql(prefix, sql_of(folder_col)))
 
 
 def checked_rename(fs, src, dst) -> None:
@@ -160,7 +171,7 @@ def write_counted(df: DataFrame, path: str) -> int:
     output back to count it runs three more (a schema job, and a count
     that adaptive execution runs as two)."""
     rows = Observation()
-    df.observe(rows, F.count(F.lit(1)).alias("rows")).write.options(
+    df.observe(rows, sql_col("count(1) AS `rows`")).write.options(
         **vector_write_options(df)
     ).mode("overwrite").parquet(path)
     return rows.get["rows"]
@@ -184,7 +195,7 @@ def hadoop_fs(spark: SparkSession, uri: str):
     """``(FileSystem, Path)`` of ``uri`` through the Hadoop API, so the
     caller works on any supported scheme (s3a://, hdfs://, file:) — a
     local ``pathlib`` probe would silently miss remote URIs."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(uri)  # noqa: SLF001
+    path = jvm_static("org.apache.hadoop.fs.Path")(uri)
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path  # noqa: SLF001
 
 
@@ -431,22 +442,26 @@ class CollectionStore:
         dynamic-meta fold, and P7 varchar truncation at the sink
         (milvus_store.py:207-215)."""
         cfg = self.config
-        if split_by_folder and folder_col in chunks.columns:
-            collection = collection_name_col(
-                cfg.collection_prefix, F.col(folder_col)
+        columns = chunks.columns
+        if split_by_folder and folder_col in columns:
+            collection = collection_name_spark_sql(
+                cfg.collection_prefix, sql_name(folder_col)
             )
         else:
-            collection = F.lit(f"{cfg.collection_prefix}_documents")
-        df = chunks.withColumn("collection", collection)
+            collection = sql_string(f"{cfg.collection_prefix}_documents")
+        exprs = {"collection": collection}
         if dynamic_meta:
-            df = fold_dynamic_meta(df)
-        for name, col in truncate_cols(
-            cfg.text_max_len, cfg.source_max_len, cfg.filename_max_len,
-            cfg.language_max_len,
-        ).items():
-            if name in df.columns:
-                df = df.withColumn(name, col)
-        return df
+            chunks = fold_dynamic_meta(with_columns_sql(chunks, exprs, columns))
+            columns, exprs = chunks.columns, {}
+        exprs.update(
+            (name, text)
+            for name, text in truncate_spark_sql(
+                cfg.text_max_len, cfg.source_max_len, cfg.filename_max_len,
+                cfg.language_max_len,
+            ).items()
+            if name in columns
+        )
+        return with_columns_sql(chunks, exprs, columns)
 
     def insert_documents(
         self,
